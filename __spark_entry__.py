@@ -7,253 +7,81 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All queries live in ``xorbits_sql_spark.queries`` (one module per
 operator family); this file just adapts the registry to the contract.
+The history of the verification window is in BASELINE.md.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from _driver_ledger import LAST_GREEN_ROUND
 from xorbits_sql_spark.queries import load_all
 
-# Round-rotation of the exposed registry names.
-#
-# The driver evaluates the FIRST 50 entries of ``queries()`` in dict
-# INSERTION order (proven by CORRECTNESS_r02.json: its keys are the 43
-# rotated z-names + q50..q56, i.e. the first 50 of a dict built in
-# canonical-name order). Rotating already-driver-green queries to a
-# ``z`` prefix therefore only moves the window if the dict is built in
-# ROTATED-key order — round 2 built it in canonical order and burned 43
-# of its 50 slots re-proving green queries. Fixed below: the dict is
-# inserted sorted by the *exposed* (rotated) key.
-#
-# Green so far: round 1 verified q01..q22, q30..q49, q100 (43, all
-# rows+schema+hash green — CORRECTNESS_r01.json); round 2 verified
-# those again as z-names plus q50..q56 (CORRECTNESS_r02.json, 50/50
-# green). All 50 go in the rotated set, so round 3's window is the 50
-# never-driver-verified names q57..q99 + r46..r50 + r55..r56.
-#
-# ROUND-4 ROTATION: once CORRECTNESS_r03 confirms those 50 green,
-# extend the ranges below to cover q57..q99 and r46..r56; the window
-# then becomes r57..r99 (42 — r51..r54 unused) + s01..s08. Round 5:
-# extend through r99 + s08 → window s09..s58. Round 6: extend through
-# s58 → window s59..s93 (+ any later additions; two windows' worth).
-# s01..s31 existed at r02-close; s32..s68 landed in round 3's first
-# session (dialect paths, curation ops, BPE, graph/stats/streaming
-# entries); s69..s93 in its second (distribution stats, drift and
-# hypothesis tests, curation funnel, phrase search/KWIC, association
-# rules, Naive Bayes, outer stream-stream join, forecasting); s94..s99
-# in its third (DSIR resampling, CUSUM, Neyman allocation, text
-# normalization, Kaplan-Meier, Gini); t01..t07 later that session
-# (bootstrap, k-anonymity, weighted median, knn-eval, A/B, xi,
-# capture-recapture); t08..t12 (CDC chunking, Mann-Kendall,
-# Theil-Sen, Adamic-Adar, weekday seasonality); t13..t14 (Fano
-# burstiness, 2D skyline); t15..t18 (blocking-quality audit, RFM,
-# assortativity, Wasserstein); t19..t21 (Burrows Delta, CUPED,
-# diff-in-differences); t22..t24 (seasonal residual anomalies,
-# prefix-dim recall, l-diversity); t25..t26 (power analysis,
-# Heaps law); t27..t30 (ABC classes, Bollinger, runs test,
-# Hellinger); t31..t35 (Shapley attribution, log-odds keyness,
-# forecast backtest, discount elasticity, revenue bridge);
-# t36..t39 (isotropy, Simpson detector, diversity, keyset paging);
-# t40..t42 (LOO encoding, new-vs-returning, Kendall tau); t43..t45
-# (price-volume-mix, geometric growth, Welch t); t46..t48 (MATTR,
-# bigram PMI, Freedman-Diaconis binning); t49..t50 (cluster-size
-# histogram, threshold calibration); t51..t52 (codec tile stats,
-# streaming percentiles); t53..t54 (audio silence VAD, giant
-# component share); t55..t57 (SMD balance, detector agreement,
-# budgeted selection); t58..t62 (Wilcoxon, McNemar, Cronbach,
-# bootstrap delta CI, u-chart SPC); t63..t64 (mode aggregate,
-# referential integrity); t65..t66 (conversion window curve,
-# forecast reconciliation); t67..t68 (anomaly ensemble, interval
-# union coverage); t69..t70 (JS divergence matrix, cross-source
-# dup provenance); t71..t74 (LSH band curve, entry bounce, margin
-# planning, dedup savings); t75..t79 (cycle time, ABC-XYZ, return
-# lift, sole-source risk, nzv screen); t80..t82 (sketch error,
-# novelty share, higher moments); t83..t84 (decision stump,
-# temporal leakage); t85..t86 (forecast skill, watermark
-# lateness tradeoff); t87..t89 (Ljung-Box, state capacity plan,
-# fold balance); t90..t93 (review queue, order violations, Chao1,
-# dedup idempotence).
-# Keep adding new query names that sort before ``z`` so every round
-# verifies fresh work.
-#
-# Round 4: CORRECTNESS_r03 verified q57..q99 + r46..r50 + r55..r56
-# (45 green + 5 legitimate no_oracle rows, zero failures), so those
-# names join the rotated set. Additionally (round-3 verdict task #2)
-# entries WITHOUT a DuckDB oracle sort after all oracle-bearing ones,
-# so driver window slots go to hash-verifiable names first — the
-# window becomes the first 50 never-driver-verified oracle-bearing
-# names (r57.. + s-series), and rows-only entries queue behind the
-# full oracle-paired inventory.
-#
-# Round 5: CORRECTNESS_r04 verified q23..q27 + r57..r99 + s01..s03
-# (50/50 rows+schema+hash green, zero failures — r69 does not exist
-# in the numbering), so those join the rotated set and the window
-# advances to the next 50 never-driver-verified oracle-bearing names
-# (s04 onward, ~s04..s53).
-#
-# Round 6: CORRECTNESS_r05 verified s04..s54 (s47 is rows-only and
-# queued behind oracle-bearing names): 49/50 green join the rotated
-# set. s39 stays OUT — its r05 hash_match was false (oracle HUGEINT
-# vs Spark BIGINT typing, values identical; fixed by CASTing the
-# oracle SUM to BIGINT) and per the round-5 verdict it must re-enter
-# the round-6 window and earn a green row before rotating.
-# Round 7: CORRECTNESS_r06 verified s39 (re-entry, green after the
-# BIGINT oracle cast) + s55..t06 (s68/s81 are rows-only and queued
-# behind oracle-bearing names): 49/50 green join the rotated set.
-# s63 stays OUT — its r06 row errored in the driver's canonicalizer
-# (ARRAY<STRING> output column, `TypeError: unhashable type: 'list'`;
-# values were right, representation wasn't). Per the round-6 verdict
-# it re-enters the round-7 window with the seq column serialized via
-# array_join on both sides (the s79/s05 pattern) and must earn a
-# rows+schema+hash green row before rotating.
-# Round 8: CORRECTNESS_r07 verified s63 (re-entry, green with the
-# array_join serialization) + t07..t56 minus t52 (rows-only, queued):
-# 50/50 rows+schema+hash green, all 49 fresh prefixes join the
-# rotated set. The window becomes the LAST never-driver-verified
-# names: t57..t93 (37 oracle-bearing) + the 9 new round-8
-# dialect-fidelity entries (t94..t99 + u01..u03, oracle-bearing) + the
-# 4 rows-only (s47/s68/s81/t52 — pulled forward ahead of the rotated
-# greens per the round-7 verdict, matching the r03 ``no_oracle``
-# precedent) = exactly 50, clearing the entire inventory.
-# Round 9 (PLAYBOOK — written at round-8 close): if CORRECTNESS_r08 is
-# green on the window above, every registry name is driver-evaluated.
-# Then: (1) add all 50 r08 names to _DRIVER_GREEN (rows-only names
-# join on their ``no_oracle`` rows-only checks, the r03 precedent);
-# any red re-enters the r09 window first, per the standing re-entry
-# rule. (2) UNFREEZE: register the staged entries u04–u07
-# (queries/staged.py — move to @register, import the module in
-# load_all, drop the freeze note); they become the front of the r09
-# window with ~46 slots behind them for rotated-green re-verification.
-# Round 9 (EXECUTED): CORRECTNESS_r08 verified the full window —
-# 45/46 oracle-bearing green + the 4 rows-only recorded (s47/s68/s81/
-# t52, ``no_oracle`` as expected). All 49 join the rotated set below.
-# The one red, t66_forecast_reconciliation, was a SIGNED-ZERO
-# divergence (Spark 0.0 vs DuckDB -0.0 out of round(f_total - f_bu, 6)
-# — IEEE-equal, hash-different; determinism class #4, see README +
-# BASELINE.md): fixed by ``+ 0.0`` normalization on both sides, with
-# the local canonicalizer now signed-zero-strict (tests/oracle.py) so
-# the class can't ship again. Per the standing re-entry rule t66 stays
-# OUT of _DRIVER_GREEN and re-enters the round-9 window, followed by
-# the four unfrozen u04..u07 entries and the round-9 dialect-widening
-# batch u08..u10 (snowflake OBJECT_CONSTRUCT/variant paths, pg
-# LATERAL top-N, bq STRUCT literals); the remaining ~42 slots
-# re-verify rotated greens. Round-10 playbook: if CORRECTNESS_r09 is
-# green on t66 + u04..u10, add them to _DRIVER_GREEN (extend the u
-# range to u10); any red re-enters the r10 window first, as always.
-# Round 10 (EXECUTED): CORRECTNESS_r09 was 50/50 green — t66 (re-entry,
-# signed-zero fix driver-verified), u04..u10, and 42 rotated greens —
-# so t66 + u04..u10 join _DRIVER_GREEN below. THREE names leave it per
-# the round-9 ADVICE re-entry rule (a green name whose result-affecting
-# definition changed rides a stale record otherwise, the t66 lesson):
-# t93 (pass-2 pair generation went source-sharded in r09, oracle
-# updated to match) and t90/t92 (the r09 signed-zero normalization can
-# change where -0.0 appears in their output). q90 also re-enters: the
-# round-10 ADVICE fix added an 'orientation' column to
-# extract_media_features, changing its (rows-only) result schema. All
-# four lead the r10 window, followed by the round-10 u11+ additions;
-# the remaining slots re-verify rotated greens — now ordered by
-# STALENESS, not rotated-lexical order (round-9 verdict task 1): each
-# green name sorts by its most recent driver-green round
-# (_driver_ledger.LAST_GREEN_ROUND, generated from the committed
-# CORRECTNESS_r*.json by scripts/gen_driver_ledger.py — re-run at round
-# open), oldest first, so re-verification pressure lands where drift
-# would hide longest (the round-2-era names, untouched since r02).
-# Round-11 playbook: if CORRECTNESS_r10 is green on t90/t92/t93/q90 +
-# the u11+ batch, add them back/in; any red re-enters the r11 window
-# first, as always. Regenerate _driver_ledger.py so the staleness
-# ordering sees the r10 rows.
-# Round 11 (EXECUTED): CORRECTNESS_r10 was 49/49 oracle-paired green
-# (t90/t92/t93 re-entries, u11..u14, 42 staleness-ordered rotated
-# greens) + q90's expected rows-only ``no_oracle`` record (r03
-# precedent; its new `orientation` column is schema-pinned in tests).
-# All 50 join _DRIVER_GREEN: t90/t92/t93 and q90 re-enter, the u range
-# extends to u14. _driver_ledger.py regenerated with the r10 rows, so
-# the r11 window's rotated-green half leads with the stalest driver
-# rows (round-4-era q23..q27 execute-path entries + early r-series).
-# Round-12 playbook: if CORRECTNESS_r11 is green on its window, regen
-# the ledger with the r11 rows and advance; any red (or any green name
-# whose result-affecting definition changed this round) re-enters the
-# r12 window first, as always. Eleven r11 re-entries: u11 re-spelled
-# its postgres split as STRING_TO_ARRAY (round-10 ADVICE — the probe
-# now exercises the literal-delimiter rewrite), and the round-11
-# NULL-sort-position sweep made trino/presto/snowflake (NULL-largest)
-# and clickhouse (NULLS LAST both ways) ORDER BY defaults explicit —
-# every green entry on those dialects with a bare ORDER BY key now
-# EMITS different Spark SQL (q24 q27 s32 s37 s39 t94 t97 u03 u08 u12;
-# sort keys are non-null TPC-H columns so values are provably
-# identical, re-entering anyway per the t90/t92 precedent; s40 sqlite
-# is NULL-smallest like Spark, emission unchanged, stays green).
-# Round 12 (EXECUTED): CORRECTNESS_r11 was 50/50 rows+schema+hash
-# green — the ten NULL-sort re-entries, u11's STRING_TO_ARRAY
-# re-spelling, and 39 staleness-ordered rotated greens — so all
-# re-entries rejoin _DRIVER_GREEN and the u range extends through u14
-# unconditionally. _driver_ledger.py regenerated with the r11 rows.
-# Round 12 is the second OPTIMIZATION round: no new registry entries,
-# no result-affecting definition changes (every optimization is
-# oracle-verified result-identical), so the r12 window is pure
-# staleness rotation. Round-13 playbook: if CORRECTNESS_r12 is green,
-# regen the ledger with the r12 rows; any red re-enters first, as
-# always.
-_R11_REENTRIES = frozenset()
-_DRIVER_GREEN = frozenset(
-    [f"q{i:02d}" for i in range(1, 28)]
-    + [f"q{i}" for i in range(30, 100)]
-    + ["q100"]
-    + [f"r{i}" for i in range(46, 51)]
-    + ["r55", "r56"]
-    + [f"r{i}" for i in range(57, 100)]
-    # s01..s99 complete: s47/s68/s81 joined on their r08 rows-only
-    # records (r03 ``no_oracle`` precedent), s63 green since r07
-    + [f"s{i:02d}" for i in range(1, 100)]
-    # t01..t99 complete: t66 green in r09; t90/t92/t93 re-entered and
-    # re-greened in r10 after their r09 definition changes
-    + [f"t{i:02d}" for i in range(1, 100)]
-    # dialect-fidelity batches r08 (u01..u03) + r09 (u04..u10) +
-    # r10 (u11..u13 + the u14 sampled blocking audit); u11 re-greened
-    # in r11 after its STRING_TO_ARRAY re-spelling
-    + [f"u{i:02d}" for i in range(1, 15)]
-) - _R11_REENTRIES
+# Registry-name prefixes (e.g. "t66") whose result-affecting definition
+# changed since their last green record: they re-enter the window.
+_REENTRIES: frozenset[str] = frozenset()
 
 
-def _rotated(name: str) -> str:
-    return "z" + name[1:] if name.split("_", 1)[0] in _DRIVER_GREEN else name
-
-
-def _exposed(items):
-    """Registry items sorted by (is-driver-green, staleness, has-no-
-    oracle, key).
-
-    The driver consumes the first 50 entries in dict insertion order, so
-    insertion order must equal this sort order for the z-rotation to
-    actually advance the verification window (see comment above).
-    Never-driver-verified entries sort first (greens are already
-    proven — re-verifying one burns a slot), and within that half
-    oracle-bearing entries sort before rows-only ones so slots go to
-    hash-verifiable names first (round-3 verdict). Rows-only names
-    sort AFTER the full never-verified oracle-paired inventory but
-    BEFORE any rotated green — round-7 verdict: once fewer than 50
-    oracle-bearing names remain unverified, the spare slots take the
-    rows-only checks (r03 ``no_oracle`` precedent) instead of
-    re-verifying greens. The GREEN half orders by staleness — most
-    recent driver-green round, oldest first (round-9 verdict task 1) —
-    so the spare slots re-verify where drift would hide longest; ties
-    fall back to (has-no-oracle, rotated key).
-    """
-    return sorted(
-        items,
-        key=lambda kv: (
-            kv[0].split("_", 1)[0] in _DRIVER_GREEN,
-            LAST_GREEN_ROUND.get(kv[0], 0)
-            if kv[0].split("_", 1)[0] in _DRIVER_GREEN
-            else 0,
-            kv[1].oracle is None,
-            _rotated(kv[0]),
-        ),
+def is_green(rec: dict) -> bool:
+    """Full rows+schema+hash match, or the rows-only ``no_oracle`` record."""
+    if rec.get("err") == "no_oracle":
+        return rec.get("spark_rows") is not None
+    return bool(
+        rec.get("err") is None
+        and rec.get("rows_match")
+        and rec.get("schema_match")
+        and rec.get("hash_match")
     )
+
+
+def green_rounds(names, ledger_dir: Path) -> dict[str, int]:
+    """Driver-green registry name -> round of its latest record, from the
+    ``CORRECTNESS_r{N}.json`` files in ``ledger_dir``. A name is green
+    when its latest record is; records may carry the ``z`` rotation."""
+    by_rotated: dict[str, list[str]] = {}
+    for n in names:
+        by_rotated.setdefault("z" + n[1:], []).append(n)
+    latest: dict[str, tuple[int, dict]] = {}
+    for path in ledger_dir.glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            for recorded, rec in json.loads(path.read_text()).items():
+                cands = [recorded] if recorded in names else by_rotated.get(recorded, [])
+                if len(cands) > 1:
+                    raise ValueError(f"ambiguous rotated record {recorded}: {cands}")
+                # no candidate: a renamed or retired entry
+                if cands and int(m[1]) > latest.get(cands[0], (0,))[0]:
+                    latest[cands[0]] = (int(m[1]), rec)
+    return {
+        n: rnd
+        for n, (rnd, rec) in latest.items()
+        if is_green(rec) and n.split("_", 1)[0] not in _REENTRIES
+    }
+
+
+def _exposed(specs, green: dict[str, int]) -> list[tuple[str, object]]:
+    """(exposed key, spec) in insertion order; the driver checks the first 50.
+
+    Fresh names come first: re-verifying a driver-green one burns a
+    slot. Green names follow under a ``z`` prefix, stalest green round
+    first. In either half oracle-bearing names precede rows-only ones,
+    then exposed keys sort lexically. A red latest record, or a prefix
+    in ``_REENTRIES`` (result-affecting change; drop it once a newer
+    green record exists), puts a name back in the fresh half."""
+    def key(name):
+        return "z" + name[1:] if name in green else name
+
+    order = sorted(
+        specs.items(),
+        key=lambda kv: (kv[0] in green, green.get(kv[0], 0), kv[1].oracle is None, key(kv[0])),
+    )
+    return [(key(name), spec) for name, spec in order]
+
+
+_GREEN = green_rounds(load_all(), Path(__file__).resolve().parent)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -265,16 +93,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 + extensions."""
     specs = load_all()
-    out = {_rotated(name): spec.fn for name, spec in _exposed(specs.items())}
-    # The z-rotation folds four name families (q/r/s/t) into one shared
-    # namespace: two green queries sharing digits+suffix would silently
-    # merge into one dict key and a verified query would vanish from
-    # the exposed registry. Refuse instead.
+    out = {k: spec.fn for k, spec in _exposed(specs, _GREEN)}
+    # The z-rotation folds the q/r/s/t/u families into one namespace: two
+    # green names sharing digits+suffix would merge into one key. Refuse.
     if len(out) != len(specs):
-        raise RuntimeError(
-            f"rotated-name collision: {len(specs)} registry entries "
-            f"exposed as {len(out)} keys"
-        )
+        raise RuntimeError(f"rotated-name collision: {len(specs)} entries as {len(out)} keys")
     return out
 
 
@@ -282,15 +105,8 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted for non-SQL-expressible
     streaming ops — driver records a rows-only check for those)."""
     specs = load_all()
-    out = {
-        _rotated(name): spec.oracle
-        for name, spec in _exposed(specs.items())
-        if spec.oracle is not None
-    }
+    out = {k: spec.oracle for k, spec in _exposed(specs, _GREEN) if spec.oracle is not None}
     n_oracle = sum(1 for s in specs.values() if s.oracle is not None)
     if len(out) != n_oracle:  # see queries(): rotated-namespace collision
-        raise RuntimeError(
-            f"rotated-name collision: {n_oracle} oracle entries "
-            f"exposed as {len(out)} keys"
-        )
+        raise RuntimeError(f"rotated-name collision: {n_oracle} oracles as {len(out)} keys")
     return out

@@ -1,117 +1,105 @@
 """Driver-contract regression tests for ``__spark_entry__``.
 
 The driver verifies the FIRST 50 entries of ``queries()`` in dict
-insertion order (proven by CORRECTNESS_r02.json).  Round 2's rotation
-built the dict in canonical-name order, so 43 of 50 slots re-verified
-already-green queries.  These tests pin the fixed behavior: insertion
-order equals (is-driver-green, staleness, has-no-oracle,
-rotated-lexical) order — the green half re-verifies oldest driver-green
-round first (_driver_ledger, round-9 verdict task 1).
-After round 10 every registry name is driver-green (r01..r10
-cumulative ledger; CORRECTNESS_r10 re-greened the t90/t92/t93
-re-entries, landed u11..u14, and recorded q90's rows-only
-``no_oracle`` row). The round-11 window is therefore fresh entries
-first (none unless this round registers new ones), then rotated-green
-re-verifications ordered by staleness — oldest driver-green round
-first, so the round-4-era q23..q27 execute-path rows lead.
+insertion order. ``__spark_entry__`` derives that order at import time
+from the ``CORRECTNESS_r*.json`` ledger next to it (the rules are in
+the ``_exposed`` docstring). These tests check the rules on the
+committed ledger and on synthetic ledgers under ``tmp_path``, so a new
+round's ledger file cannot red the suite.
 """
 
 from __future__ import annotations
 
+import hashlib
 import importlib
+import json
+import shutil
+from pathlib import Path
+
+import pytest
 
 entry_mod = importlib.import_module("__spark_entry__")
 
-# Names with a green (or, for rows-only entries, recorded
-# ``no_oracle``) driver CORRECTNESS row in r01..r10 — the full
-# inventory as of round-11 open.
-_VERIFIED_PREFIXES = (
-    {f"q{i:02d}" for i in range(1, 28)}
-    | {f"q{i}" for i in range(30, 100)}
-    | {"q100"}
-    | {f"r{i}" for i in range(46, 51)}
-    | {"r55", "r56"}
-    | {f"r{i}" for i in range(57, 100)}
-    | {f"s{i:02d}" for i in range(1, 100)}
-    | {f"t{i:02d}" for i in range(1, 100)}
-    # u01..u14 all green: u11 re-greened in r11 after its
-    # STRING_TO_ARRAY re-spelling; the ten round-11 NULL-sort-position
-    # re-entries (q24/q27/s32/s37/s39/t94/t97/u03/u08/u12) re-greened
-    # in CORRECTNESS_r11 (50/50 hash green).
-    | {f"u{i:02d}" for i in range(1, 15)}
-)
+_REPO = Path(entry_mod.__file__).resolve().parent
+_GREEN_REC = {
+    "rows_match": True,
+    "schema_match": True,
+    "hash_match": True,
+    "spark_rows": 1,
+    "oracle_rows": 1,
+    "err": None,
+}
+_RED_REC = dict(_GREEN_REC, hash_match=False)
 
-# Round 12: no rows-only re-entries pending.
-_ROWS_ONLY_FRESH: list[str] = []
+
+# exposed z-key -> registry name (unique: queries() refuses collisions)
+_UNROTATED = {"z" + n[1:]: n for n in entry_mod.load_all()}
+
+
+def _unrotate(key: str) -> str:
+    return _UNROTATED.get(key, key)
+
+
+def _write_ledger(ledger_dir: Path, rnd: int, records: dict) -> None:
+    (ledger_dir / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(records))
+
+
+def _exposed(ledger_dir: Path) -> list:
+    specs = entry_mod.load_all()
+    return entry_mod._exposed(specs, entry_mod.green_rounds(specs, ledger_dir))
+
+
+def _keys(ledger_dir: Path) -> list[str]:
+    return [k for k, _ in _exposed(ledger_dir)]
+
+
+def _check_window(keys: list[str], oracles: set[str], green: dict[str, int]) -> None:
+    """Fresh oracle-bearing names lead (lexical), then fresh rows-only
+    ones, then rotated greens stalest first."""
+    fresh = [k for k in keys if not k.startswith("z")]
+    fresh_oracle = sorted(k for k in fresh if k in oracles)
+    fresh_rows_only = sorted(k for k in fresh if k not in oracles)
+    assert keys[: len(fresh)] == fresh_oracle + fresh_rows_only
+    rounds = [green[_unrotate(k)] for k in keys[len(fresh):]]
+    assert rounds == sorted(rounds)
+    assert all(_unrotate(k) not in green for k in fresh)
 
 
 def test_first_50_insertion_order_are_never_verified():
     keys = list(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    window = keys[:50]
-    fresh_oracle = sorted(k for k in keys if not k.startswith("z") and k in oracles)
-    fresh_rows_only = sorted(
-        k for k in keys if not k.startswith("z") and k not in oracles
-    )
-    assert fresh_rows_only == _ROWS_ONLY_FRESH
-    n_fresh = len(fresh_oracle) + len(fresh_rows_only)
-    assert window[:n_fresh] == fresh_oracle + fresh_rows_only
-    # The spare slots go to rotated (already-green) names, stalest
-    # first: the round-11 window's green half leads with the oldest
-    # driver rows in the regenerated ledger.
-    assert all(k.startswith("z") for k in window[n_fresh:])
-    inv = {"z" + n[1:]: n for n in entry_mod.load_all()}
-    rounds = [entry_mod.LAST_GREEN_ROUND[inv[k]] for k in window[n_fresh:]]
-    assert rounds == sorted(rounds)
-    min_round = min(entry_mod.LAST_GREEN_ROUND.values())
-    assert rounds and rounds[0] == min_round
+    _check_window(keys, set(entry_mod.oracle_sql()), entry_mod._GREEN)
+    # The spare slots go to rotated (already-green) names, stalest first.
+    window_green = [k for k in keys[:50] if k.startswith("z")]
+    if window_green:
+        assert entry_mod._GREEN[_unrotate(window_green[0])] == min(entry_mod._GREEN.values())
 
 
 def test_rotated_names_cover_all_driver_green():
     registered = set(entry_mod.load_all())
     keys = set(entry_mod.queries())
-    green = {
-        n for n in registered
-        if n.split("_", 1)[0] in entry_mod._DRIVER_GREEN
-    }
+    green = set(entry_mod._GREEN)
+    assert green <= registered
     # Every registered green name is exposed under its z-rotation (and
     # never under its own name); every non-green name is exposed as-is.
     for n in green:
         assert "z" + n[1:] in keys and n not in keys, n
     for n in registered - green:
         assert n in keys and "z" + n[1:] not in keys, n
-    # The pinned ledger matches the live one for registered prefixes
-    # (_DRIVER_GREEN is range-built, so it may hold prefixes with no
-    # registered query — e.g. r69 — which are inert).
-    reg_prefixes = {n.split("_", 1)[0] for n in registered}
-    assert (
-        set(entry_mod._DRIVER_GREEN) & reg_prefixes
-        == _VERIFIED_PREFIXES & reg_prefixes
-    )
 
 
 def test_insertion_order_is_green_last_then_no_oracle_then_lexical():
     keys = list(entry_mod.queries())
     oracles = set(entry_mod.oracle_sql())
-    # inverse rotation: exposed z-name -> registry name (unique; the
-    # collision guard in queries() enforces it)
-    inv = {"z" + n[1:]: n for n in entry_mod.load_all()}
     expected = sorted(
         keys,
         key=lambda k: (
             k.startswith("z"),
-            entry_mod.LAST_GREEN_ROUND.get(inv.get(k, k), 0)
-            if k.startswith("z")
-            else 0,
+            entry_mod._GREEN.get(_unrotate(k), 0) if k.startswith("z") else 0,
             k not in oracles,
             k,
         ),
     )
     assert keys == expected
-    # Within each (green, oracle) group the order is lexical, so the
-    # rotation window advances deterministically round to round.
-    fresh_oracle = [k for k in keys if not k.startswith("z") and k in oracles]
-    assert fresh_oracle == sorted(fresh_oracle)
 
 
 def test_oracle_keys_subset_of_query_keys():
@@ -123,85 +111,82 @@ def test_oracle_keys_subset_of_query_keys():
     # sketches, BPE's iterative merge learning, and binary media
     # decoding.  Pinned exactly so a new query can't silently ship
     # without an oracle.
-    assert q - o == {
-        "z47_bpe_learn_merges",
-        "z68_stream_welford_anomalies",
-        "z81_hll_sketch_rollup",
-        "z52_stream_window_percentiles",
-        "z82_stream_running_totals",
-        "z89_distinct_sketch",
-        "z90_multimodal_features",
-        "z91_multimodal_frames",
-        "z93_approx_ntile",
+    assert {_unrotate(k) for k in q - o} == {
+        "s47_bpe_learn_merges",
+        "s68_stream_welford_anomalies",
+        "s81_hll_sketch_rollup",
+        "t52_stream_window_percentiles",
+        "q82_stream_running_totals",
+        "q89_distinct_sketch",
+        "q90_multimodal_features",
+        "q91_multimodal_frames",
+        "q93_approx_ntile",
     }
 
 
-def _load_gen_module():
-    import importlib.util
-    import os
+def test_order_from_first_twelve_ledgers_is_unchanged(tmp_path):
+    """The import-time derivation reproduces the order the generated
+    staleness table gave for CORRECTNESS_r01..r12. A registry change
+    legitimately moves these digests."""
+    for rnd in range(1, 13):
+        shutil.copy(_REPO / f"CORRECTNESS_r{rnd:02d}.json", tmp_path)
+    exposed = _exposed(tmp_path)
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "gen_driver_ledger", os.path.join(repo, "scripts", "gen_driver_ledger.py")
-    )
-    gen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen)
-    return gen
+    def digest(keys):
+        return hashlib.sha256("\n".join(keys).encode()).hexdigest()[:16]
 
-
-def test_staleness_ledger_fresh_and_covers_green():
-    """The committed _driver_ledger.py must equal a fresh derivation
-    from the git-TRACKED CORRECTNESS_r*.json (catches forgetting to
-    re-run scripts/gen_driver_ledger.py after a driver round's file is
-    committed — but does NOT red the suite when the driver drops an
-    UNTRACKED new-round file between rounds; round-10 verdict task 2).
-    Every driver-green registry name must carry a staleness row (a
-    missing row would silently sort that name as round-0-stale and burn
-    re-verification slots on it every round)."""
-    gen = _load_gen_module()
-    assert gen.derive(tracked_only=True) == entry_mod.LAST_GREEN_ROUND
-    for n in entry_mod.load_all():
-        if n.split("_", 1)[0] in entry_mod._DRIVER_GREEN:
-            assert n in entry_mod.LAST_GREEN_ROUND, n
+    assert digest(k for k, _ in exposed) == "6226d00b5272b049"
+    assert digest(k for k, s in exposed if s.oracle is not None) == "27ffd89dd2b2fd0c"
 
 
-def test_staleness_pin_tolerates_untracked_new_round():
-    """Simulates the round-open state that redded round 10: the driver
-    writes CORRECTNESS_r{N+1}.json but nothing is committed yet. The
-    tracked-only derivation (what the pin compares) must ignore it; the
-    default derivation (what the CLI regen uses) must pick it up."""
-    import json
-    import os
+def test_newer_green_round_moves_name_later(tmp_path):
+    names = list(entry_mod.load_all())
+    _write_ledger(tmp_path, 1, {n: _GREEN_REC for n in names})
+    before = _keys(tmp_path)
+    assert before[-1] != "z01_pricing_summary"
+    # a later round records it under its rotated key, as the driver does
+    _write_ledger(tmp_path, 2, {"z01_pricing_summary": _GREEN_REC})
+    after = _keys(tmp_path)
+    assert after[-1] == "z01_pricing_summary"
+    assert sorted(after) == sorted(before)
 
-    gen = _load_gen_module()
-    some_name = next(iter(entry_mod.load_all()))
-    fake = os.path.join(gen.REPO, "CORRECTNESS_r98.json")
-    assert not os.path.exists(fake)
-    try:
-        with open(fake, "w") as f:
-            json.dump(
-                {
-                    some_name: {
-                        "rows_match": True,
-                        "schema_match": True,
-                        "hash_match": True,
-                        "spark_rows": 1,
-                        "oracle_rows": 1,
-                        "err": None,
-                    }
-                },
-                f,
-            )
-        tracked = gen.derive(tracked_only=True)
-        fresh = gen.derive()
-        # untracked new-round file: invisible to the pin...
-        assert tracked == entry_mod.LAST_GREEN_ROUND
-        assert tracked[some_name] < 98
-        # ...but the regen CLI sees it (so round-open regen works even
-        # before the file is committed).
-        assert fresh[some_name] == 98
-        assert {k: v for k, v in fresh.items() if k != some_name} == {
-            k: v for k, v in tracked.items() if k != some_name
-        }
-    finally:
-        os.remove(fake)
+
+def test_red_latest_record_reenters_fresh_half(tmp_path):
+    names = list(entry_mod.load_all())
+    _write_ledger(tmp_path, 1, {n: _GREEN_REC for n in names})
+    _write_ledger(tmp_path, 2, {"z01_pricing_summary": _RED_REC})
+    keys = _keys(tmp_path)
+    assert keys[0] == "q01_pricing_summary"
+    assert all(k.startswith("z") for k in keys[1:])
+
+
+def test_reentries_prefix_reenters_fresh_half(tmp_path, monkeypatch):
+    names = list(entry_mod.load_all())
+    _write_ledger(tmp_path, 1, {n: _GREEN_REC for n in names})
+    monkeypatch.setattr(entry_mod, "_REENTRIES", frozenset({"q01"}))
+    assert _keys(tmp_path)[0] == "q01_pricing_summary"
+
+
+def test_ambiguous_rotated_record_raises(tmp_path):
+    _write_ledger(tmp_path, 1, {"z01_same": _GREEN_REC})
+    with pytest.raises(ValueError, match="ambiguous rotated record z01_same"):
+        entry_mod.green_rounds(["q01_same", "r01_same"], tmp_path)
+
+
+def test_new_green_round_keeps_window_rules(tmp_path):
+    """A green next-round ledger over the current window (keyed as the
+    driver records it) rotates those names to the back; the window
+    rules still hold."""
+    paths = list(_REPO.glob("CORRECTNESS_r*.json"))
+    for path in paths:
+        shutil.copy(path, tmp_path)
+    next_round = 1 + max(int(p.stem[len("CORRECTNESS_r"):]) for p in paths)
+    window = list(entry_mod.queries())[:50]
+    _write_ledger(tmp_path, next_round, {k: _GREEN_REC for k in window})
+    specs = entry_mod.load_all()
+    green = entry_mod.green_rounds(specs, tmp_path)
+    exposed = entry_mod._exposed(specs, green)
+    keys = [k for k, _ in exposed]
+    oracles = {k for k, s in exposed if s.oracle is not None}
+    _check_window(keys, oracles, green)
+    assert {_unrotate(k) for k in keys[-50:]} == {_unrotate(k) for k in window}

@@ -1346,7 +1346,19 @@ def test_build_concurrently_matches_sequential(spark):
     release_caches()
 
 
-def test_simhash_blocked_join_equals_plain_join(spark):
+def test_in_threads_without_pinned_thread_mode(spark, monkeypatch):
+    """With pinned-thread mode off, pyspark's inheritable_thread_target
+    returns its argument verbatim, so the session-passing form yields
+    the session itself; the helper must still run every callable."""
+    import pyspark.util
+
+    from xorbits_sql_spark.operators.dedup import construct_concurrently
+
+    monkeypatch.setattr(pyspark.util, "inheritable_thread_target", lambda f=None: f)
+    assert construct_concurrently(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+
+
+def test_simhash_blocked_join_equals_plain_join(spark, monkeypatch):
     """§2.5 block decomposition: with a tiny bucket-key space the
     within-bucket all-pairs join runs on (bucket, block_i, block_j);
     the pair set must be EXACTLY the plain bucket join's. prefix_bits=0
@@ -1366,7 +1378,7 @@ def test_simhash_blocked_join_equals_plain_join(spark):
     # the volume gate engages blocking only when one bucket alone holds
     # a task's worth of pairs (~4M); lower it so 300 docs cross it here
     orig = dedup_mod._PAIR_ROWS_PER_PARTITION
-    dedup_mod._PAIR_ROWS_PER_PARTITION = 1_000
+    monkeypatch.setattr(dedup_mod, "_PAIR_ROWS_PER_PARTITION", 1_000)
     blocked = {
         tuple(r)
         for r in simhash_pairs(
@@ -1374,7 +1386,7 @@ def test_simhash_blocked_join_equals_plain_join(spark):
         ).collect()
     }
     release_caches()
-    dedup_mod._PAIR_ROWS_PER_PARTITION = orig
+    monkeypatch.setattr(dedup_mod, "_PAIR_ROWS_PER_PARTITION", orig)
     plain = {
         tuple(r)
         for r in simhash_pairs(
@@ -1428,8 +1440,8 @@ def test_simhash_blocked_join_equals_plain_join(spark):
     sizes = sorted(r["count"] for r in bn)
     assert len(sizes) >= 2, "test corpus must spread over >= 2 buckets"
     cap = sizes[-1] - 1  # biggest bucket overflows, the rest stay small
-    dedup_mod._PAIR_ROWS_PER_PARTITION = 10
+    monkeypatch.setattr(dedup_mod, "_PAIR_ROWS_PER_PARTITION", 10)
     blocked_mixed = mixed({"max_bucket": cap})
-    dedup_mod._PAIR_ROWS_PER_PARTITION = orig
+    monkeypatch.setattr(dedup_mod, "_PAIR_ROWS_PER_PARTITION", orig)
     plain_mixed = mixed({"max_bucket": cap})
     assert blocked_mixed == plain_mixed and len(blocked_mixed) > 0

@@ -1,6 +1,6 @@
 """Registration-surface parity (nested names, row-dict tables, schema
 typing — reference core.py:62-65, table.py:91-103) and the dialect
-fallback normalizer (active in environments without sqlglot)."""
+transpiler."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from xorbits_sql_spark import execute
-from xorbits_sql_spark.dialect import has_sqlglot, transpile
+from xorbits_sql_spark.dialect import transpile
 from xorbits_sql_spark.errors import UnsupportedError
 from xorbits_sql_spark.table import flatten_tables, parse_type
 
@@ -66,11 +66,7 @@ def test_parse_type_decimal_and_array():
     assert parse_type("array<float>").simpleString() == "array<float>"
 
 
-# ---- dialect fallback (regex normalizer; full path uses sqlglot) ----
-
-pytestmark_fallback = pytest.mark.skipif(
-    has_sqlglot(), reason="sqlglot present: fallback normalizer not in play"
-)
+# ---- dialect transpiler (token-stream normalizer) ----
 
 
 def test_pg_cast_passthrough(spark):
@@ -81,7 +77,6 @@ def test_pg_cast_passthrough(spark):
     assert spark.sql(transpile(q, "duckdb")).collect()[0]["s"] == 3
 
 
-@pytestmark_fallback
 def test_double_quoted_identifiers():
     assert transpile('SELECT "my col" FROM "t"', "postgres") == (
         "SELECT `my col` FROM `t`"
@@ -90,7 +85,6 @@ def test_double_quoted_identifiers():
     assert transpile('SELECT "x" FROM t', "mysql") == 'SELECT "x" FROM t'
 
 
-@pytestmark_fallback
 def test_tsql_rewrites():
     out = transpile("SELECT ISNULL(a, 0), GETDATE() FROM t", "tsql")
     assert "COALESCE(a, 0)" in out and "CURRENT_TIMESTAMP()" in out
@@ -132,7 +126,6 @@ def test_pandas_udf_in_execute_sql(spark):
 # change semantics.)
 
 
-@pytestmark_fallback
 def test_tsql_top_becomes_limit(spark):
     pdf = pd.DataFrame({"x": list(range(10))})
     got = execute(
@@ -152,7 +145,44 @@ def test_tsql_top_becomes_limit(spark):
     assert [r["x"] for r in got2] == [0, 1, 2]
 
 
-@pytestmark_fallback
+_FETCH_FIRST = "SELECT x FROM t ORDER BY x DESC FETCH FIRST 3 ROWS ONLY"
+_OFFSET_FETCH = "SELECT x FROM t ORDER BY x OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY"
+
+
+@pytest.mark.parametrize(
+    "dialect, q, expected",
+    [
+        ("oracle", _FETCH_FIRST, [9, 8, 7]),
+        ("postgres", _FETCH_FIRST, [9, 8, 7]),
+        ("ansi", _FETCH_FIRST, [9, 8, 7]),
+        ("duckdb", _FETCH_FIRST, [9, 8, 7]),
+        ("postgres", _OFFSET_FETCH, [1, 2]),
+        ("tsql", _OFFSET_FETCH, [1, 2]),
+        # nested scope, FIRST ROW without a count, OFFSET after FETCH
+        (
+            "postgres",
+            "SELECT x FROM (SELECT x FROM t ORDER BY x FETCH FIRST 4 ROWS ONLY) s "
+            "ORDER BY x DESC FETCH FIRST ROW ONLY OFFSET 1",
+            [2],
+        ),
+    ],
+)
+def test_fetch_first_becomes_limit(spark, dialect, q, expected):
+    # Spark parses neither FETCH FIRST nor OFFSET ... ROWS
+    sql = transpile(q, dialect)
+    assert "FETCH" not in sql.upper() and "ROWS" not in sql.upper()
+    pdf = pd.DataFrame({"x": list(range(10))})
+    got = execute(q, tables={"t": pdf}, dialect=dialect, spark=spark).collect()
+    assert [r["x"] for r in got] == expected
+
+
+def test_fetch_first_ties_and_percent_raise():
+    with pytest.raises(UnsupportedError, match="WITH TIES"):
+        transpile("SELECT x FROM t ORDER BY x FETCH FIRST 3 ROWS WITH TIES", "oracle")
+    with pytest.raises(UnsupportedError, match="PERCENT"):
+        transpile("SELECT x FROM t ORDER BY x FETCH FIRST 30 PERCENT ROWS ONLY", "oracle")
+
+
 def test_tsql_top_unsupported_forms_raise():
     from xorbits_sql_spark.errors import UnsupportedError
 
@@ -177,7 +207,6 @@ def test_tsql_top_unsupported_forms_raise():
         transpile("SELECT TOP 5 TOP 3 x FROM t", "tsql")
 
 
-@pytestmark_fallback
 def test_tsql_top_constant_order_by_items_raise():
     """tsql rejects constants in TOP's ORDER BY; letting one into the
     generated OVER (ORDER BY ...) would silently rank every row equal.
@@ -197,7 +226,6 @@ def test_tsql_top_constant_order_by_items_raise():
             )
 
 
-@pytestmark_fallback
 def test_tsql_distinct_top_star_detection(spark):
     """COUNT(*) in the select list is NOT a star projection: the wrap
     path must still validate ORDER BY output names, refusing at
@@ -229,7 +257,6 @@ def test_tsql_distinct_top_star_detection(spark):
     assert sorted((r["x"] for r in got_q), reverse=True) == [10, 9]
 
 
-@pytestmark_fallback
 def test_tsql_distinct_top_order_by_expression_over_output(spark):
     """An ORDER BY expression built only from select-OUTPUT columns
     resolves in the wrapped scope and must not refuse; one referencing
@@ -267,7 +294,6 @@ def test_tsql_distinct_top_order_by_expression_over_output(spark):
         )
 
 
-@pytestmark_fallback
 def test_tsql_top_with_ties_and_percent(spark):
     """TOP n WITH TIES / TOP n PERCENT rewrite onto the QUALIFY
     machinery (RANK/ROW_NUMBER window predicate) instead of raising."""
@@ -335,7 +361,6 @@ def test_tsql_top_with_ties_and_percent(spark):
     assert sorted((r["x"] for r in rd), reverse=True) == [10, 10]
 
 
-@pytestmark_fallback
 def test_tsql_top_ties_positional_order_by(spark):
     """A bare top-level integer ORDER BY item is a select-list ordinal
     in tsql; the rank rewrite resolves it to that item's defining
@@ -368,7 +393,6 @@ def test_tsql_top_ties_positional_order_by(spark):
     assert sorted((r["k"], r["n"]) for r in ga) == [("a", 2), ("b", 2)]
 
 
-@pytestmark_fallback
 def test_tsql_distinct_top_ties_percent(spark):
     """tsql applies TOP after DISTINCT: the rewrite wraps the DISTINCT
     scope in a subquery and ranks its output. Ranking before DISTINCT
@@ -411,7 +435,6 @@ def test_tsql_distinct_top_ties_percent(spark):
     assert sorted((r["v"] for r in ali), reverse=True) == [10, 9]
 
 
-@pytestmark_fallback
 def test_teradata_top_ties_with_qualify(spark):
     """teradata applies QUALIFY before TOP: the rewrite wraps the
     QUALIFY scope in a subquery (processed by the later QUALIFY pass)
@@ -432,7 +455,6 @@ def test_teradata_top_ties_with_qualify(spark):
     assert sorted((r["k"], r["x"]) for r in got) == [("a", 5), ("b", 5)]
 
 
-@pytestmark_fallback
 def test_tsql_top_in_set_operation_binds_per_arm(spark):
     """TOP binds to its own SELECT arm in tsql — the rewrite must not
     let the appended LIMIT (or rank wrapper) rebind to the whole set
@@ -458,7 +480,6 @@ def test_tsql_top_in_set_operation_binds_per_arm(spark):
     assert sorted(r["y"] for r in ties) == [7, 7, 100, 101]
 
 
-@pytestmark_fallback
 def test_tsql_top_trailing_comment_keeps_limit(spark):
     """A trailing line comment must not swallow the appended LIMIT
     (review finding: LIMIT landed inside the comment text)."""
@@ -472,7 +493,6 @@ def test_tsql_top_trailing_comment_keeps_limit(spark):
     assert [r["x"] for r in got] == [0, 1, 2]
 
 
-@pytestmark_fallback
 def test_tsql_top_ties_trailing_comment(spark):
     """A trailing line comment on a TIES/PERCENT query must not land
     inside the generated OVER (ORDER BY ...) and swallow the rest of
@@ -503,7 +523,6 @@ def test_tsql_top_ties_trailing_comment(spark):
     assert sorted((r["x"] for r in mid), reverse=True) == [10, 10]
 
 
-@pytestmark_fallback
 def test_tsql_top_alias_binds_bare_items_only(spark):
     """tsql resolves a select-list alias in ORDER BY only when it is a
     BARE item; a name inside an expression binds to the FROM column
@@ -539,7 +558,6 @@ def test_tsql_top_alias_binds_bare_items_only(spark):
         ).collect()
 
 
-@pytestmark_fallback
 def test_wrapped_top_order_by_bare_n_refuses_at_transpile():
     """`ORDER BY N` with no output column n must refuse at transpile
     time, not surface as a runtime AnalysisException: N is an
@@ -563,7 +581,6 @@ def test_wrapped_top_order_by_bare_n_refuses_at_transpile():
     assert "ROW_NUMBER()" in out
 
 
-@pytestmark_fallback
 def test_tsql_top_in_subquery_rewrites(spark):
     """Round-3 verdict #4: TOP inside a subquery now rewrites in its own
     scope (the LIMIT lands at the subquery's end), and independent TOPs
@@ -585,7 +602,6 @@ def test_tsql_top_in_subquery_rewrites(spark):
     assert [r["x"] for r in got2] == [4, 3]
 
 
-@pytestmark_fallback
 def test_mysql_limit_offset(spark):
     pdf = pd.DataFrame({"x": list(range(10))})
     got = execute(
@@ -597,7 +613,6 @@ def test_mysql_limit_offset(spark):
     assert [r["x"] for r in got] == [2, 3, 4]
 
 
-@pytestmark_fallback
 def test_pg_extract_epoch(spark):
     pdf = pd.DataFrame({"ts": pd.to_datetime(["1970-01-01 00:01:00"])})
     got = execute(
@@ -614,7 +629,6 @@ def test_pg_extract_epoch(spark):
     assert "UNIX_MICROS" in out and "COALESCE(a, b)" in out
 
 
-@pytestmark_fallback
 def test_literals_and_comments_never_rewritten():
     # A string literal that LOOKS like rewritable constructs must survive.
     q = "SELECT 'TOP 5 \"quoted\" GETDATE()' AS s FROM t -- \"also quoted\""
@@ -624,7 +638,6 @@ def test_literals_and_comments_never_rewritten():
     assert "`c`" in out_pg and "'keep \"this\"'" in out_pg
 
 
-@pytestmark_fallback
 def test_qualified_name_in_literal_untouched(spark):
     # core._rewrite_qualified_names must skip string literals (ADVICE r1).
     pdf = pd.DataFrame({"note": ["see db.tbl", "other"]})
@@ -636,7 +649,6 @@ def test_qualified_name_in_literal_untouched(spark):
     assert [r["note"] for r in got] == ["see db.tbl"]
 
 
-@pytestmark_fallback
 def test_tsql_brackets_and_len(spark):
     pdf = pd.DataFrame({"my col": ["abc", "de"]})
     got = execute(
@@ -673,7 +685,6 @@ def test_qualify_matches_duckdb(spark, q):
     assert got == want
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_qualify_unsupported_forms_raise():
     # two QUALIFY clauses in ONE arm of one scope is malformed
     with pytest.raises(UnsupportedError):
@@ -684,7 +695,6 @@ def test_qualify_unsupported_forms_raise():
         )
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_qualify_nested_and_distinct_and_star(spark):
     """Round-3 verdict #4: QUALIFY in a subquery/CTE rewrites in its own
     scope; DISTINCT hoists to the outer select (QUALIFY evaluates before
@@ -728,7 +738,6 @@ def test_qualify_nested_and_distinct_and_star(spark):
     assert sorted(got.columns) == ["b", "k"]
 
 
-@pytestmark_fallback
 def test_qualify_feeding_set_operations(spark):
     """QUALIFY binds per set-op arm; the rewrite splits the scope at
     depth-0 UNION/INTERSECT/EXCEPT and rewrites each arm, leaving a
@@ -774,7 +783,6 @@ def test_qualify_feeding_set_operations(spark):
     assert [r["k"] for r in got] == [0, 1, 2]
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_snowflake_rewrites():
     got = transpile("SELECT IFF(a > 1, 'x', 'y'), NVL(b, 0) FROM t", "snowflake")
     assert "IF(a > 1, 'x', 'y')" in got and "NVL(b, 0)" in got
@@ -786,7 +794,6 @@ def test_snowflake_rewrites():
     assert "iff" in transpile("SELECT iff FROM t", "snowflake")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_snowflake_datediff_boundary_semantics(spark):
     """Snowflake/T-SQL DATEDIFF counts boundary crossings, not complete
     elapsed units: one day across New Year is 1 year, 1 month, 1 day."""
@@ -810,7 +817,6 @@ def test_snowflake_datediff_boundary_semantics(spark):
     assert neg["d"] == -1
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_snowflake_unsupported_forms_raise():
     with pytest.raises(UnsupportedError):
         transpile("SELECT DATEDIFF(dayofyear, a, b) FROM t", "snowflake")
@@ -820,7 +826,6 @@ def test_snowflake_unsupported_forms_raise():
         transpile("SELECT TO_CHAR(d, 'YYYY-MM') FROM t", "snowflake")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_bigquery_rewrites(spark):
     got = transpile(
         "SELECT SAFE_CAST(x AS INT64), SAFE_DIVIDE(p, q) FROM t", "bigquery"
@@ -839,7 +844,6 @@ def test_bigquery_rewrites(spark):
     assert row["n"] == Decimal("1.500000000")  # BigQuery NUMERIC = DECIMAL(38,9)
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_dialect_literals_survive_new_rewrites():
     sql = "SELECT 'DATEADD(day, 1, x) IFF TO_NUMBER(1)' AS lit FROM t"
     assert "'DATEADD(day, 1, x) IFF TO_NUMBER(1)'" in transpile(sql, "snowflake")
@@ -897,7 +901,6 @@ def test_normalize_name_invalid_identifier_rejected():
         normalize_name("1starts_with_digit", None)
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_trino_rewrites(spark):
     got = transpile(
         "SELECT approx_distinct(x), arbitrary(y), strpos(s, 'a') FROM t", "trino"
@@ -925,7 +928,6 @@ def test_trino_rewrites(spark):
     assert "ANY (SELECT" in kept
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_oracle_rewrites(spark):
     got = transpile(
         "SELECT TO_CHAR(d, 'YYYY-MM-DD HH24:MI:SS') FROM t WHERE ROWNUM <= 10",
@@ -950,7 +952,6 @@ def test_oracle_rewrites(spark):
     )
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_oracle_unsupported_forms_raise():
     # ROWNUM with ORDER BY / extra predicates / in a subquery: Oracle
     # applies ROWNUM before sorting, so a LIMIT rewrite would lie.
@@ -969,7 +970,6 @@ def test_oracle_unsupported_forms_raise():
             transpile(bad, "oracle")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_oracle_nls_default_english_folds(spark):
     """The nlsparam is a no-op when it pins NLS_DATE_LANGUAGE to
     AMERICAN/ENGLISH — Spark's own en-US formatting locale — so the
@@ -989,7 +989,6 @@ def test_oracle_nls_default_english_folds(spark):
     assert row["m"] == "MAR WED"  # Oracle renders in the element's case
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_clickhouse_rewrites(spark):
     got = transpile(
         "SELECT uniq(x), uniqExact(x), any(v), countIf(v > 1), "
@@ -1012,7 +1011,6 @@ def test_clickhouse_rewrites(spark):
     assert (row["s"], row["n"], row["f"]) == (5, 2, 2.5)
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_sqlite_redshift_teradata_rewrites(spark):
     assert "DATE_FORMAT( ts, 'yyyy-MM')" in transpile(
         "SELECT strftime('%Y-%m', ts) FROM t", "sqlite"
@@ -1032,7 +1030,6 @@ def test_sqlite_redshift_teradata_rewrites(spark):
     assert "`col`" in got and "LIMIT 5" in got and "__qualify" in got
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_family_alias_dialects(spark):
     # doris/starrocks ride the mysql path (LIMIT offset,count; backticks)
     got = transpile("SELECT v FROM t LIMIT 5, 10", "doris")
@@ -1048,7 +1045,6 @@ def test_family_alias_dialects(spark):
     assert normalize_name("`Tbl`", "clickhouse") == "Tbl"
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_athena_materialize_spark2_aliases():
     # athena rides the trino/presto path (dquote idents, unit-first dates)
     assert "`col`" in transpile('SELECT "col" FROM t', "athena")
@@ -1072,7 +1068,6 @@ def test_unknown_dialect_raises():
         transpile("SELECT 1", "prql")
 
 
-@pytestmark_fallback
 def test_oracle_rownum_limit_survives_trailing_comment(spark):
     """LIMIT appended after a trailing line comment lands INSIDE the
     comment — the row cap was silently lost (all rows returned)."""
@@ -1086,7 +1081,6 @@ def test_oracle_rownum_limit_survives_trailing_comment(spark):
     assert len(got) == 5
 
 
-@pytestmark_fallback
 def test_tsql_union_wide_order_by_survives_arm_top(spark):
     """A trailing ORDER BY after a union belongs to the WHOLE set
     operation; a TOP in the last arm must not consume it."""
@@ -1108,7 +1102,6 @@ def test_tsql_union_wide_order_by_survives_arm_top(spark):
     assert [r["x"] for r in got] == [1, 5, 9, 9]  # union-wide ordering kept
 
 
-@pytestmark_fallback
 def test_mysql_backslash_strings_and_hash_comments(spark):
     """MySQL's default sql_mode escapes quotes with backslash, so the
     lexer must not split the literal (later rewrites corrupted its
@@ -1123,7 +1116,6 @@ def test_mysql_backslash_strings_and_hash_comments(spark):
     assert "#" not in out2 and "-- trailing note" in out2
 
 
-@pytestmark_fallback
 def test_mysql_limit_rewrites_every_occurrence(spark):
     out = transpile(
         "SELECT * FROM (SELECT * FROM t LIMIT 1, 2) s LIMIT 3, 4", "mysql"
@@ -1131,7 +1123,6 @@ def test_mysql_limit_rewrites_every_occurrence(spark):
     assert "LIMIT 2 OFFSET 1" in out and "LIMIT 4 OFFSET 3" in out
 
 
-@pytestmark_fallback
 def test_datediff_week_boundary_anchors(spark):
     """T-SQL DATEDIFF(week) counts SUNDAY boundaries (DATEFIRST-
     independent); Snowflake and postgres-derived Redshift count Monday
@@ -1148,7 +1139,6 @@ def test_datediff_week_boundary_anchors(spark):
         assert spark.sql(transpile(q2, d)).collect()[0]["w"] == want, d
 
 
-@pytestmark_fallback
 def test_tsql_len_isnull_are_call_sites_only(spark):
     """Columns NAMED len/isnull must survive (the old bare-word rewrite
     renamed them), and LEN ignores trailing spaces like T-SQL."""
@@ -1159,7 +1149,6 @@ def test_tsql_len_isnull_are_call_sites_only(spark):
     assert row["n"] == 3  # Spark LENGTH('abc ') would be 4
 
 
-@pytestmark_fallback
 def test_top_wrap_order_by_cast_type_name_allowed(spark):
     pdf = pd.DataFrame({"x": [3.9, 3.1, 1.0, 9.5]})
     got = execute(
@@ -1171,7 +1160,6 @@ def test_top_wrap_order_by_cast_type_name_allowed(spark):
     assert sorted((r["x"] for r in got), reverse=True) == [9.5, 3.9, 3.1]
 
 
-@pytestmark_fallback
 def test_oracle_to_char_case_fidelity(spark):
     """Oracle renders name elements in the element's case: 'MON'->'MAR',
     'mon'->'mar', 'Mon'->'Mar'; unpadded full names need FM; bare MONTH
@@ -1194,7 +1182,6 @@ def test_oracle_to_char_case_fidelity(spark):
         transpile("SELECT TO_CHAR(d, 'MON Dy') FROM t", "oracle")
 
 
-@pytestmark_fallback
 def test_backslash_escape_dialects_never_corrupt_literals(spark):
     """clickhouse/bigquery/snowflake/redshift string literals escape
     quotes with backslash; lexing them with the ANSI rule split the
@@ -1213,7 +1200,6 @@ def test_backslash_escape_dialects_never_corrupt_literals(spark):
     assert "__qualify" not in out3
 
 
-@pytestmark_fallback
 def test_multi_statement_structural_rewrites_stay_per_statement():
     """A trailing LIMIT from a TOP rewrite must land on ITS statement,
     not the last one (round-7 review, reproduced)."""
@@ -1246,14 +1232,12 @@ def test_qualify_with_window_clause_stays_in_scope(spark):
     assert sorted(r["x"] for r in got) == [2, 4]
 
 
-@pytestmark_fallback
 def test_tsql_bracket_identifier_close_escape():
     """]] escapes a ']' inside a T-SQL bracket identifier."""
     assert transpile("SELECT [a]]b] FROM t", "tsql") == "SELECT `a]b` FROM t"
     assert transpile("SELECT [a], [b] FROM t", "tsql") == "SELECT `a`, `b` FROM t"
 
 
-@pytestmark_fallback
 def test_top_with_column_named_limit():
     """LIMIT is not reserved in tsql: a column named limit in a TOP
     query must transpile, not refuse (round-7 review, reproduced)."""
@@ -1264,7 +1248,6 @@ def test_top_with_column_named_limit():
         transpile("SELECT TOP 5 a FROM t LIMIT 3", "tsql")
 
 
-@pytestmark_fallback
 def test_oracle_to_date_parsing_ignores_case_conflicts():
     """TO_DATE/TO_TIMESTAMP parse names case-insensitively, so a format
     mixing case styles is fine in the parsing direction; TO_CHAR still
@@ -1280,7 +1263,6 @@ def test_oracle_to_date_parsing_ignores_case_conflicts():
 # GROUP_CONCAT / STRING_AGG / DECODE / DATEPART / PIVOT naming
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_snowflake_lateral_flatten(spark):
     got = transpile(
         "SELECT d.id, f.index, f.value FROM docs d, "
@@ -1320,7 +1302,6 @@ def test_snowflake_lateral_flatten(spark):
     assert [r["id"] for r in rows] == [1]
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_snowflake_flatten_unsupported_forms_raise():
     for bad in [
         # semi-structured traversal arguments
@@ -1338,7 +1319,6 @@ def test_snowflake_flatten_unsupported_forms_raise():
     assert "'LATERAL FLATTEN(input => x)'" in got
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_bigquery_unnest_variants(spark):
     got = transpile("SELECT w FROM t, UNNEST(arr) AS w", "bigquery")
     assert "LATERAL VIEW EXPLODE(arr) _unnest0 AS w" in got
@@ -1361,7 +1341,6 @@ def test_bigquery_unnest_variants(spark):
     assert "_unnest0 AS a" in got and "_unnest1 AS b" in got
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_trino_unnest_table_column_alias(spark):
     got = transpile(
         "SELECT w FROM t CROSS JOIN UNNEST(arr) AS u (w)", "trino"
@@ -1377,7 +1356,6 @@ def test_trino_unnest_table_column_alias(spark):
     assert [r["w"] for r in rows] == ["a", "b"]
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_unnest_unsupported_forms_raise():
     cases = [
         ("SELECT 1 FROM t WHERE x IN UNNEST(arr)", "bigquery"),
@@ -1391,7 +1369,6 @@ def test_unnest_unsupported_forms_raise():
             transpile(sql, d)
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_postgres_distinct_on(spark):
     spark.sql(
         "SELECT 1 AS k, 10 AS v, 'a' AS s UNION ALL SELECT 1, 20, 'b' "
@@ -1421,7 +1398,6 @@ def test_postgres_distinct_on(spark):
     )
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only guards")
 def test_postgres_distinct_on_unsupported_forms_raise():
     # nondeterministic in postgres: no ORDER BY at all
     with pytest.raises(UnsupportedError):
@@ -1437,7 +1413,6 @@ def test_postgres_distinct_on_unsupported_forms_raise():
     assert "DISTINCT k" in got and "ROW_NUMBER" not in got
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_mysql_group_concat(spark):
     spark.sql(
         "SELECT 1 AS k, 'b' AS v UNION ALL SELECT 1, 'a' UNION ALL "
@@ -1466,7 +1441,6 @@ def test_mysql_group_concat(spark):
     assert "group_concat" in transpile("SELECT group_concat FROM t", "mysql")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_postgres_string_agg_internal_order_by(spark):
     got = transpile("SELECT STRING_AGG(v, ',' ORDER BY v DESC) FROM t", "postgres")
     # round 8: explicit pg NULL placement (aggregates skip NULLs, so
@@ -1486,7 +1460,6 @@ def test_postgres_string_agg_internal_order_by(spark):
     assert rows[0]["s"] == "a-b-c"
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_oracle_decode(spark):
     got = transpile("SELECT DECODE(x, 1, 'a', 2, 'b', 'z') FROM t", "oracle")
     flat = " ".join(got.split())
@@ -1519,7 +1492,6 @@ def test_oracle_decode(spark):
     assert "decode" in transpile("SELECT decode FROM t", "oracle")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_tsql_datepart_charindex_iif(spark):
     row = spark.sql(
         transpile(
@@ -1544,7 +1516,6 @@ def test_tsql_datepart_charindex_iif(spark):
         transpile("SELECT DATEPART(dy, d) FROM t", "tsql")
 
 
-@pytest.mark.skipif(has_sqlglot(), reason="fallback-only behavior")
 def test_snowflake_pivot_column_naming(spark):
     # un-aliased string literals get snowflake's QUOTED column names
     got = transpile(

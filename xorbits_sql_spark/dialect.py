@@ -3,20 +3,19 @@
 The reference delegates all dialect work to SQLGlot (reference
 core.py:102 calls sqlglot.optimizer.optimize with a ``dialect=`` arg and
 README.md advertises ~20 input dialects). Spark SQL parses only its own
-dialect, so this engine transpiles first:
+dialect, so this engine transpiles first, with one built-in token-stream
+transpiler that covers the cross-dialect constructs real queries
+actually hit (quoting styles, TOP n, LIMIT offsets, EPOCH extraction,
+tsql/mysql function spellings). sqlglot is never consulted, even when
+importable: it would skip the probed semantic fixes here (1-based
+subscripts, NULL order, integer division, DOW numbering).
 
-* If ``sqlglot`` is importable, use ``sqlglot.transpile(sql, read=dialect,
-  write="spark")`` — full-fidelity path.
-* Otherwise fall back to a built-in token-stream transpiler that covers
-  the cross-dialect constructs real queries actually hit (quoting styles,
-  TOP n, LIMIT offsets, EPOCH extraction, tsql/mysql function spellings).
-
-The fallback is deliberately NOT a full parser, but it is also not blind
+The transpiler is deliberately NOT a full parser, but it is also not blind
 regex: the SQL is lexed into tokens (string literals, quoted identifiers,
 comments, numbers, words, operators) and every rewrite runs over the
 token stream, so string literals and comments can never be corrupted,
 and structural rewrites (``TOP n`` → trailing ``LIMIT n``) track paren
-depth. Constructs the fallback cannot translate faithfully raise
+depth. Constructs it cannot translate faithfully raise
 ``UnsupportedError`` instead of silently changing semantics.
 """
 
@@ -26,14 +25,6 @@ import re
 from typing import Callable, Iterable
 
 from .errors import UnsupportedError
-
-try:  # pragma: no cover - exercised only when sqlglot is installed
-    import sqlglot
-
-    _HAS_SQLGLOT = True
-except ImportError:
-    sqlglot = None
-    _HAS_SQLGLOT = False
 
 # dialect aliases accepted by the API (superset of what we special-case)
 KNOWN_DIALECTS = {
@@ -379,7 +370,7 @@ def _rewrite_top(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                     or tokens[k][0] != "number"
                     or tokens[close][1] != ")"
                 ):
-                    raise UnsupportedError("unsupported TOP expression without sqlglot")
+                    raise UnsupportedError("unsupported TOP expression")
                 n_tokens = [tokens[k]]
                 end = close
             elif tokens[j][0] == "number":
@@ -1215,7 +1206,7 @@ def _rewrite_qualify_one(
             depth -= 1
         elif depth == 0 and kind == "word" and text.upper() in ("UNION", "INTERSECT", "EXCEPT"):
             raise UnsupportedError(
-                "QUALIFY feeding a set operation is not supported without sqlglot"
+                "QUALIFY feeding a set operation is not supported"
             )
         elif depth == 0 and (
             (kind == "word" and text.upper() in ("ORDER", "LIMIT", "OFFSET", "FETCH", "WINDOW"))
@@ -1360,13 +1351,13 @@ def _date_part(arg: list[tuple[str, str]]) -> str:
     DAYOFYEAR, EPOCH, NANOSECOND — unit semantics differ)."""
     code = [(k, t) for k, t in arg if k not in ("ws", "comment")]
     if len(code) != 1:
-        raise UnsupportedError("unsupported date part expression without sqlglot")
+        raise UnsupportedError("unsupported date part expression")
     kind, text = code[0]
     name = _unquote(text, "'") if kind == "string" else text
     unit = _DATE_PARTS.get(name.upper())
     if unit is None:
         raise UnsupportedError(
-            f"date part {name!r} is not supported without sqlglot"
+            f"date part {name!r} is not supported"
         )
     return unit
 
@@ -1502,7 +1493,7 @@ def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """Snowflake ``TO_NUMBER(x[, p[, s]])`` → ``CAST(x AS DECIMAL(p,s))``
     (defaults p=38, s=0, matching snowflake); ``TO_VARCHAR(x)``/
     ``TO_CHAR(x)`` (no format) → ``CAST(x AS STRING)``. Format-string
-    forms raise — faithful number/date formatting needs sqlglot."""
+    forms raise: number/date format models are not translated."""
     out = list(tokens)
     i = 0
     while i < len(out):
@@ -1523,7 +1514,7 @@ def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         if up in ("TO_VARCHAR", "TO_CHAR"):
             if len(args) != 1:
                 raise UnsupportedError(
-                    f"{up} with a format string is not supported without sqlglot"
+                    f"{up} with a format string is not supported"
                 )
             repl = tokenize("CAST(") + args[0] + tokenize(" AS STRING)")
         else:
@@ -1535,7 +1526,7 @@ def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 len(c) != 1 or c[0][0] != "number" for c in nums
             ):
                 raise UnsupportedError(
-                    f"{up} with a format string is not supported without sqlglot"
+                    f"{up} with a format string is not supported"
                 )
             p = nums[0][0][1] if len(nums) >= 1 else "38"
             s = nums[1][0][1] if len(nums) >= 2 else "0"
@@ -1574,7 +1565,7 @@ def _rewrite_cast_funcs(
         args, close = parsed
         if len(args) != 1:
             raise UnsupportedError(
-                f"{text} with {len(args)} arguments is not supported without sqlglot"
+                f"{text} with {len(args)} arguments is not supported"
             )
         repl = tokenize("CAST(") + args[0] + tokenize(f" AS {mapping[up]})")
         out = out[:i] + repl + out[close + 1 :]
@@ -1735,10 +1726,10 @@ def _rewrite_oracle_rownum(tokens: list[tuple[str, str]]) -> list[tuple[str, str
             if up == "ROWNUM":
                 if depth > 0:
                     raise UnsupportedError(
-                        "ROWNUM inside a subquery is not supported without sqlglot"
+                        "ROWNUM inside a subquery is not supported"
                     )
                 if rownum_at is not None:
-                    raise UnsupportedError("multiple ROWNUM uses without sqlglot")
+                    raise UnsupportedError("multiple ROWNUM uses are not supported")
                 prev = None
                 for p in range(i - 1, -1, -1):
                     if out[p][0] not in ("ws", "comment"):
@@ -1758,13 +1749,13 @@ def _rewrite_oracle_rownum(tokens: list[tuple[str, str]]) -> list[tuple[str, str
                     or "." in out[k][1]
                 ):
                     raise UnsupportedError(
-                        "only `WHERE ROWNUM <= n` is supported without sqlglot"
+                        "only `WHERE ROWNUM <= n` is supported"
                     )
                 after = _next_code(out, k)
                 if after is not None and out[after] != ("op", ";"):
                     raise UnsupportedError(
                         "ROWNUM combined with other predicates is not "
-                        "supported without sqlglot"
+                        "supported"
                     )
                 n = int(out[k][1])
                 count = n if out[j][1] == "<=" else n - 1
@@ -1772,8 +1763,7 @@ def _rewrite_oracle_rownum(tokens: list[tuple[str, str]]) -> list[tuple[str, str
             elif up in ("DISTINCT", "GROUP", "HAVING", "ORDER") and depth == 0:
                 if rownum_at is not None or _has_rownum:
                     raise UnsupportedError(
-                        f"ROWNUM with {up} changes semantics; not supported "
-                        "without sqlglot"
+                        f"ROWNUM with {up} changes semantics; not supported"
                     )
     if rownum_at is None:
         return out
@@ -1853,7 +1843,7 @@ def _ora_datefmt(fmt: str, formatting: bool = True) -> tuple[str, str | None]:
                     raise UnsupportedError(
                         f"oracle {pat} blank-pads to 9 chars, which a "
                         "Spark pattern cannot express; use FM"
-                        f"{pat} (no padding) or sqlglot"
+                        f"{pat} (no padding)"
                     )
                 if pat in _ORA_CASED:
                     if raw.isupper():
@@ -1870,8 +1860,7 @@ def _ora_datefmt(fmt: str, formatting: bool = True) -> tuple[str, str | None]:
                 break
         else:
             raise UnsupportedError(
-                f"oracle format element at {fmt[i:]!r} is not supported "
-                "without sqlglot"
+                f"oracle format element at {fmt[i:]!r} is not supported"
             )
     if not formatting:
         # parsing direction: Spark is case-insensitive, no wrap needed
@@ -1945,7 +1934,7 @@ def _rewrite_oracle_fmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             else:
                 raise UnsupportedError(
                     f"one-arg {up} depends on NLS defaults; pass a format "
-                    "model or use sqlglot"
+                    "model"
                 )
         elif len(args) == 2 or (
             len(args) == 3 and _nls_default_english(args[2])
@@ -1953,7 +1942,7 @@ def _rewrite_oracle_fmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             fcode = [(k, t) for k, t in args[1] if k not in ("ws", "comment")]
             if len(fcode) != 1 or fcode[0][0] != "string":
                 raise UnsupportedError(
-                    f"{up} format must be a string literal without sqlglot"
+                    f"{up} format must be a string literal"
                 )
             spark_fmt, case_wrap = _ora_datefmt(
                 _unquote(fcode[0][1], "'"), formatting=up == "TO_CHAR"
@@ -2019,7 +2008,7 @@ def _rewrite_strftime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         fcode = [(k, t) for k, t in args[0] if k not in ("ws", "comment")] if args else []
         if len(args) != 2 or len(fcode) != 1 or fcode[0][0] != "string":
             raise UnsupportedError(
-                "strftime with modifiers is not supported without sqlglot"
+                "strftime with modifiers is not supported"
             )
         fmt = _unquote(fcode[0][1], "'")
         outp: list[str] = []
@@ -2029,7 +2018,7 @@ def _rewrite_strftime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 code = fmt[p : p + 2]
                 if code not in _SQLITE_FMT:
                     raise UnsupportedError(
-                        f"strftime code {code!r} is not supported without sqlglot"
+                        f"strftime code {code!r} is not supported"
                     )
                 outp.append(_SQLITE_FMT[code])
                 p += 2
@@ -2038,7 +2027,7 @@ def _rewrite_strftime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 p += 1
             else:
                 raise UnsupportedError(
-                    f"strftime literal {fmt[p]!r} is not supported without sqlglot"
+                    f"strftime literal {fmt[p]!r} is not supported"
                 )
         repl = (
             tokenize("DATE_FORMAT(")
@@ -2121,6 +2110,50 @@ def _rewrite_mysql_limit(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
         out = out[:i] + repl + out[m + 1 :]
         i += len(repl)
     return out
+
+
+def _rewrite_fetch_first(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """SQL-standard row limiting ``[OFFSET m ROW[S]] FETCH {FIRST|NEXT}
+    [n] ROW[S] ONLY`` → ``LIMIT n [OFFSET m]`` within ONE query scope
+    (apply through ``_for_each_scope``). Spark parses neither clause.
+    An omitted count is 1, and the OFFSET may omit ROW[S] (postgres;
+    a postgres OFFSET after the FETCH already reads as Spark's
+    ``LIMIT n OFFSET m``). ``WITH TIES`` and ``PERCENT`` refuse: LIMIT
+    can express neither. Non-literal counts pass through for Spark's
+    parser to reject loudly."""
+    depth = 0
+    code: list[int] = []  # depth-0 code tokens of this scope
+    for i, (k, t) in enumerate(tokens):
+        if (k, t) == ("op", ")"):
+            depth -= 1
+        if depth == 0 and k not in ("ws", "comment"):
+            code.append(i)
+        if (k, t) == ("op", "("):
+            depth += 1
+    words = [t.upper() if k == "word" else k for k, t in (tokens[i] for i in code)]
+    words += ["", "", ""]  # lookahead padding
+
+    for p in range(len(code)):
+        if words[p] != "FETCH" or words[p + 1] not in ("FIRST", "NEXT"):
+            continue
+        q, count = p + 2, "1"
+        if words[q] == "number":
+            q, count = q + 1, tokens[code[q]][1]
+        if words[q] == "PERCENT" or words[q + 1 : q + 3] == ["WITH", "TIES"]:
+            raise UnsupportedError(
+                "FETCH FIRST ... PERCENT / WITH TIES has no LIMIT equivalent"
+            )
+        if words[q] not in ("ROW", "ROWS") or words[q + 1] != "ONLY":
+            continue
+        repl = [("word", "LIMIT"), ("ws", " "), ("number", count)]
+        start = p
+        o = p - 1 if words[p - 1] in ("ROW", "ROWS") else p  # words[-1] pads
+        if o >= 2 and words[o - 2 : o] == ["OFFSET", "number"]:
+            start, offset = o - 2, tokens[code[o - 1]][1]
+            repl += [("ws", " "), ("word", "OFFSET"), ("ws", " "), ("number", offset)]
+        out = tokens[: code[start]] + repl + tokens[code[q + 1] + 1 :]
+        return _rewrite_fetch_first(out)
+    return tokens
 
 
 def _rewrite_extract_epoch(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -2246,7 +2279,7 @@ def _named_flatten_args(
             if input_toks is not None or len(args) != 1:
                 raise UnsupportedError(
                     "FLATTEN with multiple positional arguments is not "
-                    "supported without sqlglot"
+                    "supported"
                 )
             input_toks = arg
             continue
@@ -2262,7 +2295,7 @@ def _named_flatten_args(
         else:
             raise UnsupportedError(
                 f"FLATTEN argument {name!r} (semi-structured traversal) is "
-                "not supported without sqlglot"
+                "not supported"
             )
     if input_toks is None or not any(
         tok[0] not in ("ws", "comment") for tok in input_toks
@@ -2304,7 +2337,7 @@ def _rewrite_object_construct(
                     raise UnsupportedError(
                         "OBJECT_CONSTRUCT_KEEP_NULL keeps NULL-valued "
                         "pairs; Spark's to_json drops them — not "
-                        "supported without sqlglot"
+                        "supported"
                     )
                 j = _next_code(out, i)
                 if j is not None and out[j] == ("op", "("):
@@ -2328,7 +2361,7 @@ def _rewrite_object_construct(
         if len(code_args) == 1 and code_args[0] == [("op", "*")]:
             raise UnsupportedError(
                 "OBJECT_CONSTRUCT(*) (row-wise object construction) is "
-                "not supported without sqlglot; list the key/value "
+                "not supported; list the key/value "
                 "pairs explicitly"
             )
         if len(code_args) % 2 != 0:
@@ -2340,7 +2373,7 @@ def _rewrite_object_construct(
             if len(k) != 1 or k[0][0] != "string":
                 raise UnsupportedError(
                     "OBJECT_CONSTRUCT keys must be string literals "
-                    "without sqlglot (snowflake drops pairs whose "
+                    "(snowflake drops pairs whose "
                     "dynamic key is NULL; named_struct cannot)"
                 )
             # snowflake keeps a single last-wins entry per key;
@@ -2352,7 +2385,7 @@ def _rewrite_object_construct(
                 raise UnsupportedError(
                     f"duplicate OBJECT_CONSTRUCT key {k[0][1]}: snowflake "
                     "keeps the last pair, but NAMED_STRUCT->TO_JSON emits "
-                    "duplicate JSON keys — not supported without sqlglot"
+                    "duplicate JSON keys — not supported"
                 )
             seen_keys.add(k[0][1])
         if not code_args:
@@ -2408,8 +2441,7 @@ def _rewrite_snowflake_flatten(
         conn, conn_at = _connector_start(out, lat_at)
         if conn not in ("comma", "cross"):
             raise UnsupportedError(
-                "LATERAL FLATTEN is supported after ',' or CROSS JOIN only "
-                "without sqlglot"
+                "LATERAL FLATTEN is supported after ',' or CROSS JOIN only"
             )
         # required table alias after the close paren: [AS] name
         a = _next_code(out, close)
@@ -2420,7 +2452,7 @@ def _rewrite_snowflake_flatten(
         ):
             raise UnsupportedError(
                 "LATERAL FLATTEN requires a table alias (needed to name "
-                "the LATERAL VIEW) without sqlglot"
+                "the LATERAL VIEW)"
             )
         alias = out[a]
         rep: list[tuple[str, str]] = [("ws", " "), ("word", "LATERAL"), ("ws", " "), ("word", "VIEW"), ("ws", " ")]
@@ -2472,19 +2504,17 @@ def _rewrite_unnest(
         args, close = parsed
         if len(args) != 1:
             raise UnsupportedError(
-                "UNNEST of multiple arrays (parallel zip) is not supported "
-                "without sqlglot"
+                "UNNEST of multiple arrays (parallel zip) is not supported"
             )
         arr = args[0]
         conn, conn_at = _connector_start(out, un_at)
         if conn == "in":
             raise UnsupportedError(
-                "scalar IN UNNEST(...) is not supported without sqlglot"
+                "scalar IN UNNEST(...) is not supported"
             )
         if conn not in ("comma", "cross", "from"):
             raise UnsupportedError(
-                "UNNEST is supported after ',', CROSS JOIN, or FROM only "
-                "without sqlglot"
+                "UNNEST is supported after ',', CROSS JOIN, or FROM only"
             )
         # WITH ORDINALITY (trino) intervenes before the alias
         a = _next_code(out, close)
@@ -2497,7 +2527,7 @@ def _rewrite_unnest(
             if w is not None and out[w][0] == "word" and out[w][1].upper() == "ORDINALITY":
                 raise UnsupportedError(
                     "UNNEST WITH ORDINALITY (1-based) has no faithful "
-                    "LATERAL VIEW form without sqlglot"
+                    "LATERAL VIEW form"
                 )
         if a is not None and out[a][0] == "word" and out[a][1].upper() == "AS":
             a = _next_code(out, a)
@@ -2506,7 +2536,7 @@ def _rewrite_unnest(
         ):
             raise UnsupportedError(
                 "UNNEST requires a column (bigquery) or table(column) "
-                "(trino) alias without sqlglot"
+                "(trino) alias"
             )
         alias = out[a]
         end = a  # last consumed token index
@@ -2525,7 +2555,7 @@ def _rewrite_unnest(
             if len(col_items) != 1 or len(col_items[0]) != 1:
                 raise UnsupportedError(
                     "UNNEST alias with multiple columns (map or zip "
-                    "semantics) is not supported without sqlglot"
+                    "semantics) is not supported"
                 )
             table_alias, col_alias = alias, col_items[0][0]
             end = cols_close
@@ -2555,7 +2585,7 @@ def _rewrite_unnest(
             if offset_alias is not None:
                 raise UnsupportedError(
                     "FROM UNNEST(...) WITH OFFSET without a base table is "
-                    "not supported without sqlglot"
+                    "not supported"
                 )
             rep = [("word", "FROM"), ("ws", " "), ("op", "("), ("word", "SELECT"), ("ws", " "), ("word", "EXPLODE"), ("op", "(")]
             rep += arr
@@ -2812,8 +2842,7 @@ def _rewrite_group_concat(
         args, close = parsed
         if len(args) != 1:
             raise UnsupportedError(
-                "GROUP_CONCAT of multiple expressions is not supported "
-                "without sqlglot"
+                "GROUP_CONCAT of multiple expressions is not supported"
             )
         arg = args[0]
         # split the single argument at depth-0 ORDER / SEPARATOR words
@@ -3189,13 +3218,12 @@ def _rewrite_json_arrow_ops(
         if lstart is None or rstart is None:
             raise UnsupportedError(
                 f"cannot safely rewrite the {op} JSON operator's "
-                "operands without sqlglot; spell it get_json_object(...)"
+                "operands; spell it get_json_object(...)"
             )
         if op in ("#>", "#>>"):
             if out[rstart][0] != "string":
                 raise UnsupportedError(
-                    f"{op} requires a literal '{{a,b}}' path array "
-                    "without sqlglot"
+                    f"{op} requires a literal '{{a,b}}' path array"
                 )
             import re as _re
 
@@ -3229,7 +3257,7 @@ def _rewrite_json_arrow_ops(
                         else "key name or integer index here"
                     )
                     + "; dynamic or special-character keys are not "
-                    "supported without sqlglot"
+                    "supported"
                 )
         if op in ("->", "#>"):
             after = _next_code(out, rstart)
@@ -3398,8 +3426,8 @@ def _refuse_oracle_outer_join_plus(
         k = _next_code(tokens, j)
         if k is not None and tokens[k] == ("op", ")"):
             raise UnsupportedError(
-                "Oracle's (+) outer-join syntax is not supported "
-                "without sqlglot; rewrite the query with explicit "
+                "Oracle's (+) outer-join syntax is not supported; "
+                "rewrite the query with explicit "
                 "LEFT/RIGHT OUTER JOIN."
             )
     return tokens
@@ -3507,12 +3535,12 @@ def _rewrite_bare_array_literal(
         if inner is None:
             raise UnsupportedError(
                 "this [...] array literal (nested, or a ']' inside a "
-                "string literal) is not supported without sqlglot; "
+                "string literal) is not supported; "
                 "spell it array(...)"
             )
         if not any(k not in ("ws", "comment") for k, _ in inner):
             raise UnsupportedError(
-                "empty [] is not supported without sqlglot; spell a "
+                "empty [] is not supported; spell a "
                 "typed empty array as e.g. CAST(array() AS ARRAY<INT>)"
             )
         repl = tokenize("ARRAY(") + inner + tokenize(")")
@@ -3561,7 +3589,7 @@ def _rewrite_mysql_regexp_ci(
                 elif flag != "i":
                     raise UnsupportedError(
                         "mysql REGEXP_LIKE match_type other than 'c'/'i' "
-                        "is not supported without sqlglot"
+                        "is not supported"
                     )
             elif len(args) != 2:
                 i += 1
@@ -3616,8 +3644,8 @@ def _rewrite_mysql_regexp_ci(
             rend = _capture_operand_fwd(out, rstart)
             if rend is None:
                 raise UnsupportedError(
-                    "cannot safely capture the REGEXP pattern operand "
-                    "without sqlglot; parenthesize the pattern"
+                    "cannot safely capture the REGEXP pattern operand; "
+                    "parenthesize the pattern"
                 )
             repl = (
                 tokenize("RLIKE CONCAT('(?i)', (")
@@ -3688,7 +3716,7 @@ def _rewrite_pg_regex_ops(tokens: list[tuple[str, str]]) -> list[tuple[str, str]
             if p is None or out[p][0] != "string":
                 raise UnsupportedError(
                     "case-insensitive regex match (~*) needs a string-"
-                    "literal pattern without sqlglot"
+                    "literal pattern"
                 )
             inner = _unquote(out[p][1], "'")
             out[p] = ("string", "'(?i)" + inner + "'")
@@ -3770,8 +3798,8 @@ def _rewrite_similar_to(
         p = _next_code(out, j)
         if p is None or out[p][0] != "string":
             raise UnsupportedError(
-                "SIMILAR TO needs a string-literal pattern without "
-                "sqlglot; use a POSIX regex (~) or LIKE"
+                "SIMILAR TO needs a string-literal pattern; "
+                "use a POSIX regex (~) or LIKE"
             )
         after = _next_code(out, p)
         if (
@@ -3780,8 +3808,8 @@ def _rewrite_similar_to(
             and out[after][1].upper() == "ESCAPE"
         ):
             raise UnsupportedError(
-                "SIMILAR TO ... ESCAPE is not supported without "
-                "sqlglot; use a POSIX regex (~)"
+                "SIMILAR TO ... ESCAPE is not supported; "
+                "use a POSIX regex (~)"
             )
         if regex:
             rex = "(?s)^(?:" + _unquote(out[p][1], "'") + ")$"
@@ -3790,8 +3818,8 @@ def _rewrite_similar_to(
         if rex is None:
             raise UnsupportedError(
                 "this SIMILAR TO pattern (trailing backslash or "
-                "malformed [...] class) is not supported without "
-                "sqlglot; use a POSIX regex (~)"
+                "malformed [...] class) is not supported; "
+                "use a POSIX regex (~)"
             )
         lit = rex.replace("\\", "\\\\").replace("'", "''")
         out[i : p + 1] = [("word", "RLIKE"), ("ws", " "), ("string", f"'{lit}'")]
@@ -3828,7 +3856,7 @@ def _rewrite_generate_series(tokens: list[tuple[str, str]]) -> list[tuple[str, s
         if prev_word not in ("FROM", "JOIN"):
             raise UnsupportedError(
                 "generate_series outside the FROM/JOIN table position is "
-                "not supported without sqlglot"
+                "not supported"
             )
         parsed = _call_args(out, j)
         if parsed is None:
@@ -3911,7 +3939,7 @@ def _mysql_datefmt(fmt: str) -> tuple[str, bool, bool]:
         if "'" in run:
             raise UnsupportedError(
                 "single quotes inside a date format literal are not "
-                "supported without sqlglot"
+                "supported"
             )
         out.append(f"'{run}'" if any(c.isalpha() for c in run) else run)
         lit.clear()
@@ -3923,7 +3951,7 @@ def _mysql_datefmt(fmt: str) -> tuple[str, bool, bool]:
             spark = _MYSQL_FMT.get(code)
             if spark is None:
                 raise UnsupportedError(
-                    f"mysql format code {code!r} is not supported without sqlglot"
+                    f"mysql format code {code!r} is not supported"
                 )
             flush()
             out.append(spark)
@@ -3970,7 +3998,7 @@ def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str
         fcode = [(k, t) for k, t in args[1] if k not in ("ws", "comment")]
         if len(fcode) != 1 or fcode[0][0] != "string":
             raise UnsupportedError(
-                f"{up} format must be a string literal without sqlglot"
+                f"{up} format must be a string literal"
             )
         spark_fmt, has_time, has_date = _mysql_datefmt(
             _unquote(fcode[0][1], "'")
@@ -3982,7 +4010,7 @@ def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str
         if up == "TIME_FORMAT" and has_date:
             raise UnsupportedError(
                 "TIME_FORMAT with date codes zeroes them in mysql; not "
-                "supported without sqlglot"
+                "supported"
             )
         fn = (
             "DATE_FORMAT"
@@ -4080,12 +4108,12 @@ def _rewrite_convert(
         ):
             raise UnsupportedError(
                 "CONVERT(expr USING charset) is charset transcoding; not "
-                "supported without sqlglot"
+                "supported"
             )
         if tsql and len(args) == 3:
             raise UnsupportedError(
                 "CONVERT with a style argument is locale formatting; not "
-                "supported without sqlglot"
+                "supported"
             )
         if len(args) != 2:
             raise UnsupportedError("CONVERT takes 2 arguments")
@@ -4093,7 +4121,7 @@ def _rewrite_convert(
         spec = _type_spec(type_arg)
         if spec is None:
             raise UnsupportedError(
-                "CONVERT target type is not recognized without sqlglot"
+                "CONVERT target type is not recognized"
             )
         name, params = spec
         if tsql and name in _TSQL_STRING_TYPES:
@@ -4118,7 +4146,7 @@ def _rewrite_convert(
             target = table.get(name)
             if target is None:
                 raise UnsupportedError(
-                    f"CONVERT to {name} is not supported without sqlglot"
+                    f"CONVERT to {name} is not supported"
                 )
             if target == "DECIMAL" and params:
                 target = f"DECIMAL({', '.join(params)})"
@@ -4267,12 +4295,12 @@ def _rewrite_pg_array_literal(tokens: list[tuple[str, str]]) -> list[tuple[str, 
         if inner is None:
             raise UnsupportedError(
                 "this ARRAY[...] form (nested, or a ']' inside a string "
-                "literal) is not supported without sqlglot; spell it "
+                "literal) is not supported; spell it "
                 "array(...)"
             )
         if not any(k not in ("ws", "comment") for k, _ in inner):
             raise UnsupportedError(
-                "empty ARRAY[] is not supported without sqlglot; spell a "
+                "empty ARRAY[] is not supported; spell a "
                 "typed empty array as e.g. CAST(array() AS ARRAY<INT>)"
             )
         out = out[:i] + tokenize("array(") + inner + tokenize(")") + out[j + 1 :]
@@ -4386,7 +4414,7 @@ def _rewrite_pg_subscript(
         if inner is None:
             raise UnsupportedError(
                 "this subscript form (nested brackets, or a ']' inside a "
-                "string literal) is not supported without sqlglot"
+                "string literal) is not supported"
             )
         code = [t for t in inner if t[0] not in ("ws", "comment")]
         if not code:
@@ -4394,14 +4422,14 @@ def _rewrite_pg_subscript(
             continue
         if ("op", ":") in code:
             raise UnsupportedError(
-                "array slice subscripts (a[i:j]) are not supported "
-                "without sqlglot; spell it slice(a, i, j - i + 1)"
+                "array slice subscripts (a[i:j]) are not supported; "
+                "spell it slice(a, i, j - i + 1)"
             )
         lstart = _capture_operand(out, j)
         if lstart is None:
             raise UnsupportedError(
-                "cannot safely rewrite this 1-based subscript's operand "
-                "without sqlglot; spell it get(expr, i - 1)"
+                "cannot safely rewrite this 1-based subscript's operand; "
+                "spell it get(expr, i - 1)"
             )
         if negatives == "from_end":
             # IF() keeps the whole emission a function call ending in
@@ -4506,7 +4534,7 @@ def _rewrite_caret_power(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
         if lstart is None or rend is None:
             raise UnsupportedError(
                 "cannot safely rewrite the ^ exponentiation operator's "
-                "operands without sqlglot; spell it POWER(l, r)"
+                "operands; spell it POWER(l, r)"
             )
         # pg precedence: UNARY minus binds tighter than ^ (`-2 ^ 2` is
         # `(-2)^2` = 4), so a unary sign belongs INSIDE the left
@@ -5312,7 +5340,7 @@ def _rewrite_pg_any_all(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             else:
                 raise UnsupportedError(
                     f"{op_text} {quant} (subquery) has no Spark "
-                    "equivalent without sqlglot (only = ANY -> IN and "
+                    "equivalent (only = ANY -> IN and "
                     "<> ALL -> NOT IN translate exactly)"
                 )
             out = out[:opi] + repl + out[close + 1 :]
@@ -5323,8 +5351,8 @@ def _rewrite_pg_any_all(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         lstart = None if lhs_last is None else _capture_operand(out, lhs_last)
         if lstart is None:
             raise UnsupportedError(
-                f"cannot safely capture the left operand of {quant}() "
-                "without sqlglot; parenthesize it: (expr) "
+                f"cannot safely capture the left operand of {quant}(); "
+                "parenthesize it: (expr) "
                 f"{op_text} {quant}(...)"
             )
         before = _prev_code(out, lstart)
@@ -5338,7 +5366,7 @@ def _rewrite_pg_any_all(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             raise UnsupportedError(
                 f"the left operand of {quant}() is part of a larger "
                 "expression; parenthesize it — (expr) "
-                f"{op_text} {quant}(...) — without sqlglot"
+                f"{op_text} {quant}(...)"
             )
         fn = "exists" if quant == "ANY" else "forall"
         var = f"__pg_q{n_rewritten}"
@@ -5406,7 +5434,7 @@ def _bq_datefmt(fmt: str) -> str:
         if "'" in run:
             raise UnsupportedError(
                 "single quotes inside a date format literal are not "
-                "supported without sqlglot"
+                "supported"
             )
         out.append(f"'{run}'" if any(c.isalpha() for c in run) else run)
         lit.clear()
@@ -5418,8 +5446,7 @@ def _bq_datefmt(fmt: str) -> str:
             spark = _BQ_FMT.get(code)
             if spark is None:
                 raise UnsupportedError(
-                    f"bigquery format element {code!r} is not supported "
-                    "without sqlglot"
+                    f"bigquery format element {code!r} is not supported"
                 )
             flush()
             out.append(spark)
@@ -5463,12 +5490,12 @@ def _rewrite_bq_format(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         args, close = parsed
         if len(args) != 2:
             raise UnsupportedError(
-                f"{up} with a time zone argument is not supported without sqlglot"
+                f"{up} with a time zone argument is not supported"
             )
         fcode = [(k, t) for k, t in args[0] if k not in ("ws", "comment")]
         if len(fcode) != 1 or fcode[0][0] != "string":
             raise UnsupportedError(
-                f"{up} format must be a string literal without sqlglot"
+                f"{up} format must be a string literal"
             )
         sql_fmt = _bq_datefmt(_unquote(fcode[0][1], "'")).replace("'", "''")
         repl = tokenize(f"{fn}(") + args[1] + tokenize(f", '{sql_fmt}')")
@@ -5686,7 +5713,7 @@ def _rewrite_temp_table_as(tokens: list[tuple[str, str]]) -> list[tuple[str, str
         if not has_as:
             raise UnsupportedError(
                 "CREATE TEMP TABLE with a column list (no AS SELECT) has "
-                "no Spark equivalent without sqlglot; temp-table-as-select "
+                "no Spark equivalent; temp-table-as-select "
                 "maps to a TEMPORARY VIEW"
             )
         out[temp_at] = ("word", "TEMPORARY")
@@ -5814,10 +5841,6 @@ def _rewrite_fn_to_extract(
     return out
 
 
-def has_sqlglot() -> bool:
-    return _HAS_SQLGLOT
-
-
 # BigQuery ``SAFE.``-prefixed calls with an EXACT Spark NULL-on-error
 # equivalent. Everything else refuses: a generic SAFE.FN has no Spark
 # counterpart, and mapping it to the unprefixed FN would silently trade
@@ -5853,7 +5876,7 @@ def _rewrite_bq_safe_prefix(tokens: list[tuple[str, str]]) -> list[tuple[str, st
                         if mapped is None:
                             raise UnsupportedError(
                                 f"SAFE.{fn} has no exact Spark NULL-on-"
-                                "error equivalent without sqlglot "
+                                "error equivalent "
                                 "(supported: SAFE."
                                 + "/SAFE.".join(sorted(_BQ_SAFE_FNS))
                                 + ")"
@@ -5942,14 +5965,6 @@ def transpile(sql: str, dialect: str | None = None) -> str:
         )
     if d in {"spark", "spark2", "databricks", "hive", None}:
         return sql
-    if _HAS_SQLGLOT:
-        # sqlglot registers no 'ansi'/'postgresql'/'materialize' etc. —
-        # map through the same family aliases the fallback uses, with
-        # ansi reading as the (ANSI-ish) postgres dialect. Multiple
-        # statements re-join with ';': [0] silently dropped the rest.
-        sg = _DIALECT_FAMILY.get(d, d)
-        sg = {"ansi": "postgres"}.get(sg, sg)
-        return ";\n".join(sqlglot.transpile(sql, read=sg, write="spark"))
     return _fallback_normalize(sql, d)
 
 
@@ -5960,8 +5975,7 @@ def _fallback_normalize(sql: str, dialect: str | None) -> str:
     # ONE statement: applied across a top-level ';' they relocate
     # clauses between statements (a trailing LIMIT lands on the LAST
     # statement, a QUALIFY wrap anchors to the FIRST SELECT). Split at
-    # depth-0 ';' and normalize each statement independently — the
-    # same multi-statement support the sqlglot path has.
+    # depth-0 ';' and normalize each statement independently.
     stmts: list[list[tuple[str, str]]] = []
     depth, start = 0, 0
     for i, (k, t) in enumerate(tokens):
@@ -5984,6 +5998,10 @@ def _normalize_stmt(tokens: list[tuple[str, str]], dialect: str | None) -> str:
             ("backtick", _to_backtick(_unquote(t, '"'))) if k == "dquoted" else (k, t)
             for k, t in tokens
         ]
+    if any(k == "word" and t.upper() == "FETCH" for k, t in tokens):
+        # before every pass that reads LIMIT/OFFSET (TOP, QUALIFY,
+        # ROWNUM, NULL ordering), so they see one spelling
+        tokens = _for_each_scope(tokens, _rewrite_fetch_first)
     if dialect == "duckdb":
         # '//' integer division (truncating, like Spark DIV) arrives
         # as two adjacent '/' ops; before anything else touches '/'

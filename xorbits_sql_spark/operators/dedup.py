@@ -167,12 +167,16 @@ def _in_threads(fns):
 
     # Passing the session makes inheritable_thread_target also carry
     # session tags (Spark 4 signature); without it every call warns.
+    # With pinned-thread mode off it hands its argument back verbatim —
+    # the session, not a decorator — so wrap the callables directly.
     session = SparkSession.getActiveSession()
     wrap = (
         inheritable_thread_target(session)
         if session is not None
         else inheritable_thread_target
     )
+    if not callable(wrap):
+        wrap = inheritable_thread_target
     with ThreadPoolExecutor(max_workers=len(fns)) as pool:
         futs = [pool.submit(wrap(f)) for f in fns]
         return [f.result() for f in futs]

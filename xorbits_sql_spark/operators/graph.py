@@ -154,9 +154,12 @@ def pagerank(
     the rank table (which also lost its outgoing mass in later
     rounds), and a dangling node (no out-edges) redistributes its mass
     evenly — the standard correction, so ranks sum to 1 on any
-    directed input. The node count enters the formula via a one-row
-    broadcast aggregate; the only driver-side read is one scalar
-    existence probe of the (persisted) dangling-node table.
+    directed input. The node count N enters the formula as a driver
+    scalar (one count job on the persisted node table). The other
+    driver-side reads are the edge count that sizes the loop's
+    shuffles and one existence probe of the (persisted) dangling-node
+    table; the per-round dangling mass is the only one-row aggregate
+    left in the plan.
 
     ``symmetric=True`` is the caller's assertion that every node
     appears as BOTH a source and a destination (true whenever the
