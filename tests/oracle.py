@@ -127,3 +127,16 @@ def compare(spark_df: pd.DataFrame, duck_df: pd.DataFrame, rtol=1e-9) -> list[st
 def exact_match(spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> bool:
     """True when canonical rows are exactly equal (the hash-match bar)."""
     return canonical_rows(spark_df) == canonical_rows(duck_df)
+
+
+def spark_outcome(make) -> tuple | type:
+    """``make()``'s schema and exact rows, or the class of the exception
+    it raised. Each cell is its type name and repr, so NaN equals NaN,
+    -0.0 differs from 0.0 and bytes differ from bytearray. Used to hold
+    a table route to ``spark.createDataFrame``'s own result."""
+    try:
+        df = make()
+        rows = [tuple((type(v).__name__, repr(v)) for v in r) for r in df.collect()]
+        return df.schema, rows
+    except Exception as exc:
+        return type(exc)

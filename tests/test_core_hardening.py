@@ -175,6 +175,17 @@ def test_empty_list_table_with_declared_schema(spark):
         execute("SELECT * FROM t", tables={"t": []}, spark=spark)
 
 
+def test_empty_pandas_table_with_declared_schema(spark):
+    empty = pd.DataFrame({"a": pd.Series([], dtype="int64")})
+    df = execute(
+        "SELECT * FROM t", schema={"t": {"a": "int"}}, tables={"t": empty}, spark=spark
+    )
+    assert df.count() == 0
+    assert dict(df.dtypes) == {"a": "int"}
+    with pytest.raises(UnsupportedError, match="empty table"):
+        execute("SELECT * FROM t", tables={"t": empty}, spark=spark)
+
+
 def test_output_rows_prefers_real_operators(spark, tmp_path):
     from xorbits_sql_spark.plans import collect_metrics
 

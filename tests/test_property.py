@@ -17,7 +17,7 @@ from hypothesis import strategies as st
 
 from xorbits_sql_spark import execute
 
-from .oracle import compare
+from .oracle import compare, spark_outcome
 
 _SETTINGS = dict(
     max_examples=12,
@@ -275,3 +275,34 @@ def test_dialect_fallback_never_corrupts_literals(lit, dialect):
     except UnsupportedError:
         return  # honest refusal is allowed; corruption is not
     assert quoted in out
+
+
+_ROW_VALUES = [
+    st.integers(-(2**64), 2**64),
+    st.floats(),  # NaN, infinities and -0.0 included
+    st.text(max_size=4),
+    st.booleans(),
+    st.dates(),
+    st.binary(max_size=4),
+]
+
+
+@st.composite
+def row_dicts(draw):
+    """Lists of dicts over a few keys in random insertion order, each key
+    missing or None in some rows. A key's values share one kind, or
+    (the last choice) mix kinds."""
+    keys = draw(st.lists(st.sampled_from("abcd"), min_size=1, max_size=3, unique=True))
+    kinds = st.sampled_from(_ROW_VALUES + [st.one_of(*_ROW_VALUES)])
+    values = {k: st.one_of(st.none(), draw(kinds)) for k in keys}
+    return draw(st.lists(st.fixed_dictionaries({}, optional=values), min_size=1, max_size=6))
+
+
+@given(rows=row_dicts())
+@settings(**{**_SETTINGS, "max_examples": 30})
+def test_row_dict_tables_match_spark_inference(spark, rows):
+    from xorbits_sql_spark.table import to_spark_df
+
+    assert spark_outcome(lambda: to_spark_df(spark, rows, None)) == spark_outcome(
+        lambda: spark.createDataFrame(rows)
+    )

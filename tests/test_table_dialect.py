@@ -4,15 +4,20 @@ transpiler."""
 
 from __future__ import annotations
 
+import datetime
 import re
+from decimal import Decimal
 
 import pandas as pd
 import pytest
+from pyspark.sql import Row
 
 from xorbits_sql_spark import execute
 from xorbits_sql_spark.dialect import transpile
 from xorbits_sql_spark.errors import UnsupportedError
-from xorbits_sql_spark.table import flatten_tables, parse_type
+from xorbits_sql_spark.table import _rows_to_arrow, flatten_tables, parse_type, to_spark_df
+
+from .oracle import spark_outcome
 
 
 def test_row_dict_table(spark):
@@ -34,6 +39,49 @@ def test_row_dict_table_with_schema(spark):
         spark=spark,
     )
     assert dict(got.dtypes)["b"] == "double"
+
+
+# name -> (rows, whether they take the Arrow route)
+_ROW_DICT_CASES = {
+    # the benchmark's row-dict table: str and float columns, from pandas
+    "str_float_records": (
+        pd.DataFrame({"a": ["x", "y", None], "b": [0.5, float("nan"), 2.0]}).to_dict("records"),
+        True,
+    ),
+    "merge_order_missing_keys": ([{"b": 1, "a": "x"}, {"a": "y", "c": 2.5}], True),
+    "nan_none_floats": ([{"x": float("nan")}, {"x": None}, {"x": -0.0}, {}], True),
+    "bool_binary_date": (
+        [
+            {"t": True, "b": b"ab", "d": datetime.date(1969, 3, 1)},
+            {"t": None, "b": bytearray(b"z"), "d": None},
+        ],
+        True,
+    ),
+    "int64_bounds": ([{"v": 2**63 - 1}, {"v": -(2**63)}, {"v": None}], True),
+    "int_beyond_int64": ([{"v": 1}, {"v": 2**63}], False),
+    "int_float_mix": ([{"v": 1}, {"v": 2.5}], False),
+    "str_int_mix": ([{"v": "a"}, {"v": 1}], False),
+    "bool_int_mix": ([{"v": True}, {"v": 1}], False),
+    "naive_datetime": ([{"v": datetime.datetime(2020, 1, 1, 12, 30)}], False),
+    "decimal": ([{"v": Decimal("1.5")}, {"v": Decimal("-20.125")}], False),
+    "dict_values": ([{"v": {"a": 1}}], False),
+    "list_values": ([{"v": [1, 2]}], False),
+    "all_none_column": ([{"v": None, "w": 1}, {"v": None, "w": 2}], False),
+    "lone_surrogate": ([{"v": "\ud800"}], False),
+    "non_str_keys": ([{1: "a"}], False),
+    "no_keys": ([{}, {}], False),
+    "row_objects": ([Row(a=1, b="x")], False),
+}
+
+
+@pytest.mark.parametrize("rows, arrow", _ROW_DICT_CASES.values(), ids=_ROW_DICT_CASES)
+def test_row_dicts_match_spark_inference(spark, rows, arrow):
+    # the Arrow route must be invisible: same schema, rows and errors
+    # as spark.createDataFrame(rows), which every other table takes
+    assert (_rows_to_arrow(rows) is not None) == arrow
+    assert spark_outcome(lambda: to_spark_df(spark, rows, None)) == spark_outcome(
+        lambda: spark.createDataFrame(rows)
+    )
 
 
 def test_nested_db_table(spark):
@@ -164,6 +212,16 @@ _OFFSET_FETCH = "SELECT x FROM t ORDER BY x OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY
             "SELECT x FROM (SELECT x FROM t ORDER BY x FETCH FIRST 4 ROWS ONLY) s "
             "ORDER BY x DESC FETCH FIRST ROW ONLY OFFSET 1",
             [2],
+        ),
+        # OFFSET m ROW[S] with no FETCH
+        ("postgres", "SELECT x FROM t ORDER BY x OFFSET 7 ROWS", [7, 8, 9]),
+        ("tsql", "SELECT x FROM t ORDER BY x OFFSET 8 ROWS", [8, 9]),
+        ("ansi", "SELECT x FROM t ORDER BY x DESC OFFSET 9 ROW", [0]),
+        ("oracle", "SELECT x FROM t ORDER BY x OFFSET 2 ROWS", [2, 3, 4, 5, 6, 7, 8, 9]),
+        (
+            "postgres",
+            "SELECT x FROM (SELECT x FROM t ORDER BY x DESC OFFSET 6 ROWS) s ORDER BY x",
+            [0, 1, 2, 3],
         ),
     ],
 )

@@ -2120,7 +2120,8 @@ def _rewrite_fetch_first(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
     a postgres OFFSET after the FETCH already reads as Spark's
     ``LIMIT n OFFSET m``). ``WITH TIES`` and ``PERCENT`` refuse: LIMIT
     can express neither. Non-literal counts pass through for Spark's
-    parser to reject loudly."""
+    parser to reject loudly. An ``OFFSET m ROW[S]`` with no FETCH
+    becomes Spark's bare ``OFFSET m``."""
     depth = 0
     code: list[int] = []  # depth-0 code tokens of this scope
     for i, (k, t) in enumerate(tokens):
@@ -2153,6 +2154,9 @@ def _rewrite_fetch_first(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
             repl += [("ws", " "), ("word", "OFFSET"), ("ws", " "), ("number", offset)]
         out = tokens[: code[start]] + repl + tokens[code[q + 1] + 1 :]
         return _rewrite_fetch_first(out)
+    for p in range(2, len(code)):
+        if words[p] in ("ROW", "ROWS") and words[p - 2 : p] == ["OFFSET", "number"]:
+            return tokens[: code[p - 1] + 1] + tokens[code[p] + 1 :]
     return tokens
 
 
@@ -5998,7 +6002,7 @@ def _normalize_stmt(tokens: list[tuple[str, str]], dialect: str | None) -> str:
             ("backtick", _to_backtick(_unquote(t, '"'))) if k == "dquoted" else (k, t)
             for k, t in tokens
         ]
-    if any(k == "word" and t.upper() == "FETCH" for k, t in tokens):
+    if any(k == "word" and t.upper() in ("FETCH", "OFFSET") for k, t in tokens):
         # before every pass that reads LIMIT/OFFSET (TOP, QUALIFY,
         # ROWNUM, NULL ordering), so they see one spelling
         tokens = _for_each_scope(tokens, _rewrite_fetch_first)

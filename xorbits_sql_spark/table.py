@@ -10,20 +10,36 @@ Schema dicts use SQL type strings per table (reference core.py:60-65,
 e.g. tests/helpers.py:54-132 uses bigint/double/int/string) and convert
 to Spark StructTypes here. Unlike the reference there is no row-0
 schema-inference fetch (reference core.py:84-91) — Spark DataFrames
-always carry a schema, and for row-dict inputs Spark's own sampler
-handles it; at 100 TB a "fetch row 0 of every table" boundary is a
-non-starter, so that behavior is deliberately dropped.
+always carry a schema; at 100 TB a "fetch row 0 of every table"
+boundary is a non-starter, so that behavior is deliberately dropped.
+
+pandas frames reach the JVM as Arrow batches through Spark's own
+conversion when ``spark.sql.execution.arrow.pyspark.enabled`` is set
+(``get_spark`` sets it). A list of row dicts is built into a
+``pyarrow.Table`` here, whatever that setting, typed exactly as
+``spark.createDataFrame(rows)`` would infer it from every row: columns
+in Spark's merge order (each row's keys sorted, unseen keys appended),
+and each column's non-None values all ``int`` (bigint), ``float``
+(double), ``str`` (string), ``bool`` (boolean), ``bytes``/``bytearray``
+(binary) or ``datetime.date`` (date). Any other table — mixed or
+all-None columns, naive datetimes, Decimals, dict or list values,
+ints beyond int64, non-dict rows — goes to ``spark.createDataFrame(rows)``
+unchanged, so its schema, values and errors stay Spark's own.
 """
 
 from __future__ import annotations
 
+import datetime
 import re
-from typing import Any, Mapping
+from typing import TYPE_CHECKING, Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .errors import UnsupportedError
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # SQL type-string → Spark type. Covers the reference's CAST surface
 # (reference executor.py:40-47,106-141) plus the types Spark gives for free.
@@ -197,33 +213,84 @@ def _apply_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     )
 
 
+# Python value type -> (Arrow type alias, Spark type) for the row-dict
+# Arrow route: exactly what pyspark.sql.types._infer_type gives for
+# each. Looked up by type(v), not isinstance: bool subclasses int and
+# datetime subclasses date, and both infer differently.
+_ROW_VALUE_TYPES: dict[type, tuple[str, T.DataType]] = {
+    int: ("int64", T.LongType()),
+    float: ("double", T.DoubleType()),
+    str: ("string", T.StringType()),
+    bool: ("bool", T.BooleanType()),
+    bytes: ("binary", T.BinaryType()),
+    bytearray: ("binary", T.BinaryType()),
+    datetime.date: ("date32", T.DateType()),
+}
+
+
+def _rows_to_arrow(rows: list) -> tuple[pa.Table, T.StructType] | None:
+    """Row dicts → (Arrow table, the schema Spark would infer), or None
+    when some row or column falls outside ``_ROW_VALUE_TYPES``, or no
+    row has a key (Spark keeps zero-column rows; Arrow cannot)."""
+    import pyarrow as pa
+
+    order: dict[str, None] = {}
+    for row in rows:
+        if type(row) is not dict:
+            return None
+        if not row.keys() <= order.keys():
+            if any(type(k) is not str for k in row):
+                return None
+            for k in sorted(row):
+                order.setdefault(k, None)
+    if not order:
+        return None
+    arrays, fields = [], []
+    for name in order:
+        values = [row.get(name) for row in rows]
+        types = {type(v) for v in values}
+        types.discard(type(None))
+        kinds = {_ROW_VALUE_TYPES.get(t) for t in types}
+        if len(kinds) != 1 or None in kinds:
+            return None
+        ((arrow_type, spark_type),) = kinds
+        try:
+            arrays.append(pa.array(values, type=pa.type_for_alias(arrow_type)))
+        except (OverflowError, UnicodeEncodeError):
+            return None  # ints beyond int64, strs with lone surrogates
+        fields.append(T.StructField(name, spark_type, nullable=True))
+    return pa.Table.from_arrays(arrays, names=list(order)), T.StructType(fields)
+
+
 def to_spark_df(spark: SparkSession, value: Any, schema: T.StructType | None) -> DataFrame:
     """Convert a registered leaf (Spark DF / pandas DF / list of dicts)."""
     if isinstance(value, DataFrame):
         return value if schema is None else _apply_schema(value, schema)
-    is_pandas = False
     if not isinstance(value, list):
         import pandas as pd
 
-        is_pandas = isinstance(value, pd.DataFrame)
-        if not is_pandas:
+        if not isinstance(value, pd.DataFrame):
             raise UnsupportedError(
                 f"cannot register table of type {type(value).__name__}"
             )
-    # Reference table.py:91-103: list-of-row-dicts tables; pandas frames
-    # go through Arrow. Infer first, then coerce to any declared schema —
-    # EXCEPT when there is nothing to infer from: an empty list with a
+    # Reference table.py:91-103: list-of-row-dicts tables and pandas
+    # frames. Infer first, then coerce to any declared schema — EXCEPT
+    # when there is nothing to infer from: an empty table with a
     # declared schema builds directly on that schema (inference raises
     # CANNOT_INFER_EMPTY_SCHEMA), and without one the failure surfaces
     # as this package's error, not a raw PySparkValueError.
-    if isinstance(value, list) and not value:
+    if len(value) == 0:
         if schema is None:
             raise UnsupportedError(
                 "cannot infer a schema for an empty table; declare one "
                 "via the schema dict"
             )
         return spark.createDataFrame([], schema)
-    df = spark.createDataFrame(value)
+    arrow = _rows_to_arrow(value) if isinstance(value, list) else None
+    if arrow is not None:
+        df = spark.createDataFrame(arrow[0], schema=arrow[1])
+    else:
+        df = spark.createDataFrame(value)
     return df if schema is None else _apply_schema(df, schema)
 
 
