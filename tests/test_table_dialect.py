@@ -2282,6 +2282,27 @@ def test_choose_elt_field(spark):
     assert one("SELECT FIELD(NULL, 'a') AS q", "mysql") == 0
 
 
+@pytest.mark.parametrize(
+    "sql, dialect, expected",
+    [
+        ("SELECT CHOOSE(1, CHOOSE(2, 'a', 'b'), 'c') AS q FROM t", "tsql", "b"),
+        ("SELECT ELT(1, ELT(3, 'a', 'b'), 'c') AS q FROM t", "mysql", None),
+        ("SELECT FIELD(a, FIELD(b, 1, 2), 7) AS q FROM t", "mysql", 2),
+        ("SELECT intDivOrZero(intDivOrZero(a, b), c) AS q FROM t", "clickhouse", 0),
+        ("SELECT moduloOrZero(moduloOrZero(a, b), c) AS q FROM t", "clickhouse", 0),
+    ],
+)
+def test_nested_same_name_calls(spark, sql, dialect, expected):
+    """A call nested in an argument of a call of the same name is
+    rewritten too: the shared call loop resumes inside each
+    replacement. Left untranslated, the inner call fails on Spark
+    (UNRESOLVED_ROUTINE, or INVALID_ARRAY_INDEX for Spark's own ELT).
+    Expected values are the source dialects' for a=7, b=2, c=0."""
+    pdf = pd.DataFrame({"a": [7], "b": [2], "c": [0]})
+    got = execute(sql, tables={"t": pdf}, dialect=dialect, spark=spark).collect()
+    assert got[0]["q"] == expected
+
+
 def test_oracle_outer_join_plus_refuses(spark):
     """Oracle's legacy (+) outer-join marker changes join SHAPE — no
     token-level translation exists; the refusal names the fix instead
@@ -3185,3 +3206,103 @@ def test_clickhouse_split_max_substrings_refuses(spark):
         tables={}, dialect="clickhouse", spark=spark,
     ).collect()[0]
     assert got["r"] == ["x", "y"]
+
+
+def _pass_rows():
+    """(position, dialects, name, keywords) per _PASSES row. A partial
+    row is named by its function; a _for_each_scope row by the scope
+    rewrite it applies."""
+    from functools import partial
+
+    from xorbits_sql_spark.dialect import _PASSES, _for_each_scope
+
+    rows = []
+    for pos, (dialects, rewrite) in enumerate(_PASSES):
+        kw = rewrite.keywords if isinstance(rewrite, partial) else {}
+        fn = rewrite.func if isinstance(rewrite, partial) else rewrite
+        if fn is _for_each_scope:
+            fn = kw["fn"]
+        rows.append((pos, set(dialects), fn.__name__, kw))
+    return rows
+
+
+# (first, then): every dialect that runs both passes runs `first`
+# before `then`, as the pass docstrings and row comments require.
+_ORDERED_PASSES = [
+    # FETCH/OFFSET folded to LIMIT before anything that reads LIMIT
+    ("_fetch_first_to_limit", "_rewrite_top"),
+    ("_fetch_first_to_limit", "_rewrite_qualify"),
+    ("_fetch_first_to_limit", "_rewrite_oracle_rownum"),
+    ("_fetch_first_to_limit", "_rewrite_order_by_nulls"),
+    ("_rewrite_duckdb_intdiv", "_rewrite_int_literal_division"),
+    ("_rewrite_pg_array_literal", "_rewrite_bare_array_literal"),
+    ("_rewrite_bare_array_literal", "_rewrite_pg_subscript"),
+    ("_rewrite_pg_array_literal", "_rewrite_pg_subscript"),
+    ("_rewrite_json_arrow_ops", "_rewrite_caret_power"),
+    ("_rewrite_caret_power", "_pg_hash_to_caret"),
+    ("_rewrite_caret_power", "_rewrite_int_literal_division"),
+    ("_rewrite_pg_regex_ops", "_rewrite_pg_any_all"),
+    ("_rewrite_pg_epoch_to_timestamp", "_rewrite_oracle_fmt"),
+    ("_rewrite_distinct_on", "_rewrite_order_by_nulls"),
+    ("_rewrite_extract_dow", "_rewrite_fn_to_extract"),
+]
+
+
+@pytest.mark.parametrize("first, then", _ORDERED_PASSES)
+def test_pass_table_order(first, then):
+    """Each documented ordering pair holds by row position for every
+    dialect that runs both passes. duckdb's `//` pass shares no dialect
+    with integer-literal division, so that pair is pinned by row
+    position alone."""
+    rows = _pass_rows()
+    pos_first = [p for p, _, name, _ in rows if name == first]
+    pos_then = [p for p, _, name, _ in rows if name == then]
+    assert pos_first and pos_then, (first, then)
+    shared = 0
+    for d in {d for _, ds, _, _ in rows for d in ds}:
+        a = [p for p, ds, name, _ in rows if name == first and d in ds]
+        b = [p for p, ds, name, _ in rows if name == then and d in ds]
+        if a and b:
+            shared += 1
+            assert max(a) < min(b), (d, first, then)
+    if first == "_rewrite_duckdb_intdiv":
+        assert not shared and max(pos_first) < min(pos_then)
+    else:
+        assert shared, (first, then)
+
+
+@pytest.mark.parametrize(
+    "dialect, fname",
+    [("clickhouse", f) for f in (
+        "SPLITBYCHAR", "SPLITBYSTRING",
+        "ARRAYMAP", "ARRAYFILTER", "ARRAYEXISTS", "ARRAYALL",
+    )] + [("sqlite", "LIKE")],
+)
+def test_pass_table_refuses_then_swaps_then_renames(dialect, fname):
+    """Argument-reversed calls refuse unhandled arities, then swap,
+    then rename: a rename first would ship the reversed 3-arg form
+    under Spark's name."""
+    rows = [(p, name, kw) for p, ds, name, kw in _pass_rows() if dialect in ds]
+    refuse = [p for p, name, kw in rows
+              if name == "_refuse_unswapped_arity" and kw["fname"] == fname]
+    swap = [p for p, name, kw in rows
+            if name == "_swap_first_two_args" and kw["fname"] == fname]
+    rename = [p for p, name, kw in rows
+              if name == "_rewrite_func_names" and fname in kw["mapping"]]
+    assert len(refuse) == len(swap) == len(rename) == 1, (refuse, swap, rename)
+    assert refuse[0] < swap[0] < rename[0]
+
+
+def test_pass_table_names_resolved_dialects():
+    """Every dialect a row names is one the table can see: a
+    family-resolved, non-Spark KNOWN_DIALECTS name. A typo or an alias
+    ("postgresql", "presto") would silently switch the pass off."""
+    from xorbits_sql_spark.dialect import (
+        _DIALECT_FAMILY, _SPARK_DIALECTS, KNOWN_DIALECTS,
+    )
+
+    seen = {_DIALECT_FAMILY.get(d, d) for d in KNOWN_DIALECTS if d}
+    seen -= _SPARK_DIALECTS
+    assert "postgresql" not in seen and "presto" not in seen
+    for pos, dialects, name, _ in _pass_rows():
+        assert dialects and dialects <= seen, (pos, name, dialects - seen)

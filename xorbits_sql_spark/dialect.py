@@ -17,12 +17,22 @@ token stream, so string literals and comments can never be corrupted,
 and structural rewrites (``TOP n`` → trailing ``LIMIT n``) track paren
 depth. Constructs it cannot translate faithfully raise
 ``UnsupportedError`` instead of silently changing semantics.
+
+One path runs every dialect: ``transpile`` resolves the dialect's
+family (postgresql → postgres, presto → trino, ...), lexes, splits
+top-level statements, and runs each statement through ``_PASSES``, an
+ordered table of ``(dialects, rewrite)`` rows; a row applies when its
+set holds the resolved dialect. Passes that rewrite one function call
+at a time share one loop, ``_rewrite_calls``: it finds ``NAME(``,
+splits the arguments, splices in what the pass builds, and rescans
+inside the replacement so nested calls are rewritten too.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, Iterable
+from functools import partial
+from typing import AbstractSet, Callable, Container, Iterable
 
 from .errors import UnsupportedError
 
@@ -56,16 +66,19 @@ KNOWN_DIALECTS = {
     "spark2",
 }
 
-# Family aliases: dialects whose fallback-relevant surface is another
+# Family aliases: dialects whose transpiled surface is another
 # dialect's (doris/starrocks are mysql-wire with mysql quoting and
-# LIMIT syntax; drill is ANSI with double-quoted identifiers).
+# LIMIT syntax; drill is ANSI with double-quoted identifiers). The
+# pass table and the lexer only ever see the resolved name.
 _DIALECT_FAMILY = {
     "postgresql": "postgres",
     "doris": "mysql",
     "starrocks": "mysql",
     "drill": "ansi",
-    # athena engine v2+ is presto/trino under the hood; materialize
-    # speaks the postgres wire dialect
+    # trino is presto's successor and shares its SQL surface; athena
+    # engine v2+ is presto/trino under the hood; materialize speaks the
+    # postgres wire dialect
+    "presto": "trino",
     "athena": "trino",
     "materialize": "postgres",
 }
@@ -84,8 +97,6 @@ _CLICKHOUSE_CASTS = {
 _DQUOTE_IDENT_DIALECTS = {
     "duckdb",
     "postgres",
-    "postgresql",
-    "presto",
     "trino",
     "snowflake",
     "redshift",
@@ -149,7 +160,7 @@ _TOKEN_MYSQL = _lexer(
 # escape — ``'it\'s'`` is one literal — so post-transpile rewrites must
 # lex the way Spark will, or a registered db.table pattern appearing
 # after a ``\'`` inside a literal gets rewritten, silently corrupting
-# the string (mysql-family fallback output legally contains such
+# the string (mysql-family transpiled output legally contains such
 # escapes). MySQL escapes minus the ``#`` line comment, which Spark
 # does not recognize.
 _TOKEN_SPARK = _lexer(
@@ -1328,6 +1339,48 @@ def _call_args(
     return None
 
 
+_Tokens = list[tuple[str, str]]
+
+
+def _rewrite_calls(
+    tokens: _Tokens,
+    names: Container[str],
+    build: Callable[[str, list[_Tokens]], _Tokens | None],
+) -> _Tokens:
+    """The shared call loop: each ``NAME(args)`` whose upper-cased NAME
+    is in ``names`` is replaced, name through closing paren, by
+    ``build(name_as_written, args)``; ``None`` leaves the call alone.
+
+    Scanning resumes after the replacement's FIRST token, so calls
+    nested in the arguments are rewritten as the scan reaches them. A
+    replacement must therefore not hold, after its first token, a call
+    that ``build`` would rewrite again. Unbalanced parens leave the
+    call for Spark's parser."""
+    out = list(tokens)
+    i = 0
+    while i < len(out):
+        kind, text = out[i]
+        if kind == "word" and text.upper() in names:
+            j = _next_code(out, i)
+            if j is not None and out[j] == ("op", "("):
+                parsed = _call_args(out, j)
+                if parsed is not None:
+                    repl = build(text, parsed[0])
+                    if repl is not None:
+                        out[i : parsed[1] + 1] = repl
+        i += 1
+    return out
+
+
+def _join_args(args: list[_Tokens], sep: str = ",") -> _Tokens:
+    """Argument token lists joined with ``sep`` (the inverse of
+    ``_call_args``' split when ``sep`` is the bare comma)."""
+    out: _Tokens = []
+    for idx, a in enumerate(args):
+        out += tokenize(sep) + a if idx else a
+    return out
+
+
 # Snowflake / T-SQL date-part spellings → Spark unit keywords.
 _DATE_PARTS = {
     "YEAR": "YEAR", "YY": "YEAR", "YYYY": "YEAR", "YR": "YEAR", "YEARS": "YEAR",
@@ -1347,7 +1400,7 @@ _UNIT_MICROS = {"HOUR": 3_600_000_000, "MINUTE": 60_000_000, "SECOND": 1_000_000
 
 def _date_part(arg: list[tuple[str, str]]) -> str:
     """Normalize a date-part argument (bare word or 'quoted') to a Spark
-    unit keyword; raises on parts the fallback can't translate (e.g.
+    unit keyword; raises on parts the transpiler can't translate (e.g.
     DAYOFYEAR, EPOCH, NANOSECOND — unit semantics differ)."""
     code = [(k, t) for k, t in arg if k not in ("ws", "comment")]
     if len(code) != 1:
@@ -1387,28 +1440,12 @@ def _rewrite_dateadd_datediff(
     dialect truncates via the shift-by-one-day identity
     (Sunday-of-week(x) = Monday-of-week(x + 1 day) - 1 day).
     """
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("DATEADD", "DATEDIFF"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) == 2 and up == "DATEDIFF":
             # two-arg DATEDIFF(end, start) is the mysql/spark spelling;
             # leave it for the native parser.
-            i += 1
-            continue
+            return None
         if len(args) != 3:
             raise UnsupportedError(
                 f"{up} expects (part, x, y) in this dialect"
@@ -1481,12 +1518,9 @@ def _rewrite_dateadd_datediff(
                 + _floor(a)
                 + tokenize(f") DIV {u})")
             )
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("DATEADD", "DATEDIFF"), build)
 
 
 def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -1494,23 +1528,8 @@ def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     (defaults p=38, s=0, matching snowflake); ``TO_VARCHAR(x)``/
     ``TO_CHAR(x)`` (no format) → ``CAST(x AS STRING)``. Format-string
     forms raise: number/date format models are not translated."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("TO_NUMBER", "TO_DECIMAL", "TO_NUMERIC", "TO_VARCHAR", "TO_CHAR"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if up in ("TO_VARCHAR", "TO_CHAR"):
             if len(args) != 1:
                 raise UnsupportedError(
@@ -1531,12 +1550,13 @@ def _rewrite_to_number(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             p = nums[0][0][1] if len(nums) >= 1 else "38"
             s = nums[1][0][1] if len(nums) >= 2 else "0"
             repl = tokenize("CAST(") + args[0] + tokenize(f" AS DECIMAL({p},{s}))")
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+        return repl
+
+    return _rewrite_calls(
+        tokens,
+        ("TO_NUMBER", "TO_DECIMAL", "TO_NUMERIC", "TO_VARCHAR", "TO_CHAR"),
+        build,
+    )
 
 
 def _rewrite_cast_funcs(
@@ -1546,34 +1566,15 @@ def _rewrite_cast_funcs(
     ``toInt64``/``toDate``-family, sqlite ``datetime``). Multi-arg forms
     (clickhouse cast-with-default, sqlite datetime modifiers) raise —
     their extra arguments change semantics."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in mapping:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) != 1:
             raise UnsupportedError(
-                f"{text} with {len(args)} arguments is not supported"
+                f"{name} with {len(args)} arguments is not supported"
             )
-        repl = tokenize("CAST(") + args[0] + tokenize(f" AS {mapping[up]})")
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+        return tokenize("CAST(") + args[0] + tokenize(f" AS {mapping[up]})")
+
+    return _rewrite_calls(tokens, mapping, build)
 
 
 def _rewrite_unit_first_dates(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -1586,42 +1587,22 @@ def _rewrite_unit_first_dates(tokens: list[tuple[str, str]]) -> list[tuple[str, 
     which `_rewrite_dateadd_datediff` handles separately. Spark's own
     two-arg DATE_ADD(date, n) is left untouched (only the three-arg
     string-unit spelling is presto's)."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("DATE_ADD", "DATE_DIFF"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         first = [(k, t) for k, t in args[0] if k not in ("ws", "comment")] if args else []
         if len(args) != 3 or len(first) != 1 or first[0][0] != "string":
-            i += 1  # not the unit-first spelling; leave for Spark's parser
-            continue
+            return None  # not the unit-first spelling; leave for Spark's parser
         unit = _date_part(args[0])
         fn = "TIMESTAMPADD" if up == "DATE_ADD" else "TIMESTAMPDIFF"
-        repl = (
+        return (
             tokenize(f"{fn}({unit}, ")
             + args[1]
             + tokenize(", ")
             + args[2]
             + tokenize(")")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, ("DATE_ADD", "DATE_DIFF"), build)
 
 
 def _rewrite_agg_if(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -1629,57 +1610,28 @@ def _rewrite_agg_if(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     → ``AGG(IF(cond, x, NULL))`` (identical NULL-skipping aggregate
     semantics); ``countIf(cond)`` is renamed separately to COUNT_IF."""
     aggs = {"SUMIF": "SUM", "AVGIF": "AVG", "MINIF": "MIN", "MAXIF": "MAX"}
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in aggs:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) != 2:
-            raise UnsupportedError(f"{text} expects (value, condition)")
-        repl = (
+            raise UnsupportedError(f"{name} expects (value, condition)")
+        return (
             tokenize(f"{aggs[up]}(IF(")
             + args[1]
             + tokenize(", ")
             + args[0]
             + tokenize(", NULL))")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, aggs, build)
 
 
 def _rewrite_uniq_exact(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """clickhouse ``uniqExact(x[, y...])`` → ``COUNT(DISTINCT x[, y...])``."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "UNIQEXACT":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        repl = tokenize("COUNT(DISTINCT ")
-        out = out[:i] + repl + out[j + 1 :]
-        i += len(repl)
-    return out
+    return _rewrite_calls(
+        tokens,
+        ("UNIQEXACT",),
+        lambda _, args: tokenize("COUNT(DISTINCT ") + _join_args(args) + tokenize(")"),
+    )
 
 
 def _rewrite_from_dual(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -1911,23 +1863,8 @@ def _rewrite_oracle_fmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     nlsparam argument folds away when it pins NLS_DATE_LANGUAGE to
     AMERICAN/ENGLISH (Spark's own formatting locale); other NLS
     parameters refuse."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("TO_DATE", "TO_TIMESTAMP", "TO_CHAR"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) == 1:
             if up == "TO_CHAR":
                 repl = tokenize("CAST(") + args[0] + tokenize(" AS STRING)")
@@ -1969,12 +1906,9 @@ def _rewrite_oracle_fmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 )
         else:
             raise UnsupportedError(f"{up} with NLS parameters is not supported")
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("TO_DATE", "TO_TIMESTAMP", "TO_CHAR"), build)
 
 
 # sqlite strftime %-codes → Spark datetime patterns.
@@ -1989,22 +1923,7 @@ def _rewrite_strftime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """sqlite ``strftime(fmt, x)`` → ``DATE_FORMAT(x, fmt')``. Only the
     two-arg form (no modifiers) with %-codes that have exact Spark
     equivalents; %s/%f/%w and datetime modifiers raise."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "STRFTIME":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
         fcode = [(k, t) for k, t in args[0] if k not in ("ws", "comment")] if args else []
         if len(args) != 2 or len(fcode) != 1 or fcode[0][0] != "string":
             raise UnsupportedError(
@@ -2029,17 +1948,13 @@ def _rewrite_strftime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 raise UnsupportedError(
                     f"strftime literal {fmt[p]!r} is not supported"
                 )
-        repl = (
+        return (
             tokenize("DATE_FORMAT(")
             + args[1]
             + tokenize(f", '{''.join(outp)}')")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        # rescan from here: the spliced argument tokens may contain
-        # further rewritable calls (e.g. toString(toDate(x))); the
-        # replacement never reproduces the trigger word, so no loop.
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, ("STRFTIME",), build)
 
 
 def _rewrite_tsql_len(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -2048,29 +1963,12 @@ def _rewrite_tsql_len(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     T-SQL's LEN excludes trailing spaces (LEN('abc ') = 3); a bare
     LENGTH rename silently over-counts padded CHAR data. Only call
     sites rewrite — a column named ``len`` survives."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "LEN":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
         if len(args) != 1:
-            i += 1
-            continue
-        repl = tokenize("LENGTH(RTRIM(") + args[0] + tokenize("))")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+            return None
+        return tokenize("LENGTH(RTRIM(") + args[0] + tokenize("))")
+
+    return _rewrite_calls(tokens, ("LEN",), build)
 
 
 def _rewrite_mysql_limit(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -2168,49 +2066,21 @@ def _rewrite_extract_epoch(tokens: list[tuple[str, str]]) -> list[tuple[str, str
     so DATE inputs work too:
     ``(CAST(UNIX_MICROS(CAST(expr AS TIMESTAMP)) AS DOUBLE) / 1000000.0)``
     """
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "EXTRACT":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        k = _next_code(out, j)
-        if k is None or out[k][0] != "word" or out[k][1].upper() != "EPOCH":
-            i += 1
-            continue
-        m = _next_code(out, k)
-        if m is None or out[m][0] != "word" or out[m][1].upper() != "FROM":
-            i += 1
-            continue
-        # capture expr tokens up to the ')' matching the EXTRACT '('
-        depth = 1
-        expr: list[tuple[str, str]] = []
-        p = m + 1
-        while p < len(out):
-            if out[p] == ("op", "("):
-                depth += 1
-            elif out[p] == ("op", ")"):
-                depth -= 1
-                if depth == 0:
-                    break
-            expr.append(out[p])
-            p += 1
-        if depth != 0:
-            i += 1
-            continue
-        repl = (
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        inner = _join_args(args)
+        k = _next_code(inner, -1)
+        if k is None or inner[k][0] != "word" or inner[k][1].upper() != "EPOCH":
+            return None
+        m = _next_code(inner, k)
+        if m is None or inner[m][0] != "word" or inner[m][1].upper() != "FROM":
+            return None
+        return (
             tokenize("(CAST(UNIX_MICROS(CAST(")
-            + expr
+            + inner[m + 1 :]
             + tokenize(" AS TIMESTAMP)) AS DOUBLE) / 1000000.0)")
         )
-        out = out[:i] + repl + out[p + 1 :]
-        i += len(repl)
-    return out
+
+    return _rewrite_calls(tokens, ("EXTRACT",), build)
 
 
 # ---------------------------------------------------------------------------
@@ -2329,31 +2199,13 @@ def _rewrite_object_construct(
     to_json default), odd arity, and non-string-literal keys
     (snowflake drops pairs whose DYNAMIC key evaluates to NULL —
     named_struct keys are compile-time constants)."""
-    out = list(tokens)
-    while True:
-        hit = None
-        for i in _iter_code(out):
-            kind, text = out[i]
-            if kind == "word" and text.upper() in (
-                "OBJECT_CONSTRUCT", "OBJECT_CONSTRUCT_KEEP_NULL",
-            ):
-                if text.upper() == "OBJECT_CONSTRUCT_KEEP_NULL":
-                    raise UnsupportedError(
-                        "OBJECT_CONSTRUCT_KEEP_NULL keeps NULL-valued "
-                        "pairs; Spark's to_json drops them — not "
-                        "supported"
-                    )
-                j = _next_code(out, i)
-                if j is not None and out[j] == ("op", "("):
-                    hit = (i, j)
-                    break
-        if hit is None:
-            return out
-        oc_at, open_at = hit
-        parsed = _call_args(out, open_at)
-        if parsed is None:
-            return out
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens:
+        if name.upper() == "OBJECT_CONSTRUCT_KEEP_NULL":
+            raise UnsupportedError(
+                "OBJECT_CONSTRUCT_KEEP_NULL keeps NULL-valued "
+                "pairs; Spark's to_json drops them — not "
+                "supported"
+            )
         if len(args) == 1 and not any(
             tok[0] not in ("ws", "comment") for tok in args[0]
         ):
@@ -2393,15 +2245,16 @@ def _rewrite_object_construct(
                 )
             seen_keys.add(k[0][1])
         if not code_args:
-            repl = tokenize("PARSE_JSON('{}')")
-        else:
-            repl = tokenize("PARSE_JSON(TO_JSON(NAMED_STRUCT(")
-            for idx, a in enumerate(args):
-                if idx:
-                    repl += tokenize(", ")
-                repl += a
-            repl += tokenize(")))")
-        out = out[:oc_at] + repl + out[close + 1 :]
+            return tokenize("PARSE_JSON('{}')")
+        return (
+            tokenize("PARSE_JSON(TO_JSON(NAMED_STRUCT(")
+            + _join_args(args, ", ")
+            + tokenize(")))")
+        )
+
+    return _rewrite_calls(
+        tokens, ("OBJECT_CONSTRUCT", "OBJECT_CONSTRUCT_KEEP_NULL"), build
+    )
 
 
 def _rewrite_snowflake_flatten(
@@ -2827,23 +2680,7 @@ def _rewrite_group_concat(
     default; Spark's default is ''), always emitted explicitly.
     ``GROUP_CONCAT(a, b)`` (multi-expression concatenation) raises —
     translating it as one expression would silently drop columns."""
-    out = list(tokens)
-    while True:
-        hit = None
-        for i in _iter_code(out):
-            kind, text = out[i]
-            if kind == "word" and text.upper() == "GROUP_CONCAT":
-                j = _next_code(out, i)
-                if j is not None and out[j] == ("op", "("):
-                    hit = (i, j)
-                    break
-        if hit is None:
-            return out
-        gc_at, open_at = hit
-        parsed = _call_args(out, open_at)
-        if parsed is None:
-            return out
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens:
         if len(args) != 1:
             raise UnsupportedError(
                 "GROUP_CONCAT of multiple expressions is not supported"
@@ -2879,8 +2716,9 @@ def _rewrite_group_concat(
                 raise UnsupportedError(
                     "GROUP_CONCAT SEPARATOR expects a string literal"
                 )
-        rep = _agg_orderby_to_listagg(expr, sep, order_items)
-        out = out[:gc_at] + rep + out[close + 1 :]
+        return _agg_orderby_to_listagg(expr, sep, order_items)
+
+    return _rewrite_calls(tokens, ("GROUP_CONCAT",), build)
 
 
 def _rewrite_string_agg_orderby(
@@ -2891,40 +2729,26 @@ def _rewrite_string_agg_orderby(
     (ORDER BY ...)``. STRING_AGG without an internal ORDER BY parses
     natively in Spark 4 (string_agg is a listagg alias) and is left
     untouched."""
-    out = list(tokens)
-    while True:
-        hit = None
-        for i in _iter_code(out):
-            kind, text = out[i]
-            if kind == "word" and text.upper() == "STRING_AGG":
-                j = _next_code(out, i)
-                if j is not None and out[j] == ("op", "("):
-                    parsed = _call_args(out, j)
-                    if parsed is None:
-                        return out
-                    args, close = parsed
-                    if len(args) == 2:
-                        depth = 0
-                        for p, (k2, t2) in enumerate(args[1]):
-                            if (k2, t2) == ("op", "("):
-                                depth += 1
-                            elif (k2, t2) == ("op", ")"):
-                                depth -= 1
-                            elif depth == 0 and k2 == "word" and t2.upper() == "ORDER":
-                                hit = (i, close, args, p)
-                                break
-                    if hit is not None:
-                        break
-        if hit is None:
-            return out
-        sa_at, close, args, order_at = hit
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 2:
+            return None
+        depth = 0
+        for order_at, (k, t) in enumerate(args[1]):
+            if (k, t) == ("op", "("):
+                depth += 1
+            elif (k, t) == ("op", ")"):
+                depth -= 1
+            elif depth == 0 and k == "word" and t.upper() == "ORDER":
+                break
+        else:
+            return None
         sep = args[1][:order_at]
         by = _next_code(args[1], order_at)
         if by is None or args[1][by][0] != "word" or args[1][by][1].upper() != "BY":
             raise UnsupportedError("malformed STRING_AGG ORDER BY")
-        order_items = args[1][by + 1 :]
-        rep = _agg_orderby_to_listagg(args[0], sep, order_items)
-        out = out[:sa_at] + rep + out[close + 1 :]
+        return _agg_orderby_to_listagg(args[0], sep, args[1][by + 1 :])
+
+    return _rewrite_calls(tokens, ("STRING_AGG",), build)
 
 
 def _rewrite_decode(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -2936,24 +2760,8 @@ def _rewrite_decode(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     The expression tokens are duplicated per WHEN arm (token-level
     rewrite; acceptable for deterministic expressions — oracle itself
     documents DECODE as evaluating the expression once per comparison).
-    Nested DECODEs rewrite on subsequent passes of the outer loop."""
-    out = list(tokens)
-    while True:
-        hit = None
-        for i in _iter_code(out):
-            kind, text = out[i]
-            if kind == "word" and text.upper() == "DECODE":
-                j = _next_code(out, i)
-                if j is not None and out[j] == ("op", "("):
-                    hit = (i, j)
-                    break
-        if hit is None:
-            return out
-        dc_at, open_at = hit
-        parsed = _call_args(out, open_at)
-        if parsed is None:
-            return out
-        args, close = parsed
+    Nested DECODEs rewrite as the shared call loop reaches them."""
+    def build(name: str, args: list[_Tokens]) -> _Tokens:
         if len(args) < 3:
             raise UnsupportedError("DECODE requires expr, search, result")
         expr, rest = args[0], args[1:]
@@ -2970,8 +2778,9 @@ def _rewrite_decode(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
         if default is not None:
             rep += [("ws", " "), ("word", "ELSE"), ("ws", " ")]
             rep += default
-        rep += [("ws", " "), ("word", "END")]
-        out = out[:dc_at] + rep + out[close + 1 :]
+        return rep + [("ws", " "), ("word", "END")]
+
+    return _rewrite_calls(tokens, ("DECODE",), build)
 
 
 def _rewrite_datepart(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -2979,30 +2788,13 @@ def _rewrite_datepart(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     via the shared ``_date_part`` spelling table (yy/qq/mm/dd/hh/mi/ss
     abbreviations); parts outside it (dayofyear/weekday: DATEFIRST-
     dependent) raise rather than mistranslate."""
-    out = list(tokens)
-    while True:
-        hit = None
-        for i in _iter_code(out):
-            kind, text = out[i]
-            if kind == "word" and text.upper() == "DATEPART":
-                j = _next_code(out, i)
-                if j is not None and out[j] == ("op", "("):
-                    hit = (i, j)
-                    break
-        if hit is None:
-            return out
-        dp_at, open_at = hit
-        parsed = _call_args(out, open_at)
-        if parsed is None:
-            return out
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens:
         if len(args) != 2:
             raise UnsupportedError("DATEPART expects (part, expr)")
         unit = _date_part(args[0])
-        rep: list[tuple[str, str]] = [("word", "EXTRACT"), ("op", "("), ("word", unit), ("ws", " "), ("word", "FROM"), ("ws", " "), ("op", "(")]
-        rep += args[1]
-        rep += [("op", ")"), ("op", ")")]
-        out = out[:dp_at] + rep + out[close + 1 :]
+        return tokenize(f"EXTRACT({unit} FROM (") + args[1] + tokenize("))")
+
+    return _rewrite_calls(tokens, ("DATEPART",), build)
 
 
 # Words that may legally follow ``PIVOT (...)`` without being a
@@ -3115,22 +2907,9 @@ def _rewrite_bq_generate_array(
     explicit negative steps agree, and a step whose sign contradicts
     the direction is [] on bq but a loud ANSI error on Spark —
     visible, not silent."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "GENERATE_ARRAY":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) not in (2, 3):
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) not in (2, 3):
+            return None
         if len(args) == 3:
             repl = tokenize("SEQUENCE(") + list(args[0]) + tokenize(", ") + list(
                 args[1]
@@ -3148,9 +2927,9 @@ def _rewrite_bq_generate_array(
                 + b
                 + tokenize(")), CAST(ARRAY() AS ARRAY<BIGINT>))")
             )
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("GENERATE_ARRAY",), build)
 
 
 def _json_step_to_path(tok: tuple[str, str], style: str) -> str | None:
@@ -3301,28 +3080,13 @@ def _rewrite_left_right_negative(
     empty-on-nonpositive-length behavior reproduces the over-negative
     '' too. Dynamic counts are type-invisible and pass through
     (mysql agrees with Spark — '' — and is untouched)."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("LEFT", "RIGHT"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        parsed = (
-            _call_args(out, j)
-            if j is not None and out[j] == ("op", "(")
-            else None
-        )
-        if parsed is None or len(parsed[0]) != 2:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
+        if len(args) != 2:
+            return None
         n = _literal_int(args[1])
         if n is None or n >= 0:
-            i += 1
-            continue
+            return None
         k = -n
         if up == "LEFT":
             repl = (
@@ -3338,9 +3102,9 @@ def _rewrite_left_right_negative(
                 + list(args[0])
                 + tokenize(f", {k} + 1)")
             )
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("LEFT", "RIGHT"), build)
 
 
 def _rewrite_choose_elt(
@@ -3352,32 +3116,18 @@ def _rewrite_choose_elt(
     where Spark's own ``ELT`` raises under ANSI mode. Mixed-type value
     lists that mysql would coerce per-use fail loudly at ARRAY()
     type coercion."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != fname:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        parsed = (
-            _call_args(out, j)
-            if j is not None and out[j] == ("op", "(")
-            else None
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) < 2:
+            return None
+        return (
+            tokenize("GET(ARRAY(")
+            + _join_args(args[1:], ", ")
+            + tokenize("), (")
+            + args[0]
+            + tokenize(") - 1)")
         )
-        if parsed is None or len(parsed[0]) < 2:
-            i += 1
-            continue
-        args, close = parsed
-        repl = tokenize("GET(ARRAY(")
-        for idx, a in enumerate(args[1:]):
-            if idx:
-                repl += [("op", ","), ("ws", " ")]
-            repl += list(a)
-        repl += tokenize("), (") + list(args[0]) + tokenize(") - 1)")
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+
+    return _rewrite_calls(tokens, (fname,), build)
 
 
 def _rewrite_mysql_field(
@@ -3387,32 +3137,18 @@ def _rewrite_mysql_field(
     ``COALESCE(ARRAY_POSITION(ARRAY(v1, ...), (needle)), 0)``:
     array_position is 1-based like FIELD and returns 0 when absent;
     the COALESCE maps its NULL-needle NULL to FIELD's documented 0."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "FIELD":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        parsed = (
-            _call_args(out, j)
-            if j is not None and out[j] == ("op", "(")
-            else None
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) < 2:
+            return None
+        return (
+            tokenize("COALESCE(ARRAY_POSITION(ARRAY(")
+            + _join_args(args[1:], ", ")
+            + tokenize("), (")
+            + args[0]
+            + tokenize(")), 0)")
         )
-        if parsed is None or len(parsed[0]) < 2:
-            i += 1
-            continue
-        args, close = parsed
-        repl = tokenize("COALESCE(ARRAY_POSITION(ARRAY(")
-        for idx, a in enumerate(args[1:]):
-            if idx:
-                repl += [("op", ","), ("ws", " ")]
-            repl += list(a)
-        repl += tokenize("), (") + list(args[0]) + tokenize(")), 0)")
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+
+    return _rewrite_calls(tokens, ("FIELD",), build)
 
 
 def _refuse_oracle_outer_join_plus(
@@ -3448,23 +3184,9 @@ def _rewrite_mysql_json_extract(
     get_json_object says 'hi' — wrap it in JSON_UNQUOTE or use ->>.
     Multi-path JSON_EXTRACT (3+ args returns a collected array)
     refuses too."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "JSON_UNQUOTE":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        parsed = (
-            _call_args(out, j)
-            if j is not None and out[j] == ("op", "(")
-            else None
-        )
-        if parsed is None or len(parsed[0]) != 1:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 1:
+            return None
         inner = [(k, t) for k, t in args[0] if k not in ("ws", "comment")]
         if not (
             len(inner) >= 4
@@ -3473,22 +3195,14 @@ def _rewrite_mysql_json_extract(
             and inner[1] == ("op", "(")
             and inner[-1] == ("op", ")")
         ):
-            i += 1
-            continue
+            return None
         sub = _call_args(inner, 1)
         if sub is None or sub[1] != len(inner) - 1 or len(sub[0]) != 2:
-            i += 1
-            continue
+            return None
         a, p = sub[0]
-        repl = (
-            tokenize("GET_JSON_OBJECT(")
-            + list(a)
-            + tokenize(", ")
-            + list(p)
-            + tokenize(")")
-        )
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
+        return tokenize("GET_JSON_OBJECT(") + a + tokenize(", ") + p + tokenize(")")
+
+    out = _rewrite_calls(tokens, ("JSON_UNQUOTE",), build)
     for k in _iter_code(out):
         if out[k][0] == "word" and out[k][1].upper() == "JSON_EXTRACT":
             nxt = _next_code(out, k)
@@ -3888,26 +3602,12 @@ def _rewrite_pg_epoch_to_timestamp(
     (pg's one-arg form takes a double epoch; fractional seconds carry
     through). Runs BEFORE the shared TO_CHAR/TO_DATE format rewrite so
     its one-arg refusal never sees this form."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "TO_TIMESTAMP":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 1:
-            i += 1
-            continue
-        args, close = parsed
-        repl = tokenize("TIMESTAMP_SECONDS(") + args[0] + tokenize(")")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 1:
+            return None
+        return tokenize("TIMESTAMP_SECONDS(") + args[0] + tokenize(")")
+
+    return _rewrite_calls(tokens, ("TO_TIMESTAMP",), build)
 
 
 # MySQL DATE_FORMAT/STR_TO_DATE %-codes → Spark datetime patterns.
@@ -3980,23 +3680,8 @@ def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str
     passes through to Spark's same-named function and renders the
     %-codes as literal text — silently wrong output, the worst
     failure mode a transpiler has. Non-literal formats refuse."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in ("DATE_FORMAT", "TIME_FORMAT", "STR_TO_DATE"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) != 2:
             raise UnsupportedError(f"{up} takes exactly 2 arguments")
         fcode = [(k, t) for k, t in args[1] if k not in ("ws", "comment")]
@@ -4024,10 +3709,11 @@ def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str
         # the Spark pattern may itself contain quoted literals ('T');
         # double them so the spliced SQL string literal stays balanced
         sql_fmt = spark_fmt.replace("'", "''")
-        repl = tokenize(f"{fn}(") + args[0] + tokenize(f", '{sql_fmt}')")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+        return tokenize(f"{fn}(") + args[0] + tokenize(f", '{sql_fmt}')")
+
+    return _rewrite_calls(
+        tokens, ("DATE_FORMAT", "TIME_FORMAT", "STR_TO_DATE"), build
+    )
 
 
 # T-SQL CONVERT target types → Spark cast types. String types carry
@@ -4091,22 +3777,7 @@ def _rewrite_convert(
     USING charset)`` form (charset transcoding — refuses). String
     targets keep each dialect's silent truncation via SUBSTRING; an
     unknown target type refuses rather than guessing."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "CONVERT":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
         if not tsql and any(
             k == "word" and t.upper() == "USING" for a in args for k, t in a
         ):
@@ -4155,9 +3826,9 @@ def _rewrite_convert(
             if target == "DECIMAL" and params:
                 target = f"DECIMAL({', '.join(params)})"
             repl = tokenize("CAST(") + expr + tokenize(f" AS {target})")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("CONVERT",), build)
 
 
 # source field → (Spark EXTRACT field, subtract-one?). Used by the
@@ -4187,7 +3858,7 @@ def _rewrite_extract_dow(
     pg ``EXTRACT(DOW FROM x)`` numbers Sunday as 0 (0..6) while
     Spark's DOW field numbers it 1 (1..7) — the expression RUNS on
     Spark and returns off-by-one values, the silent-corruption class
-    this fallback must never allow. Snowflake's DAYOFWEEK family has
+    this transpiler must never allow. Snowflake's DAYOFWEEK family has
     the same hazard (Sunday=0 under the default WEEK_START=0). Fields
     mapping to ``(spark_field, True)`` wrap in ``( … - 1 )``; ISO
     variants (Monday=1, identical to Spark's DOW_ISO) rename. Covers
@@ -4370,7 +4041,7 @@ def _rewrite_pg_subscript(
 ) -> list[tuple[str, str]]:
     """pg/duckdb array subscripts are 1-BASED; Spark's ``[]`` is
     0-based, so ``a[1]`` passes both parsers and silently reads the
-    WRONG element — the exact silent-corruption class this fallback
+    WRONG element — the exact silent-corruption class this transpiler
     exists to prevent. The two sources disagree on NEGATIVE indexes,
     so the emission is per-dialect:
 
@@ -4595,24 +4266,11 @@ def _rewrite_mysql_interval_arith(
     TIMESTAMP even for DATE input where mysql keeps DATE for
     day-granularity arithmetic (the DATEADD-rewrite precedent) —
     a type widening, not a value corruption."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        sign = _MYSQL_DATE_ADDSUB.get(up)
-        if sign is None:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 2:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
+        if len(args) != 2:
+            return None
+        sign = _MYSQL_DATE_ADDSUB[up]
         iv = [(k, t) for k, t in args[1] if k not in ("ws", "comment")]
         if iv and iv[0][0] == "word" and iv[0][1].upper() == "INTERVAL":
             if len(iv) < 3 or iv[-1][0] != "word":
@@ -4631,16 +4289,15 @@ def _rewrite_mysql_interval_arith(
         n_toks = (
             (tokenize("-(") + n + tokenize(")")) if sign < 0 else n
         )
-        repl = (
+        return (
             tokenize(f"TIMESTAMPADD({unit}, ")
             + n_toks
             + tokenize(", ")
             + args[0]
             + tokenize(")")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, _MYSQL_DATE_ADDSUB, build)
 
 
 def _rewrite_ch_addsub(
@@ -4650,39 +4307,24 @@ def _rewrite_ch_addsub(
     → ``TIMESTAMPADD(UNIT, ±n, expr)``. Both engines clamp month-end
     arithmetic (Jan 31 + 1 month = Feb 29). Non-2-arg calls stay put
     and fail loudly as unresolved functions."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        got = _CH_ADDSUB.get(text.upper()) if kind == "word" else None
-        if got is None:
-            i += 1
-            continue
-        unit, sign = got
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 2:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 2:
+            return None
+        unit, sign = _CH_ADDSUB[name.upper()]
         n_toks = (
             (tokenize("-(") + list(args[1]) + tokenize(")"))
             if sign < 0
             else list(args[1])
         )
-        repl = (
+        return (
             tokenize(f"TIMESTAMPADD({unit}, ")
             + n_toks
             + tokenize(", ")
             + args[0]
             + tokenize(")")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, _CH_ADDSUB, build)
 
 
 def _rewrite_duckdb_intdiv(
@@ -4778,7 +4420,7 @@ def _rewrite_int_literal_division(
     result)"; ``SELECT (-7)/2`` is -3 on all five); Spark's ``/`` is
     ALWAYS true division, so ``7/2`` runs on both engines and silently
     returns 3.5 instead of 3 — the silent-corruption class this
-    fallback exists to stop. Only statically type-KNOWN integer
+    transpiler exists to stop. Only statically type-KNOWN integer
     operands rewrite: integer literals and ``COUNT(...)`` calls
     (integer-typed in all five dialects — and ``COUNT(*)/2``-style
     ratios are the wild-caught shape of this bug). Both sides must be
@@ -4834,34 +4476,21 @@ def _rewrite_or_zero(
     unresolved function on Spark. Documented divergence: clickhouse
     also returns 0 for min-negative ÷ -1; Spark ANSI raises an
     overflow ERROR there — loud, not silent."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != fname:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 2:
-            i += 1
-            continue
-        (a, b), close = parsed
-        repl = (
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 2:
+            return None
+        a, b = args
+        return (
             tokenize("IF((")
-            + list(b)
+            + b
             + tokenize(") = 0, 0, (")
-            + list(a)
+            + a
             + tokenize(f") {op} (")
-            + list(b)
+            + b
             + tokenize("))")
         )
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+
+    return _rewrite_calls(tokens, (fname,), build)
 
 
 def _literal_int(arg: list[tuple[str, str]]) -> int | None:
@@ -4900,22 +4529,7 @@ def _rewrite_substr_nonpositive(
     but uses pg's virtual consumption at 0 (``substr('abcdef', 0,
     3)`` = 'ab') — ``zero_only=True`` restricts the rewrite to the
     one start value that differs there."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() not in ("SUBSTR", "SUBSTRING"):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
         if len(args) == 1:
             # FROM/FOR spelling: split the single arg at depth-0
             # FROM / FOR keywords
@@ -4937,16 +4551,13 @@ def _rewrite_substr_nonpositive(
                     continue
                 seg[-1].append((k, t))
             if not ok or len(seg) < 2:
-                i += 1
-                continue
+                return None
             args = seg
         if not 2 <= len(args) <= 3:
-            i += 1
-            continue
+            return None
         p = _literal_int(args[1])
         if p is None or p > 0 or (zero_only and p != 0):
-            i += 1
-            continue
+            return None
         consumed = 1 - p
         repl = tokenize("SUBSTRING(") + list(args[0]) + tokenize(", 1")
         if len(args) == 3:
@@ -4954,9 +4565,9 @@ def _rewrite_substr_nonpositive(
                 f") - {consumed}"
             )
         repl += tokenize(")")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, ("SUBSTR", "SUBSTRING"), build)
 
 
 def _tsql_like_pattern_to_regex(pat: str) -> str | None:
@@ -5059,26 +4670,13 @@ def _swap_first_two_args(
     """Swap a call's first two arguments: ``FNAME(a, b[, c])`` →
     ``FNAME(b, a[, c])`` — for sources whose argument order is the
     REVERSE of Spark's (both run, silently different values)."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind == "word" and text.upper() == fname:
-            j = _next_code(out, i)
-            if j is not None and out[j] == ("op", "("):
-                parsed = _call_args(out, j)
-                if parsed is not None:
-                    args, close = parsed
-                    if min_args <= len(args) <= max_args:
-                        new = [args[1], args[0]] + args[2:]
-                        repl: list[tuple[str, str]] = []
-                        for idx, a in enumerate(new):
-                            if idx:
-                                repl += [("op", ","), ("ws", " ")]
-                            repl += a
-                        out = out[: j + 1] + repl + out[close:]
-        i += 1
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if not min_args <= len(args) <= max_args:
+            return None
+        swapped = _join_args([args[1], args[0]] + args[2:], ", ")
+        return [("word", name), ("op", "(")] + swapped + [("op", ")")]
+
+    return _rewrite_calls(tokens, (fname,), build)
 
 
 def _refuse_unswapped_arity(
@@ -5092,17 +4690,11 @@ def _refuse_unswapped_arity(
     ``_rewrite_func_names`` — Spark then runs ``split(sep, s, n)`` with
     str/delimiter reversed and the delimiter treated as a regex:
     silently wrong, the exact divergence class this module forbids."""
-    for i in _iter_code(tokens):
-        kind, text = tokens[i]
-        if kind == "word" and text.upper() == fname:
-            j = _next_code(tokens, i)
-            if j is not None and tokens[j] == ("op", "("):
-                parsed = _call_args(tokens, j)
-                if parsed is not None and len(parsed[0]) != ok_arity:
-                    raise UnsupportedError(
-                        f"{fname.lower()} with {len(parsed[0])} args: {why}"
-                    )
-    return tokens
+    def build(name: str, args: list[_Tokens]) -> None:
+        if len(args) != ok_arity:
+            raise UnsupportedError(f"{fname.lower()} with {len(args)} args: {why}")
+
+    return _rewrite_calls(tokens, (fname,), build)
 
 
 def _rewrite_single_arg_log10(
@@ -5112,16 +4704,12 @@ def _rewrite_single_arg_log10(
     (pg/duckdb/redshift/sqlite/teradata) vs Spark's natural log — both
     run, silently off by a factor of ln(10). Two-arg ``LOG(b, x)`` has
     the same order on both and is left alone."""
-    out = list(tokens)
-    for i in list(_iter_code(out)):
-        kind, text = out[i]
-        if kind == "word" and text.upper() == "LOG":
-            j = _next_code(out, i)
-            if j is not None and out[j] == ("op", "("):
-                parsed = _call_args(out, j)
-                if parsed is not None and len(parsed[0]) == 1:
-                    out[i] = ("word", "LOG10")
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 1:
+            return None
+        return tokenize("LOG10(") + args[0] + tokenize(")")
+
+    return _rewrite_calls(tokens, ("LOG",), build)
 
 
 def _rewrite_literal_split(
@@ -5139,34 +4727,21 @@ def _rewrite_literal_split(
     literal, dynamic ones included (delimiters containing a literal
     ``\\E`` are the one unquotable corner). ``default_delim`` supplies
     BigQuery's one-arg ``SPLIT(x)`` = ``SPLIT(x, ',')``."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind == "word" and text.upper() == fname:
-            j = _next_code(out, i)
-            if j is not None and out[j] == ("op", "("):
-                parsed = _call_args(out, j)
-                if parsed is not None:
-                    args, close = parsed
-                    n = len(args)
-                    if n == 1 and default_delim is not None and any(
-                        t[0] not in ("ws", "comment") for t in args[0]
-                    ):
-                        args = args + [tokenize(f"'{default_delim}'")]
-                        n = 2
-                    if 2 <= n <= max_args:
-                        repl = tokenize("SPLIT(") + args[0] + tokenize(
-                            ", CONCAT('\\\\Q', ("
-                        ) + args[1] + tokenize("), '\\\\E')")
-                        for extra in args[2:]:
-                            repl += [("op", ","), ("ws", " ")] + extra
-                        repl += tokenize(")")
-                        out = out[:i] + repl + out[close + 1 :]
-                        i += 1  # nested calls in args rewrite as the
-                        continue  # scan reaches them
-        i += 1
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) == 1 and default_delim is not None and any(
+            t[0] not in ("ws", "comment") for t in args[0]
+        ):
+            args = args + [tokenize(f"'{default_delim}'")]
+        if not 2 <= len(args) <= max_args:
+            return None
+        delim = tokenize("CONCAT('\\\\Q', (") + args[1] + tokenize("), '\\\\E')")
+        return (
+            tokenize("SPLIT(")
+            + _join_args([args[0], delim] + args[2:], ", ")
+            + tokenize(")")
+        )
+
+    return _rewrite_calls(tokens, (fname,), build)
 
 
 def _rewrite_concat_skip_nulls(
@@ -5184,31 +4759,13 @@ def _rewrite_concat_skip_nulls(
     is two-argument and NULL-PROPAGATING (AWS docs: if either
     expression is null the result is null), matching Spark exactly —
     passthrough, NOT this rewrite."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind == "word" and text.upper() == "CONCAT":
-            j = _next_code(out, i)
-            if j is not None and out[j] == ("op", "("):
-                parsed = _call_args(out, j)
-                if parsed is not None and len(parsed[0]) >= 1 and any(
-                    t[0] not in ("ws", "comment")
-                    for a in parsed[0]
-                    for t in a
-                ):
-                    args, close = parsed
-                    repl = tokenize("CONCAT_WS('', ")
-                    for idx, a in enumerate(args):
-                        if idx:
-                            repl += [("op", ","), ("ws", " ")]
-                        repl += tokenize("CAST(") + a + tokenize(" AS STRING)")
-                    repl += tokenize(")")
-                    out = out[:i] + repl + out[close + 1 :]
-                    i += 1  # nested CONCATs inside args rewrite as the
-                    continue  # scan reaches them (CONCAT_WS never matches)
-        i += 1
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if not any(t[0] not in ("ws", "comment") for a in args for t in a):
+            return None
+        casts = [tokenize("CAST(") + a + tokenize(" AS STRING)") for a in args]
+        return tokenize("CONCAT_WS('', ") + _join_args(casts, ", ") + tokenize(")")
+
+    return _rewrite_calls(tokens, ("CONCAT",), build)
 
 
 def _rewrite_greatest_least_nullprop(
@@ -5391,26 +4948,12 @@ def _rewrite_pg_any_all(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
 
 def _rewrite_tsql_square(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """T-SQL ``SQUARE(x)`` → ``POWER(x, 2)`` (no Spark SQUARE)."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "SQUARE":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 1:
-            i += 1
-            continue
-        args, close = parsed
-        repl = tokenize("POWER(") + args[0] + tokenize(", 2)")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        if len(args) != 1:
+            return None
+        return tokenize("POWER(") + args[0] + tokenize(", 2)")
+
+    return _rewrite_calls(tokens, ("SQUARE",), build)
 
 
 # BigQuery strftime-style format elements → Spark datetime patterns
@@ -5474,24 +5017,8 @@ def _rewrite_bq_format(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """bigquery FORMAT_*/PARSE_* (format FIRST, value second) → Spark
     DATE_FORMAT/TO_DATE/TO_TIMESTAMP with the %-codes translated —
     same silent-corruption class as mysql DATE_FORMAT."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        fn = _BQ_FORMAT_FNS.get(up)
-        if fn is None:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
         if len(args) != 2:
             raise UnsupportedError(
                 f"{up} with a time zone argument is not supported"
@@ -5502,10 +5029,11 @@ def _rewrite_bq_format(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
                 f"{up} format must be a string literal"
             )
         sql_fmt = _bq_datefmt(_unquote(fcode[0][1], "'")).replace("'", "''")
-        repl = tokenize(f"{fn}(") + args[1] + tokenize(f", '{sql_fmt}')")
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    return out
+        return tokenize(f"{_BQ_FORMAT_FNS[up]}(") + args[1] + tokenize(
+            f", '{sql_fmt}')"
+        )
+
+    return _rewrite_calls(tokens, _BQ_FORMAT_FNS, build)
 
 
 _BQ_DT_ADDSUB = {
@@ -5528,26 +5056,10 @@ def _rewrite_bq_datetime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
     * ``TIMESTAMP_DIFF(a, b, unit)`` counts WHOLE elapsed units —
       exactly Spark's ``TIMESTAMPDIFF(unit, b, a)``.
     """
-    out = list(tokens)
-    i = 0
-    changed_boundary = False
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        if up not in _BQ_DT_ADDSUB and up not in (
-            "DATE_DIFF", "DATETIME_DIFF", "TIMESTAMP_DIFF"
-        ):
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    boundary_diffs: list[str] = []
+
+    def build(name: str, args: list[_Tokens]) -> _Tokens:
+        up = name.upper()
         if up in _BQ_DT_ADDSUB:
             cast_date, sign = _BQ_DT_ADDSUB[up]
             if len(args) != 2:
@@ -5603,10 +5115,13 @@ def _rewrite_bq_datetime(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]
                     + args[0]
                     + tokenize(")")
                 )
-                changed_boundary = True
-        out = out[:i] + repl + out[close + 1 :]
-        i += 1
-    if changed_boundary:
+                boundary_diffs.append(up)
+        return repl
+
+    out = _rewrite_calls(
+        tokens, {*_BQ_DT_ADDSUB, "DATE_DIFF", "DATETIME_DIFF", "TIMESTAMP_DIFF"}, build
+    )
+    if boundary_diffs:
         # bq weeks start Sunday (WEEK == WEEK(SUNDAY))
         out = _rewrite_dateadd_datediff(out, week_start="sunday")
     return out
@@ -5619,26 +5134,11 @@ def _rewrite_tsql_stuff(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
     the CASE guard — fine for the column/literal arguments STUFF takes
     in practice (Spark would re-evaluate a nondeterministic argument,
     but so would tsql's own scalar-UDF inlining)."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        if kind != "word" or text.upper() != "STUFF":
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None:
-            i += 1
-            continue
-        args, close = parsed
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
         if len(args) != 4:
             raise UnsupportedError("STUFF takes exactly 4 arguments")
         s, start, ln, repl = args
-        repl_toks = (
+        return (
             tokenize("CASE WHEN (")
             + start
             + tokenize(") < 1 OR (")
@@ -5665,9 +5165,8 @@ def _rewrite_tsql_stuff(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             + ln
             + tokenize("))) END")
         )
-        out = out[:i] + repl_toks + out[close + 1 :]
-        i += 1
-    return out
+
+    return _rewrite_calls(tokens, ("STUFF",), build)
 
 
 def _rewrite_temp_table_as(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -5819,30 +5318,16 @@ def _rewrite_fn_to_extract(
     whose numbering Spark only exposes as an extract field (DOW_ISO
     etc.). Functions in ``minus_one`` additionally wrap in ``( … - 1 )``
     — the off-by-one shift for dialects that number Sunday as 0."""
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        kind, text = out[i]
-        up = text.upper() if kind == "word" else ""
-        field = fn_to_field.get(up)
-        if field is None:
-            i += 1
-            continue
-        j = _next_code(out, i)
-        if j is None or out[j] != ("op", "("):
-            i += 1
-            continue
-        parsed = _call_args(out, j)
-        if parsed is None or len(parsed[0]) != 1:
-            i += 1
-            continue
-        args, close = parsed
-        repl = tokenize(f"EXTRACT({field} FROM ") + args[0] + tokenize(")")
+    def build(name: str, args: list[_Tokens]) -> _Tokens | None:
+        up = name.upper()
+        if len(args) != 1:
+            return None
+        repl = tokenize(f"EXTRACT({fn_to_field[up]} FROM ") + args[0] + tokenize(")")
         if up in minus_one:
             repl = tokenize("(") + repl + tokenize(" - 1)")
-        out = out[:i] + repl + out[close + 1 :]
-        i += len(repl)
-    return out
+        return repl
+
+    return _rewrite_calls(tokens, fn_to_field, build)
 
 
 # BigQuery ``SAFE.``-prefixed calls with an EXACT Spark NULL-on-error
@@ -5953,6 +5438,504 @@ def emits_variant_object(sql: str) -> bool:
     return False
 
 
+# ---------------------------------------------------------------------------
+# Token-level passes with no helper of their own, and the pass table
+
+
+def _dquote_to_backtick(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Double-quoted identifiers → backticks (Spark's default parser
+    reads ``"x"`` as a string literal)."""
+    return [
+        ("backtick", _to_backtick(_unquote(t, '"'))) if k == "dquoted" else (k, t)
+        for k, t in tokens
+    ]
+
+
+def _fetch_first_to_limit(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """``_rewrite_fetch_first`` in every scope, when the statement has a
+    FETCH or OFFSET word at all. Runs before every pass that reads
+    LIMIT/OFFSET (TOP, QUALIFY, ROWNUM, NULL ordering), so they see one
+    spelling."""
+    if any(k == "word" and t.upper() in ("FETCH", "OFFSET") for k, t in tokens):
+        return _for_each_scope(tokens, _rewrite_fetch_first)
+    return tokens
+
+
+def _pg_hash_to_caret(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """pg's bitwise XOR is spelled ``#``, which Spark cannot parse;
+    Spark's ``^`` IS XOR, so the swap is exact. Runs after
+    ``_rewrite_caret_power``, or the swapped ``^`` would become POWER."""
+    return [("op", "^") if (k, t) == ("op", "#") else (k, t) for k, t in tokens]
+
+
+def _double_star_to_caret(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """``**`` is exponentiation (duckdb: an alias of ``^``; teradata's
+    only power spelling), lexed as two adjacent ``*`` ops that Spark
+    cannot parse. Convert to ``^`` and run the precedence-exact
+    ``_rewrite_caret_power`` again over the result (duckdb's caret pass
+    already ran; teradata has no native ``^``)."""
+    out: list[tuple[str, str]] = []
+    i = 0
+    while i < len(tokens):
+        if tokens[i] == ("op", "*") and tokens[i + 1 : i + 2] == [("op", "*")]:
+            out.append(("op", "^"))
+            i += 2
+        else:
+            out.append(tokens[i])
+            i += 1
+    return _rewrite_caret_power(out) if out != tokens else tokens
+
+
+def _tsql_bracket_to_backtick(
+    tokens: list[tuple[str, str]],
+) -> list[tuple[str, str]]:
+    """tsql ``[name]`` identifiers → backticks."""
+    return [
+        ("backtick", _to_backtick(_unquote(t, "]"))) if k == "bracket" else (k, t)
+        for k, t in tokens
+    ]
+
+
+def _mysql_hash_comments(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """mysql ``#`` line comments lex as comments, but Spark's parser
+    does not know them: re-emit as ``--`` comments."""
+    return [
+        ("comment", "--" + t[1:]) if k == "comment" and t.startswith("#") else (k, t)
+        for k, t in tokens
+    ]
+
+
+def _mysql_pipes_to_or(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """mysql's default sql_mode (no PIPES_AS_CONCAT) reads ``||`` as
+    LOGICAL OR; Spark reads it as concat, so ``1 || 0`` silently
+    returns '10' instead of TRUE. This translates the documented
+    default (the WEEK_START precedent); PIPES_AS_CONCAT sessions should
+    spell CONCAT(). The spaces are explicit: ``a||b`` must render
+    ``a OR b``, not ``aORb``."""
+    out: list[tuple[str, str]] = []
+    for tok in tokens:
+        out += tokenize(" OR ") if tok == ("op", "||") else [tok]
+    return out
+
+
+def _sqlite_like_to_ilike(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """sqlite LIKE is CASE-INSENSITIVE for ASCII by default (PRAGMA
+    case_sensitive_like can flip it, invisible here); Spark's LIKE is
+    case-sensitive, so ``'A' LIKE 'a'`` runs on both and silently
+    disagrees. The operator form becomes ILIKE (documented residual:
+    ILIKE folds full Unicode, sqlite only ASCII). The ``like(pattern,
+    string)`` FUNCTION form, followed by ``(``, is left to its own
+    refuse/swap/rename rows."""
+    return [
+        ("word", "ILIKE")
+        if k == "word"
+        and t.upper() == "LIKE"
+        and ((n := _next_code(tokens, i)) is None or tokens[n] != ("op", "("))
+        else (k, t)
+        for i, (k, t) in enumerate(tokens)
+    ]
+
+
+# Function renames with the same contract, per dialect. Only call sites
+# rename (see _rewrite_func_names): a COLUMN named len or isnull must
+# survive.
+_TSQL_FUNC_NAMES = {
+    "GETDATE": "CURRENT_TIMESTAMP",
+    "ISNULL": "COALESCE",
+    # CHARINDEX(find, search[, start]) and LOCATE share the same
+    # argument order and 1-based/0-on-miss contract
+    "CHARINDEX": "LOCATE",
+    "IIF": "IF",
+    "REPLICATE": "REPEAT",
+}
+_TRINO_FUNC_NAMES = {
+    "APPROX_DISTINCT": "APPROX_COUNT_DISTINCT",
+    "ARBITRARY": "ANY_VALUE",
+    "STRPOS": "INSTR",
+}
+_CLICKHOUSE_FUNC_NAMES = {
+    "UNIQ": "APPROX_COUNT_DISTINCT",
+    "ANY": "ANY_VALUE",
+    "COUNTIF": "COUNT_IF",
+    "ARRAYJOIN": "EXPLODE",
+    # intDiv truncates toward zero ("rounds down by absolute value",
+    # C++ '/' semantics) = Spark DIV exactly; modulo keeps the
+    # dividend's sign = Spark MOD. Both raise on a zero divisor on both
+    # engines (Spark: ANSI mode).
+    "INTDIV": "DIV",
+    "MODULO": "MOD",
+}
+# same (list, element) / (value, ordering) contracts
+_DUCKDB_FUNC_NAMES = {
+    "LIST_CONTAINS": "ARRAY_CONTAINS",
+    "LIST_HAS": "ARRAY_CONTAINS",
+    "ARG_MAX": "MAX_BY",
+    "ARGMAX": "MAX_BY",
+    "ARG_MIN": "MIN_BY",
+    "ARGMIN": "MIN_BY",
+}
+_BIGQUERY_FUNC_NAMES = {
+    # SAFE_CAST → TRY_CAST (NULL on failure), SAFE_DIVIDE → TRY_DIVIDE
+    # (NULL on /0); IFNULL/COUNTIF parse natively, and BigQuery's
+    # `SELECT * EXCEPT (col)` is native Spark 4 syntax.
+    "SAFE_CAST": "TRY_CAST",
+    "SAFE_DIVIDE": "TRY_DIVIDE",
+    # same contracts: NULL-in → NULL-out (Spark's size() returns NULL
+    # for NULL input since 3.0 defaults)
+    "STARTS_WITH": "STARTSWITH",
+    "ENDS_WITH": "ENDSWITH",
+    "ARRAY_LENGTH": "SIZE",
+    # both are partial-match predicates; bq's re2 and Java's regex
+    # agree on the common syntax (documented residual: re2 lacks
+    # backreferences, Java lacks some re2 extensions — those patterns
+    # error, loudly, on one engine or the other)
+    "REGEXP_CONTAINS": "REGEXP_LIKE",
+}
+# BigQuery type keywords → Spark types. NUMERIC is (38,9) in BigQuery
+# but DECIMAL(10,0) in Spark, so the explicit mapping avoids a silent
+# precision change; BIGNUMERIC (76,38) exceeds Spark's max precision
+# and is left to fail loudly.
+_BIGQUERY_TYPE_WORDS = {
+    "INT64": "BIGINT",
+    "FLOAT64": "DOUBLE",
+    "BOOL": "BOOLEAN",
+    "NUMERIC": "DECIMAL(38,9)",
+}
+# Day-number functions whose numbering Spark exposes only as an EXTRACT
+# field: trino's are ISO (Monday=1..Sunday=7), and Spark's same-named
+# DAYOFWEEK function says Sunday=1, so a name-only rename would be
+# silently off.
+_TRINO_EXTRACT_FNS = {
+    "DAY_OF_WEEK": "DOW_ISO", "DOW": "DOW_ISO",
+    "DAY_OF_YEAR": "DOY", "DOY": "DOY",
+    "YEAR_OF_WEEK": "YEAROFWEEK", "YOW": "YEAROFWEEK",
+    "WEEK": "WEEK", "WEEK_OF_YEAR": "WEEK",
+}
+_CLICKHOUSE_SPLIT_WHY = (
+    "clickhouse max_substrings discards the tail; Spark's split "
+    "limit keeps the remainder — no faithful rewrite exists. "
+    "Split without the cap and slice(result, 1, n) instead."
+)
+# clickhouse higher-order array functions take the LAMBDA first
+# (arrayMap(x -> ..., arr)); Spark's equivalents take the array first.
+_CLICKHOUSE_HIGHER_ORDER = {
+    "ARRAYMAP": "TRANSFORM",
+    "ARRAYFILTER": "FILTER",
+    "ARRAYEXISTS": "EXISTS",
+    "ARRAYALL": "FORALL",
+}
+_CLICKHOUSE_HIGHER_ORDER_WHY = (
+    "the multi-array form has no Spark single-function "
+    "equivalent; use zip_with/aggregate spellings instead."
+)
+
+
+_Pass = Callable[[_Tokens], _Tokens]
+
+
+def _refuse_swap_rename(
+    dialect: str, fname: str, spark: str, why: str
+) -> tuple[tuple[set[str], _Pass], ...]:
+    """Rows for a call whose source takes its first two arguments in
+    the reverse of Spark's order: refuse any arity but 2, swap, then
+    rename. The refusal comes first, or the rename would ship the
+    reversed 3-arg form."""
+    return (
+        ({dialect}, partial(_refuse_unswapped_arity, fname=fname, ok_arity=2, why=why)),
+        ({dialect}, partial(_swap_first_two_args, fname=fname, min_args=2, max_args=2)),
+        ({dialect}, partial(_rewrite_func_names, mapping={fname: spark})),
+    )
+
+
+_SPARK_DIALECTS = frozenset({None, "spark", "spark2", "databricks", "hive"})
+
+# Every family-resolved dialect that reaches the pass table.
+_TRANSPILED = frozenset(
+    _DIALECT_FAMILY.get(d, d) for d in KNOWN_DIALECTS - _SPARK_DIALECTS - {""}
+)
+
+# The transpiler: each statement runs, in order, every row whose set
+# holds its family-resolved dialect. Order matters where passes read
+# each other's output; the reasons are on the rows and in the pass
+# docstrings, and tests/test_table_dialect.py pins each documented pair.
+_PASSES: tuple[tuple[AbstractSet[str], _Pass], ...] = (
+    (_DQUOTE_IDENT_DIALECTS, _dquote_to_backtick),
+    (_TRANSPILED, _fetch_first_to_limit),
+    # before anything else touches '/'
+    ({"duckdb"}, _rewrite_duckdb_intdiv),
+    ({"postgres", "duckdb", "redshift", "mysql"}, _rewrite_temp_table_as),
+    ({"postgres", "duckdb", "redshift"}, _rewrite_extract_epoch),
+    ({"postgres", "duckdb", "redshift"}, _rewrite_pg_dow),
+    ({"postgres", "duckdb", "redshift"}, _rewrite_pg_array_literal),
+    # after ARRAY[...] so its brackets are consumed first, and before
+    # the subscript rewrite
+    ({"duckdb"}, _rewrite_bare_array_literal),
+    # 1-based subscripts; the two differ on negative indexes. Redshift
+    # SUPER subscripts are 0-based like Spark's.
+    ({"postgres"}, partial(_rewrite_pg_subscript, negatives="null")),
+    ({"duckdb"}, partial(_rewrite_pg_subscript, negatives="from_end")),
+    # before the '#' -> '^' swap eats the #> clusters, and before
+    # caret-power
+    ({"postgres"}, partial(_rewrite_json_arrow_ops, style="key")),
+    ({"duckdb"}, partial(_rewrite_json_arrow_ops, style="both")),
+    # after the subscript rewrite, so a[1] ^ 2 captures the rewritten
+    # call as its operand
+    ({"postgres", "duckdb", "redshift"}, _rewrite_caret_power),
+    ({"postgres"}, _pg_hash_to_caret),
+    # after caret-power, so POWER(...) results are not mistaken for
+    # integer operands
+    (
+        {"postgres", "redshift", "tsql", "sqlite", "teradata"},
+        _rewrite_int_literal_division,
+    ),
+    ({"postgres", "redshift"}, _rewrite_substr_nonpositive),
+    ({"duckdb"}, partial(_rewrite_substr_nonpositive, zero_only=True)),
+    ({"duckdb"}, partial(_rewrite_similar_to, regex=True)),
+    ({"postgres", "duckdb", "redshift"}, _rewrite_left_right_negative),
+    ({"duckdb", "teradata"}, _double_star_to_caret),
+    (
+        {"postgres", "duckdb", "redshift", "sqlite", "teradata"},
+        _rewrite_single_arg_log10,
+    ),
+    ({"postgres", "redshift"}, _rewrite_pg_regex_ops),
+    ({"postgres", "redshift"}, _rewrite_similar_to),
+    # pg's TO_CHAR/TO_DATE/TO_TIMESTAMP format models are oracle's
+    # (unknown pg extensions refuse in _ora_datefmt); the one-arg
+    # TO_TIMESTAMP(epoch) is pg-only and folds first
+    ({"postgres", "redshift"}, _rewrite_pg_epoch_to_timestamp),
+    ({"postgres", "redshift"}, _rewrite_oracle_fmt),
+    ({"postgres", "duckdb"}, _rewrite_generate_series),
+    # after _rewrite_pg_regex_ops, so `~ ANY(...)` arrives as RLIKE
+    ({"postgres", "duckdb"}, _rewrite_pg_any_all),
+    ({"postgres", "duckdb"}, partial(_for_each_scope, fn=_rewrite_distinct_on)),
+    ({"postgres", "duckdb"}, _rewrite_string_agg_orderby),
+    # NULL sort position, after DISTINCT ON so its generated ROW_NUMBER
+    # ordering is covered too. Spark is FIRST on ASC, LAST on DESC.
+    # trino ("null values are sorted as if larger than any non-null
+    # value") and snowflake share pg's shape; clickhouse is NULLS LAST
+    # in both directions like duckdb. mysql/sqlite/tsql/bigquery/
+    # teradata treat NULL as smallest, Spark's own default.
+    (
+        {"postgres", "redshift", "oracle", "trino", "snowflake"},
+        partial(_rewrite_order_by_nulls, asc="LAST", desc="FIRST"),
+    ),
+    (
+        {"duckdb", "clickhouse"},
+        partial(_rewrite_order_by_nulls, asc="LAST", desc="LAST"),
+    ),
+    ({"tsql"}, _tsql_bracket_to_backtick),
+    ({"tsql"}, _rewrite_tsql_like_brackets),
+    ({"tsql"}, partial(_rewrite_choose_elt, fname="CHOOSE")),
+    ({"tsql"}, partial(_rewrite_func_names, mapping=_TSQL_FUNC_NAMES)),
+    ({"tsql"}, _rewrite_tsql_square),
+    ({"tsql"}, _rewrite_tsql_stuff),
+    ({"tsql"}, _rewrite_tsql_len),
+    ({"tsql"}, _rewrite_datepart),
+    ({"tsql"}, partial(_rewrite_convert, tsql=True)),
+    ({"tsql"}, partial(_for_each_scope, fn=_rewrite_top)),
+    ({"mysql"}, _mysql_hash_comments),
+    ({"mysql"}, _refuse_mysql_upsert),
+    ({"mysql"}, _mysql_pipes_to_or),
+    ({"mysql"}, _rewrite_mysql_limit),
+    ({"mysql"}, _rewrite_group_concat),
+    ({"mysql"}, _rewrite_mysql_datefmt),
+    ({"mysql"}, partial(_rewrite_convert, tsql=False)),
+    ({"mysql"}, _rewrite_mysql_interval_arith),
+    ({"mysql"}, _rewrite_mysql_regexp_ci),
+    ({"mysql"}, partial(_rewrite_json_arrow_ops, style="path")),
+    ({"mysql"}, _rewrite_mysql_json_extract),
+    ({"mysql"}, partial(_rewrite_choose_elt, fname="ELT")),
+    ({"mysql"}, _rewrite_mysql_field),
+    (
+        {"oracle", "snowflake"},
+        partial(_rewrite_words, mapping={"SYSDATE": "CURRENT_TIMESTAMP"}),
+    ),
+    ({"oracle"}, _refuse_oracle_outer_join_plus),
+    ({"oracle"}, _rewrite_oracle_fmt),
+    ({"oracle"}, _rewrite_from_dual),
+    ({"oracle"}, _rewrite_oracle_rownum),
+    ({"oracle"}, _rewrite_decode),
+    ({"mysql", "oracle", "clickhouse"}, _rewrite_greatest_least_nullprop),
+    ({"postgres", "duckdb", "tsql", "oracle"}, _rewrite_concat_skip_nulls),
+    # 3-arg string_to_array (a null-replacement string) is NOT a limit;
+    # it stays untouched and fails loudly as unresolved
+    (
+        {"postgres", "redshift"},
+        partial(_rewrite_literal_split, fname="STRING_TO_ARRAY", max_args=2),
+    ),
+    ({"duckdb"}, partial(_rewrite_literal_split, fname="STRING_SPLIT", max_args=2)),
+    ({"duckdb"}, partial(_rewrite_literal_split, fname="STR_SPLIT", max_args=2)),
+    # ARRAY[1, 2] before the subscript rewrite, so constructor brackets
+    # are consumed first; trino arrays are 1-based and error on any
+    # invalid index
+    ({"trino"}, _rewrite_pg_array_literal),
+    ({"trino"}, partial(_rewrite_pg_subscript, negatives="shift")),
+    ({"trino"}, partial(_rewrite_literal_split, fname="SPLIT", max_args=3)),
+    # bare [1, 2, 3] first, so the subscript rewrite only sees genuine
+    # operand-trailing brackets. clickhouse arrays are 1-based with
+    # negatives from the end; documented divergence: out of range,
+    # clickhouse returns the element type's default (0, ''), this
+    # emission NULL.
+    ({"clickhouse"}, _rewrite_bare_array_literal),
+    ({"clickhouse"}, partial(_rewrite_pg_subscript, negatives="from_end")),
+    ({"trino"}, partial(_rewrite_func_names, mapping=_TRINO_FUNC_NAMES)),
+    ({"trino"}, _rewrite_unit_first_dates),
+    ({"trino"}, partial(_rewrite_fn_to_extract, fn_to_field=_TRINO_EXTRACT_FNS)),
+    ({"trino"}, partial(_rewrite_unnest, trino=True)),
+    (
+        {"redshift"},
+        partial(_rewrite_func_names, mapping={"GETDATE": "CURRENT_TIMESTAMP"}),
+    ),
+    # Monday weeks: redshift's DATE_TRUNC('week') is Monday-anchored
+    ({"redshift"}, _rewrite_dateadd_datediff),
+    # clickhouse position(haystack, needle[, start]) is the REVERSE of
+    # Spark's position(substr, str[, start])
+    ({"clickhouse"}, partial(_swap_first_two_args, fname="POSITION")),
+    # splitByChar/splitByString(sep, s): separator first and literal.
+    # Refuse the 3-arg max_substrings form, swap, rename, then quote
+    # the separator for Spark's regex split.
+    (
+        {"clickhouse"},
+        partial(
+            _refuse_unswapped_arity,
+            fname="SPLITBYCHAR", ok_arity=2, why=_CLICKHOUSE_SPLIT_WHY,
+        ),
+    ),
+    (
+        {"clickhouse"},
+        partial(
+            _refuse_unswapped_arity,
+            fname="SPLITBYSTRING", ok_arity=2, why=_CLICKHOUSE_SPLIT_WHY,
+        ),
+    ),
+    ({"clickhouse"}, partial(_swap_first_two_args, fname="SPLITBYCHAR", max_args=2)),
+    ({"clickhouse"}, partial(_swap_first_two_args, fname="SPLITBYSTRING", max_args=2)),
+    (
+        {"clickhouse"},
+        partial(
+            _rewrite_func_names,
+            mapping={"SPLITBYCHAR": "SPLIT", "SPLITBYSTRING": "SPLIT"},
+        ),
+    ),
+    ({"clickhouse"}, partial(_rewrite_literal_split, fname="SPLIT", max_args=2)),
+    # dateAdd(unit, n, d) / dateDiff(unit|'unit', start, end) share
+    # tsql's argument order and boundary-crossing DATEDIFF; clickhouse
+    # weeks start Monday like Spark's DATE_TRUNC
+    ({"clickhouse"}, _rewrite_dateadd_datediff),
+    ({"clickhouse"}, _rewrite_ch_addsub),
+    ({"clickhouse"}, partial(_rewrite_or_zero, fname="INTDIVORZERO", op="DIV")),
+    ({"clickhouse"}, partial(_rewrite_or_zero, fname="MODULOORZERO", op="%")),
+    *(
+        row
+        for fname, spark in _CLICKHOUSE_HIGHER_ORDER.items()
+        for row in _refuse_swap_rename(
+            "clickhouse", fname, spark, _CLICKHOUSE_HIGHER_ORDER_WHY
+        )
+    ),
+    ({"clickhouse"}, partial(_rewrite_func_names, mapping=_CLICKHOUSE_FUNC_NAMES)),
+    # toDayOfWeek is ISO (Monday=1); Spark's DAYOFWEEK says Sunday=1
+    (
+        {"clickhouse"},
+        partial(
+            _rewrite_fn_to_extract,
+            fn_to_field={"TODAYOFWEEK": "DOW_ISO", "TODAYOFYEAR": "DOY"},
+        ),
+    ),
+    ({"clickhouse"}, _rewrite_uniq_exact),
+    ({"clickhouse"}, _rewrite_agg_if),
+    ({"clickhouse"}, partial(_rewrite_cast_funcs, mapping=_CLICKHOUSE_CASTS)),
+    ({"duckdb"}, partial(_rewrite_func_names, mapping=_DUCKDB_FUNC_NAMES)),
+    ({"sqlite"}, _rewrite_strftime),
+    ({"sqlite"}, partial(_rewrite_cast_funcs, mapping={"DATETIME": "TIMESTAMP"})),
+    # sqlite json_extract returns string leaves UNQUOTED (unlike
+    # mysql's), get_json_object's exact contract; -> / ->> accept both
+    # raw keys and '$' paths
+    ({"sqlite"}, partial(_rewrite_json_arrow_ops, style="both")),
+    (
+        {"sqlite"},
+        partial(_rewrite_func_names, mapping={"JSON_EXTRACT": "GET_JSON_OBJECT"}),
+    ),
+    ({"sqlite"}, _sqlite_like_to_ilike),
+    # like(PATTERN, string) is arg-reversed vs Spark's like(str, pattern)
+    *_refuse_swap_rename(
+        "sqlite", "LIKE", "ILIKE",
+        "sqlite's 3-arg like(pattern, string, escape) has no "
+        "Spark function spelling; use string ILIKE pattern "
+        "ESCAPE char instead.",
+    ),
+    # 2-arg TRIM/LTRIM/RTRIM are (string, trim_chars) here; Spark kept
+    # Hive's REVERSED comma form, so TRIM('xyx', 'x') runs on both and
+    # trims the wrong operand. 1-arg and TRIM(BOTH c FROM s) agree and
+    # pass through. oracle TRIM is FROM-form only; its LTRIM/RTRIM(s,
+    # set) are real 2-arg spellings.
+    *(
+        (
+            {
+                "postgres", "redshift", "duckdb", "sqlite", "snowflake",
+                "tsql", "bigquery", "oracle",
+            },
+            partial(_swap_first_two_args, fname=fname, min_args=2, max_args=2),
+        )
+        for fname in ("TRIM", "LTRIM", "RTRIM")
+    ),
+    ({"teradata"}, partial(_for_each_scope, fn=_rewrite_top)),
+    ({"snowflake"}, _rewrite_dateadd_datediff),  # Monday weeks
+    # T-SQL DATEDIFF(week) counts Sunday boundaries regardless of DATEFIRST
+    ({"tsql"}, partial(_rewrite_dateadd_datediff, week_start="sunday")),
+    # IFF(c,a,b) → IF; NVL/NVL2/IFNULL/COALESCE parse natively
+    (
+        {"snowflake"},
+        partial(_rewrite_func_names, mapping={"IFF": "IF", "ARRAY_CONSTRUCT": "ARRAY"}),
+    ),
+    # DAYOFWEEK is Sunday=0..6 under the default WEEK_START=0 (session
+    # parameters are invisible here), DAYOFWEEKISO is Spark's DOW_ISO.
+    # The EXTRACT/DATE_PART spellings first: _rewrite_fn_to_extract
+    # emits EXTRACT(DOW ...) terms that this pass would shift again.
+    (
+        {"snowflake"},
+        partial(
+            _rewrite_extract_dow,
+            fields=_SNOWFLAKE_DOW_FIELDS,
+            allow_word_field=True,
+        ),
+    ),
+    (
+        {"snowflake"},
+        partial(
+            _rewrite_fn_to_extract,
+            fn_to_field={"DAYOFWEEK": "DOW", "DAYOFWEEKISO": "DOW_ISO"},
+            minus_one=frozenset({"DAYOFWEEK"}),
+        ),
+    ),
+    ({"snowflake"}, _rewrite_to_number),
+    ({"snowflake"}, partial(_rewrite_literal_split, fname="SPLIT", max_args=2)),
+    ({"snowflake"}, _rewrite_object_construct),
+    ({"snowflake"}, _rewrite_snowflake_flatten),
+    ({"snowflake"}, _rewrite_snowflake_pivot_names),
+    (
+        {"bigquery"},
+        partial(_rewrite_literal_split, fname="SPLIT", default_delim=",", max_args=2),
+    ),
+    # LOG(x, base) is the REVERSE of Spark's LOG(base, x); 1-arg LOG is
+    # ln on both
+    ({"bigquery"}, partial(_swap_first_two_args, fname="LOG", min_args=2, max_args=2)),
+    ({"bigquery"}, _rewrite_bq_safe_prefix),
+    ({"bigquery"}, partial(_rewrite_func_names, mapping=_BIGQUERY_FUNC_NAMES)),
+    ({"bigquery"}, _rewrite_bq_generate_array),
+    ({"bigquery"}, _rewrite_bare_array_literal),
+    ({"bigquery"}, _rewrite_bq_datetime),
+    ({"bigquery"}, _rewrite_bq_format),
+    ({"bigquery"}, partial(_rewrite_unnest, trino=False)),
+    ({"bigquery"}, partial(_rewrite_words, mapping=_BIGQUERY_TYPE_WORDS)),
+    (
+        {"duckdb", "snowflake", "bigquery", "clickhouse", "teradata"},
+        partial(_for_each_scope, fn=_rewrite_qualify),
+    ),
+    # `expr::type` cast shorthand (postgres/duckdb) parses natively in
+    # Spark 4, so no row rewrites it.
+)
+
+
 def transpile(sql: str, dialect: str | None = None) -> str:
     """Translate ``sql`` from ``dialect`` into Spark SQL.
 
@@ -5967,19 +5950,15 @@ def transpile(sql: str, dialect: str | None = None) -> str:
             f"unknown dialect {dialect!r}; supported: "
             + ", ".join(sorted(x for x in KNOWN_DIALECTS if x))
         )
-    if d in {"spark", "spark2", "databricks", "hive", None}:
+    if d in _SPARK_DIALECTS:
         return sql
-    return _fallback_normalize(sql, d)
-
-
-def _fallback_normalize(sql: str, dialect: str | None) -> str:
-    dialect = _DIALECT_FAMILY.get(dialect, dialect)
-    tokens = tokenize_dialect(sql, dialect)
-    # The structural rewrites below (TOP/ROWNUM/QUALIFY/LIMIT) assume
-    # ONE statement: applied across a top-level ';' they relocate
-    # clauses between statements (a trailing LIMIT lands on the LAST
-    # statement, a QUALIFY wrap anchors to the FIRST SELECT). Split at
-    # depth-0 ';' and normalize each statement independently.
+    d = _DIALECT_FAMILY.get(d, d)
+    tokens = tokenize_dialect(sql, d)
+    # The structural rewrites (TOP/ROWNUM/QUALIFY/LIMIT) assume ONE
+    # statement: applied across a top-level ';' they relocate clauses
+    # between statements (a trailing LIMIT lands on the LAST statement,
+    # a QUALIFY wrap anchors to the FIRST SELECT). Split at depth-0 ';'
+    # and normalize each statement independently.
     stmts: list[list[tuple[str, str]]] = []
     depth, start = 0, 0
     for i, (k, t) in enumerate(tokens):
@@ -5990,551 +5969,12 @@ def _fallback_normalize(sql: str, dialect: str | None) -> str:
         elif (k, t) == ("op", ";") and depth == 0:
             stmts.append(tokens[start:i])
             start = i + 1
-    if stmts:  # at least one top-level ';' found
-        stmts.append(tokens[start:])
-        return ";".join(_normalize_stmt(s, dialect) for s in stmts)
-    return _normalize_stmt(tokens, dialect)
+    stmts.append(tokens[start:])
+    return ";".join(_normalize_stmt(s, d) for s in stmts)
 
 
-def _normalize_stmt(tokens: list[tuple[str, str]], dialect: str | None) -> str:
-    if dialect in _DQUOTE_IDENT_DIALECTS:
-        tokens = [
-            ("backtick", _to_backtick(_unquote(t, '"'))) if k == "dquoted" else (k, t)
-            for k, t in tokens
-        ]
-    if any(k == "word" and t.upper() in ("FETCH", "OFFSET") for k, t in tokens):
-        # before every pass that reads LIMIT/OFFSET (TOP, QUALIFY,
-        # ROWNUM, NULL ordering), so they see one spelling
-        tokens = _for_each_scope(tokens, _rewrite_fetch_first)
-    if dialect == "duckdb":
-        # '//' integer division (truncating, like Spark DIV) arrives
-        # as two adjacent '/' ops; before anything else touches '/'
-        tokens = _rewrite_duckdb_intdiv(tokens)
-    if dialect in ("postgres", "postgresql", "duckdb", "redshift", "mysql"):
-        tokens = _rewrite_temp_table_as(tokens)
-    if dialect in ("postgres", "postgresql", "duckdb", "redshift"):
-        tokens = _rewrite_extract_epoch(tokens)
-        tokens = _rewrite_pg_dow(tokens)
-        tokens = _rewrite_pg_array_literal(tokens)
-    if dialect == "duckdb":
-        # bare [1, 2, 3] literals (loud parse error untranslated);
-        # after ARRAY[...] handling so its brackets are consumed
-        # first, before the subscript rewrite below
-        tokens = _rewrite_bare_array_literal(tokens)
-    if dialect in ("postgres", "postgresql", "duckdb"):
-        # pg/duckdb subscripts are 1-based; a passthrough a[1] runs on
-        # Spark's 0-based [] and silently reads the wrong element. The
-        # two differ on NEGATIVE indexes (pg: NULL; duckdb:
-        # Python-style from-the-end), hence the per-dialect emission.
-        # Redshift is excluded: SUPER subscripts are 0-based like
-        # Spark's.
-        tokens = _rewrite_pg_subscript(
-            tokens, negatives="from_end" if dialect == "duckdb" else "null"
-        )
-    if dialect in ("postgres", "postgresql"):
-        # JSON -> / ->> / #> / #>> operators (loud parse errors
-        # untranslated). MUST run before the '#' -> '^' XOR swap
-        # below eats the #> clusters, and before caret-power.
-        tokens = _rewrite_json_arrow_ops(tokens, "key")
-    elif dialect == "duckdb":
-        tokens = _rewrite_json_arrow_ops(tokens, "both")
-    if dialect in ("postgres", "postgresql", "duckdb", "redshift"):
-        # ^ is exponentiation here, XOR on Spark — 2^3 silently reads
-        # 1 untranslated. After the subscript rewrite so a[1] ^ 2
-        # captures the rewritten call as its operand.
-        tokens = _rewrite_caret_power(tokens)
-    if dialect == "postgres":
-        # pg's bitwise XOR is spelled '#', which Spark cannot parse;
-        # Spark's '^' IS XOR, so the swap is exact. Must run AFTER
-        # _rewrite_caret_power or it would become POWER.
-        tokens = [
-            ("op", "^") if (k, t) == ("op", "#") else (k, t) for k, t in tokens
-        ]
-    if dialect in (
-        "postgres", "postgresql", "redshift", "tsql", "sqlite", "teradata",
-    ):
-        # int/int is TRUNCATING integer division here, true division
-        # on Spark — 7/2 silently reads 3.5 instead of 3. Literal and
-        # COUNT(...) operands only (statically type-known). After
-        # caret-power so POWER(...) results aren't mistaken operands.
-        tokens = _rewrite_int_literal_division(tokens)
-    if dialect in ("postgres", "postgresql", "redshift"):
-        # SUBSTRING start < 1 means VIRTUAL positions here; Spark
-        # counts negatives from the END — both run, silently different
-        tokens = _rewrite_substr_nonpositive(tokens)
-    elif dialect == "duckdb":
-        # duckdb agrees with Spark on negatives but consumes length
-        # at start 0 like pg
-        tokens = _rewrite_substr_nonpositive(tokens, zero_only=True)
-        # duckdb SIMILAR TO is an anchored full REGEX (measured: '%'
-        # is literal there, unlike pg) — pattern passes through
-        tokens = _rewrite_similar_to(tokens, regex=True)
-    if dialect in ("postgres", "postgresql", "duckdb", "redshift"):
-        # LEFT/RIGHT with a literal NEGATIVE count mean all-but-k
-        # here; Spark returns '' — both run, silently different
-        tokens = _rewrite_left_right_negative(tokens)
-    if dialect in ("duckdb", "teradata"):
-        # '**' is the exponentiation operator here (duckdb: alias of
-        # ^; teradata's only power spelling), arriving as two
-        # adjacent '*' ops — Spark can't parse it. Convert to '^' and
-        # reuse the precedence-exact caret POWER machinery (duckdb's
-        # caret pass above already ran, so run it again for the
-        # converted tokens; teradata has no native '^').
-        _starred: list[tuple[str, str]] = []
-        _k = 0
-        while _k < len(tokens):
-            if (
-                tokens[_k] == ("op", "*")
-                and _k + 1 < len(tokens)
-                and tokens[_k + 1] == ("op", "*")
-            ):
-                _starred.append(("op", "^"))
-                _k += 2
-                continue
-            _starred.append(tokens[_k])
-            _k += 1
-        if _starred != tokens:
-            tokens = _rewrite_caret_power(_starred)
-    if dialect in ("postgres", "postgresql", "duckdb", "redshift", "sqlite", "teradata"):
-        # single-arg LOG is log10 here, ln on Spark — both run,
-        # silently off by a factor of ln(10)
-        tokens = _rewrite_single_arg_log10(tokens)
-    if dialect in ("postgres", "redshift"):
-        tokens = _rewrite_pg_regex_ops(tokens)
-        tokens = _rewrite_similar_to(tokens)
-        # pg's TO_CHAR/TO_DATE/TO_TIMESTAMP format models are oracle-
-        # compatible (YYYY/MM/DD/HH24/MI/SS...); unknown pg extensions
-        # (FM, US, TZ) refuse inside _ora_datefmt. One-arg
-        # TO_TIMESTAMP(epoch) is pg-specific and must fold first.
-        tokens = _rewrite_pg_epoch_to_timestamp(tokens)
-        tokens = _rewrite_oracle_fmt(tokens)
-    if dialect in ("postgres", "duckdb"):
-        tokens = _rewrite_generate_series(tokens)
-        # after _rewrite_pg_regex_ops so `~ ANY(...)` arrives as RLIKE
-        tokens = _rewrite_pg_any_all(tokens)
-        tokens = _for_each_scope(tokens, _rewrite_distinct_on)
-        tokens = _rewrite_string_agg_orderby(tokens)
-    # NULL sort position: Spark is FIRST-on-ASC/LAST-on-DESC; these
-    # dialects differ, so every bare ORDER BY key gets its source
-    # default made explicit (after DISTINCT ON so its generated
-    # ROW_NUMBER ordering is covered too). Round-11 sweep: trino/
-    # presto ("null values are sorted as if larger than any non-null
-    # value") and snowflake (NULLs highest: last on ASC, first on
-    # DESC) share pg's shape; clickhouse defaults to NULLS LAST in
-    # BOTH directions like duckdb. mysql/sqlite/tsql/bigquery/teradata/
-    # hive treat NULL as smallest — Spark's own default — untouched.
-    if dialect in (
-        "postgres", "postgresql", "redshift", "oracle",
-        "trino", "presto", "snowflake",
-    ):
-        tokens = _rewrite_order_by_nulls(tokens, asc="LAST", desc="FIRST")
-    elif dialect in ("duckdb", "clickhouse"):
-        tokens = _rewrite_order_by_nulls(tokens, asc="LAST", desc="LAST")
-    if dialect == "tsql":
-        tokens = [
-            ("backtick", _to_backtick(_unquote(t, "]"))) if k == "bracket" else (k, t)
-            for k, t in tokens
-        ]
-        # LIKE '[0-9]%' classes: Spark LIKE reads [ ] literally —
-        # every row silently non-matching. Literal patterns → RLIKE.
-        tokens = _rewrite_tsql_like_brackets(tokens)
-        # CHOOSE returns NULL out-of-range — get()'s exact contract
-        tokens = _rewrite_choose_elt(tokens, "CHOOSE")
-        # func-name rewrites only (word followed by '('): a COLUMN named
-        # len or isnull must survive — _rewrite_words renamed those bare
-        # identifiers too, silently corrupting the projection. GETDATE()
-        # is also always a call. LEN gets its own transform because
-        # T-SQL LEN ignores trailing spaces (LEN('abc ') = 3) while
-        # Spark LENGTH counts them.
-        tokens = _rewrite_func_names(
-            tokens,
-            {
-                "GETDATE": "CURRENT_TIMESTAMP",
-                "ISNULL": "COALESCE",
-                # CHARINDEX(find, search[, start]) and LOCATE share the
-                # same argument order and 1-based/0-on-miss contract
-                "CHARINDEX": "LOCATE",
-                "IIF": "IF",
-                # same contract, Spark spelling
-                "REPLICATE": "REPEAT",
-            },
-        )
-        tokens = _rewrite_tsql_square(tokens)
-        tokens = _rewrite_tsql_stuff(tokens)
-        tokens = _rewrite_tsql_len(tokens)
-        tokens = _rewrite_datepart(tokens)
-        tokens = _rewrite_convert(tokens, tsql=True)
-        tokens = _for_each_scope(tokens, _rewrite_top)
-    if dialect == "mysql":
-        # '#' line comments lex correctly but Spark's parser does not
-        # understand them — re-emit as '--' comments
-        tokens = [
-            ("comment", "--" + t[1:]) if k == "comment" and t.startswith("#") else (k, t)
-            for k, t in tokens
-        ]
-        tokens = _refuse_mysql_upsert(tokens)
-        # mysql's default sql_mode (no PIPES_AS_CONCAT) reads || as
-        # LOGICAL OR; Spark reads it as concat — `1 || 0` silently
-        # returns '10' instead of TRUE. Translate the documented
-        # default (the WEEK_START precedent); PIPES_AS_CONCAT sessions
-        # should spell CONCAT().
-        _or_swapped: list[tuple[str, str]] = []
-        for k, t in tokens:
-            if (k, t) == ("op", "||"):
-                # explicit ws: `a||b` must render ` OR `, not `aORb`
-                _or_swapped += [("ws", " "), ("word", "OR"), ("ws", " ")]
-            else:
-                _or_swapped.append((k, t))
-        tokens = _or_swapped
-        tokens = _rewrite_mysql_limit(tokens)
-        tokens = _rewrite_group_concat(tokens)
-        tokens = _rewrite_mysql_datefmt(tokens)
-        tokens = _rewrite_convert(tokens, tsql=False)
-        # DATE_ADD/DATE_SUB/ADDDATE/SUBDATE: INTERVAL forms are
-        # unparseable by Spark's date_add (loud), and the ADDDATE
-        # days-int form maps to Spark's DATE_ADD which silently DROPS
-        # a DATETIME's time-of-day (returns DATE) — both routed
-        # through TIMESTAMPADD.
-        tokens = _rewrite_mysql_interval_arith(tokens)
-        # REGEXP/RLIKE match case-insensitively under mysql's default
-        # collation; Spark's RLIKE is case-sensitive — silent
-        tokens = _rewrite_mysql_regexp_ci(tokens)
-        # j ->> '$.path' → get_json_object (exact: both unquote);
-        # trailing -> refuses (keeps JSON quoting on string leaves).
-        # JSON_UNQUOTE(JSON_EXTRACT(j, p)) collapses to
-        # get_json_object; bare JSON_EXTRACT refuses with guidance.
-        tokens = _rewrite_json_arrow_ops(tokens, "path")
-        tokens = _rewrite_mysql_json_extract(tokens)
-        # ELT returns NULL out-of-range (Spark's raises under ANSI);
-        # FIELD is 1-based with 0-for-absent and 0-for-NULL-needle
-        tokens = _rewrite_choose_elt(tokens, "ELT")
-        tokens = _rewrite_mysql_field(tokens)
-    if dialect in ("oracle", "snowflake"):
-        tokens = _rewrite_words(tokens, {"SYSDATE": "CURRENT_TIMESTAMP"})
-    if dialect == "oracle":
-        tokens = _refuse_oracle_outer_join_plus(tokens)
-        tokens = _rewrite_oracle_fmt(tokens)
-        tokens = _rewrite_from_dual(tokens)
-        tokens = _rewrite_oracle_rownum(tokens)
-        tokens = _rewrite_decode(tokens)
-    if dialect in ("mysql", "oracle", "clickhouse"):
-        # GREATEST/LEAST return NULL on ANY NULL argument here; Spark
-        # (like pg) ignores NULL args — both run, silently different
-        tokens = _rewrite_greatest_least_nullprop(tokens)
-    if dialect in ("postgres", "postgresql", "duckdb", "tsql", "oracle"):
-        # CONCAT() ignores NULL args here; Spark's returns NULL — both
-        # run, silently different (the || operator agrees across
-        # engines and is untouched). NOT redshift: its CONCAT is
-        # 2-arg and NULL-propagating, matching Spark — passthrough.
-        tokens = _rewrite_concat_skip_nulls(tokens)
-    if dialect in ("postgres", "postgresql", "redshift"):
-        # literal-delimiter split: Spark's split() takes a REGEX, so a
-        # '.' or '|' delimiter silently explodes into empty strings.
-        # 3-arg string_to_array (null-replacement string) is NOT a
-        # limit — left untouched to fail loudly as unresolved.
-        tokens = _rewrite_literal_split(tokens, "STRING_TO_ARRAY", max_args=2)
-    if dialect == "duckdb":
-        tokens = _rewrite_literal_split(tokens, "STRING_SPLIT", max_args=2)
-        tokens = _rewrite_literal_split(tokens, "STR_SPLIT", max_args=2)
-    if dialect in ("presto", "trino"):
-        # trino spells array construction ARRAY[1, 2] like pg (loud
-        # unresolved-column error untranslated); before the subscript
-        # rewrite so constructor brackets are consumed first
-        tokens = _rewrite_pg_array_literal(tokens)
-        # trino arrays are 1-BASED with errors on any invalid index —
-        # a passthrough a[1] silently reads the wrong element on
-        # Spark's 0-based []
-        tokens = _rewrite_pg_subscript(tokens, negatives="shift")
-        # trino SPLIT takes a literal delimiter (+optional limit, same
-        # remainder semantics as Spark's); Spark's is a regex
-        tokens = _rewrite_literal_split(tokens, "SPLIT", max_args=3)
-    if dialect == "clickhouse":
-        # bare [1, 2, 3] literals first (loud parse error
-        # untranslated), so the subscript rewrite below only sees
-        # genuine operand-trailing brackets
-        tokens = _rewrite_bare_array_literal(tokens)
-        # clickhouse arrays are 1-based, negatives count from the end
-        # (like duckdb). Documented divergence: clickhouse returns the
-        # element type's DEFAULT (0, '') out of range, this emission
-        # returns NULL — the in-range off-by-one was the silent
-        # corruption worth fixing; NULL-vs-default is at least visible.
-        tokens = _rewrite_pg_subscript(tokens, negatives="from_end")
-    if dialect in ("presto", "trino"):
-        tokens = _rewrite_func_names(
-            tokens,
-            {
-                "APPROX_DISTINCT": "APPROX_COUNT_DISTINCT",
-                "ARBITRARY": "ANY_VALUE",
-                "STRPOS": "INSTR",
-            },
-        )
-        tokens = _rewrite_unit_first_dates(tokens)
-        # trino day numbering is ISO (Monday=1..Sunday=7) — Spark's
-        # same-named DAYOFWEEK function says Sunday=1, so a name-only
-        # rename would be silently off; route through extract fields.
-        tokens = _rewrite_fn_to_extract(
-            tokens,
-            {
-                "DAY_OF_WEEK": "DOW_ISO", "DOW": "DOW_ISO",
-                "DAY_OF_YEAR": "DOY", "DOY": "DOY",
-                "YEAR_OF_WEEK": "YEAROFWEEK", "YOW": "YEAROFWEEK",
-                "WEEK": "WEEK", "WEEK_OF_YEAR": "WEEK",
-            },
-        )
-        tokens = _rewrite_unnest(tokens, trino=True)
-    if dialect == "redshift":
-        tokens = _rewrite_func_names(tokens, {"GETDATE": "CURRENT_TIMESTAMP"})
-        # Monday weeks: redshift is postgres-derived and its own
-        # DATE_TRUNC('week') is Monday-anchored (unlike T-SQL, whose
-        # DATEDIFF(week) provably counts Sunday boundaries)
-        tokens = _rewrite_dateadd_datediff(tokens)
-    if dialect == "clickhouse":
-        # clickhouse position(haystack, needle[, start]) is the
-        # REVERSE of Spark's position(substr, str[, start]) — both
-        # run, silently returning the wrong offset (usually 0)
-        tokens = _swap_first_two_args(tokens, "POSITION")
-        # splitByChar/splitByString(sep, s): separator FIRST and
-        # literal — swap into Spark order, rename, then regex-quote.
-        # The 3-arg max_substrings form DISCARDS the tail (Spark's
-        # split limit keeps the remainder in the last element), so no
-        # swap can reproduce it — refuse before the rename would
-        # otherwise ship a reversed-arg regex split.
-        _3arg_why = (
-            "clickhouse max_substrings discards the tail; Spark's split "
-            "limit keeps the remainder — no faithful rewrite exists. "
-            "Split without the cap and slice(result, 1, n) instead."
-        )
-        tokens = _refuse_unswapped_arity(tokens, "SPLITBYCHAR", 2, _3arg_why)
-        tokens = _refuse_unswapped_arity(tokens, "SPLITBYSTRING", 2, _3arg_why)
-        tokens = _swap_first_two_args(tokens, "SPLITBYCHAR", max_args=2)
-        tokens = _swap_first_two_args(tokens, "SPLITBYSTRING", max_args=2)
-        tokens = _rewrite_func_names(
-            tokens, {"SPLITBYCHAR": "SPLIT", "SPLITBYSTRING": "SPLIT"}
-        )
-        tokens = _rewrite_literal_split(tokens, "SPLIT", max_args=2)
-        # date arithmetic: clickhouse dateAdd(unit, n, d) and
-        # dateDiff(unit|'unit', start, end) share tsql's arg order AND
-        # its boundary-crossing DATEDIFF semantics ("count of unit
-        # boundaries crossed"); clickhouse weeks start Monday like
-        # Spark's DATE_TRUNC — the shared machinery handles both
-        # (string units unquote in _date_part; the 4-arg timezone
-        # form refuses loudly there). addDays/subtractMonths/...
-        # map to TIMESTAMPADD.
-        tokens = _rewrite_dateadd_datediff(tokens)
-        tokens = _rewrite_ch_addsub(tokens)
-        # arithmetic function spellings: intDiv truncates toward zero
-        # ("rounds down by absolute value" per the clickhouse docs, C++
-        # '/' semantics) = Spark DIV exactly; modulo keeps the
-        # dividend's sign = Spark MOD. Both raise on a zero divisor on
-        # both engines (Spark: ANSI mode). The *OrZero forms return 0
-        # on a zero divisor — IF-guarded emission via _rewrite_or_zero
-        # (exact-word matches throughout; non-2-arg forms stay put and
-        # fail loudly as unresolved functions).
-        tokens = _rewrite_or_zero(tokens, "INTDIVORZERO", "DIV")
-        tokens = _rewrite_or_zero(tokens, "MODULOORZERO", "%")
-        # higher-order array functions put the LAMBDA first
-        # (arrayMap(x -> ..., arr)); Spark's equivalents take the
-        # array first — swap then rename. Multi-array forms
-        # (arrayMap(f, a1, a2)) have no single-swap translation and
-        # refuse loudly before the rename could corrupt them.
-        _ho_why = (
-            "the multi-array form has no Spark single-function "
-            "equivalent; use zip_with/aggregate spellings instead."
-        )
-        for _ch, _sp in (
-            ("ARRAYMAP", "TRANSFORM"),
-            ("ARRAYFILTER", "FILTER"),
-            ("ARRAYEXISTS", "EXISTS"),
-            ("ARRAYALL", "FORALL"),
-        ):
-            tokens = _refuse_unswapped_arity(tokens, _ch, 2, _ho_why)
-            tokens = _swap_first_two_args(tokens, _ch, min_args=2, max_args=2)
-            tokens = _rewrite_func_names(tokens, {_ch: _sp})
-        tokens = _rewrite_func_names(
-            tokens,
-            {
-                "UNIQ": "APPROX_COUNT_DISTINCT",
-                "ANY": "ANY_VALUE",
-                "COUNTIF": "COUNT_IF",
-                "ARRAYJOIN": "EXPLODE",
-                "INTDIV": "DIV",
-                "MODULO": "MOD",
-            },
-        )
-        # clickhouse toDayOfWeek is ISO (Monday=1); Spark's DAYOFWEEK
-        # function numbers Sunday=1 — extract field, not rename
-        tokens = _rewrite_fn_to_extract(
-            tokens,
-            {"TODAYOFWEEK": "DOW_ISO", "TODAYOFYEAR": "DOY"},
-        )
-        tokens = _rewrite_uniq_exact(tokens)
-        tokens = _rewrite_agg_if(tokens)
-        tokens = _rewrite_cast_funcs(tokens, _CLICKHOUSE_CASTS)
-    if dialect == "duckdb":
-        # same (list, element) / (value, ordering) contracts
-        tokens = _rewrite_func_names(
-            tokens,
-            {
-                "LIST_CONTAINS": "ARRAY_CONTAINS",
-                "LIST_HAS": "ARRAY_CONTAINS",
-                "ARG_MAX": "MAX_BY",
-                "ARGMAX": "MAX_BY",
-                "ARG_MIN": "MIN_BY",
-                "ARGMIN": "MIN_BY",
-            },
-        )
-    if dialect == "sqlite":
-        tokens = _rewrite_strftime(tokens)
-        tokens = _rewrite_cast_funcs(tokens, {"DATETIME": "TIMESTAMP"})
-        # sqlite json_extract returns SQL text UNQUOTED for string
-        # leaves (unlike mysql's JSON_EXTRACT) = get_json_object's
-        # exact contract; -> / ->> accept both raw keys and '$' paths
-        tokens = _rewrite_json_arrow_ops(tokens, "both")
-        tokens = _rewrite_func_names(
-            tokens, {"JSON_EXTRACT": "GET_JSON_OBJECT"}
-        )
-        # sqlite LIKE is CASE-INSENSITIVE (for ASCII, by default —
-        # PRAGMA case_sensitive_like can flip it, invisible here);
-        # Spark's LIKE is case-sensitive, so 'A' LIKE 'a' runs on both
-        # and silently disagrees. Operator form → ILIKE (documented
-        # residual: ILIKE folds full Unicode, sqlite only ASCII).
-        # sqlite's like(PATTERN, string) FUNCTION is additionally
-        # arg-REVERSED vs Spark's like(str, pattern) — swap, then
-        # rename the call form only (the 3-arg like(p, s, escape)
-        # form refuses loudly first, the splitByChar precedent).
-        tokens = [
-            ("word", "ILIKE")
-            if (
-                k == "word"
-                and t.upper() == "LIKE"
-                and (
-                    (n := _next_code(tokens, i)) is None
-                    or tokens[n] != ("op", "(")
-                )
-            )
-            else (k, t)
-            for i, (k, t) in enumerate(tokens)
-        ]
-        tokens = _refuse_unswapped_arity(
-            tokens, "LIKE", 2,
-            "sqlite's 3-arg like(pattern, string, escape) has no "
-            "Spark function spelling; use string ILIKE pattern "
-            "ESCAPE char instead.",
-        )
-        tokens = _swap_first_two_args(tokens, "LIKE", min_args=2, max_args=2)
-        tokens = _rewrite_func_names(tokens, {"LIKE": "ILIKE"})
-    if dialect in (
-        "postgres", "postgresql", "redshift", "duckdb", "sqlite",
-        "snowflake", "tsql", "bigquery", "oracle",
-    ):
-        # 2-arg TRIM/LTRIM/RTRIM here are (string, trim_chars); Spark
-        # inherited Hive's REVERSED (trim_chars, string) for the
-        # comma forms — TRIM('xyx', 'x') runs on both and silently
-        # trims the wrong operand (Spark reads it as BOTH 'xyx' FROM
-        # 'x' = ''). The 1-arg and TRIM(BOTH c FROM s) forms agree on
-        # both engines and pass through (no top-level comma). oracle
-        # TRIM is FROM-form-only so its TRIM swap never fires;
-        # LTRIM/RTRIM(s, set) are oracle's real 2-arg spellings.
-        for _f in ("TRIM", "LTRIM", "RTRIM"):
-            tokens = _swap_first_two_args(tokens, _f, min_args=2, max_args=2)
-    if dialect == "teradata":
-        tokens = _for_each_scope(tokens, _rewrite_top)
-    if dialect == "snowflake":
-        tokens = _rewrite_dateadd_datediff(tokens)  # Monday weeks
-    if dialect == "tsql":
-        # T-SQL DATEDIFF(week) counts Sunday boundaries regardless of
-        # DATEFIRST
-        tokens = _rewrite_dateadd_datediff(tokens, week_start="sunday")
-    if dialect == "snowflake":
-        # IFF(c,a,b) → IF; NVL/NVL2/IFNULL/COALESCE parse natively.
-        tokens = _rewrite_func_names(
-            tokens, {"IFF": "IF", "ARRAY_CONSTRUCT": "ARRAY"}
-        )
-        # snowflake legacy numbering (WEEK_START=0, the default):
-        # DAYOFWEEK is Sunday=0..Saturday=6 — Spark's DOW field says
-        # Sunday=1, so untranslated it RUNS and is silently off by
-        # one. DAYOFWEEKISO (Monday=1) is Spark's DOW_ISO exactly.
-        # Sessions that changed WEEK_START shift the numbering; the
-        # transpiler cannot see session parameters, so this translates
-        # the documented default.
-        # The EXTRACT/DATE_PART spellings of the same fields
-        # (EXTRACT(DAYOFWEEK FROM d), DATE_PART('dayofweek', d), and
-        # snowflake's unquoted DATE_PART(dayofweek, d)) — without this
-        # they pass through and run silently off by one. MUST run
-        # before _rewrite_fn_to_extract: that rewrite emits
-        # EXTRACT(DOW ...) terms which this pass would then re-adjust
-        # (double subtraction).
-        tokens = _rewrite_extract_dow(
-            tokens, _SNOWFLAKE_DOW_FIELDS, allow_word_field=True
-        )
-        tokens = _rewrite_fn_to_extract(
-            tokens,
-            {"DAYOFWEEK": "DOW", "DAYOFWEEKISO": "DOW_ISO"},
-            minus_one=frozenset({"DAYOFWEEK"}),
-        )
-        tokens = _rewrite_to_number(tokens)
-        # snowflake SPLIT takes a literal delimiter; Spark's is a
-        # regex — split(x, '.') silently explodes into empty strings
-        tokens = _rewrite_literal_split(tokens, "SPLIT", max_args=2)
-        tokens = _rewrite_object_construct(tokens)
-        tokens = _rewrite_snowflake_flatten(tokens)
-        tokens = _rewrite_snowflake_pivot_names(tokens)
-    if dialect == "bigquery":
-        # BigQuery SPLIT takes a literal delimiter (default ','),
-        # Spark's a regex — split(x, '.') silently explodes
-        tokens = _rewrite_literal_split(tokens, "SPLIT", default_delim=",", max_args=2)
-        # BigQuery LOG(x, base) is the REVERSE of Spark's
-        # LOG(base, x): LOG(100, 10) silently reads 0.5 instead of 2.
-        # Single-arg LOG is ln on both — left alone.
-        tokens = _swap_first_two_args(tokens, "LOG", min_args=2, max_args=2)
-        tokens = _rewrite_bq_safe_prefix(tokens)
-        # SAFE_CAST → TRY_CAST (NULL on failure), SAFE_DIVIDE →
-        # TRY_DIVIDE (NULL on /0); IFNULL/COUNTIF parse natively, and
-        # BigQuery's `SELECT * EXCEPT (col)` is native Spark 4 syntax.
-        tokens = _rewrite_func_names(
-            tokens,
-            {
-                "SAFE_CAST": "TRY_CAST",
-                "SAFE_DIVIDE": "TRY_DIVIDE",
-                # same contracts: NULL-in → NULL-out (Spark's size()
-                # returns NULL for NULL input since 3.0 defaults)
-                "STARTS_WITH": "STARTSWITH",
-                "ENDS_WITH": "ENDSWITH",
-                "ARRAY_LENGTH": "SIZE",
-                # both are partial-match predicates; bq's re2 and
-                # Java's regex agree on the common syntax (documented
-                # residual: re2 lacks backreferences, Java lacks some
-                # re2 extensions — those patterns error, loudly, on
-                # one engine or the other)
-                "REGEXP_CONTAINS": "REGEXP_LIKE",
-            },
-        )
-        # GENERATE_ARRAY(a, b) returns EMPTY when a > b (default step
-        # +1); Spark's SEQUENCE(a, b) auto-selects a DESCENDING step —
-        # silently different rows. IF-guard the 2-arg form; the 3-arg
-        # form maps directly (negative steps agree; a sign/direction
-        # mismatch is [] on bq but a loud ANSI error on Spark).
-        tokens = _rewrite_bq_generate_array(tokens)
-        # bare [1, 2, 3] literals (loud parse error untranslated)
-        tokens = _rewrite_bare_array_literal(tokens)
-        tokens = _rewrite_bq_datetime(tokens)
-        tokens = _rewrite_bq_format(tokens)
-        tokens = _rewrite_unnest(tokens, trino=False)
-        # BigQuery type keywords → Spark types. NUMERIC is parameterized
-        # (38,9) in BigQuery but DECIMAL(10,0) in Spark, so the explicit
-        # mapping avoids a silent precision change; BIGNUMERIC (76,38)
-        # exceeds Spark's max precision and is left to fail loudly.
-        tokens = _rewrite_words(
-            tokens,
-            {
-                "INT64": "BIGINT",
-                "FLOAT64": "DOUBLE",
-                "BOOL": "BOOLEAN",
-                "NUMERIC": "DECIMAL(38,9)",
-            },
-        )
-    if dialect in ("duckdb", "snowflake", "bigquery", "clickhouse", "teradata"):
-        tokens = _for_each_scope(tokens, _rewrite_qualify)
-    # `expr::type` cast shorthand (postgres/duckdb) parses natively in
-    # Spark 4 — no rewrite needed.
+def _normalize_stmt(tokens: list[tuple[str, str]], dialect: str) -> str:
+    for dialects, rewrite in _PASSES:
+        if dialect in dialects:
+            tokens = rewrite(tokens)
     return "".join(t for _, t in tokens)
