@@ -192,9 +192,10 @@ _BNLJ_INTENDED = {
     "r59_chi_square": "scalar-broadcast (contingency totals)",
     "r62_bm25_search": "scalar-broadcast (corpus stats row)",
     "r70_semdedup": "scalar-broadcast (k-means centroids)",
-    "r72_kmeans_lloyd": "scalar-broadcast (centroids per iter)",
+    "r72_kmeans_lloyd": "scalar-broadcast (the trained k-row centroid "
+    "table in the final assignment; small corpora train on the driver, "
+    "with no per-iteration centroid broadcasts)",
     "r73_ivf_trained": "scalar-broadcast (trained centroids)",
-    "r74_pagerank": "scalar-broadcast (node count)",
     "r77_zorder_locality": "scalar-broadcast (dimension bounds)",
     "r80_mixture_sample": "scalar-broadcast (mixture weights)",
     "r87_lsh_recall_audit": "audit (bounded recall pair scan)",

@@ -53,10 +53,40 @@ last_cc_rounds: int = 0
 last_cc_algorithm: str = ""
 
 
+# simpleString() names of the integral id types the graph operators
+# accept: ByteType -> 'tinyint', ShortType -> 'smallint' (never
+# 'byte'/'short'/'integer'/'long' — four of the old allowlist entries
+# were dead strings that rejected valid integral ids, round-7 review)
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
 def _persist(df: DataFrame) -> DataFrame:
     df = df.persist()
     _LIVE_CACHES.append(df)
     return df
+
+
+def _observed_checkpoint(
+    df: DataFrame, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` plus its row count, read from the SAME job.
+
+    The size gates of the driver tiers (connected_components,
+    kcore_peel_counts, graph.pagerank) need the exact row count of the
+    set they just materialized; a separate ``count()`` on the
+    checkpoint is one more scheduler round trip for a number the
+    checkpoint job already saw. An ``Observation`` carries it out of
+    that job instead. ``metrics`` are extra aggregate columns observed
+    alongside (keyed by name); the returned dict always holds
+    ``"rows"``.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    aggs += [c.alias(name) for name, c in metrics.items()]
+    cp = df.observe(obs, *aggs).localCheckpoint()
+    return cp, obs.get
 
 
 from contextlib import contextmanager
@@ -837,10 +867,11 @@ def connected_components(
       time on small graphs (round-4 measurement: r63 4.59s vs 3.05s).
       The edge count comes free when the pair generator attached its
       pre-computed volume estimate (``_xss_edge_estimate``, an upper
-      bound — see ``_capped_pair_join`` / ``_shingle_pair_stats``);
-      otherwise one count runs on a checkpointed pair set that the
-      chosen algorithm then reuses, so the upstream pipeline runs once
-      either way.
+      bound — see ``_capped_pair_join`` / ``_shingle_pair_stats``),
+      and the driver tier then collects the pairs directly; otherwise
+      the exact count is observed on the job that checkpoints the pair
+      set the chosen algorithm then reuses, so the upstream pipeline
+      runs once either way.
 
     ``max_iter`` is a pathological backstop; rounds actually executed
     are exposed via ``last_cc_rounds`` (0 for the driver tier), the
@@ -851,11 +882,6 @@ def connected_components(
     # would NULL them (non-ANSI) or die mid-job (ANSI), and NULL edges
     # drop on every u != v comparison — the whole dedup would "succeed"
     # while removing nothing. Refuse at submit time with the remedy.
-    # simpleString() names: ByteType -> 'tinyint', ShortType ->
-    # 'smallint' (never 'byte'/'short'/'integer'/'long' — four of the
-    # old allowlist entries were dead strings that rejected valid
-    # integral ids, round-7 review)
-    _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
     for col_name in (id_a, id_b):
         dt = pairs.schema[col_name].dataType.simpleString()
         if dt not in _INTEGRAL:
@@ -865,29 +891,32 @@ def connected_components(
                 "xxhash64 is NOT safe for dedup — use a row_number over "
                 "distinct ids and join the mapping back)."
             )
-    # Materialize the normalized pair set ONCE before dispatch: both
-    # algorithms fan the edge set into self-unions (bidirectional
-    # neighborhood views), which would otherwise embed the upstream
-    # pair pipeline in the plan twice and compute it twice in one job
-    # (measured: ~1s/query extra on sf0.1 LSH pipelines). The
-    # checkpoint also truncates lineage before the iterative loop.
-    raw = pairs.select(
+    norm = pairs.select(
         F.col(id_a).cast("bigint").alias("u"),
         F.col(id_b).cast("bigint").alias("v"),
-    ).localCheckpoint()
+    )
     # The generator's pre-computed pair-volume estimate is an UPPER
     # bound on distinct edges — and a loose one (it counts a pair once
     # per shared shingle/band/bucket, before any similarity filter), so
-    # it is only DECISIVE when it lands at or below a threshold; above
-    # one, the true edge count may still be tiny (a dense shingle
-    # overlap collapses to few distinct pairs), so measure — the count
-    # runs on the already-checkpointed set, one cheap partial-agg scan
-    # the chosen tier's first job would pay for anyway.
+    # it is only DECISIVE when it lands at or below a threshold. Then
+    # the driver tier reads the pairs exactly once, so they are
+    # collected straight from the pair pipeline, with no checkpoint.
     hint = getattr(pairs, "_xss_edge_estimate", None)
-    if hint is not None and hint <= driver_threshold:
-        n_edges = int(hint)  # decisive upper bound, skip the count job
-    else:
-        n_edges = raw.count()
+    decisive = hint is not None and hint <= driver_threshold
+    if decisive and algorithm in ("auto", "driver"):
+        last_cc_algorithm = "driver"
+        return _cc_driver(norm)
+    # Otherwise materialize the normalized pair set ONCE before
+    # dispatch, and take the exact edge count from that same job (a
+    # loose estimate above the threshold may still hide a tiny graph:
+    # a dense shingle overlap collapses to few distinct pairs). Both
+    # distributed algorithms fan the edge set into self-unions
+    # (bidirectional neighborhood views), which would otherwise embed
+    # the upstream pair pipeline in the plan twice and compute it twice
+    # in one job (measured: ~1s/query extra on sf0.1 LSH pipelines).
+    # The checkpoint also truncates lineage before the iterative loop.
+    raw, seen = _observed_checkpoint(norm)
+    n_edges = seen["rows"]
     if algorithm == "auto":
         if n_edges <= driver_threshold:
             algorithm = "driver"

@@ -1,12 +1,17 @@
-"""Iterative graph algorithms as pure dataflow.
+"""Iterative graph algorithms: PageRank and bounded k-core peeling.
 
 Companion to operators/dedup.connected_components (min-label
-propagation): PageRank with a FIXED iteration count, expressed entirely
-as joins + keyed aggregations so an SQL oracle can replay it
-iteration-by-iteration. No vertex-centric framework, no driver-side
-loop state — the "loop" is Python building a deeper lazy plan, and the
-per-iteration rank tables are persisted (they are one row per node) so
-consumers execute the chain once, not once per reference.
+propagation). Each operator has two tiers with identical output, split
+by a size gate read from the job that materializes the edge list
+(``dedup._observed_checkpoint``): small graphs are collected once and
+iterated in numpy on the driver, and larger ones run as pure dataflow.
+
+The distributed PageRank is a FIXED iteration count expressed entirely
+as joins + keyed aggregations, so an SQL oracle can replay it
+iteration-by-iteration. No vertex-centric framework — the "loop" is
+Python building a deeper lazy plan, and the per-iteration rank tables
+are persisted (they are one row per node) so consumers execute the
+chain once, not once per reference.
 
 Scale shape per iteration: one join of the rank table onto the edge
 list keyed by source (both sides hash-partitioned on the node id — the
@@ -14,17 +19,24 @@ Exchange is reused across iterations since the key never changes), one
 aggregation keyed by destination. Contributions are FLOOR-quantized to
 1e-18 grains and summed as exact integers (DECIMAL(38,0)), which makes
 every iteration's ranks independent of partition/merge order —
-reproducible on any cluster and bit-equal to the DuckDB replay. floor()
-rather than a double->DECIMAL cast because the engines' cast rounding
-modes differ (half-up vs half-even) while floor is mode-free.
+reproducible on any cluster, bit-equal to the DuckDB replay and to the
+driver tier's int64 sums. floor() rather than a double->DECIMAL cast
+because the engines' cast rounding modes differ (half-up vs half-even)
+while floor is mode-free.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .dedup import _persist
+from .dedup import _INTEGRAL, _observed_checkpoint, _persist
+
+# Largest edge list pagerank ranks on the driver: the bound
+# connected_components and kcore_peel_counts default to (~4 MB of
+# two-bigint rows).
+_PAGERANK_DRIVER_EDGES = 250_000
 
 
 def kcore_peel_counts(
@@ -69,14 +81,16 @@ def kcore_peel_counts(
     ]
     schema = ", ".join(f"{c} bigint" for c in cols)
     if algorithm != "distributed":
-        # Materialize the edge pipeline once before the size probe; the
-        # chosen tier then reuses the checkpointed set (same pattern as
-        # connected_components' dispatch).
-        raw = edges.select(
-            F.col(src).cast("bigint").alias("u"),
-            F.col(dst).cast("bigint").alias("v"),
-        ).localCheckpoint()
-        n_edges = raw.count()
+        # Materialize the edge pipeline once, counting it in the same
+        # job; the chosen tier then reuses the checkpointed set (same
+        # pattern as connected_components' dispatch).
+        raw, seen = _observed_checkpoint(
+            edges.select(
+                F.col(src).cast("bigint").alias("u"),
+                F.col(dst).cast("bigint").alias("v"),
+            )
+        )
+        n_edges = seen["rows"]
         if algorithm == "driver" and n_edges > driver_threshold:
             raise ValueError(
                 f"algorithm='driver' requires at most driver_threshold="
@@ -155,11 +169,7 @@ def pagerank(
     rounds), and a dangling node (no out-edges) redistributes its mass
     evenly — the standard correction, so ranks sum to 1 on any
     directed input. The node count N enters the formula as a driver
-    scalar (one count job on the persisted node table). The other
-    driver-side reads are the edge count that sizes the loop's
-    shuffles and one existence probe of the (persisted) dangling-node
-    table; the per-round dangling mass is the only one-row aggregate
-    left in the plan.
+    scalar.
 
     ``symmetric=True`` is the caller's assertion that every node
     appears as BOTH a source and a destination (true whenever the
@@ -168,36 +178,89 @@ def pagerank(
     left-join, and all dangling machinery — the exact pre-correction
     plan, whose values are bit-identical to the corrected one on such
     input (measured ~25% cheaper at sf0.1 on r74's graph).
+
+    Two tiers, bit-identical output (the ``connected_components``
+    size-gate contract). One job checkpoints the ``(src, dst)`` edge
+    list and observes its row count; both tiers read that checkpoint.
+
+    - driver: at most ``_PAGERANK_DRIVER_EDGES`` edges whose ids share
+      one integral type and are never NULL. The edges come back as one
+      Arrow collect (~4 MB at the bound) and the rounds run in numpy
+      with the distributed tier's arithmetic (``_pagerank_driver``);
+      the ranks re-enter Spark as one Arrow-backed DataFrame. A graph
+      that small is microseconds of work per round, while every
+      distributed round costs several scheduler barriers — r74's
+      1,600-node graph builds in 4 jobs here, against 20 distributed.
+    - distributed: per round, one join of the rank table onto the edge
+      list and one aggregation keyed by destination, rank tables
+      persisted. N, and whether any node dangles, are observed on the
+      job that checkpoints the node table; the gate's edge count sizes
+      the loop's shuffles. It is the uncapped scale path and the
+      reference the equivalence tests hold the driver tier to.
     """
-    # The caller's edge lineage is often expensive (a join + distinct);
-    # without this persist both `deg` and `ed` below would re-derive it.
-    edges = _persist(edges)
+    # The caller's edge lineage is often expensive (a join + distinct):
+    # materialize it once, counting it in the same job.
+    edges, seen = _observed_checkpoint(edges.select(src, dst))
+    n_edges = seen["rows"]
+    spark = edges.sparkSession
+    id_type = edges.schema[src].dataType
+    if (
+        n_edges <= _PAGERANK_DRIVER_EDGES
+        and id_type.simpleString() in _INTEGRAL
+        and edges.schema[dst].dataType == id_type
+    ):
+        import numpy as np
+        import pandas as pd
+
+        pdf = edges.toPandas()
+        if not pdf.isna().to_numpy().any():
+            ranked = _pagerank_driver(
+                pdf[src].to_numpy(np.int64),
+                pdf[dst].to_numpy(np.int64),
+                n_iter,
+                damping,
+                symmetric,
+            )
+            if ranked is not None:
+                return spark.createDataFrame(
+                    pd.DataFrame({"id": ranked[0], "pr": ranked[1]}),
+                    schema=StructType(
+                        [StructField("id", id_type), StructField("pr", DoubleType())]
+                    ),
+                )
     deg = _persist(edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg")))
     if symmetric:
-        nodes = deg.select(F.col(src).alias("id"))
+        nodes, seen = _observed_checkpoint(deg.select(F.col(src).alias("id")))
         has_dangling = False
     else:
-        nodes = _persist(
+        # The node universe with a flag for dangling nodes (no
+        # out-edges), and their number, from one checkpoint job. The
+        # dangling set is rank-independent; when it is empty the
+        # per-iteration mass agg is skipped entirely.
+        universe = (
             edges.select(F.col(src).alias("id"))
             .union(edges.select(F.col(dst).alias("id")))
             .distinct()
         )
-        # dangling nodes are rank-independent: compute the set once;
-        # when empty the per-iteration mass agg is skipped entirely
-        dang_nodes = _persist(
-            nodes.join(deg, nodes["id"] == deg[src], "left_anti")
+        out = deg.select(F.col(src).alias("__src"))
+        flagged, seen = _observed_checkpoint(
+            universe.join(out, F.col("id") == F.col("__src"), "left").select(
+                "id", F.col("__src").isNull().alias("dangling")
+            ),
+            dangling=F.count_if(F.col("dangling")),
         )
-        has_dangling = bool(dang_nodes.head(1))
+        nodes = flagged.select("id")
+        dang_nodes = flagged.filter(F.col("dangling")).select("id")
+        has_dangling = seen["dangling"] > 0
     # N as a driver scalar instead of a per-round broadcast crossJoin of
     # the 1-row count aggregate: every round's formula needs N only as a
     # plain divisor, and attaching it relationally re-ran a
     # BroadcastExchange job (plus a deeper plan to analyze) per round.
-    # One count job on the persisted deg/nodes table replaces init + per
-    # -round broadcasts; long→double is exact below 2^53 and the
-    # divisions are the same IEEE ops on the same operands, so every
-    # rank value is bit-identical (pinned by
-    # test_pagerank_symmetric_values_unchanged / ..._directed_...).
-    n_count = nodes.count()
+    # long→double is exact below 2^53 and the divisions are the same
+    # IEEE ops on the same operands as the relational form, so every
+    # rank value is bit-identical (and equal to the driver tier's:
+    # tests/test_driver_tiers.py).
+    n_count = seen["rows"]
     if n_count == 0:
         # empty graph: the old crossJoin produced an empty rank table
         return nodes.select("id", F.lit(0.0).alias("pr"))
@@ -214,18 +277,15 @@ def pagerank(
     # loop_shuffle_partitions): the per-iteration contribution join +
     # aggregate moves at most ~|E| short rows, yet inherited the
     # session's shuffle-partition count — r74's ~500k-edge graph ran
-    # each round across 67-132 near-empty tasks. The count is one
-    # partial-agg scan that materializes the edge cache the first
-    # round would build anyway. The round chain stays lazy (persist
-    # per round — n_iter is small and bounded by contract, so the plan
-    # is shallow); the final localCheckpoint below executes the whole
-    # chain while the scope is active, so every round's shuffle runs
-    # at the derived partition count, and the caller gets a
-    # plan-truncated, already-materialized rank table.
+    # each round across 67-132 near-empty tasks. The round chain stays
+    # lazy (persist per round — n_iter is small and bounded by
+    # contract, so the plan is shallow); the final localCheckpoint
+    # below executes the whole chain while the scope is active, so
+    # every round's shuffle runs at the derived partition count, and
+    # the caller gets a plan-truncated, already-materialized rank table.
     from .dedup import loop_shuffle_partitions
 
-    n_edges = edges.count()
-    with loop_shuffle_partitions(edges.sparkSession, n_edges):
+    with loop_shuffle_partitions(spark, n_edges):
         for _ in range(n_iter):
             contribs = (
                 ed.join(ranks, ed[src] == ranks["id"])
@@ -282,3 +342,74 @@ def pagerank(
         # the partition scope is active; the caller gets a truncated,
         # already-materialized rank table.
         return ranks.localCheckpoint()
+
+
+def _pagerank_driver(src, dst, n_iter: int, damping: float, symmetric: bool):
+    """``pagerank``'s rounds in numpy over a collected edge list (two
+    int64 arrays, no NULL), bit-identical to its distributed tier
+    because every step is the same IEEE operation on the same operands:
+
+    - out-degrees count duplicate edges (``count(*)`` per source);
+    - a contribution is ``pr / deg``, floored to 1e-18 grains as an
+      int64 (Spark's ``floor`` of a double is a long);
+    - per destination the grains sum as exact integers, so order does
+      not matter, and the sum rounds to double once, as Spark's
+      integral ``decimal -> double`` cast does, then divides by 1e18;
+    - the rank is ``(1-d)/N + d*s``, directed with dangling mass
+      ``(1-d)/N + d*(s + dang/N)``, where ``(1-d)/N`` is folded in
+      Python as the distributed tier's literal is.
+
+    Symmetric mode ranks only the nodes that received a contribution,
+    like the distributed tier's inner join; directed mode keeps the
+    whole ``src ∪ dst`` universe at ``s = 0`` where nothing arrived.
+    Returns ``(ids, pr)``, or None when the grains could leave int64
+    (only a damping outside [0, 1] gets there); the caller then runs
+    the distributed tier.
+    """
+    import numpy as np
+
+    def grains(c):
+        f = np.floor(c * 1e18)
+        # bounds every per-destination sum too (NaN fails the test)
+        if not np.abs(f).sum() < 2.0**62:
+            return None
+        return f.astype(np.int64)
+
+    srcs, deg = np.unique(src, return_counts=True)
+    ids = srcs if symmetric else np.unique(np.concatenate([src, dst]))
+    n_nodes = len(ids)
+    if n_nodes == 0:
+        return ids, np.zeros(0)
+    pr = np.full(n_nodes, 1.0 / n_nodes)
+    edge_deg = deg[np.searchsorted(srcs, src)]
+    dangling = None if symmetric else ~np.isin(ids, srcs)
+    if dangling is not None and not dangling.any():
+        dangling = None
+    floor = (1.0 - damping) / n_nodes
+    for _ in range(n_iter):
+        if not len(ids):
+            break  # symmetric mode on a graph that is not: nothing ranked
+        # edges whose source holds a rank this round (the rank join)
+        at = np.minimum(np.searchsorted(ids, src), len(ids) - 1)
+        live = ids[at] == src
+        g = grains(pr[at[live]] / edge_deg[live])
+        if g is None:
+            return None
+        got, slot = np.unique(dst[live], return_inverse=True)
+        sums = np.zeros(len(got), np.int64)
+        np.add.at(sums, slot, g)
+        s = sums.astype(np.float64) / 1e18
+        if symmetric:
+            ids, pr = got, floor + damping * s
+            continue
+        full = np.zeros(n_nodes)
+        full[np.searchsorted(ids, got)] = s
+        if dangling is None:
+            pr = floor + damping * full
+            continue
+        g = grains(pr[dangling])
+        if g is None:
+            return None
+        dang = float(g.sum()) / 1e18
+        pr = floor + damping * (full + dang / n_nodes)
+    return ids, pr

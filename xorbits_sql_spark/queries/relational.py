@@ -1367,12 +1367,14 @@ def _pagerank_oracle(n_iter: int = 2, damping: float = 0.85) -> str:
     doc=(
         "PageRank (operators/graph.pagerank) over the symmetric "
         "customer-supplier bipartite graph derived from lineitem x "
-        "orders: fixed 2-iteration dataflow, rank tables persisted per "
-        "iteration, node count via one-row broadcast (no driver "
-        "count()), contributions floor-quantized to 1e-18 grains and "
-        "summed as exact integers so ranks are partition-order-"
-        "independent (floor, unlike double->decimal casts, rounds "
-        "identically in every engine). The oracle "
+        "orders: fixed 2 iterations, contributions floor-quantized to "
+        "1e-18 grains and summed as exact integers so ranks are "
+        "partition-order-independent (floor, unlike double->decimal "
+        "casts, rounds identically in every engine). One job "
+        "checkpoints the edge list and counts it; a graph within the "
+        "driver-tier bound (250k edges; sf0.01 has ~1.6k nodes) is "
+        "ranked in numpy on the driver, bit-identical to the "
+        "distributed join + aggregate rounds that run above it. The oracle "
         "replays both iterations CTE-by-CTE with the same exact-decimal "
         "rule — top-20 ranked nodes bit-match. With connected "
         "components and k-means this completes the iterative-algorithm "

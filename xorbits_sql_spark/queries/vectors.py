@@ -250,8 +250,12 @@ def _duck_kmeans_sql(k: int, n_iter: int) -> str:
     doc=(
         "Spherical k-means, 2 Lloyd iterations over the embeddings table "
         "(operators/similarity.kmeans_lloyd): deterministic lowest-id "
-        "seeds, broadcast argmax assignment (no corpus shuffle), "
-        "decimal-exact per-dimension centroid sums. The DuckDB oracle "
+        "seeds, argmax assignment, decimal-exact per-dimension centroid "
+        "sums. The training set is small enough for the driver tier "
+        "(one bounded collect, rounds in numpy, bit-identical to the "
+        "broadcast-argmax rounds that larger corpora run); the final "
+        "assignment is a broadcast nested-loop join against the 8 "
+        "trained centroids. The DuckDB oracle "
         "replays both iterations CTE-by-CTE, so assignment ties, "
         "centroid arithmetic, and the final cluster memberships are all "
         "bit-checked — the 'train the IVF index' step for q74, "
