@@ -1,12 +1,13 @@
-"""Driver tiers of the iterative operators against their distributed
-tiers.
+"""Driver tiers of the iterative operators and the text pair
+generators against their distributed tiers.
 
-``graph.pagerank`` and ``similarity.kmeans_lloyd`` run small inputs on
-the driver in numpy and larger ones as distributed loops; the contract
-is bit-identical output, so doubles are compared by bit pattern. The
-distributed tier is forced by patching the module's gate constant, and
-which tier ran is read from a spy on the driver-tier function. The
-last test pins the construction-job counts the driver tiers exist for.
+``graph.pagerank``, ``similarity.kmeans_lloyd`` and the MinHash, n-gram
+and SimHash pair generators in ``dedup`` run small inputs on the
+driver and larger ones distributed; the contract is bit-identical
+output, so doubles are compared by bit pattern. The distributed tier
+is forced by patching the module's gate constants, and which tier ran
+is read from a spy on the driver-tier function. The last test pins the
+construction-job counts the driver tiers exist for.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from xorbits_sql_spark.operators import graph, similarity
+from xorbits_sql_spark.errors import PairBudgetExceededError
+from xorbits_sql_spark.operators import dedup, graph, similarity
 from xorbits_sql_spark.operators.dedup import release_caches
 
 from .conftest import SF_ORACLE
@@ -240,19 +242,300 @@ def test_kmeans_fallbacks_take_the_distributed_tier(spark, extra):
     assert small == big
 
 
+# --- text pair generators -------------------------------------------
+
+_WORDS = ("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
+
+
+@st.composite
+def _texts(draw):
+    """Document texts over a small vocabulary: exact copies, near
+    copies, docs with fewer words than a shingle, empty text, and
+    words shared widely enough to be hot shingles."""
+    n = draw(st.integers(1, 14))
+    texts: list[str] = []
+    for _ in range(n):
+        kind = draw(
+            st.sampled_from(["fresh", "fresh", "copy", "edit", "short", "empty"])
+        )
+        if kind == "copy" and texts:
+            texts.append(draw(st.sampled_from(texts)))
+        elif kind == "edit" and texts:
+            words = draw(st.sampled_from(texts)).split() or ["alpha"]
+            words[draw(st.integers(0, len(words) - 1))] = draw(st.sampled_from(_WORDS))
+            texts.append(" ".join(words))
+        elif kind == "short":
+            texts.append(draw(st.sampled_from(_WORDS)))
+        elif kind == "empty":
+            texts.append("")
+        else:
+            words = draw(st.lists(st.sampled_from(_WORDS), min_size=2, max_size=9))
+            texts.append(" ".join(words))
+    return texts
+
+
+def _doc_frame(spark, texts, id_type, ids=None, sources=None):
+    ids = ids if ids is not None else list(range(3, 3 + 2 * len(texts), 2))
+    sources = sources if sources is not None else ["s"] * len(texts)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": pd.array(ids, dtype="Int64"), "text": texts, "source": sources}
+        ),
+        f"doc_id {id_type}, text string, source string",
+    )
+
+
+def _outcome(build):
+    """(schema, sorted rows with doubles as bit patterns, the edge
+    estimate), or the refusal's class and message."""
+    try:
+        got = build()
+    except PairBudgetExceededError as e:
+        release_caches()
+        return type(e), str(e)
+    rows = [
+        tuple(_bits([v])[0] if isinstance(v, float) else v for v in r)
+        for r in got.collect()
+    ]
+    release_caches()
+    return (
+        got.schema.simpleString(),
+        sorted(rows),
+        getattr(got, "_xss_edge_estimate", None),
+    )
+
+
+def _generator_tiers(driver_fn: str, build):
+    """(driver-tier outcome, distributed outcome, driver-tier returns).
+    The gates go to -1, not 0, so that an empty signature table (every
+    doc shorter than a shingle) takes the distributed tier too."""
+    with _spy(dedup, driver_fn) as seen:
+        small = _outcome(build)
+    with mock.patch.multiple(dedup, _PAIR_DRIVER_ROWS=-1, _PAIR_DRIVER_PAIRS=-1):
+        big = _outcome(build)
+    return small, big, seen
+
+
+def _ran_on_driver(small, seen) -> bool:
+    refused = small[0] is PairBudgetExceededError
+    return refused or (len(seen) == 1 and seen[0] is not None)
+
+
+@given(
+    _texts(),
+    st.sampled_from(["int", "bigint"]),
+    st.sampled_from([(4, 1), (4, 2), (2, 2)]),
+    st.integers(1, 3),
+    st.sampled_from([None, 1, 3, 100_000]),
+)
+@settings(**_SETTINGS)
+def test_minhash_driver_tier_matches_distributed(
+    spark, texts, id_type, bands, shingle_k, max_bucket
+):
+    docs = _doc_frame(spark, texts, id_type)
+    seeds, band_size = bands
+    small, big, seen = _generator_tiers(
+        "_band_pairs_driver",
+        lambda: dedup.minhash_lsh_pairs(
+            docs, "text", "doc_id", seeds=seeds, band_size=band_size,
+            shingle_k=shingle_k, max_bucket=max_bucket,
+        ),
+    )
+    assert _ran_on_driver(small, seen)
+    assert small == big
+    assert small[0] == f"struct<id_a:{id_type},id_b:{id_type}>"
+
+
+@given(
+    _texts(),
+    st.sampled_from(["int", "bigint"]),
+    st.integers(1, 3),
+    st.sampled_from([None, 1, 2, 3, 10_000]),
+    st.sampled_from([None, 3, 100_000_000]),
+    st.lists(st.sampled_from(["a", "b", None]), min_size=14, max_size=14)
+    | st.none(),
+    st.sampled_from(["jaccard", "containment"]),
+)
+@settings(**_SETTINGS)
+def test_ngram_driver_tier_matches_distributed(
+    spark, texts, id_type, shingle_k, max_df, pair_budget, sources, score
+):
+    docs = _doc_frame(
+        spark, texts, id_type, sources=sources[: len(texts)] if sources else None
+    )
+    pairs = (
+        dedup.ngram_jaccard_pairs
+        if score == "jaccard"
+        else dedup.ngram_containment_pairs
+    )
+    small, big, seen = _generator_tiers(
+        "_shingle_stats_driver",
+        lambda: pairs(
+            docs, "text", "doc_id", shingle_k=shingle_k, threshold=0.0,
+            partition_col="source" if sources else None,
+            max_df=max_df, pair_budget=pair_budget,
+        ),
+    )
+    assert _ran_on_driver(small, seen)
+    assert small == big
+
+
+@given(
+    _texts(),
+    st.sampled_from(["int", "bigint"]),
+    st.sampled_from([0, 1, 2, 4, 16]),
+    st.sampled_from([None, 1, 3, 100_000]),
+    st.sampled_from([None, 3, 100_000_000]),
+    st.sampled_from([0, 12, 64]),
+)
+@settings(**_SETTINGS)
+def test_simhash_driver_tier_matches_distributed(
+    spark, texts, id_type, prefix_bits, max_bucket, pair_budget, max_hamming
+):
+    docs = _doc_frame(spark, texts, id_type)
+    small, big, seen = _generator_tiers(
+        "_simhash_pairs_driver",
+        lambda: dedup.simhash_pairs(
+            docs, "text", "doc_id", max_hamming=max_hamming,
+            prefix_bits=prefix_bits, max_bucket=max_bucket,
+            pair_budget=pair_budget,
+        ),
+    )
+    assert _ran_on_driver(small, seen)
+    assert small == big
+
+
+@pytest.mark.parametrize(
+    "driver_fn, build",
+    [
+        pytest.param(
+            "_band_pairs_driver",
+            lambda d: dedup.minhash_lsh_pairs(
+                d, "text", "doc_id", seeds=4, band_size=2, max_bucket=3
+            ),
+            id="minhash",
+        ),
+        pytest.param(
+            "_simhash_pairs_driver",
+            lambda d: dedup.simhash_pairs(
+                d, "text", "doc_id", prefix_bits=0, max_bucket=3
+            ),
+            id="simhash",
+        ),
+    ],
+)
+def test_bucket_of_exactly_max_bucket_is_all_pairs(spark, driver_fn, build):
+    """A bucket of ``max_bucket`` members is paired in full, and counts
+    bn·(bn-1)/2 in the estimate; one more member makes it a star."""
+    for n, pairs, est in ((3, 3, 3.0), (4, 3, 3.0)):
+        docs = _doc_frame(spark, ["alpha beta gamma delta"] * n, "bigint")
+        small, big, seen = _generator_tiers(driver_fn, lambda: build(docs))
+        assert _ran_on_driver(small, seen)
+        assert small == big
+        assert len(small[1]) == pairs
+        assert small[2] == est * (2 if driver_fn == "_band_pairs_driver" else 1)
+
+
+def test_ngram_null_partition_never_pairs(spark):
+    """Spark's inner join never matches a NULL ``partition_col``, so
+    copies whose group is NULL share no pair on either tier."""
+    texts = ["alpha beta gamma delta"] * 4
+    docs = _doc_frame(spark, texts, "bigint", sources=[None, None, "a", "a"])
+    small, big, seen = _generator_tiers(
+        "_shingle_stats_driver",
+        lambda: dedup.ngram_jaccard_pairs(
+            docs, "text", "doc_id", threshold=0.0, partition_col="source"
+        ),
+    )
+    assert _ran_on_driver(small, seen)
+    assert small == big
+    assert [r[:2] for r in small[1]] == [(7, 9)]
+
+
+_NULL_ID_TEXTS = [
+    "alpha beta gamma delta",
+    "alpha beta gamma delta",
+    "alpha beta gamma eps",
+]
+
+
+@pytest.mark.parametrize(
+    "driver_fn, build",
+    [
+        pytest.param(
+            "_band_pairs_driver",
+            lambda d: dedup.minhash_lsh_pairs(d, "text", "doc_id", seeds=4, band_size=1),
+            id="minhash",
+        ),
+        pytest.param(
+            "_shingle_stats_driver",
+            lambda d: dedup.ngram_jaccard_pairs(d, "text", "doc_id", threshold=0.0),
+            id="ngram",
+        ),
+        pytest.param(
+            "_simhash_pairs_driver",
+            lambda d: dedup.simhash_pairs(
+                d, "text", "doc_id", prefix_bits=0, max_hamming=64
+            ),
+            id="simhash",
+        ),
+    ],
+)
+def test_pair_generators_null_id_takes_the_distributed_tier(spark, driver_fn, build):
+    docs = _doc_frame(spark, _NULL_ID_TEXTS, "bigint", ids=[1, None, 2])
+    small, big, seen = _generator_tiers(driver_fn, lambda: build(docs))
+    assert seen == []
+    assert small == big and small[1]
+
+
+def test_pair_generators_driver_tiers_without_arrow(spark):
+    """The driver tiers collect with ``toPandas`` and return
+    ``createDataFrame(pandas, schema)``; both must keep the id type and
+    the results with Arrow off, as on a vanilla session."""
+    docs = _doc_frame(spark, _NULL_ID_TEXTS + ["zeta eta alpha beta"], "int")
+    builds = {
+        "_band_pairs_driver": lambda: dedup.minhash_lsh_pairs(
+            docs, "text", "doc_id", seeds=4, band_size=1
+        ),
+        "_shingle_stats_driver": lambda: dedup.ngram_jaccard_pairs(
+            docs, "text", "doc_id", threshold=0.0, partition_col="source"
+        ),
+        "_simhash_pairs_driver": lambda: dedup.simhash_pairs(
+            docs, "text", "doc_id", prefix_bits=0, max_hamming=64
+        ),
+    }
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for driver_fn, build in builds.items():
+            small, big, seen = _generator_tiers(driver_fn, build)
+            assert _ran_on_driver(small, seen)
+            assert small == big and small[1]
+            assert small[0].startswith("struct<id_a:int,id_b:int")
+    finally:
+        spark.conf.set(key, prev)
+
+
 # --- construction jobs ------------------------------------------------
 
 
 def test_driver_tiers_cut_construction_jobs(spark):
     """Warm construction of the registry entries that call the driver
-    tiers, counted per job group: r74 built in 20 jobs and r72 in 11
-    before PageRank and k-means had driver tiers, and r63 in 10 before
-    its decisive edge estimate skipped the pair checkpoint."""
+    tiers, counted per job group. Before the driver tiers: r74 built in
+    20 jobs, r72 in 11, t15 in 24, q67 in 6 and r63 in 9 (10 before
+    its decisive edge estimate skipped the pair checkpoint)."""
     from xorbits_sql_spark.queries import load_all
 
     registry = load_all()
     sc = spark.sparkContext
-    bounds = {"r74_pagerank": 4, "r72_kmeans_lloyd": 3, "r63_dedup_clusters": 9}
+    bounds = {
+        "r74_pagerank": 4,
+        "r72_kmeans_lloyd": 3,
+        "t15_blocking_quality_audit": 12,
+        "q67_doc_simhash": 4,
+        "r63_dedup_clusters": 7,
+    }
     jobs = {}
     try:
         for name in bounds:

@@ -104,6 +104,17 @@ def test_range_join(spark):
     assert {(r["v"], r["band"]) for r in out} == {(5.0, "lo"), (55.0, "hi")}
 
 
+def _distributed_tiers(monkeypatch):
+    """Pin the pair generators to their distributed tiers: the fixtures
+    here are far below the driver-tier gates, and the tests that take
+    this pin check distributed mechanics (scaled partitioning, the
+    block decomposition, star pairs, plan shapes)."""
+    from xorbits_sql_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_PAIR_DRIVER_ROWS", 0)
+    monkeypatch.setattr(D, "_PAIR_DRIVER_PAIRS", 0)
+
+
 def _docs(spark):
     rows = [
         Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
@@ -178,9 +189,12 @@ def test_pair_volume_scaled_partitions_equivalence(spark, monkeypatch):
     """Round-4 verdict #4: when the Σdf² estimate exceeds the session
     shuffle-partition budget, the pair join/agg repartition to the
     scaled count — same rows, more partitions. Forced here by shrinking
-    the rows-per-partition target below the fixture's pair volume."""
+    the rows-per-partition target below the fixture's pair volume.
+    Pinned to the distributed tiers, whose plans the scaling shapes;
+    the driver tiers at the default gates give the same rows."""
     from xorbits_sql_spark.operators import dedup as D
 
+    _distributed_tiers(monkeypatch)
     plain = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
@@ -207,6 +221,21 @@ def test_pair_volume_scaled_partitions_equivalence(spark, monkeypatch):
         ).collect()
     }
     assert lsh_plain == lsh_base
+    monkeypatch.undo()
+    driver = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(
+            _docs(spark), "text", "doc_id", threshold=0.0
+        ).collect()
+    }
+    assert driver == plain
+    lsh_driver = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_pairs(
+            _docs(spark), "text", "doc_id", seeds=8, band_size=1, max_bucket=2
+        ).collect()
+    }
+    assert lsh_driver == lsh_plain
 
 
 def test_simhash_pairs(spark):
@@ -353,10 +382,11 @@ def test_shingles_k1_returns_words(spark):
     assert {(r["doc"], r["shingle"]) for r in got} == {(1, "a"), (1, "b")}
 
 
-def test_lsh_bucket_cap_star_pairs(spark):
+def test_lsh_bucket_cap_star_pairs(spark, monkeypatch):
     """A pathological duplicate-heavy corpus (every doc identical, one
     giant LSH bucket) must produce a BOUNDED pair count: n-1 star pairs
-    to the bucket representative, not n*(n-1)/2."""
+    to the bucket representative, not n*(n-1)/2. Checked on the
+    distributed tier, then on the driver tier at the default gates."""
     from xorbits_sql_spark.operators.dedup import minhash_lsh_pairs
 
     n = 40
@@ -364,19 +394,22 @@ def test_lsh_bucket_cap_star_pairs(spark):
         [(i, "the same exact boilerplate text everywhere") for i in range(n)],
         "doc_id int, text string",
     )
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", seeds=4, band_size=2, max_bucket=10
-    ).collect()
-    assert len(pairs) == n - 1
-    assert all(r["id_a"] == 0 for r in pairs)
-    # uncapped: the full clique
-    full = minhash_lsh_pairs(
-        docs, "text", "doc_id", seeds=4, band_size=2, max_bucket=None
-    ).count()
-    assert full == n * (n - 1) // 2
+    _distributed_tiers(monkeypatch)
+    for _ in ("distributed", "driver"):
+        pairs = minhash_lsh_pairs(
+            docs, "text", "doc_id", seeds=4, band_size=2, max_bucket=10
+        ).collect()
+        assert len(pairs) == n - 1
+        assert all(r["id_a"] == 0 for r in pairs)
+        # uncapped: the full clique
+        full = minhash_lsh_pairs(
+            docs, "text", "doc_id", seeds=4, band_size=2, max_bucket=None
+        ).count()
+        assert full == n * (n - 1) // 2
+        monkeypatch.undo()
 
 
-def test_simhash_bucket_cap_star_pairs(spark):
+def test_simhash_bucket_cap_star_pairs(spark, monkeypatch):
     from xorbits_sql_spark.operators.dedup import simhash_pairs
 
     n = 30
@@ -384,16 +417,20 @@ def test_simhash_bucket_cap_star_pairs(spark):
         [(i, "identical words for every single document") for i in range(n)],
         "doc_id int, text string",
     )
-    pairs = simhash_pairs(docs, "text", "doc_id", max_bucket=5).collect()
-    assert len(pairs) == n - 1
-    assert all(r["id_a"] == 0 and r["hamming"] == 0 for r in pairs)
-    # small buckets are unaffected by the cap
     varied = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "zz yy xx qq")],
         "doc_id int, text string",
     )
-    got = simhash_pairs(varied, "text", "doc_id", max_bucket=100).collect()
-    assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
+    # the distributed tier, then the driver tier at the default gates
+    _distributed_tiers(monkeypatch)
+    for _ in ("distributed", "driver"):
+        pairs = simhash_pairs(docs, "text", "doc_id", max_bucket=5).collect()
+        assert len(pairs) == n - 1
+        assert all(r["id_a"] == 0 and r["hamming"] == 0 for r in pairs)
+        # small buckets are unaffected by the cap
+        got = simhash_pairs(varied, "text", "doc_id", max_bucket=100).collect()
+        assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
+        monkeypatch.undo()
 
 
 def test_release_dedup_caches(spark):
@@ -1366,11 +1403,14 @@ def test_simhash_blocked_join_equals_plain_join(spark, monkeypatch):
     docs crosses the max_small >= 256 gate, so the blocked path is
     exercised; passing max_bucket=None/pair_budget=None disables the
     sizes pre-flight and with it the blocking, giving the plain-join
-    reference on identical input."""
+    reference on identical input. Pinned to the distributed tier, whose
+    join the decomposition is; the driver tier at the default gates
+    gives the same pairs."""
     from xorbits_sql_spark.operators.dedup import release_caches
 
     import xorbits_sql_spark.operators.dedup as dedup_mod
 
+    _distributed_tiers(monkeypatch)
     docs = spark.createDataFrame(
         [(i, f"w{i % 7} alpha w{i % 11} beta w{i % 13} gamma {i % 3}") for i in range(300)],
         "doc_id long, text string",
@@ -1445,3 +1485,22 @@ def test_simhash_blocked_join_equals_plain_join(spark, monkeypatch):
     monkeypatch.setattr(dedup_mod, "_PAIR_ROWS_PER_PARTITION", orig)
     plain_mixed = mixed({"max_bucket": cap})
     assert blocked_mixed == plain_mixed and len(blocked_mixed) > 0
+
+    monkeypatch.undo()
+    driver = {
+        tuple(r)
+        for r in simhash_pairs(
+            docs, "text", "doc_id", max_hamming=30, prefix_bits=0
+        ).collect()
+    }
+    release_caches()
+    assert driver == plain
+    driver_star = {
+        tuple(r)
+        for r in simhash_pairs(
+            docs, "text", "doc_id", max_hamming=64, prefix_bits=0, max_bucket=10
+        ).select("id_a", "id_b").collect()
+    }
+    release_caches()
+    assert driver_star == star
+    assert mixed({"max_bucket": cap}) == plain_mixed

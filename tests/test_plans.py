@@ -546,13 +546,20 @@ def test_s94_dsir_weight_table_broadcasts(spark):
     assert uses_broadcast_join(df)
 
 
-def test_t15_blocking_audit_no_allpairs(spark):
+def test_t15_blocking_audit_no_allpairs(spark, monkeypatch):
     # both the candidate and truth legs must stay bounded joins —
     # a cartesian anywhere here means an all-pairs scan snuck in.
     # At test scale the t15->u14 density advisory must NOT fire (the
     # pair estimate is tiny); building the plan under error-on-warning
-    # proves it stays silent.
+    # proves it stays silent. Pinned to the generators' distributed
+    # tiers: at this scale the driver tiers would hand back local pair
+    # tables, and no pair join would be left in the plan to check.
     import warnings
+
+    from xorbits_sql_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_PAIR_DRIVER_ROWS", 0)
+    monkeypatch.setattr(dedup, "_PAIR_DRIVER_PAIRS", 0)
 
     with warnings.catch_warnings():
         warnings.simplefilter("error", ResourceWarning)

@@ -17,6 +17,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+# The checkout under test: the subprocess imports the library and
+# tests.oracle from here, wherever the suite runs.
+_ROOT = Path(__file__).resolve().parents[1]
 
 # One per query family; q50/q54/q56 exercise the nanos timestamp read,
 # q01 decimal aggregation, q43 date extraction, q60/q76 text/pipeline,
@@ -47,7 +52,7 @@ _REPRESENTATIVE = (
 
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %(root)r)
 from pyspark.sql import SparkSession
 
 # Vanilla: no tuned conf whatsoever (mirrors the driver harness).
@@ -83,11 +88,15 @@ print("VANILLA_OK" if not failures else "VANILLA_FAILED")
 
 def test_queries_green_on_vanilla_session():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT % {"names": _REPRESENTATIVE}],
+        [
+            sys.executable,
+            "-c",
+            _SCRIPT % {"names": _REPRESENTATIVE, "root": str(_ROOT)},
+        ],
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=_ROOT,
     )
     assert "VANILLA_OK" in proc.stdout, (
         f"stdout:\n{proc.stdout[-2000:]}\nstderr:\n{proc.stderr[-4000:]}"

@@ -38,8 +38,8 @@ class PairBudgetExceededError(XorbitsSQLSparkError):
     """A pair-generating operator's pre-flight volume estimate exceeded
     its budget.
 
-    Raised BEFORE the pair join runs (the estimate is one cheap
-    aggregation over an index the operator materializes anyway), so a
+    Raised BEFORE the pair join runs (the estimate is observed on, or
+    aggregated over, an index the operator materializes anyway), so a
     cluster-scale submission fails in seconds instead of spilling
     terabytes — the 100x rehearsal measured ~850 GB of spill for exact
     n-gram Jaccard on a dense-clique corpus (BASELINE.md). The message

@@ -66,6 +66,15 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _observed(df: DataFrame, metrics: dict[str, Column]):
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    aggs += [c.alias(name) for name, c in metrics.items()]
+    return df.observe(obs, *aggs), obs
+
+
 def _observed_checkpoint(
     df: DataFrame, **metrics: Column
 ) -> tuple[DataFrame, dict]:
@@ -80,13 +89,89 @@ def _observed_checkpoint(
     alongside (keyed by name); the returned dict always holds
     ``"rows"``.
     """
-    from pyspark.sql import Observation
+    observed, obs = _observed(df, metrics)
+    return observed.localCheckpoint(), obs.get
 
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    aggs += [c.alias(name) for name, c in metrics.items()]
-    cp = df.observe(obs, *aggs).localCheckpoint()
-    return cp, obs.get
+
+def _observed_persist(
+    df: DataFrame, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``_persist(df)``, materialized now, plus its row count and
+    ``metrics`` (as in :func:`_observed_checkpoint`), read from the job
+    that fills the cache.
+
+    The pair generators gate their driver tiers on the per-document
+    table they build before the pair join (``minhash_lsh_pairs``,
+    ``_shingle_pair_stats``, ``simhash_pairs``). That table stays a
+    cached one rather than a checkpoint: above the gates it is the
+    inverted index the distributed join reads, which keeps its lineage
+    for recovery and stays covered by :func:`release_caches`. One
+    noop-sink write fills the cache; the ``Observation`` fires through
+    the cached plan.
+    """
+    observed, obs = _observed(df, metrics)
+    cached = _persist(observed)
+    _fill(cached)
+    return cached, obs.get
+
+
+def _fill(df: DataFrame) -> None:
+    """Fill a persisted DataFrame's cache with one noop-sink write: the
+    cache job plus one scan of it, where ``count()`` adds an
+    aggregation exchange and its job."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+# Driver tiers of the pair generators (minhash_lsh_pairs,
+# ngram_jaccard_pairs / ngram_containment_pairs, simhash_pairs): a
+# per-document table of at most _PAIR_DRIVER_ROWS collected rows whose
+# pair volume is at most _PAIR_DRIVER_PAIRS is paired on the driver,
+# with the distributed tier's result. The bounds of
+# connected_components' driver_threshold and graph's
+# _PAGERANK_DRIVER_EDGES.
+_PAIR_DRIVER_ROWS = 250_000
+_PAIR_DRIVER_PAIRS = 250_000
+
+
+def _driver_sized(table: DataFrame, seen: dict, rows: int) -> bool:
+    """The driver-tier gate shared by the pair generators: ``rows``
+    collected rows within the bound, and an integral ``doc`` id that
+    ``seen["nulls"]`` (observed on ``table``) shows is never NULL."""
+    return (
+        rows <= _PAIR_DRIVER_ROWS
+        and seen["nulls"] == 0
+        and table.schema["doc"].dataType.simpleString() in _INTEGRAL
+    )
+
+
+def _null_ids() -> Column:
+    return F.count_if(F.col("doc").isNull())
+
+
+def _pairs_frame(spark, id_type, ids: dict, counts: dict) -> DataFrame:
+    """A driver tier's pairs as one Spark DataFrame: ``ids`` and
+    ``counts`` map output names to int64 arrays; the ids keep the
+    caller's id type, the counts are bigint."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    columns = {**ids, **counts}
+    schema = StructType(
+        [StructField(n, id_type if n in ids else LongType()) for n in columns]
+    )
+    pdf = pd.DataFrame({n: np.asarray(v, dtype=np.int64) for n, v in columns.items()})
+    return spark.createDataFrame(pdf, schema=schema)
+
+
+def _bucket_pair_volume(bn, cap: int):
+    """Σ over buckets of bn·(bn-1)/2, or bn-1 for a bucket over ``cap``
+    (its star pairs), as the distributed pre-flights' double sum; exact
+    while below 2^53."""
+    import numpy as np
+
+    bn = np.asarray(bn, dtype=np.int64)
+    return float(np.where(bn <= cap, bn * (bn - 1) / 2.0, bn - 1.0).sum())
 
 
 from contextlib import contextmanager
@@ -141,15 +226,16 @@ def build_concurrently(*builders):
     """Build independent DataFrame pipelines in overlapping driver
     threads and materialize each result's cache (guide §2.6).
 
-    The pair generators run submit-time pre-flight jobs (bucket-size
-    aggregation + budget ``collect()``) while the pipeline is being
-    *constructed*, so two independent detectors built back to back
+    The pair generators run submit-time jobs (the signature or
+    inverted-index build, the budget estimate, the driver tier's
+    collect) while the pipeline is being *constructed*, so two
+    independent detectors built back to back
     serialize completely: detector B's signature build waits for every
     job of detector A even though the cluster is idle in A's stage
     tails. Spark's scheduler happily runs jobs from several driver
     threads at once (FIFO back-fill), so constructing each pipeline in
-    its own thread — and forcing its persisted result with a
-    ``count()`` before returning — lets B's scan/signature stages fill
+    its own thread — and filling its persisted result's cache
+    (:func:`_fill`) before returning — lets B's scan/signature stages fill
     the cores A's barriers leave idle. Same jobs, same results (each
     pipeline is deterministic and caching order is content-neutral);
     only the idle gaps between them are removed.
@@ -164,7 +250,7 @@ def build_concurrently(*builders):
     """
     def run(b):
         df = b()
-        df.count()  # materialize the cache inside this thread's jobs
+        _fill(df)  # materialize the cache inside this thread's jobs
         return df
 
     return _in_threads([lambda b=b: run(b) for b in builders])
@@ -184,7 +270,7 @@ def construct_concurrently(*builders):
 def materialize_concurrently(*dfs: DataFrame) -> None:
     """Force each (persisted) DataFrame's cache in overlapping driver
     threads — the materialization half of :func:`build_concurrently`."""
-    _in_threads([lambda d=d: d.count() for d in dfs])
+    _in_threads([lambda d=d: _fill(d) for d in dfs])
 
 
 def _in_threads(fns):
@@ -372,10 +458,26 @@ def minhash_lsh_pairs(
     bucket and, for downstream connected-components clustering, links
     the same duplicate cluster a full clique would. The default never
     triggers at test scale; at 100 TB it bounds worst-case pair counts.
+
+    Two tiers, identical output. One job fills the signature cache and
+    observes its row count and NULL ids. At most
+    ``_PAIR_DRIVER_ROWS`` (doc, band_key) rows under an integral,
+    never-NULL id are collected once — Spark builds the band keys —
+    and when their pair volume (the estimate below) is at most
+    ``_PAIR_DRIVER_PAIRS``, the buckets are paired on the driver
+    (``_band_pairs_driver``). Anything else runs the distributed
+    ``_capped_pair_join`` over the same cache: the scale path, and the
+    reference the equivalence tests hold the driver tier to.
     """
-    banded = minhash_band_index(
-        df, text_col, id_col, seeds=seeds, band_size=band_size, shingle_k=shingle_k
+    sigs, seen = _observed_persist(
+        _minhash_signatures(df, text_col, id_col, seeds, band_size, shingle_k),
+        nulls=_null_ids(),
     )
+    banded = _band_rows(sigs, seeds, band_size)
+    if _driver_sized(sigs, seen, seen["rows"] * (seeds // band_size)):
+        pairs = _band_pairs_driver(banded, max_bucket)
+        if pairs is not None:
+            return pairs
     return _capped_pair_join(banded, "band_key", max_bucket)
 
 
@@ -395,6 +497,25 @@ def minhash_band_index(
     index engine-agnostic: a DuckDB/Trino job reproduces identical band
     keys from the same text.
     """
+    # Downstream self-joins would otherwise plan the whole shingle +
+    # min-agg pipeline once per side; the signature table is one short
+    # row per doc, so cache it and compute the signatures exactly once.
+    # Measured at sf0.1: 1.8s -> 0.5s.
+    sigs = _persist(
+        _minhash_signatures(df, text_col, id_col, seeds, band_size, shingle_k)
+    )
+    return _band_rows(sigs, seeds, band_size)
+
+
+def _minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    seeds: int,
+    band_size: int,
+    shingle_k: int,
+) -> DataFrame:
+    """(doc, h0 … h{seeds-1}): one row per document with a shingle."""
     # Relational plan: shingle rows once (codegen'd — see
     # shingles_relational), then the per-seed minima are ordinary
     # aggregates reusing the same doc partitioning. A single giant nested
@@ -408,18 +529,15 @@ def minhash_band_index(
             "(seeds, band_size) curve the caller tuned against"
         )
     shingled = shingles_relational(df, text_col, id_col, k=shingle_k)
-    # Downstream self-joins would otherwise plan the whole shingle +
-    # min-agg pipeline once per side; the signature table is one short
-    # row per doc, so cache it and compute the signatures exactly once.
-    # Measured at sf0.1: 1.8s -> 0.5s.
-    sigs = _persist(
-        shingled.groupBy("doc").agg(
-            *[
-                F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"h{i}")
-                for i in range(seeds)
-            ]
-        )
+    return shingled.groupBy("doc").agg(
+        *[
+            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"h{i}")
+            for i in range(seeds)
+        ]
     )
+
+
+def _band_rows(sigs: DataFrame, seeds: int, band_size: int) -> DataFrame:
     n_bands = seeds // band_size
     return sigs.select(
         "doc",
@@ -436,6 +554,46 @@ def minhash_band_index(
             )
         ).alias("band_key"),
     )
+
+
+def _band_pairs_driver(
+    banded: DataFrame, max_bucket: int | None
+) -> DataFrame | None:
+    """``_capped_pair_join`` on the driver over the collected
+    (doc, band_key) rows: bucket sizes and representatives, the same
+    pair-volume estimate, all pairs within buckets of at most
+    ``max_bucket`` members, star pairs to the minimum doc in larger
+    ones, then the distinct. Returns None, for the distributed tier,
+    when the estimate is over ``_PAIR_DRIVER_PAIRS``."""
+    import numpy as np
+
+    id_type = banded.schema["doc"].dataType
+    pdf = banded.select(F.col("doc").cast("bigint"), "band_key").toPandas()
+    cap = max_bucket if max_bucket is not None else 1 << 62
+    sizes = pdf.groupby("band_key")["doc"].agg(["size", "min"])
+    est = _bucket_pair_volume(sizes["size"], cap)
+    if est > _PAIR_DRIVER_PAIRS:
+        return None
+    rows = pdf.join(sizes, on="band_key")
+    small = rows.loc[rows["size"] <= cap, ["doc", "band_key"]]
+    both = small.merge(small, on="band_key", suffixes=("", "_b"))
+    both = both[both["doc"] < both["doc_b"]]
+    star = rows[(rows["size"] > cap) & (rows["doc"] != rows["min"])]
+    pairs = np.unique(
+        np.concatenate(
+            [
+                np.stack([both["doc"], both["doc_b"]], axis=1),
+                np.stack([star["min"], star["doc"]], axis=1),
+            ]
+        ).astype(np.int64),
+        axis=0,
+    )
+    out = _pairs_frame(
+        banded.sparkSession, id_type, {"id_a": pairs[:, 0], "id_b": pairs[:, 1]}, {}
+    )
+    if max_bucket is not None:
+        out._xss_edge_estimate = est
+    return out
 
 
 def incremental_dedup_decisions(
@@ -620,13 +778,19 @@ def ngram_jaccard_pairs(
     candidate generator when duplicate families may be large.
 
     ``pair_budget`` enforces that contract at submit time: the exact
-    pair count Σ df·(df-1)/2 is pre-computed from the shingle-DF
-    histogram (one aggregation over the already-persisted inverted
-    index — seconds, not the join) and
+    pair count Σ df·(df-1)/2 is known before any pair is built and
     :class:`~..errors.PairBudgetExceededError` is raised above the
-    budget, BEFORE any pair is materialized. Below the budget the same
-    estimate sizes the join/agg shuffle partitioning (~4M pair rows
-    per task) instead of the session default. ``None`` disables both.
+    budget, on either tier below. With ``max_df`` set it is observed
+    on the job that fills the inverted-index cache, as Σ over rows of
+    (df-1)/2 from the DF window the guard computes anyway; with
+    ``max_df=None`` it takes one aggregation over the cached index.
+    Below the budget the same estimate sizes the join/agg shuffle
+    partitioning (~4M pair rows per task) instead of the session
+    default. ``None`` disables both.
+
+    Two tiers, identical output (see :func:`_shingle_pair_stats`): a
+    small inverted index is joined and counted on the driver; the
+    Jaccard division runs in Spark on either tier's counts.
     """
     shared = _shingle_pair_stats(
         df, text_col, id_col, shingle_k, partition_col, max_df, pair_budget
@@ -646,6 +810,13 @@ def ngram_jaccard_pairs(
     return out
 
 
+# partition_col types that the n-gram driver tier keys as strings: the
+# cast is injective and Spark's join equality on them is value
+# equality. Floating point (whose joins match NaN and -0.0 = 0.0),
+# nested and collated types take the distributed tier.
+_DRIVER_PART_TYPES = ("string", "boolean", "date", *_INTEGRAL)
+
+
 def _shingle_pair_stats(
     df: DataFrame,
     text_col: str,
@@ -658,8 +829,18 @@ def _shingle_pair_stats(
     """Inverted-index pair statistics: (doc, doc_b, shared, size_a,
     size_b) for every doc < doc_b pair sharing >= 1 (DF-capped) shingle.
     Shared core of Jaccard and containment scoring. ``pair_budget``:
-    see :func:`ngram_jaccard_pairs` — pre-flight Σ df·(df-1)/2 refusal
-    plus pair-volume-scaled shuffle partitioning."""
+    see :func:`ngram_jaccard_pairs` — Σ df·(df-1)/2 refusal plus
+    pair-volume-scaled shuffle partitioning.
+
+    One job fills the inverted-index cache and observes its row count,
+    its NULL ids and, with ``max_df`` set, the pair volume. At most
+    ``_PAIR_DRIVER_ROWS`` rows under an integral, never-NULL id whose
+    pair volume is at most ``_PAIR_DRIVER_PAIRS`` (and a
+    ``partition_col`` of a ``_DRIVER_PART_TYPES`` type) are collected
+    once and joined and counted on the driver
+    (``_shingle_stats_driver``). Anything else runs the distributed
+    join over the same cache: the scale path, and the reference the
+    equivalence tests hold the driver tier to."""
     parts = [partition_col] if partition_col else []
     shingled = shingles_relational(
         df, text_col, id_col, k=shingle_k, distinct=True, carry_cols=parts
@@ -671,6 +852,7 @@ def _shingle_pair_stats(
     # xxhash64 collision merging two distinct shingles has probability
     # ~n²/2⁶⁴ — negligible at any corpus size this engine targets).
     shingled = shingled.withColumn("shingle", F.xxhash64("shingle"))
+    metrics = {"nulls": _null_ids()}
     if max_df is not None:
         # Window over the join key (shingle [+ group]): the DF count
         # shuffles on the same key as the inverted-index join and is the
@@ -681,13 +863,13 @@ def _shingle_pair_stats(
         # table, and the cache serialization costs more than the saved
         # shuffle+sort. Reverted; the window form stays the measured
         # winner.)
-        shingled = (
-            shingled.withColumn(
-                "__df", F.count(F.lit(1)).over(W.partitionBy("shingle", *parts))
-            )
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
+        shingled = shingled.withColumn(
+            "__df", F.count(F.lit(1)).over(W.partitionBy("shingle", *parts))
+        ).filter(F.col("__df") <= max_df)
+        # Exact join-output volume, Σ df·(df-1)/2 over (shingle
+        # [+ group]), as Σ over the rows of (df-1)/2: each group's df
+        # rows carry its df. Exactly the same double sum below 2^52.
+        metrics["pairs"] = F.sum((F.col("__df") - F.lit(1)) / F.lit(2.0))
     # Per-doc set size rides along as a window count over the shingle
     # rows instead of a separate groupBy branch — the inverted-index
     # join then carries both sizes, so the shingle pipeline is planned
@@ -696,17 +878,20 @@ def _shingle_pair_stats(
     # Persist the sized shingle rows: the inverted-index self-join plans
     # this pipeline once per side otherwise (sf0.1: 1.6s -> 0.6s). At
     # scale this is the inverted index you'd materialize anyway.
-    sized = _persist(
-        shingled.withColumn("set_size", F.count(F.lit(1)).over(W.partitionBy("doc")))
+    cached, seen = _observed_persist(
+        shingled.withColumn("set_size", F.count(F.lit(1)).over(W.partitionBy("doc"))),
+        **metrics,
     )
+    sized = cached.drop("__df")
     on = ["shingle"] + [p for p in parts]
-    n_part = None
-    if pair_budget is not None:
-        # Exact join-output volume from the DF histogram of the (cached)
-        # inverted index: Σ df·(df-1)/2 over (shingle [+ group]). One
-        # aggregation over a table the query materializes anyway — the
-        # pre-flight that stops an over-budget 100 TB submission in
-        # seconds instead of after terabytes of spill.
+    est = None
+    if max_df is not None:
+        est = float(seen["pairs"] or 0.0)
+    elif pair_budget is not None:
+        # No DF window to observe: one aggregation over the (cached)
+        # inverted index — the pre-flight that stops an over-budget
+        # 100 TB submission in seconds instead of after terabytes of
+        # spill.
         est = float(
             sized.groupBy(*on)
             .agg(F.count(F.lit(1)).alias("__dfreq"))
@@ -718,17 +903,32 @@ def _shingle_pair_stats(
             .collect()[0]["__pairs"]
             or 0.0
         )
-        if est > pair_budget:
-            sized.unpersist()
-            raise PairBudgetExceededError(
-                f"exact shingle-pair volume ≈ {est:.3g} exceeds "
-                f"pair_budget={pair_budget:,}. Exact pairwise Jaccard is "
-                "pair-volume-bound (Σ df·(df-1)/2 over shingles — see the "
-                "operator's scale contract); for dense duplicate families "
-                "use minhash_lsh_pairs as the candidate generator, shard "
-                "with partition_col, tighten max_df, or pass "
-                "pair_budget=None to run anyway."
-            )
+    if pair_budget is not None and est > pair_budget:
+        cached.unpersist()
+        raise PairBudgetExceededError(
+            f"exact shingle-pair volume ≈ {est:.3g} exceeds "
+            f"pair_budget={pair_budget:,}. Exact pairwise Jaccard is "
+            "pair-volume-bound (Σ df·(df-1)/2 over shingles — see the "
+            "operator's scale contract); for dense duplicate families "
+            "use minhash_lsh_pairs as the candidate generator, shard "
+            "with partition_col, tighten max_df, or pass "
+            "pair_budget=None to run anyway."
+        )
+    if (
+        _driver_sized(sized, seen, seen["rows"])
+        and (est is None or est <= _PAIR_DRIVER_PAIRS)
+        and all(
+            sized.schema[p].dataType.simpleString() in _DRIVER_PART_TYPES
+            for p in parts
+        )
+    ):
+        stats = _shingle_stats_driver(sized, parts)
+        if stats is not None:
+            if pair_budget is not None:
+                stats._xss_edge_estimate = est
+            return stats
+    n_part = None
+    if pair_budget is not None:
         n_part = _scaled_pair_partitions(sized, est)
     right = sized.select(
         F.col("doc").alias("doc_b"),
@@ -764,6 +964,44 @@ def _shingle_pair_stats(
     return stats
 
 
+def _shingle_stats_driver(sized: DataFrame, parts: list[str]) -> DataFrame | None:
+    """``_shingle_pair_stats``' join and counts on the driver over the
+    collected (doc, parts…, shingle, set_size) rows: the self-join on
+    (shingle, parts…), ``doc < doc_b``, then the shared count and both
+    set sizes per pair. Returns None, for the distributed tier, when
+    the join's volume is over ``_PAIR_DRIVER_PAIRS``."""
+    id_type = sized.schema["doc"].dataType
+    on = ["shingle", *parts]
+    pdf = sized.select(
+        F.col("doc").cast("bigint"),
+        *[F.col(p).cast("string").alias(p) for p in parts],
+        "shingle",
+        "set_size",
+    ).toPandas()
+    # Spark's inner join never matches a NULL key; pandas.merge matches
+    # NaN to NaN.
+    pdf = pdf.dropna(subset=parts)
+    if _bucket_pair_volume(pdf.groupby(on).size(), 1 << 62) > _PAIR_DRIVER_PAIRS:
+        return None
+    both = pdf.merge(pdf, on=on, suffixes=("", "_b"))
+    both = both[both["doc"] < both["doc_b"]]
+    stats = (
+        both.groupby(["doc", "doc_b"])
+        .agg(
+            shared=("shingle", "size"),
+            size_a=("set_size", "min"),
+            size_b=("set_size_b", "min"),
+        )
+        .reset_index()
+    )
+    return _pairs_frame(
+        sized.sparkSession,
+        id_type,
+        {"doc": stats["doc"], "doc_b": stats["doc_b"]},
+        {c: stats[c] for c in ("shared", "size_a", "size_b")},
+    )
+
+
 def ngram_containment_pairs(
     df: DataFrame,
     text_col: str,
@@ -787,7 +1025,7 @@ def ngram_containment_pairs(
     plan and ``max_df`` hot-shingle guard as
     :func:`ngram_jaccard_pairs` — containment is computed over the
     DF-capped sets on both sides, and the same ``pair_budget``
-    pre-flight refusal / shuffle scaling applies.
+    refusal, shuffle scaling and driver tier apply.
     """
     shared = _shingle_pair_stats(
         df, text_col, id_col, shingle_k, partition_col, max_df, pair_budget
@@ -1338,20 +1576,40 @@ def simhash_pairs(
     (the round-8 graph-tier rehearsal measured 7.7e9 pairs for the
     t56 shape at 500k docs, prefix_bits=4). The same submit-time
     refusal contract as :func:`ngram_jaccard_pairs`: the exact volume
-    comes from the bucket-size table the cap logic builds anyway, and
-    an over-budget submission raises
-    :class:`~..errors.PairBudgetExceededError` in seconds. Fix by
-    growing ``prefix_bits`` with log2(N) (constant expected bucket
-    size), tightening ``max_bucket``, or pass ``pair_budget=None``.
+    comes from the bucket sizes the cap logic needs anyway, and an
+    over-budget submission raises
+    :class:`~..errors.PairBudgetExceededError` before any pair is
+    built, on either tier below. Fix by growing ``prefix_bits`` with
+    log2(N) (constant expected bucket size), tightening
+    ``max_bucket``, or pass ``pair_budget=None``.
+
+    Two tiers, identical output. One job fills the signature cache and
+    observes its row count and NULL ids. At most ``_PAIR_DRIVER_ROWS``
+    (doc, sh, bucket) rows under an integral, never-NULL id are
+    collected once; the bucket sizes and the estimate come from them,
+    and at most ``_PAIR_DRIVER_PAIRS`` pairs are built and scored on
+    the driver (``_simhash_pairs_driver``). Anything else runs the
+    distributed bucket join over the same cache, with the bucket sizes
+    aggregated in Spark: the scale path, and the reference the
+    equivalence tests hold the driver tier to (the §2.5 block
+    decomposition below is result-identical to the plain join, so
+    one driver tier matches both).
     """
     # One 16-byte row per doc; persisting makes the bucket self-join read
     # the signatures instead of recomputing the 60-vote aggregate for
     # each side (sf0.1: 3.6s -> 1.3s).
-    hashed = _persist(
+    hashed, seen = _observed_persist(
         simhash_relational(df, text_col, id_col).withColumn(
             "bucket", F.shiftright(F.col("sh"), 60 - prefix_bits)
-        )
+        ),
+        nulls=_null_ids(),
     )
+    if _driver_sized(hashed, seen, seen["rows"]):
+        out = _simhash_pairs_driver(
+            hashed, max_hamming, prefix_bits, max_bucket, pair_budget
+        )
+        if out is not None:
+            return out
     est = None
     n_part = None
     sizes = None
@@ -1384,14 +1642,7 @@ def simhash_pairs(
         if pair_budget is not None and est > pair_budget:
             sizes.unpersist()
             hashed.unpersist()
-            raise PairBudgetExceededError(
-                f"exact within-bucket pair volume ≈ {est:.3g} exceeds "
-                f"pair_budget={pair_budget:,}. SimHash prefix blocking is "
-                "Σ bn·(bn-1)/2-bound — N²/2^prefix_bits at fixed "
-                f"prefix_bits={prefix_bits}; grow prefix_bits with log2(N) "
-                "(constant expected bucket size), tighten max_bucket, or "
-                "pass pair_budget=None to run anyway."
-            )
+            raise _simhash_over_budget(est, pair_budget, prefix_bits)
         n_part = _scaled_pair_partitions(hashed, est)
     # §2.5: the bucket key has at most 2^prefix_bits distinct values, so
     # the plain self-join on it can never use more than that many tasks
@@ -1496,6 +1747,81 @@ def simhash_pairs(
     if est is not None:
         out._xss_edge_estimate = est
     return out
+
+
+def _simhash_over_budget(
+    est: float, pair_budget: int, prefix_bits: int
+) -> PairBudgetExceededError:
+    return PairBudgetExceededError(
+        f"exact within-bucket pair volume ≈ {est:.3g} exceeds "
+        f"pair_budget={pair_budget:,}. SimHash prefix blocking is "
+        "Σ bn·(bn-1)/2-bound — N²/2^prefix_bits at fixed "
+        f"prefix_bits={prefix_bits}; grow prefix_bits with log2(N) "
+        "(constant expected bucket size), tighten max_bucket, or "
+        "pass pair_budget=None to run anyway."
+    )
+
+
+def _simhash_pairs_driver(
+    hashed: DataFrame,
+    max_hamming: int,
+    prefix_bits: int,
+    max_bucket: int | None,
+    pair_budget: int | None,
+) -> DataFrame | None:
+    """``simhash_pairs``' bucket join on the driver over the collected
+    (doc, sh, bucket) rows, as Spark bucketed them: the bucket sizes
+    and representatives, the same estimate and budget refusal, all
+    pairs within buckets of at most ``max_bucket`` members and
+    representative-only a-sides in larger ones, then the Hamming
+    distance as an exact popcount of ``sh ^ sh_b``. Returns None, for
+    the distributed tier, when the estimate is over
+    ``_PAIR_DRIVER_PAIRS``."""
+    import numpy as np
+
+    id_type = hashed.schema["doc"].dataType
+    pdf = hashed.select(F.col("doc").cast("bigint"), "sh", "bucket").toPandas()
+    cap = max_bucket if max_bucket is not None else 1 << 62
+    sizes = pdf.groupby("bucket")["doc"].agg(["size", "min"])
+    est = _bucket_pair_volume(sizes["size"], cap)
+    if pair_budget is not None and est > pair_budget:
+        hashed.unpersist()
+        raise _simhash_over_budget(est, pair_budget, prefix_bits)
+    if est > _PAIR_DRIVER_PAIRS:
+        return None
+    rows = pdf.join(sizes, on="bucket")
+    a_side = (rows["size"] <= cap) | (rows["doc"] == rows["min"])
+    left = rows.loc[a_side, pdf.columns]
+    both = left.merge(pdf, on="bucket", suffixes=("", "_b"))
+    both = both[both["doc"] < both["doc_b"]]
+    xor = both["sh"].to_numpy(np.int64) ^ both["sh_b"].to_numpy(np.int64)
+    hamming = _popcount64(xor)
+    keep = hamming <= max_hamming
+    out = _pairs_frame(
+        hashed.sparkSession,
+        id_type,
+        {"id_a": both["doc"][keep], "id_b": both["doc_b"][keep]},
+        {"hamming": hamming[keep]},
+    )
+    if max_bucket is not None or pair_budget is not None:
+        out._xss_edge_estimate = est
+    return out
+
+
+def _popcount64(x):
+    """Set bits of each int64 in ``x`` (two's complement, like Spark's
+    ``bit_count`` of a bigint), as int64."""
+    import numpy as np
+
+    v = np.ascontiguousarray(x, dtype=np.int64).view(np.uint64)
+    m1, m2, m4 = (
+        np.uint64(c)
+        for c in (0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F)
+    )
+    v = v - ((v >> np.uint64(1)) & m1)
+    v = (v & m2) + ((v >> np.uint64(2)) & m2)
+    v = (v + (v >> np.uint64(4))) & m4
+    return ((v * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int64)
 
 
 def edit_distance_pairs(df: DataFrame, token_col: str) -> DataFrame:

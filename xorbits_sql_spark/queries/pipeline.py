@@ -2663,9 +2663,9 @@ def t56_detector_agreement(
     # self-join + distinct is not — uncached, that pair-join work runs
     # twice per detector (guide §5). Short (id_a, id_b) rows.
     # The two detectors are fully independent until the final counts,
-    # and each serializes pre-flight jobs at construction time — build
-    # them in overlapping driver threads (guide §2.6) so SimHash's
-    # signature stages back-fill the MinHash stage tails.
+    # and each serializes its signature-build jobs at construction
+    # time — build them in overlapping driver threads (guide §2.6) so
+    # SimHash's signature stages back-fill the MinHash stage tails.
     mh, sh = build_concurrently(
         lambda: _persist(
             minhash_lsh_pairs(

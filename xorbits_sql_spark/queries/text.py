@@ -43,7 +43,7 @@ _AUDIT_ADVISORY_PAIR_BOUND = 50_000_000.0
 def _advise_sampled_audit(est_pairs: float) -> bool:
     """Emit the t15 -> u14 advisory when the audit's estimated pair
     volume (candidate band join + exact truth join, both already
-    computed by the generators' submit-time pre-flights) crosses the
+    computed by the generators before any pair is built) crosses the
     bound. Returns whether it fired, for tests."""
     if est_pairs <= _AUDIT_ADVISORY_PAIR_BOUND:
         return False
@@ -2652,11 +2652,14 @@ def t15_blocking_quality_audit(
     # intersection join below — uncached, the band/inverted-index pair
     # joins (the expensive stage of each generator) execute twice
     # (guide §5). Short (id_a, id_b) rows, bounded by the generators'
-    # budget pre-flights. The candidate and truth pipelines are fully
-    # independent until the caught-join, and each blocks on pre-flight
-    # jobs at construction — build them in overlapping driver threads
-    # (guide §2.6) so the truth side's shingle stages back-fill the
-    # LSH side's stage tails.
+    # pair budgets. The candidate and truth pipelines are fully
+    # independent until the caught-join, and each blocks at
+    # construction on the job that builds its signature or
+    # inverted-index table (which also yields its pair estimate) and,
+    # below the generators' driver gates, on the collect that pairs
+    # the table on the driver — build them in overlapping driver
+    # threads (guide §2.6) so the truth side's shingle stages
+    # back-fill the LSH side's stage tails.
     raws: dict[str, DataFrame] = {}
 
     def _build_cands() -> DataFrame:
@@ -2679,8 +2682,9 @@ def t15_blocking_quality_audit(
 
     cands, truth = construct_concurrently(_build_cands, _build_truth)
     # Submit-time advisory (round-10 verdict #6): both generators
-    # already computed their exact pair-volume estimates for the
-    # budget/partition-scaling pre-flights — no extra job here. Fires
+    # already computed their exact pair-volume estimates (for the
+    # budget, the partition scaling and their driver gates) — no extra
+    # job here. Fires
     # BEFORE the pair joins materialize below, so on a too-dense corpus
     # the warning precedes the heavy tiers, not follows them.
     _advise_sampled_audit(
