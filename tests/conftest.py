@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+from unittest import mock
+
 import duckdb
 import pytest
 
@@ -42,3 +45,18 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
         )
     return con
+
+
+@contextmanager
+def spy(module, name):
+    """Patch ``module.name`` with a wrapper; yields the list of values
+    it returned (empty when it was never called). Tests read which
+    tier an operator took from a spy on the tier's function."""
+    real, results = getattr(module, name), []
+
+    def wrapper(*args, **kwargs):
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    with mock.patch.object(module, name, wrapper):
+        yield results

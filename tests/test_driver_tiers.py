@@ -5,14 +5,15 @@ generators against their distributed tiers.
 and SimHash pair generators in ``dedup`` run small inputs on the
 driver and larger ones distributed; the contract is bit-identical
 output, so doubles are compared by bit pattern. The distributed tier
-is forced by patching the module's gate constants, and which tier ran
-is read from a spy on the driver-tier function. The last test pins the
-construction-job counts the driver tiers exist for.
+is forced by patching the module's gate constants (``dedup._DRIVER_ROWS``
+for all but k-means), and which tier ran is read from a spy on the
+driver-tier function. One test pins that single bound across all six
+operators that share it; the last pins the construction-job counts the
+driver tiers exist for.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from unittest import mock
 
 import numpy as np
@@ -25,7 +26,7 @@ from xorbits_sql_spark.errors import PairBudgetExceededError
 from xorbits_sql_spark.operators import dedup, graph, similarity
 from xorbits_sql_spark.operators.dedup import release_caches
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, spy
 
 _SETTINGS = dict(
     max_examples=10,
@@ -33,20 +34,6 @@ _SETTINGS = dict(
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-
-
-@contextmanager
-def _spy(module, name):
-    """Patch ``module.name`` with a wrapper; yields the list of values
-    it returned (empty when it was never called)."""
-    real, results = getattr(module, name), []
-
-    def wrapper(*args, **kwargs):
-        results.append(real(*args, **kwargs))
-        return results[-1]
-
-    with mock.patch.object(module, name, wrapper):
-        yield results
 
 
 def _bits(values) -> list[int]:
@@ -68,9 +55,9 @@ def _ranks(edges, **kw) -> list[tuple]:
 
 def _pagerank_tiers(edges, **kw):
     """(driver-tier result, distributed result, driver-tier returns)."""
-    with _spy(graph, "_pagerank_driver") as seen:
+    with spy(graph, "_pagerank_driver") as seen:
         small = _ranks(edges, **kw)
-    with mock.patch.object(graph, "_PAGERANK_DRIVER_EDGES", -1):
+    with mock.patch.object(dedup, "_DRIVER_ROWS", -1):
         big = _ranks(edges, **kw)
     return small, big, seen
 
@@ -110,7 +97,7 @@ def test_pagerank_keeps_the_id_type(spark):
     edges = spark.createDataFrame(
         pd.DataFrame({"a": [1, 2, 3, 3], "b": [2, 3, 1, 1]}), "a int, b int"
     )
-    with _spy(graph, "_pagerank_driver") as seen:
+    with spy(graph, "_pagerank_driver") as seen:
         got = graph.pagerank(edges, "a", "b", n_iter=2)
     assert seen[0] is not None
     assert got.schema.simpleString() == "struct<id:int,pr:double>"
@@ -148,7 +135,7 @@ def _centroids(corpus, k, n_iter) -> list[tuple]:
 
 
 def _kmeans_tiers(corpus, k, n_iter):
-    with _spy(similarity, "_kmeans_driver") as seen:
+    with spy(similarity, "_kmeans_driver") as seen:
         small = _centroids(corpus, k, n_iter)
     with mock.patch.object(similarity, "_KMEANS_DRIVER_ROWS", -1):
         big = _centroids(corpus, k, n_iter)
@@ -309,9 +296,9 @@ def _generator_tiers(driver_fn: str, build):
     """(driver-tier outcome, distributed outcome, driver-tier returns).
     The gates go to -1, not 0, so that an empty signature table (every
     doc shorter than a shingle) takes the distributed tier too."""
-    with _spy(dedup, driver_fn) as seen:
+    with spy(dedup, driver_fn) as seen:
         small = _outcome(build)
-    with mock.patch.multiple(dedup, _PAIR_DRIVER_ROWS=-1, _PAIR_DRIVER_PAIRS=-1):
+    with mock.patch.object(dedup, "_DRIVER_ROWS", -1):
         big = _outcome(build)
     return small, big, seen
 
@@ -515,6 +502,45 @@ def test_pair_generators_driver_tiers_without_arrow(spark):
             assert small[0].startswith("struct<id_a:int,id_b:int")
     finally:
         spark.conf.set(key, prev)
+
+
+# --- the shared bound -------------------------------------------------
+
+_BOUND_SHARERS = {
+    (dedup, "_cc_driver"): lambda e, d: dedup.connected_components(e, "a", "b"),
+    (graph, "_kcore_driver"): lambda e, d: graph.kcore_peel_counts(
+        e, "a", "b", k=2, rounds=1
+    ),
+    (graph, "_pagerank_driver"): lambda e, d: graph.pagerank(e, "a", "b"),
+    (dedup, "_band_pairs_driver"): lambda e, d: dedup.minhash_lsh_pairs(
+        d, "text", "doc_id", seeds=4, band_size=1
+    ),
+    (dedup, "_shingle_stats_driver"): lambda e, d: dedup.ngram_jaccard_pairs(
+        d, "text", "doc_id", threshold=0.0
+    ),
+    (dedup, "_simhash_pairs_driver"): lambda e, d: dedup.simhash_pairs(
+        d, "text", "doc_id", prefix_bits=0, max_hamming=64
+    ),
+}
+
+
+def test_one_bound_moves_every_driver_tier(spark):
+    """``dedup._DRIVER_ROWS`` is the one size bound of connected
+    components, k-core, PageRank and the three pair generators: on a
+    small input each takes its driver tier at the default bound, and
+    none does with the bound patched to -1."""
+    edges = spark.createDataFrame(
+        pd.DataFrame({"a": [1, 2, 3, 4], "b": [2, 3, 1, 5]}), "a bigint, b bigint"
+    )
+    docs = _doc_frame(spark, _NULL_ID_TEXTS + ["zeta eta alpha beta"], "bigint")
+    for bound, driver in ((dedup._DRIVER_ROWS, True), (-1, False)):
+        for (module, driver_fn), build in _BOUND_SHARERS.items():
+            with mock.patch.object(dedup, "_DRIVER_ROWS", bound), spy(
+                module, driver_fn
+            ) as seen:
+                build(edges, docs).collect()
+            release_caches()
+            assert bool(seen) == driver, (driver_fn, bound)
 
 
 # --- construction jobs ------------------------------------------------

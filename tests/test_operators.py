@@ -3,6 +3,8 @@ similarity — small synthetic frames with hand-computed expectations."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pandas as pd
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -18,7 +20,7 @@ from xorbits_sql_spark.operators.joins import asof_join, range_join
 from xorbits_sql_spark.operators.similarity import brute_topk, ivf_topk
 from xorbits_sql_spark.operators.skew import salted_join
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, spy
 
 
 def test_asof_join_basic(spark):
@@ -105,14 +107,55 @@ def test_range_join(spark):
 
 
 def _distributed_tiers(monkeypatch):
-    """Pin the pair generators to their distributed tiers: the fixtures
-    here are far below the driver-tier gates, and the tests that take
-    this pin check distributed mechanics (scaled partitioning, the
-    block decomposition, star pairs, plan shapes)."""
+    """Pin the operators to their distributed tiers: the fixtures here
+    are far below the driver-tier bound, and the tests that take this
+    pin check distributed mechanics (scaled partitioning, the block
+    decomposition, star pairs, plan shapes)."""
     from xorbits_sql_spark.operators import dedup as D
 
-    monkeypatch.setattr(D, "_PAIR_DRIVER_ROWS", 0)
-    monkeypatch.setattr(D, "_PAIR_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(D, "_DRIVER_ROWS", 0)
+
+
+_CC_TIER_FNS = {
+    "driver": "_cc_driver",
+    "propagation": "_cc_propagation",
+    "stars": "_cc_alternating_stars",
+}
+# The bounds that pin each connected-components tier at fixture scale.
+_CC_PINS = {
+    "driver": {},
+    "propagation": {"_DRIVER_ROWS": -1},
+    "stars": {"_DRIVER_ROWS": -1, "_CC_STARS_EDGES": 0},
+}
+
+
+def _cc_run(pairs, **bounds) -> tuple[dict, str]:
+    """connected_components' labels with ``bounds`` patched into
+    ``dedup``, and the tier that ran, read from spies on the three tier
+    functions."""
+    from contextlib import ExitStack
+
+    from xorbits_sql_spark.operators import dedup
+
+    with ExitStack() as stack:
+        if bounds:
+            stack.enter_context(mock.patch.multiple(dedup, **bounds))
+        ran = {
+            tier: stack.enter_context(spy(dedup, fn))
+            for tier, fn in _CC_TIER_FNS.items()
+        }
+        rows = dedup.connected_components(pairs).collect()
+    labels = {r["id"]: r["component"] for r in rows}
+    assert len(labels) == len(rows)  # one row per node
+    (tier,) = [t for t, seen in ran.items() if seen]
+    assert dedup.last_cc_algorithm == tier
+    return labels, tier
+
+
+def _cc_labels(pairs, tier: str) -> dict:
+    labels, ran = _cc_run(pairs, **_CC_PINS[tier])
+    assert ran == tier
+    return labels
 
 
 def _docs(spark):
@@ -469,9 +512,8 @@ def test_connected_components_stars_equals_propagation(spark):
     like the reference propagation loop on adversarial shapes: a long
     chain, overlapping cliques, a binary-tree star-cap topology, a
     deterministic pseudo-random graph, and self-loop-only nodes."""
-    from pyspark.sql import functions as F
     from xorbits_sql_spark.operators import dedup
-    from xorbits_sql_spark.operators.dedup import connected_components, release_caches
+    from xorbits_sql_spark.operators.dedup import release_caches
 
     edges = (
         # chain 0..60
@@ -491,15 +533,9 @@ def test_connected_components_stars_equals_propagation(spark):
         ]
     )
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    stars = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="stars").collect()
-    }
+    stars = _cc_labels(pairs, "stars")
     stars_rounds = dedup.last_cc_rounds
-    prop = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="propagation").collect()
-    }
+    prop = _cc_labels(pairs, "propagation")
     release_caches()
     assert stars == prop
     assert stars[500] == 500
@@ -508,47 +544,51 @@ def test_connected_components_stars_equals_propagation(spark):
 
 
 def test_connected_components_auto_pick(spark):
-    """The default "auto" algorithm measures the edge count once and
-    tiers on it: driver union-find at/below driver_threshold,
-    propagation below stars_threshold, stars at/above it — identical
-    labels at every crossing."""
+    """connected_components measures the edge count once and tiers on
+    it: driver union-find at/below ``_DRIVER_ROWS``, propagation below
+    ``_CC_STARS_EDGES``, stars at/above it — identical labels at every
+    crossing."""
     from xorbits_sql_spark.operators import dedup
-    from xorbits_sql_spark.operators.dedup import connected_components
+    from xorbits_sql_spark.operators.dedup import release_caches
 
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (21, 20)],
         "id_a bigint, id_b bigint",
     )
-    tiny = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
-    assert dedup.last_cc_algorithm == "driver"
-    assert dedup.last_cc_rounds == 0
-    below = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
-    assert dedup.last_cc_algorithm == "propagation"
-    above = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            pairs, stars_threshold=1, driver_threshold=0
-        ).collect()
-    }
-    assert dedup.last_cc_algorithm == "stars"
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-    assert tiny == below == above == expected
+    assert _cc_run(pairs) == (expected, "driver")
+    assert dedup.last_cc_rounds == 0
+    # five edges: at the bounds and one below them
+    for bounds, tier in [
+        ({"_DRIVER_ROWS": 5}, "driver"),
+        ({"_DRIVER_ROWS": 4, "_CC_STARS_EDGES": 6}, "propagation"),
+        ({"_DRIVER_ROWS": 4, "_CC_STARS_EDGES": 5}, "stars"),
+    ]:
+        assert _cc_run(pairs, **bounds) == (expected, tier), bounds
+    release_caches()
+
+
+def test_connected_components_drops_null_ended_pairs(spark):
+    """A pair with a NULL end names no edge: every tier drops it before
+    labelling, and no NULL id or label comes back."""
+    from xorbits_sql_spark.operators.dedup import release_caches
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame(
+            {"id_a": [1, 2, None, 5, 6], "id_b": [2, 3, 4, None, 7]}, dtype="Int64"
+        ),
+        "id_a bigint, id_b bigint",
+    )
+    got = {tier: _cc_labels(pairs, tier) for tier in _CC_PINS}
+    release_caches()
+    for labels in got.values():
+        assert labels == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}
 
 
 def test_connected_components_driver_tier_guard_and_equivalence(spark):
-    """The driver union-find tier must (a) label adversarial shapes
-    exactly like the distributed propagation reference and (b) refuse
-    an explicit algorithm="driver" request whose edge count exceeds
-    driver_threshold (the size gate is the whole contract)."""
-    import pytest
-
-    from xorbits_sql_spark.operators.dedup import (
-        connected_components,
-        release_caches,
-    )
+    """The driver union-find tier must label adversarial shapes
+    exactly like the distributed propagation reference."""
+    from xorbits_sql_spark.operators.dedup import release_caches
 
     edges = (
         [(i, i + 1) for i in range(60)]  # 60-hop chain
@@ -561,29 +601,18 @@ def test_connected_components_driver_tier_guard_and_equivalence(spark):
         ]
     )
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    drv = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="driver").collect()
-    }
-    prop = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="propagation").collect()
-    }
+    drv = _cc_labels(pairs, "driver")
+    prop = _cc_labels(pairs, "propagation")
     release_caches()
     assert drv == prop
     assert drv[500] == 500
-    with pytest.raises(ValueError, match="driver_threshold"):
-        connected_components(pairs, algorithm="driver", driver_threshold=3)
 
 
 def test_kcore_peel_tier_guard_and_equivalence(spark):
-    """kcore_peel_counts' driver tier must (a) produce the exact same
+    """kcore_peel_counts' driver tier must produce the exact same
     single-row counts as the distributed peel on a shape with hubs,
-    chains, self-contained cliques and peeled-away tendrils and (b)
-    refuse an explicit algorithm="driver" request whose edge count
-    exceeds driver_threshold (the size gate is the whole contract)."""
-    import pytest
-
+    chains, self-contained cliques and peeled-away tendrils."""
+    from xorbits_sql_spark.operators import dedup, graph
     from xorbits_sql_spark.operators.dedup import release_caches
     from xorbits_sql_spark.operators.graph import kcore_peel_counts
 
@@ -597,15 +626,33 @@ def test_kcore_peel_tier_guard_and_equivalence(spark):
         [(min(a, b), max(a, b)) for a, b in edges if a != b],
         "p1 bigint, p2 bigint",
     ).distinct()
-    drv = kcore_peel_counts(pairs, algorithm="driver").collect()
-    dist = kcore_peel_counts(pairs, algorithm="distributed").collect()
+    with spy(graph, "_kcore_driver") as on_driver:
+        drv = kcore_peel_counts(pairs).collect()
+    with spy(graph, "_kcore_driver") as off_driver, mock.patch.object(
+        dedup, "_DRIVER_ROWS", -1
+    ):
+        dist = kcore_peel_counts(pairs).collect()
     release_caches()
+    assert len(on_driver) == 1 and off_driver == []
     assert len(drv) == len(dist) == 1
     assert drv[0].asDict() == dist[0].asDict()
     # the clique survives both peels: 6 nodes of degree 5, 15 edges
     assert drv[0]["nodes_2"] >= 6 and drv[0]["edges_2"] >= 15
-    with pytest.raises(ValueError, match="driver_threshold"):
-        kcore_peel_counts(pairs, algorithm="driver", driver_threshold=3)
+
+
+def test_kcore_refuses_non_integral_ids(spark):
+    """Fractional ids would be cast to bigint, merging 1.2 and 1.7 into
+    one node: kcore_peel_counts refuses them at submit time, as
+    connected_components does."""
+    import pytest
+
+    from xorbits_sql_spark.operators.graph import kcore_peel_counts
+
+    edges = spark.createDataFrame(
+        [(1.2, 1.7), (1.7, 2.0), (2.0, 1.2), (3.0, 4.0)], "p1 double, p2 double"
+    )
+    with pytest.raises(TypeError, match="kcore_peel_counts requires integral ids"):
+        kcore_peel_counts(edges, k=2, rounds=1)
 
 
 def test_pack_sequences_assignment(spark):
@@ -1217,24 +1264,23 @@ def test_connected_components_long_chain_log_rounds(spark):
     min-label propagation would need ~999 rounds and previously hit
     the max_iter ceiling on the 100x rehearsal's chained LSH graphs."""
     from xorbits_sql_spark.operators import dedup
-    from xorbits_sql_spark.operators.dedup import connected_components, release_caches
+    from xorbits_sql_spark.operators.dedup import release_caches
 
     n = 1000
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    for algorithm, bound in [
+    for tier, bound in [
         # star contraction: ~log2(diameter) + 1 confirm round
         ("stars", 12),
         # propagation with two pointer jumps: depth shrinks ~4x/round
         ("propagation", 9),
     ]:
-        comps = connected_components(pairs, algorithm=algorithm)
-        rows = comps.collect()
+        labels = _cc_labels(pairs, tier)
         release_caches()
-        assert len(rows) == n, algorithm
-        assert all(r["component"] == 0 for r in rows), algorithm
-        assert dedup.last_cc_rounds <= bound, (algorithm, dedup.last_cc_rounds)
+        assert len(labels) == n, tier
+        assert set(labels.values()) == {0}, tier
+        assert dedup.last_cc_rounds <= bound, (tier, dedup.last_cc_rounds)
 
 
 def test_midrank_helpers_match_scipy_style_ranks(spark):
@@ -1285,14 +1331,10 @@ def test_exp9_matches_inline_spelling(spark):
 
 def test_cc_auto_uses_generator_edge_hint(spark):
     """Pair generators attach their pre-computed pair-volume estimate;
-    connected_components("auto") must pick its algorithm from that hint
-    without a count job, and labels must match the counted path."""
+    connected_components must pick its tier from that hint without a
+    checkpoint job, and labels must match the counted path."""
     from xorbits_sql_spark.operators import dedup
-    from xorbits_sql_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-        release_caches,
-    )
+    from xorbits_sql_spark.operators.dedup import minhash_lsh_pairs, release_caches
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon zeta {i % 3}") for i in range(30)],
@@ -1301,19 +1343,16 @@ def test_cc_auto_uses_generator_edge_hint(spark):
     pairs = minhash_lsh_pairs(docs, "text", "doc_id")
     hint = getattr(pairs, "_xss_edge_estimate", None)
     assert isinstance(hint, float) and hint >= 0
-    got = {
-        (r["id"], r["component"])
-        for r in connected_components(pairs).collect()
-    }
-    assert dedup.last_cc_algorithm == "driver"  # tiny graph -> hint <= 250k
+    with spy(dedup, "_observed_checkpoint") as checkpoints:
+        got, tier = _cc_run(pairs)
+    assert tier == "driver" and checkpoints == []  # tiny graph: hint <= bound
     # a transformed DataFrame drops the hint -> counted fallback, same labels
     dropped = pairs.filter(F.lit(True))
     assert getattr(dropped, "_xss_edge_estimate", None) is None
-    counted = {
-        (r["id"], r["component"])
-        for r in connected_components(dropped).collect()
-    }
+    with spy(dedup, "_observed_checkpoint") as checkpoints:
+        counted, tier = _cc_run(dropped)
     release_caches()
+    assert tier == "driver" and len(checkpoints) == 1
     assert got == counted
 
 

@@ -558,8 +558,7 @@ def test_t15_blocking_audit_no_allpairs(spark, monkeypatch):
 
     from xorbits_sql_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "_PAIR_DRIVER_ROWS", 0)
-    monkeypatch.setattr(dedup, "_PAIR_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(dedup, "_DRIVER_ROWS", 0)
 
     with warnings.catch_warnings():
         warnings.simplefilter("error", ResourceWarning)

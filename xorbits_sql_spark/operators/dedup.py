@@ -47,9 +47,9 @@ _LIVE_CACHES: list[DataFrame] = []
 # the star-pair caps are what keep rounds ~2-3 on dense dup graphs).
 last_cc_rounds: int = 0
 
-# Algorithm the most recent connected_components() call resolved to
-# ("stars" or "propagation") — observability for the "auto" edge-count
-# pick and its threshold-crossing tests.
+# Tier the edge count picked in the most recent connected_components()
+# call ("driver", "propagation" or "stars") — observability for scale
+# rehearsals.
 last_cc_algorithm: str = ""
 
 
@@ -122,15 +122,18 @@ def _fill(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Driver tiers of the pair generators (minhash_lsh_pairs,
-# ngram_jaccard_pairs / ngram_containment_pairs, simhash_pairs): a
-# per-document table of at most _PAIR_DRIVER_ROWS collected rows whose
-# pair volume is at most _PAIR_DRIVER_PAIRS is paired on the driver,
-# with the distributed tier's result. The bounds of
-# connected_components' driver_threshold and graph's
-# _PAGERANK_DRIVER_EDGES.
-_PAIR_DRIVER_ROWS = 250_000
-_PAIR_DRIVER_PAIRS = 250_000
+# The one size bound of the driver tiers, read at call time so that
+# patching it moves every tier: connected_components and
+# graph.kcore_peel_counts / graph.pagerank run edge lists of at most
+# this many rows on the driver (~4 MB of two-bigint rows), and the pair
+# generators (minhash_lsh_pairs, ngram_jaccard_pairs /
+# ngram_containment_pairs, simhash_pairs) pair a per-document table of
+# at most this many rows there when its pair volume is within it too.
+# Each driver tier gives its distributed tier's result.
+_DRIVER_ROWS = 250_000
+# Edge count from which connected_components contracts stars instead of
+# propagating labels.
+_CC_STARS_EDGES = 1_000_000
 
 
 def _driver_sized(table: DataFrame, seen: dict, rows: int) -> bool:
@@ -138,7 +141,7 @@ def _driver_sized(table: DataFrame, seen: dict, rows: int) -> bool:
     collected rows within the bound, and an integral ``doc`` id that
     ``seen["nulls"]`` (observed on ``table``) shows is never NULL."""
     return (
-        rows <= _PAIR_DRIVER_ROWS
+        rows <= _DRIVER_ROWS
         and seen["nulls"] == 0
         and table.schema["doc"].dataType.simpleString() in _INTEGRAL
     )
@@ -461,10 +464,10 @@ def minhash_lsh_pairs(
 
     Two tiers, identical output. One job fills the signature cache and
     observes its row count and NULL ids. At most
-    ``_PAIR_DRIVER_ROWS`` (doc, band_key) rows under an integral,
+    ``_DRIVER_ROWS`` (doc, band_key) rows under an integral,
     never-NULL id are collected once — Spark builds the band keys —
     and when their pair volume (the estimate below) is at most
-    ``_PAIR_DRIVER_PAIRS``, the buckets are paired on the driver
+    ``_DRIVER_ROWS``, the buckets are paired on the driver
     (``_band_pairs_driver``). Anything else runs the distributed
     ``_capped_pair_join`` over the same cache: the scale path, and the
     reference the equivalence tests hold the driver tier to.
@@ -564,7 +567,7 @@ def _band_pairs_driver(
     pair-volume estimate, all pairs within buckets of at most
     ``max_bucket`` members, star pairs to the minimum doc in larger
     ones, then the distinct. Returns None, for the distributed tier,
-    when the estimate is over ``_PAIR_DRIVER_PAIRS``."""
+    when the estimate is over ``_DRIVER_ROWS``."""
     import numpy as np
 
     id_type = banded.schema["doc"].dataType
@@ -572,7 +575,7 @@ def _band_pairs_driver(
     cap = max_bucket if max_bucket is not None else 1 << 62
     sizes = pdf.groupby("band_key")["doc"].agg(["size", "min"])
     est = _bucket_pair_volume(sizes["size"], cap)
-    if est > _PAIR_DRIVER_PAIRS:
+    if est > _DRIVER_ROWS:
         return None
     rows = pdf.join(sizes, on="band_key")
     small = rows.loc[rows["size"] <= cap, ["doc", "band_key"]]
@@ -728,11 +731,11 @@ def _capped_pair_join(
         out = out.repartition(n_part, "id_a", "id_b")
     result = out.distinct()
     # Python-side hint: the pre-distinct pair count is a free upper
-    # bound on the edge count, so connected_components(algorithm="auto")
-    # can pick its algorithm without running its own count job (the
-    # hint only survives when the caller passes this exact DataFrame
-    # on — any further transformation drops it and auto falls back to
-    # counting, which is always correct).
+    # bound on the edge count, so connected_components can pick its
+    # driver tier without running its own count job (the hint only
+    # survives when the caller passes this exact DataFrame on — any
+    # further transformation drops it and connected_components falls
+    # back to counting, which is always correct).
     result._xss_edge_estimate = float(est or 0.0)
     return result
 
@@ -834,8 +837,8 @@ def _shingle_pair_stats(
 
     One job fills the inverted-index cache and observes its row count,
     its NULL ids and, with ``max_df`` set, the pair volume. At most
-    ``_PAIR_DRIVER_ROWS`` rows under an integral, never-NULL id whose
-    pair volume is at most ``_PAIR_DRIVER_PAIRS`` (and a
+    ``_DRIVER_ROWS`` rows under an integral, never-NULL id whose
+    pair volume is at most ``_DRIVER_ROWS`` (and a
     ``partition_col`` of a ``_DRIVER_PART_TYPES`` type) are collected
     once and joined and counted on the driver
     (``_shingle_stats_driver``). Anything else runs the distributed
@@ -916,7 +919,7 @@ def _shingle_pair_stats(
         )
     if (
         _driver_sized(sized, seen, seen["rows"])
-        and (est is None or est <= _PAIR_DRIVER_PAIRS)
+        and (est is None or est <= _DRIVER_ROWS)
         and all(
             sized.schema[p].dataType.simpleString() in _DRIVER_PART_TYPES
             for p in parts
@@ -958,7 +961,7 @@ def _shingle_pair_stats(
         F.min("size_b").alias("size_b"),
     )
     if pair_budget is not None:
-        # free edge-count upper bound for connected_components("auto")
+        # free edge-count upper bound for connected_components' tier pick
         # (see _capped_pair_join) — Σ df·(df-1)/2 ≥ distinct pairs
         stats._xss_edge_estimate = est
     return stats
@@ -969,7 +972,7 @@ def _shingle_stats_driver(sized: DataFrame, parts: list[str]) -> DataFrame | Non
     collected (doc, parts…, shingle, set_size) rows: the self-join on
     (shingle, parts…), ``doc < doc_b``, then the shared count and both
     set sizes per pair. Returns None, for the distributed tier, when
-    the join's volume is over ``_PAIR_DRIVER_PAIRS``."""
+    the join's volume is over ``_DRIVER_ROWS``."""
     id_type = sized.schema["doc"].dataType
     on = ["shingle", *parts]
     pdf = sized.select(
@@ -981,7 +984,7 @@ def _shingle_stats_driver(sized: DataFrame, parts: list[str]) -> DataFrame | Non
     # Spark's inner join never matches a NULL key; pandas.merge matches
     # NaN to NaN.
     pdf = pdf.dropna(subset=parts)
-    if _bucket_pair_volume(pdf.groupby(on).size(), 1 << 62) > _PAIR_DRIVER_PAIRS:
+    if _bucket_pair_volume(pdf.groupby(on).size(), 1 << 62) > _DRIVER_ROWS:
         return None
     both = pdf.merge(pdf, on=on, suffixes=("", "_b"))
     both = both[both["doc"] < both["doc_b"]]
@@ -1052,14 +1055,29 @@ def ngram_containment_pairs(
     return out
 
 
+def _require_integral(df: DataFrame, op: str, *cols: str) -> None:
+    """Refuse non-integral ids at submit time, with the remedy. A silent
+    cast of string/UUID ids would NULL them (non-ANSI), and a NULL end
+    joins to nothing, or die mid-job (ANSI); a cast of fractional ids
+    merges distinct ones (1.2 and 1.7 both become 1). Either way the
+    operator would "succeed" on another graph than the caller's — a
+    dedup removing nothing."""
+    for col_name in cols:
+        dt = df.schema[col_name].dataType.simpleString()
+        if dt not in _INTEGRAL:
+            raise TypeError(
+                f"{op} requires integral ids; {col_name!r} "
+                f"is {dt}. Map string/UUID ids to dense longs first (e.g. "
+                "xxhash64 is NOT safe for dedup — use a row_number over "
+                "distinct ids and join the mapping back)."
+            )
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    algorithm: str = "auto",
-    stars_threshold: int = 1_000_000,
-    driver_threshold: int = 250_000,
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components: (id, component).
 
@@ -1069,84 +1087,72 @@ def connected_components(
     pair generator above (LSH / Jaccard / SimHash) into an actual
     dedup decision; the reference engine has no counterpart.
 
-    Three tiers, identical output (each labels every node with its
-    component's minimum id, deterministically):
+    Ids must be integral (``TypeError`` otherwise). A pair with a NULL
+    at either end is dropped: a NULL id names no document and joins to
+    nothing, as in every pair generator above.
 
-    - ``"driver"``: single-pass union-find on the driver, entered only
-      when the EXACT edge count (or a decisive upper bound) is at most
-      ``driver_threshold``. A connected-components instance that small
-      is microseconds of actual work, while even a one-partition
+    Three tiers, identical output (each labels every node with its
+    component's minimum id, deterministically), picked from the edge
+    count alone:
+
+    - driver, at most ``_DRIVER_ROWS`` edges: single-pass union-find
+      (``_cc_driver``). A connected-components instance that small is
+      microseconds of actual work, while even a one-partition
       distributed round costs several scheduler barriers — measured on
       the sf0.1 co-purchase graph (3,853 edges): 3.3-5.9 s for the
       distributed loops vs milliseconds on the driver. This is the
       same submit-time-measured-bound contract as the pair-budget
-      guards: the collect is capped at ~driver_threshold 16-byte edge
-      rows (~4 MB at the default, far under maxResultSize), never an
-      unbounded data-table materialization, and the distributed tiers
-      below remain the uncapped scale path.
-    - ``"stars"``: alternating large-star / small-star edge
-      contraction (Kiveris et al., *Connected Components in MapReduce
-      and Beyond*). Each round REWRITES the edge set toward component
-      minima, so hop distances shrink structurally — the 100x
-      rehearsal's capped-LSH graph (2.1M edges, 500k nodes, effective
-      diameter ~18) converges in ~5 rounds where label propagation
-      needs one round per diameter hop, 4.2x faster end-to-end there.
-      Every round is a full barrier on a cluster, so round count is
-      the cost that matters at scale.
-    - ``"propagation"``: min-label propagation with a double pointer
-      jump — simpler and cheaper per round on mid-size sparse graphs
-      (fewer Spark jobs per round), kept for A/B measurement and as
-      the reference implementation the equivalence tests pin the other
+      guards: the collect is capped at ~``_DRIVER_ROWS`` 16-byte edge
+      rows (~4 MB, far under maxResultSize), never an unbounded
+      data-table materialization.
+    - propagation, below ``_CC_STARS_EDGES`` edges: min-label
+      propagation with a double pointer jump — cheaper per round on
+      mid-size sparse graphs (fewer Spark jobs per round), and the
+      reference implementation the equivalence tests pin the other
       tiers against.
-    - ``"auto"`` (default): ``driver`` at or below ``driver_threshold``
-      edges, then ``propagation`` below ``stars_threshold`` and
-      ``stars`` at or above it — the contraction's O(log n)-rounds win
-      only exists at scale, while its per-round constant costs real
-      time on small graphs (round-4 measurement: r63 4.59s vs 3.05s).
-      The edge count comes free when the pair generator attached its
-      pre-computed volume estimate (``_xss_edge_estimate``, an upper
-      bound — see ``_capped_pair_join`` / ``_shingle_pair_stats``),
-      and the driver tier then collects the pairs directly; otherwise
-      the exact count is observed on the job that checkpoints the pair
-      set the chosen algorithm then reuses, so the upstream pipeline
-      runs once either way.
+    - stars, from ``_CC_STARS_EDGES`` edges up: alternating large-star /
+      small-star edge contraction (Kiveris et al., *Connected
+      Components in MapReduce and Beyond*). Each round REWRITES the
+      edge set toward component minima, so hop distances shrink
+      structurally — the 100x rehearsal's capped-LSH graph (2.1M
+      edges, 500k nodes, effective diameter ~18) converges in ~5
+      rounds where label propagation needs one round per diameter hop,
+      4.2x faster end-to-end there. The contraction's O(log n)-rounds
+      win only exists at scale, while its per-round constant costs
+      real time on small graphs (round-4 measurement: r63 4.59s vs
+      3.05s).
+
+    The edge count comes free when the pair generator attached its
+    pre-computed volume estimate (``_xss_edge_estimate``, an upper
+    bound — see ``_capped_pair_join`` / ``_shingle_pair_stats``); at
+    or below ``_DRIVER_ROWS`` the driver tier then collects the pairs
+    directly. Otherwise the exact count is observed on the job that
+    checkpoints the pair set the picked tier then reuses, so the
+    upstream pipeline runs once either way.
 
     ``max_iter`` is a pathological backstop; rounds actually executed
     are exposed via ``last_cc_rounds`` (0 for the driver tier), the
-    algorithm chosen via ``last_cc_algorithm``.
+    tier picked via ``last_cc_algorithm``.
     """
     global last_cc_algorithm
-    # Ids must already be integral: a silent cast of string/UUID ids
-    # would NULL them (non-ANSI) or die mid-job (ANSI), and NULL edges
-    # drop on every u != v comparison — the whole dedup would "succeed"
-    # while removing nothing. Refuse at submit time with the remedy.
-    for col_name in (id_a, id_b):
-        dt = pairs.schema[col_name].dataType.simpleString()
-        if dt not in _INTEGRAL:
-            raise TypeError(
-                f"connected_components requires integral ids; {col_name!r} "
-                f"is {dt}. Map string/UUID ids to dense longs first (e.g. "
-                "xxhash64 is NOT safe for dedup — use a row_number over "
-                "distinct ids and join the mapping back)."
-            )
+    _require_integral(pairs, "connected_components", id_a, id_b)
     norm = pairs.select(
         F.col(id_a).cast("bigint").alias("u"),
         F.col(id_b).cast("bigint").alias("v"),
-    )
+    ).dropna()
     # The generator's pre-computed pair-volume estimate is an UPPER
     # bound on distinct edges — and a loose one (it counts a pair once
     # per shared shingle/band/bucket, before any similarity filter), so
-    # it is only DECISIVE when it lands at or below a threshold. Then
+    # it is only DECISIVE when it lands at or below the bound. Then
     # the driver tier reads the pairs exactly once, so they are
     # collected straight from the pair pipeline, with no checkpoint.
     hint = getattr(pairs, "_xss_edge_estimate", None)
-    decisive = hint is not None and hint <= driver_threshold
-    if decisive and algorithm in ("auto", "driver"):
+    if hint is not None and hint <= _DRIVER_ROWS:
         last_cc_algorithm = "driver"
         return _cc_driver(norm)
     # Otherwise materialize the normalized pair set ONCE before
     # dispatch, and take the exact edge count from that same job (a
-    # loose estimate above the threshold may still hide a tiny graph:
+    # loose estimate above the bound may still hide a tiny graph:
     # a dense shingle overlap collapses to few distinct pairs). Both
     # distributed algorithms fan the edge set into self-unions
     # (bidirectional neighborhood views), which would otherwise embed
@@ -1155,22 +1161,11 @@ def connected_components(
     # The checkpoint also truncates lineage before the iterative loop.
     raw, seen = _observed_checkpoint(norm)
     n_edges = seen["rows"]
-    if algorithm == "auto":
-        if n_edges <= driver_threshold:
-            algorithm = "driver"
-        elif n_edges < stars_threshold:
-            algorithm = "propagation"
-        else:
-            algorithm = "stars"
-    last_cc_algorithm = algorithm
-    if algorithm == "driver":
-        if n_edges > driver_threshold:
-            raise ValueError(
-                f"algorithm='driver' requires at most driver_threshold="
-                f"{driver_threshold:,} edges (got {n_edges:,}); use "
-                "'auto' so the distributed tiers handle large graphs."
-            )
+    if n_edges <= _DRIVER_ROWS:
+        last_cc_algorithm = "driver"
         return _cc_driver(raw)
+    stars = n_edges >= _CC_STARS_EDGES
+    last_cc_algorithm = "stars" if stars else "propagation"
     # Size the loop's shuffles from the measured edge count (guide §2;
     # see loop_shuffle_partitions): a 4k-edge graph (sf0.1 co-purchase:
     # 3,853 edges) previously ran every one of 7 rounds as dozens of
@@ -1179,19 +1174,14 @@ def connected_components(
     # scope covers every per-round shuffle; the returned label table is
     # already materialized when the scope exits.
     with loop_shuffle_partitions(pairs.sparkSession, n_edges):
-        if algorithm == "stars":
-            return _cc_alternating_stars(raw, "u", "v", max_iter)
-        if algorithm != "propagation":
-            raise ValueError(
-                f"unknown connected-components algorithm: {algorithm!r}"
-            )
-        return _cc_propagation(raw, "u", "v", max_iter)
+        loop = _cc_alternating_stars if stars else _cc_propagation
+        return loop(raw, "u", "v", max_iter)
 
 
 def _cc_driver(raw: DataFrame) -> DataFrame:
     """Driver-side union-find over a size-gated edge set (see
     ``connected_components``: entered only when the exact edge count,
-    or a decisive upper bound, is at most ``driver_threshold``).
+    or a decisive upper bound, is at most ``_DRIVER_ROWS``).
 
     Union-by-minimum with path compression: the root of every set is
     always its minimum member id, so ``find(x)`` IS the component
@@ -1568,7 +1558,7 @@ def simhash_pairs(
     ``_capped_pair_join``, the bucket-size table also yields the exact
     pair volume for free, which scales the pair-join shuffle (~4M pair
     rows/task) and rides along as the edge-count hint for
-    ``connected_components("auto")``.
+    ``connected_components``' tier pick.
 
     ``pair_budget``: within-bucket pair volume is Σ bn·(bn-1)/2 over
     buckets — at FIXED ``prefix_bits`` it grows as N²/2^prefix_bits,
@@ -1584,10 +1574,10 @@ def simhash_pairs(
     ``max_bucket``, or pass ``pair_budget=None``.
 
     Two tiers, identical output. One job fills the signature cache and
-    observes its row count and NULL ids. At most ``_PAIR_DRIVER_ROWS``
+    observes its row count and NULL ids. At most ``_DRIVER_ROWS``
     (doc, sh, bucket) rows under an integral, never-NULL id are
     collected once; the bucket sizes and the estimate come from them,
-    and at most ``_PAIR_DRIVER_PAIRS`` pairs are built and scored on
+    and at most ``_DRIVER_ROWS`` pairs are built and scored on
     the driver (``_simhash_pairs_driver``). Anything else runs the
     distributed bucket join over the same cache, with the bucket sizes
     aggregated in Spark: the scale path, and the reference the
@@ -1776,7 +1766,7 @@ def _simhash_pairs_driver(
     representative-only a-sides in larger ones, then the Hamming
     distance as an exact popcount of ``sh ^ sh_b``. Returns None, for
     the distributed tier, when the estimate is over
-    ``_PAIR_DRIVER_PAIRS``."""
+    ``_DRIVER_ROWS``."""
     import numpy as np
 
     id_type = hashed.schema["doc"].dataType
@@ -1787,7 +1777,7 @@ def _simhash_pairs_driver(
     if pair_budget is not None and est > pair_budget:
         hashed.unpersist()
         raise _simhash_over_budget(est, pair_budget, prefix_bits)
-    if est > _PAIR_DRIVER_PAIRS:
+    if est > _DRIVER_ROWS:
         return None
     rows = pdf.join(sizes, on="bucket")
     a_side = (rows["size"] <= cap) | (rows["doc"] == rows["min"])

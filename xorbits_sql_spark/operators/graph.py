@@ -31,12 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .dedup import _INTEGRAL, _observed_checkpoint, _persist
-
-# Largest edge list pagerank ranks on the driver: the bound
-# connected_components and kcore_peel_counts default to (~4 MB of
-# two-bigint rows).
-_PAGERANK_DRIVER_EDGES = 250_000
+from . import dedup
+from .dedup import _INTEGRAL, _observed_checkpoint, _persist, _require_integral
 
 
 def kcore_peel_counts(
@@ -45,34 +41,34 @@ def kcore_peel_counts(
     dst: str = "p2",
     k: int = 3,
     rounds: int = 2,
-    algorithm: str = "auto",
-    driver_threshold: int = 250_000,
 ) -> DataFrame:
     """Bounded k-core peeling over an undirected edge list; returns ONE
     row ``(nodes_0, edges_0, nodes_1, edges_1, ..., nodes_R, edges_R)``
     where round ``i>=1`` keeps nodes of degree >= ``k`` in round
     ``i-1``'s edge set and drops every edge touching a peeled node.
     All counts are exact integers, so both tiers below are
-    value-identical by construction.
+    value-identical by construction. Ids must be integral
+    (``TypeError`` otherwise, as in ``connected_components``).
 
-    Two tiers, the ``connected_components`` size-gate contract:
+    Two tiers, picked from the edge count alone, the
+    ``connected_components`` size-gate contract. One job checkpoints
+    the edge list cast to bigint and observes its row count; both
+    tiers read that checkpoint.
 
-    - ``"driver"``: entered only when the EXACT edge count is at most
-      ``driver_threshold`` (~4 MB of two-bigint rows at the default —
-      far under maxResultSize, never an unbounded materialization).
-      Peeling an instance that small is microseconds of numpy work,
-      while the distributed loop pays ``rounds`` x (degree aggregate +
-      two semi-joins + persist) in scheduler barriers — measured on the
+    - driver, at most ``dedup._DRIVER_ROWS`` edges (~4 MB of
+      two-bigint rows — far under maxResultSize, never an unbounded
+      materialization): the peel in numpy (``_kcore_driver``).
+      Peeling an instance that small is microseconds of work, while
+      the distributed loop pays ``rounds`` x (degree aggregate + two
+      semi-joins + persist) in scheduler barriers — measured on the
       sf0.1 co-purchase graph (s77: ~3.9k edges): ~30 jobs, 4-7 s, for
-      a computation that fits in one task. An explicit
-      ``algorithm="driver"`` above the gate refuses loudly.
-    - ``"distributed"``: degree aggregation + two left-semi joins per
+      a computation that fits in one task.
+    - distributed: degree aggregation + two left-semi joins per
       round against the persisted edge set — the uncapped scale path,
       linear shuffles in |E| per round with ``rounds`` bounded by
       contract.
     """
-    if algorithm not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown k-core algorithm: {algorithm!r}")
+    _require_integral(edges, "kcore_peel_counts", src, dst)
     spark = edges.sparkSession
     cols = [
         name
@@ -80,48 +76,19 @@ def kcore_peel_counts(
         for name in (f"nodes_{i}", f"edges_{i}")
     ]
     schema = ", ".join(f"{c} bigint" for c in cols)
-    if algorithm != "distributed":
-        # Materialize the edge pipeline once, counting it in the same
-        # job; the chosen tier then reuses the checkpointed set (same
-        # pattern as connected_components' dispatch).
-        raw, seen = _observed_checkpoint(
-            edges.select(
-                F.col(src).cast("bigint").alias("u"),
-                F.col(dst).cast("bigint").alias("v"),
-            )
+    # Materialize the edge pipeline once, counting it in the same job.
+    raw, seen = _observed_checkpoint(
+        edges.select(
+            F.col(src).cast("bigint").alias("u"),
+            F.col(dst).cast("bigint").alias("v"),
         )
-        n_edges = seen["rows"]
-        if algorithm == "driver" and n_edges > driver_threshold:
-            raise ValueError(
-                f"algorithm='driver' requires at most driver_threshold="
-                f"{driver_threshold:,} edges (got {n_edges:,}); use "
-                "'auto' so the distributed tier handles large graphs."
-            )
-        if n_edges <= driver_threshold:
-            import numpy as np
-
-            pdf = raw.toPandas()
-            u = pdf["u"].to_numpy()
-            v = pdf["v"].to_numpy()
-            ids, deg = np.unique(
-                np.concatenate([u, v]), return_counts=True
-            )
-            out = [len(ids), len(u)]
-            for _ in range(rounds):
-                keep = ids[deg >= k]
-                mask = np.isin(u, keep) & np.isin(v, keep)
-                u, v = u[mask], v[mask]
-                out.extend((len(keep), len(u)))
-                ids, deg = np.unique(
-                    np.concatenate([u, v]), return_counts=True
-                )
-            return spark.createDataFrame(
-                [tuple(int(x) for x in out)], schema=schema
-            )
-        edges = raw
-        src, dst = "u", "v"
-
-    ecur = _persist(edges.select(F.col(src), F.col(dst)))
+    )
+    if seen["rows"] <= dedup._DRIVER_ROWS:
+        pdf = raw.toPandas()
+        counts = _kcore_driver(pdf["u"].to_numpy(), pdf["v"].to_numpy(), k, rounds)
+        return spark.createDataFrame([counts], schema=schema)
+    src, dst = "u", "v"
+    ecur = _persist(raw)
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -151,6 +118,22 @@ def kcore_peel_counts(
             cnt(ecur, f"edges_{i}")
         )
     return result
+
+
+def _kcore_driver(u, v, k: int, rounds: int) -> tuple[int, ...]:
+    """``kcore_peel_counts``' peel in numpy over the collected edge
+    list (two int64 arrays): the counts the distributed tier gives."""
+    import numpy as np
+
+    ids, deg = np.unique(np.concatenate([u, v]), return_counts=True)
+    out = [len(ids), len(u)]
+    for _ in range(rounds):
+        keep = ids[deg >= k]
+        mask = np.isin(u, keep) & np.isin(v, keep)
+        u, v = u[mask], v[mask]
+        out.extend((len(keep), len(u)))
+        ids, deg = np.unique(np.concatenate([u, v]), return_counts=True)
+    return tuple(int(x) for x in out)
 
 
 def pagerank(
@@ -183,7 +166,7 @@ def pagerank(
     size-gate contract). One job checkpoints the ``(src, dst)`` edge
     list and observes its row count; both tiers read that checkpoint.
 
-    - driver: at most ``_PAGERANK_DRIVER_EDGES`` edges whose ids share
+    - driver: at most ``dedup._DRIVER_ROWS`` edges whose ids share
       one integral type and are never NULL. The edges come back as one
       Arrow collect (~4 MB at the bound) and the rounds run in numpy
       with the distributed tier's arithmetic (``_pagerank_driver``);
@@ -205,7 +188,7 @@ def pagerank(
     spark = edges.sparkSession
     id_type = edges.schema[src].dataType
     if (
-        n_edges <= _PAGERANK_DRIVER_EDGES
+        n_edges <= dedup._DRIVER_ROWS
         and id_type.simpleString() in _INTEGRAL
         and edges.schema[dst].dataType == id_type
     ):
