@@ -168,13 +168,7 @@ def main() -> None:
         ngram_jaccard_pairs,
         release_caches,
     )
-    from xorbits_sql_spark.operators.similarity import (
-        brute_topk,
-        brute_topk_arrow,
-        ivf_topk,
-        ivf_topk_arrow,
-        kmeans_lloyd,
-    )
+    from xorbits_sql_spark.operators.similarity import brute_topk, ivf_topk, kmeans_lloyd
     from xorbits_sql_spark.plans.metrics import collect_metrics
 
     spark = get_spark("scale-rehearsal")
@@ -332,27 +326,11 @@ def main() -> None:
             ),
             note=f"k=sqrt-scaled ({k_scaled}), nprobe=4, 1k queries",
         )
-        run(
-            "kmeans2_ivf_scaled_k_arrow",
-            lambda: ivf_topk_arrow(
-                queries.limit(1000), emb,
-                kmeans_lloyd(emb, k=k_scaled, n_iter=2),
-                k=5, nprobe=4,
-            ),
-            note=f"same index, cogrouped-GEMM probe (k={k_scaled})",
-        )
-        # HOF vs Arrow exact scoring on the full corpus: the measured gap
-        # behind the "UDFs are the slow path EXCEPT Arrow-batched GEMM"
-        # guidance.
+        # exact scoring on the full corpus
         run(
             "brute_topk_hof_100q",
             lambda: brute_topk(queries.limit(100), emb, k=5),
             note="interpreted zip_with/aggregate dots",
-        )
-        run(
-            "brute_topk_arrow_100q",
-            lambda: brute_topk_arrow(queries.limit(100), emb, k=5),
-            note="mapInPandas GEMM, same ranks",
         )
 
     if args.tier in ("graph", "all"):

@@ -20,12 +20,11 @@ def _vec_df(spark, rows):
 
 
 def test_zero_norm_vectors_never_rank(spark):
-    """A zero-norm corpus vector has no defined cosine: all four top-k
-    paths (HOF brute, Arrow brute, LSH, IVF) must exclude it instead of
-    crashing under ANSI (HOF) or ranking NaN first (Arrow)."""
+    """A zero-norm corpus vector has no defined cosine: all three top-k
+    paths (brute, LSH, IVF) must exclude it instead of crashing under
+    ANSI."""
     from xorbits_sql_spark.operators.similarity import (
         brute_topk,
-        brute_topk_arrow,
         kmeans_lloyd,
         ivf_topk,
         lsh_topk,
@@ -41,7 +40,7 @@ def test_zero_norm_vectors_never_rank(spark):
         ],
     )
     queries = _vec_df(spark, [(10, [1.0, 0.05, 0.2, 0.1])])
-    for fn in (brute_topk, brute_topk_arrow, lsh_topk):
+    for fn in (brute_topk, lsh_topk):
         got = fn(queries, corpus, k=3).toPandas()
         assert 3 not in set(got["cid"]), fn.__name__
         assert got["cosine"].notna().all(), fn.__name__
@@ -301,15 +300,14 @@ def test_lsh_topk_bits_zero_is_full_scan(spark):
     assert got == want and len(got) == 2
 
 
-def test_brute_topk_arrow_empty_query_set(spark):
-    """Zero queries must return an empty frame, not raise AxisError on
-    the driver (round-7 review)."""
-    from xorbits_sql_spark.operators.similarity import brute_topk_arrow
+def test_brute_topk_empty_query_set(spark):
+    """Zero queries return an empty frame with the usual columns."""
+    from xorbits_sql_spark.operators.similarity import brute_topk
 
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": [10, 11], "embedding": [[1.0, 0.0], [0.0, 1.0]]})
     )
     q = emb.filter(emb.vec_id < 0)
-    out = brute_topk_arrow(q, emb, k=3)
+    out = brute_topk(q, emb, k=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["qid", "cid", "cosine", "rank"]

@@ -3626,15 +3626,18 @@ _MYSQL_FMT = {
 _MYSQL_TIME_ONLY = {"%H", "%k", "%h", "%I", "%l", "%i", "%s", "%S", "%p", "%T", "%r"}
 
 
-def _mysql_datefmt(fmt: str) -> tuple[str, bool, bool]:
-    """MySQL format string → (Spark pattern, has_time_codes,
-    has_date_codes). Literal runs containing letters are single-quoted
+def _percent_datefmt(
+    fmt: str, codes: dict[str, str], what: str
+) -> tuple[str, list[str]]:
+    """%-code format string → (Spark pattern, the codes it used), for
+    mysql and bigquery. ``codes`` maps each supported code to its Spark
+    pattern; any other code raises, naming it as ``what`` ("mysql
+    format code"). Literal runs containing letters are single-quoted
     (Spark treats bare letters as pattern chars — THE silent-corruption
-    hazard this rewrite exists to close)."""
+    hazard these rewrites exist to close)."""
     out: list[str] = []
     lit: list[str] = []
-    has_time = False
-    has_date = False
+    seen: list[str] = []
 
     def flush() -> None:
         if not lit:
@@ -3652,23 +3655,18 @@ def _mysql_datefmt(fmt: str) -> tuple[str, bool, bool]:
     while p < len(fmt):
         if fmt[p] == "%":
             code = fmt[p : p + 2]
-            spark = _MYSQL_FMT.get(code)
+            spark = codes.get(code)
             if spark is None:
-                raise UnsupportedError(
-                    f"mysql format code {code!r} is not supported"
-                )
+                raise UnsupportedError(f"{what} {code!r} is not supported")
             flush()
             out.append(spark)
-            has_time = has_time or code in _MYSQL_TIME_ONLY
-            has_date = has_date or (
-                code not in _MYSQL_TIME_ONLY and code != "%%"
-            )
+            seen.append(code)
             p += 2
         else:
             lit.append(fmt[p])
             p += 1
     flush()
-    return "".join(out), has_time, has_date
+    return "".join(out), seen
 
 
 def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -3689,9 +3687,11 @@ def _rewrite_mysql_datefmt(tokens: list[tuple[str, str]]) -> list[tuple[str, str
             raise UnsupportedError(
                 f"{up} format must be a string literal"
             )
-        spark_fmt, has_time, has_date = _mysql_datefmt(
-            _unquote(fcode[0][1], "'")
+        spark_fmt, codes = _percent_datefmt(
+            _unquote(fcode[0][1], "'"), _MYSQL_FMT, "mysql format code"
         )
+        has_time = any(c in _MYSQL_TIME_ONLY for c in codes)
+        has_date = any(c not in _MYSQL_TIME_ONLY and c != "%%" for c in codes)
         # mysql TIME_FORMAT zeroes/NULLs DATE specifiers; Spark's
         # DATE_FORMAT would render them for real — refuse on ANY date
         # code (a mixed '%Y %H:%i' diverges silently), not just on
@@ -4970,41 +4970,6 @@ _BQ_FMT = {
 }
 
 
-def _bq_datefmt(fmt: str) -> str:
-    out: list[str] = []
-    lit: list[str] = []
-
-    def flush() -> None:
-        if not lit:
-            return
-        run = "".join(lit)
-        if "'" in run:
-            raise UnsupportedError(
-                "single quotes inside a date format literal are not "
-                "supported"
-            )
-        out.append(f"'{run}'" if any(c.isalpha() for c in run) else run)
-        lit.clear()
-
-    p = 0
-    while p < len(fmt):
-        if fmt[p] == "%":
-            code = fmt[p : p + 2]
-            spark = _BQ_FMT.get(code)
-            if spark is None:
-                raise UnsupportedError(
-                    f"bigquery format element {code!r} is not supported"
-                )
-            flush()
-            out.append(spark)
-            p += 2
-        else:
-            lit.append(fmt[p])
-            p += 1
-    flush()
-    return "".join(out)
-
-
 _BQ_FORMAT_FNS = {
     "FORMAT_DATE": "DATE_FORMAT", "FORMAT_TIMESTAMP": "DATE_FORMAT",
     "FORMAT_DATETIME": "DATE_FORMAT",
@@ -5028,7 +4993,10 @@ def _rewrite_bq_format(tokens: list[tuple[str, str]]) -> list[tuple[str, str]]:
             raise UnsupportedError(
                 f"{up} format must be a string literal"
             )
-        sql_fmt = _bq_datefmt(_unquote(fcode[0][1], "'")).replace("'", "''")
+        spark_fmt, _ = _percent_datefmt(
+            _unquote(fcode[0][1], "'"), _BQ_FMT, "bigquery format element"
+        )
+        sql_fmt = spark_fmt.replace("'", "''")
         return tokenize(f"{_BQ_FORMAT_FNS[up]}(") + args[1] + tokenize(
             f", '{sql_fmt}')"
         )

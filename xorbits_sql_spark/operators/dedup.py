@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..errors import PairBudgetExceededError
-from ..functions.text import fingerprint, norm_ws, word_shingles
+from ..functions.text import fingerprint, norm_ws
 
 # Intermediate signature/index tables persisted by the pair generators.
 # They must stay cached while the (lazy) result DataFrames are being
@@ -419,22 +419,6 @@ def boilerplate_coverage(
             F.coalesce("n_boiler", F.lit(0)).cast("bigint").alias("n_boiler"),
         )
     )
-
-
-def minhash_signature(text: Column, seeds: int = 8, shingle_k: int = 3) -> Column:
-    """Array of ``seeds`` MinHash values (hex strings) for the text.
-
-    Hash_i(doc) = min over shingles of md5(shingle || '#i'). Empty
-    shingle sets produce NULL entries.
-    """
-    shingles = word_shingles(text, k=shingle_k)
-
-    def salted_min(seed: int):
-        # NB: the lambda must be unary — pyspark passes the array index to
-        # binary transform lambdas, which would clobber a default-arg seed.
-        return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(s, F.lit(f"#{seed}")))))
-
-    return F.array(*[salted_min(i) for i in range(seeds)])
 
 
 def minhash_lsh_pairs(
@@ -1444,40 +1428,6 @@ def dedup_keepers(
     return df.join(losers, id_col, "left_anti")
 
 
-def simhash64(text: Column) -> Column:
-    """SimHash of the whitespace tokens, as BIGINT — 60 effective bits.
-
-    Per token: take the first 15 hex chars of md5 as a 60-bit integer
-    (16 chars could overflow a signed BIGINT under ANSI, so bits 60-63
-    are always 0 — tune ``max_hamming``/``prefix_bits`` against a
-    60-bit hash, not published 64-bit thresholds); each bit votes
-    +1/-1; the sign vector of the summed votes is the SimHash.
-    Near-duplicates differ in few bits (compare via
-    ``bit_count(a ^ b)``). Pure built-ins: split/explode-free — uses
-    aggregate over the token array so it stays one projection.
-    """
-    from ..functions.text import norm_ws
-
-    words = F.split(norm_ws(text), " ")
-    hashes = F.transform(words, lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("bigint"))
-    # votes[i] = sum over tokens of (bit_i ? 1 : -1)
-    # = 2 * ones_i - n_tokens; simhash bit_i = votes[i] >= 0
-    def ones_at(bit: int):
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc + F.shiftright(h, bit).bitwiseAND(F.lit(1)),
-        )
-
-    bit_sums = [ones_at(i) for i in range(60)]
-    n = F.size(words).cast("bigint")
-    bits = [(2 * s >= n).cast("bigint") for s in bit_sums]
-    out = F.lit(0).cast("bigint")
-    for i, b in enumerate(bits):
-        out = out + F.shiftleft(b, i)
-    return out
-
-
 def winnow_fingerprints(
     df: DataFrame, text_col: str, id_col: str, k: int = 8, w: int = 4
 ) -> DataFrame:
@@ -1513,12 +1463,20 @@ def winnow_fingerprints(
 def simhash_relational(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc, sh) SimHash signatures via an explode → groupBy plan.
 
-    Same bit semantics as :func:`simhash64`, but instead of 60
-    interpreted ``F.aggregate`` passes over the token array per row
-    (measured ~50x slower at sf0.1), tokens become rows once and the 60
-    per-bit vote totals are ordinary codegen'd ``sum`` aggregates in a
-    single hash aggregation — one shuffle on doc id, map-side partial
-    aggregation, scales linearly in total token count.
+    SimHash of the whitespace tokens, as BIGINT — 60 effective bits.
+    Per token: the first 15 hex chars of md5 as a 60-bit integer (16
+    chars could overflow a signed BIGINT under ANSI, so bits 60-63 are
+    always 0 — tune ``max_hamming``/``prefix_bits`` against a 60-bit
+    hash, not published 64-bit thresholds); each bit votes +1/-1, and
+    the sign vector of the summed votes is the SimHash. Near-duplicates
+    differ in few bits (compare via ``bit_count(a ^ b)``).
+
+    Tokens become rows once and the 60 per-bit vote totals are ordinary
+    codegen'd ``sum`` aggregates in a single hash aggregation — one
+    shuffle on doc id, map-side partial aggregation, linear in total
+    token count. (The per-row array form, 60 interpreted
+    ``F.aggregate`` passes over the token array, measured ~50x slower
+    at sf0.1.)
     """
     words = F.split(norm_ws(F.col(text_col)), " ")
     toks = df.select(F.col(id_col).alias("doc"), F.explode(words).alias("w"))

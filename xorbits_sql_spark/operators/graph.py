@@ -48,7 +48,9 @@ def kcore_peel_counts(
     ``i-1``'s edge set and drops every edge touching a peeled node.
     All counts are exact integers, so both tiers below are
     value-identical by construction. Ids must be integral
-    (``TypeError`` otherwise, as in ``connected_components``).
+    (``TypeError`` otherwise, as in ``connected_components``), and an
+    edge with a NULL end names no node: it is dropped before counting,
+    as ``connected_components`` drops such pairs.
 
     Two tiers, picked from the edge count alone, the
     ``connected_components`` size-gate contract. One job checkpoints
@@ -81,7 +83,7 @@ def kcore_peel_counts(
         edges.select(
             F.col(src).cast("bigint").alias("u"),
             F.col(dst).cast("bigint").alias("v"),
-        )
+        ).dropna()
     )
     if seen["rows"] <= dedup._DRIVER_ROWS:
         pdf = raw.toPandas()

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns.
 
-Two strategies:
+Three strategies:
 
 * ``brute_topk`` — exact cosine top-k: broadcast the (small) query set
   against the corpus, score with codegen'd array math, take top-k per
@@ -11,6 +11,10 @@ Two strategies:
   sign-bit LSH (functions.vectors.sign_bucket), score only within
   matching buckets. Turns the scan into a hash-join on the bucket key;
   recall traded via ``bits``.
+* ``ivf_topk`` — approximate: bucket the corpus by nearest centroid
+  (``ivf_assign``; train the centroids with ``kmeans_lloyd``), probe
+  each query's ``nprobe`` nearest cells, score only their members.
+  Recall/cost traded via (|centroids|, ``nprobe``).
 
 No Python UDFs anywhere — scoring is zip_with/aggregate (JVM).
 
@@ -72,30 +76,6 @@ def _pair_cosine() -> F.Column:
     )
 
 
-def _tie_safe_topk(s, cids, top):
-    """Indices of the ``top`` best rows of ``s`` by (score desc, cid asc).
-
-    O(n) argpartition first, then the cut is EXTENDED to every row tied
-    with the boundary score before the small composite lexsort — so a
-    tie family larger than ``top`` (dedup corpora: whole cliques at
-    cosine 1.0) cannot lose its globally-smallest cids to an arbitrary
-    partition, at near-argpartition cost instead of a full per-batch
-    O(n log n) lexsort. Falls back to the full lexsort when the
-    boundary score is NaN (fewer than ``top`` finite scores, e.g.
-    zero-norm vectors), preserving NaN-last ordering.
-    """
-    import numpy as np
-
-    if top >= s.shape[0]:
-        return np.lexsort((cids, -s))[:top]
-    part = np.argpartition(-s, top - 1)
-    kth = s[part[top - 1]]
-    if not np.isfinite(kth):
-        return np.lexsort((cids, -s))[:top]
-    cut = np.flatnonzero(s >= kth)
-    return cut[np.lexsort((cids[cut], -s[cut]))][:top]
-
-
 def brute_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -121,96 +101,6 @@ def brute_topk(
         scored = scored.filter(F.col("qid") != F.col("cid"))
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def brute_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    qid: str = "vec_id",
-    cid: str = "vec_id",
-    vec: str = "embedding",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy scoring — the 100 TB
-    hot path for :func:`brute_topk`.
-
-    Spark evaluates higher-order array lambdas interpretively (measured
-    ~40k dot/s/core at dim 64 in the 100x scale rehearsal,
-    scripts/scale_rehearsal.py), so pair-heavy exact scoring burns CPU
-    two orders of magnitude over BLAS. This variant broadcasts the
-    (small-by-contract) query matrix into a ``mapInPandas`` over the
-    corpus: each Arrow batch computes one ``C @ Q.T`` GEMM and emits
-    only its per-query top-(k+8) candidates, so the post-UDF window
-    ranks partitions*queries*(k+8) rows, never the full pair set. The
-    corpus is scanned once and never shuffled — identical shuffle
-    economy to :func:`brute_topk`.
-
-    Ranks match :func:`brute_topk` (ties broken by ascending cid on
-    both paths; the +8 per-batch slack keeps ulp-level reorderings at
-    the cut from dropping a true top-k member). Cosine VALUES may
-    differ from the HOF path in the last ulps because BLAS accumulates
-    in a different order than a sequential fold — which is why the
-    DuckDB-oracle-checked inventory entries (q70/r73) keep the HOF
-    spelling and this is the documented production swap-in.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = queries.select(F.col(qid).alias("q"), F.col(vec).alias("v")).collect()
-    if not rows:
-        # empty query set: np.array([]) is 1-D and the axis-1 norm
-        # would raise on the driver — return the empty result
-        # brute_topk produces for the same input
-        schema = "qid long, cid long, cosine double, rank int"
-        return queries.sparkSession.createDataFrame([], schema)
-    qids = np.array([r["q"] for r in rows], dtype=np.int64)
-    qmat = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    qn = np.sqrt((qmat * qmat).sum(axis=1))
-    take = k + (1 if exclude_self else 0) + 8
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cmat = np.array(pdf["cvec"].tolist(), dtype=np.float64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            cn = np.sqrt((cmat * cmat).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = (cmat @ qmat.T) / np.outer(cn, qn)  # (batch, m)
-            # a zero-norm vector has no defined cosine: mask to -inf so
-            # it sorts LAST in the cut and is dropped before emission —
-            # unmasked NaN would instead rank FIRST in the post-UDF
-            # desc window (Spark orders NaN above all doubles), putting
-            # a garbage vector at rank 1. Matches the HOF paths, which
-            # NULL it via try_divide and filter.
-            sims[~np.isfinite(sims)] = -np.inf
-            top = min(take, sims.shape[0])
-            out = []
-            for j in range(sims.shape[1]):
-                # tie-safe cut (see _tie_safe_topk): rows tied at the
-                # boundary score join the composite sort so rank
-                # identity with brute_topk holds on clique-sized ties.
-                sel = _tie_safe_topk(sims[:, j], cids, top)
-                sel = sel[np.isfinite(sims[sel, j])]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": np.full(len(sel), qids[j]),
-                            "cid": cids[sel],
-                            "cosine": sims[sel, j],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    cand = corpus.select(F.col(cid).alias("cid"), F.col(vec).alias("cvec")).mapInPandas(
-        score, schema="qid long, cid long, cosine double"
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("qid") != F.col("cid"))
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def lsh_topk(
@@ -266,19 +156,7 @@ def ivf_assign(
     Returns (cid, cvec, cn, cell).
     """
     c = _side(corpus, cid, vec, "cid", "cvec", "cn")
-    cents = centroids.select(
-        F.col(cell_id).alias("cell"),
-        F.col(cell_vec).alias("kvec"),
-        norm(F.col(cell_vec)).alias("kn"),
-    )
-    # try_divide — zero-norm vectors/centroids score NULL (sorts last
-    # under desc) instead of raising DIVIDE_BY_ZERO under ANSI
-    score = F.try_divide(
-        dot(F.col("cvec"), F.col("kvec")), F.col("cn") * F.col("kn")
-    )
-    scored = c.crossJoin(F.broadcast(cents)).select(
-        "cid", "cvec", "cn", "cell", score.alias("score")
-    )
+    scored = _score_cells(c, centroids, cell_id, cell_vec, "cvec", "cn", ("cid", "cvec", "cn"))
     return scored.groupBy("cid").agg(
         F.max_by("cell", F.struct(F.col("score"), -F.col("cell"))).alias("cell"),
         F.first("cvec").alias("cvec"),
@@ -286,34 +164,44 @@ def ivf_assign(
     )
 
 
-def _probe_cells(
-    q: DataFrame,
+def _score_cells(
+    side: DataFrame,
     centroids: DataFrame,
-    nprobe: int,
     cell_id: str,
     cell_vec: str,
-    carry: tuple[str, ...],
+    vec: str,
+    n: str,
+    keep: tuple[str, ...],
+    score: str = "score",
 ) -> DataFrame:
-    """Pick each query's ``nprobe`` nearest cells against the broadcast
-    centroid table — the probe-selection step shared by ivf_topk and
-    ivf_topk_arrow (previously copy-pasted; round-7 review). try_divide:
-    a zero-norm query/centroid has no cosine — NULL probe scores sort
-    last (never probed) instead of raising under ANSI."""
+    """Every row of ``side`` against the broadcast centroid table:
+    ``keep``, ``cell`` and the cosine of ``vec`` (norm ``n``) to the
+    cell as ``score``. A map-side nested loop with no shuffle of
+    ``side``; each caller aggregates the candidates its own way.
+    try_divide: a zero-norm vector or centroid scores NULL (sorts last
+    under desc) instead of raising DIVIDE_BY_ZERO under ANSI."""
     cents = centroids.select(
         F.col(cell_id).alias("cell"),
         F.col(cell_vec).alias("kvec"),
         norm(F.col(cell_vec)).alias("kn"),
     )
-    qscore = F.try_divide(
-        dot(F.col("qvec"), F.col("kvec")), F.col("qn") * F.col("kn")
-    )
+    cosine = F.try_divide(dot(F.col(vec), F.col("kvec")), F.col(n) * F.col("kn"))
+    return side.crossJoin(F.broadcast(cents)).select(*keep, "cell", cosine.alias(score))
+
+
+def _probe_cells(
+    q: DataFrame, centroids: DataFrame, nprobe: int, cell_id: str, cell_vec: str
+) -> DataFrame:
+    """Pick each query's ``nprobe`` nearest cells against the broadcast
+    centroid table; NULL probe scores (zero-norm query or centroid)
+    sort last, so such a cell is never probed."""
     wprobe = W.partitionBy("qid").orderBy(F.desc("probe_score"), F.asc("cell"))
+    keep = ("qid", "qvec", "qn")
     return (
-        q.crossJoin(F.broadcast(cents))
-        .select("qid", *carry, "cell", qscore.alias("probe_score"))
+        _score_cells(q, centroids, cell_id, cell_vec, "qvec", "qn", keep, "probe_score")
         .withColumn("probe_rank", F.row_number().over(wprobe))
         .filter(F.col("probe_rank") <= nprobe)
-        .select("qid", *carry, "cell")
+        .select(*keep, "cell")
     )
 
 
@@ -341,106 +229,13 @@ def ivf_topk(
     """
     cells = ivf_assign(corpus, centroids, cid=cid, vec=vec, cell_id=cell_id, cell_vec=cell_vec)
     q = _side(queries, qid, vec, "qid", "qvec", "qn")
-    probes = _probe_cells(q, centroids, nprobe, cell_id, cell_vec, ("qvec", "qn"))
+    probes = _probe_cells(q, centroids, nprobe, cell_id, cell_vec)
     scored = probes.join(cells, "cell")
     if exclude_self:
         scored = scored.filter(F.col("qid") != F.col("cid"))
     scored = scored.select("qid", "cid", _pair_cosine().alias("cosine"))
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    qid: str = "vec_id",
-    cid: str = "vec_id",
-    vec: str = "embedding",
-    cell_id: str = "cell",
-    cell_vec: str = "cvec",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """IVF top-k with per-cell GEMM scoring — the 100 TB probe path.
-
-    Same index and probe-selection plan as :func:`ivf_topk` (broadcast
-    centroids pick each query's ``nprobe`` cells), but the candidate
-    scoring runs as a cogrouped ``applyInPandas`` on the cell key: each
-    cell's member matrix meets its probing queries in one numpy GEMM
-    instead of per-pair interpreted array lambdas (measured ~40k
-    dots/s/core for the HOF path at dim 64 — scripts/scale_rehearsal.py
-    — vs BLAS throughput here). Each cell task emits only per-query
-    top-(k+8) candidates, so the final window ranks
-    queries*nprobe*(k+8) rows.
-
-    Shuffle economy: probes (queries*nprobe short rows) and the cell
-    members shuffle once on the cell key — at scale the corpus index is
-    stored partitioned by cell, making the right side shuffle-free.
-    Rank-identical to :func:`ivf_topk` (ties by ascending cid); cosine
-    values may differ in the last ulps (BLAS accumulation order), which
-    is why the oracle-checked entries keep the HOF spelling.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cells = ivf_assign(
-        corpus, centroids, cid=cid, vec=vec, cell_id=cell_id, cell_vec=cell_vec
-    )
-    q = _side(queries, qid, vec, "qid", "qvec", "qn")
-    probes = _probe_cells(q, centroids, nprobe, cell_id, cell_vec, ("qvec",))
-    take = k + (1 if exclude_self else 0) + 8
-    empty = pd.DataFrame(
-        {
-            "qid": pd.Series(dtype="int64"),
-            "cid": pd.Series(dtype="int64"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-    )
-
-    def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return empty
-        qmat = np.array(left["qvec"].tolist(), dtype=np.float64)
-        qn_ = np.sqrt((qmat * qmat).sum(axis=1))
-        qids = left["qid"].to_numpy(dtype=np.int64)
-        cmat = np.array(right["cvec"].tolist(), dtype=np.float64)
-        cn_ = right["cn"].to_numpy(dtype=np.float64)
-        cids = right["cid"].to_numpy(dtype=np.int64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (cmat @ qmat.T) / np.outer(cn_, qn_)  # (members, queries)
-        # zero-norm mask — see brute_topk_arrow: NaN would rank FIRST
-        # in the post-UDF desc window
-        sims[~np.isfinite(sims)] = -np.inf
-        top = min(take, sims.shape[0])
-        out = []
-        for j in range(sims.shape[1]):
-            # tie-safe cut — see _tie_safe_topk: boundary-tied rows
-            # join the composite sort, so clique-sized tie families
-            # keep their smallest cids at near-argpartition cost.
-            sel = _tie_safe_topk(sims[:, j], cids, top)
-            sel = sel[np.isfinite(sims[sel, j])]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "qid": np.full(len(sel), qids[j]),
-                        "cid": cids[sel],
-                        "cosine": sims[sel, j],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True)
-
-    cand = (
-        probes.groupBy("cell")
-        .cogroup(cells.groupBy("cell"))
-        .applyInPandas(score_cell, schema="qid long, cid long, cosine double")
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("qid") != F.col("cid"))
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def embedding_dup_pairs(
@@ -815,17 +610,7 @@ def assign_with_score(
     ``cell_id``/``cell_vec`` name the centroid table's columns, like
     ivf_assign (previously hardcoded; round-7 review)."""
     c = _side(corpus, cid, vec, "cid", "cvec", "cn")
-    cents = centroids.select(
-        F.col(cell_id).alias("cell"),
-        F.col(cell_vec).alias("kvec"),
-        norm(F.col(cell_vec)).alias("kn"),
-    )
-    # try_divide — zero-norm vectors/centroids score NULL (sorts last
-    # under desc) instead of raising DIVIDE_BY_ZERO under ANSI
-    score = F.try_divide(
-        dot(F.col("cvec"), F.col("kvec")), F.col("cn") * F.col("kn")
-    )
-    scored = c.crossJoin(F.broadcast(cents)).select("cid", "cell", score.alias("score"))
+    scored = _score_cells(c, centroids, cell_id, cell_vec, "cvec", "cn", ("cid",))
     best = F.max(F.struct(F.col("score"), (-F.col("cell")).alias("neg_cell")))
     return scored.groupBy("cid").agg(best.alias("b")).select(
         "cid", (-F.col("b.neg_cell")).cast("bigint").alias("cell"), F.col("b.score").alias("score")
