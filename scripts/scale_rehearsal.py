@@ -34,6 +34,7 @@ import json
 import os
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -205,14 +206,24 @@ def main() -> None:
         make().agg(F.count(F.lit(1))).collect()
         cold = time.perf_counter() - t0
         release_caches()
-        # last_cc_rounds is a module global reset only when a CC runs;
-        # zero it so a non-CC pipeline doesn't inherit the previous
-        # pipeline's round count in its recorded row.
-        dedup.last_cc_rounds = 0
-        t0 = time.perf_counter()
-        summary = make().agg(F.count(F.lit(1)).alias("n"))
-        rows = summary.collect()[0]["n"]
-        warm = time.perf_counter() - t0
+        # rounds of the last distributed CC loop the warm pass ran (0
+        # when none ran), read through wrappers on the two loops
+        rounds = [0]
+
+        def recording(loop):
+            def wrapper(*a, **k):
+                labels, rounds[0] = loop(*a, **k)
+                return labels, rounds[0]
+
+            return wrapper
+
+        with mock.patch.object(
+            dedup, "_cc_alternating_stars", recording(dedup._cc_alternating_stars)
+        ), mock.patch.object(dedup, "_cc_propagation", recording(dedup._cc_propagation)):
+            t0 = time.perf_counter()
+            summary = make().agg(F.count(F.lit(1)).alias("n"))
+            rows = summary.collect()[0]["n"]
+            warm = time.perf_counter() - t0
         m = collect_metrics(summary)
         release_caches()
         results[name] = {
@@ -222,13 +233,13 @@ def main() -> None:
             "shuffle_records": m.get("shuffle_records_written", 0),
             "shuffle_mb": round(m.get("shuffle_bytes_written", 0) / 1e6, 1),
             "spill_bytes": m.get("spill_bytes", 0),
-            "cc_rounds": dedup.last_cc_rounds,
+            "cc_rounds": rounds[0],
             "note": note,
         }
         print(f"# {name}: cold {cold:.1f}s warm {warm:.1f}s rows={rows:,} "
               f"shuffle={m.get('shuffle_records_written', 0):,}rec/"
               f"{m.get('shuffle_bytes_written', 0) / 1e6:.1f}MB "
-              f"spill={m.get('spill_bytes', 0)} cc_rounds={dedup.last_cc_rounds}")
+              f"spill={m.get('spill_bytes', 0)} cc_rounds={rounds[0]}")
 
     if args.tier in ("dedup", "all"):
         # ---- dedup/ANN tier (round-3 task #5) ----
@@ -443,7 +454,7 @@ def main() -> None:
     print("| --- | --- | --- | --- | --- | --- | --- | --- | --- |")
     for name, r in results.items():
         # CC round count is meaningful wherever a CC ran inside the
-        # pipeline (lsh_*_cc, t54, t93) — last_cc_rounds is None
+        # pipeline (lsh_*_cc, t54, t93) — cc_rounds is 0 or None
         # otherwise, so truthiness is the right filter.
         cc = r["cc_rounds"] if ("cc" in name or r.get("cc_rounds")) else ""
         print(

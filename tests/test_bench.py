@@ -1,7 +1,12 @@
-"""bench.py harness units: headline filter edge shapes and the
-worktree A/B drift adjudication (round-4 verdict #5)."""
+"""bench.py harness units: headline filter edge shapes, the (sf, cpus)
+baseline keying, and the provenance dirtiness rule."""
 
 from __future__ import annotations
+
+import json
+import types
+
+import pytest
 
 import bench
 
@@ -12,6 +17,7 @@ def test_compact_headline_filter_shapes():
         "value": 1.0,
         "unit": "sec",
         "sf": "x",
+        "cpus": 4,
         "n_queries": 4,
         "value_cold": 2.0,
         "failures": {},
@@ -19,118 +25,107 @@ def test_compact_headline_filter_shapes():
         # n[3] raised IndexError on 3-char keys)
         "queries": {"q01_a": 1.0, "q05": 9.0, "q100_h": 3.0, "t01_x": 2.0},
     }
-    head = bench._compact(out)["queries"]
-    assert head == {"q01_a": 1.0}
+    compact = bench._compact(out)
+    assert compact["queries"] == {"q01_a": 1.0}
+    assert compact["full_results"] == "BENCH_LOCAL_c4.json"
 
 
-def test_adjudicate_regressions_empty_short_circuit():
-    assert bench._adjudicate_regressions({}, "/nonexistent") == {}
+SF = "/data/sf0.1"
+# a 1.0 s cell against a 0.1 s baseline: ratio 10, delta 0.9 s -> flags;
+# against 0.9 s it never flags
+BASE = {"slow_x": 0.1, "same_y": 0.9}
 
 
-def test_adjudicate_regressions_worktree_ab(tmp_path):
-    """Same code on both sides of the A/B (HEAD vs the baseline-commit
-    worktree, re-timed back-to-back in fresh JVMs) must adjudicate a
-    fake flagged regression as machine drift — and clean up its
-    worktree. ~4 JVM startups (ABBA: H,B,B,H), the price of trusting BENCH regression
-    flags."""
-    import subprocess
-
-    regs = {"q01_pricing_summary": {"sec": 99.0, "baseline_sec": 0.1, "ratio": 990.0}}
-    out = bench._adjudicate_regressions(regs, "/root/testdata/sf0.001")
-    adj = out["q01_pricing_summary"]["adjudication"]
-    assert adj["verdict"] == "drift", adj
-    assert adj["head_sec"] > 0 and adj["baseline_code_sec"] > 0
-    wt = subprocess.run(
-        ["git", "worktree", "list"], capture_output=True, text=True, cwd="/root/repo"
-    ).stdout
-    assert "bench_ab_" not in wt
-
-
-def test_ab_verdict_needs_relative_and_scaled_absolute_gap():
-    # jitter shapes: big ratio on a small absolute delta, or big delta
-    # at a small ratio — both drift
-    assert bench._ab_verdict(0.5, 0.39) == "drift"      # q52 shape: delta 0.11
-    assert bench._ab_verdict(0.72, 0.56) == "drift"     # s09 shape: delta 0.16 < 0.35*base
-    assert bench._ab_verdict(10.0, 8.5) == "drift"      # ratio 1.18
-    # sub-second: ratio must clear 1.5, not just 1.25
-    assert bench._ab_verdict(0.7, 0.5) == "drift"       # ratio 1.4 < 1.5 at <1s
-    # a real regression clears both bars
-    assert bench._ab_verdict(2.0, 1.0) == "confirmed"
-    assert bench._ab_verdict(0.9, 0.5) == "confirmed"   # ratio 1.8, delta 0.4
-    assert bench._ab_verdict(13.0, 10.0) == "confirmed" # big query: bar capped at 0.5
-
-
-def test_near_miss_drift_tracker_units():
-    """scripts/check_near_miss_drift.py: the consecutive-repeat logic
-    (round-6 verdict #6) — a query near-missing in >=2 consecutive
-    evaluated rounds is a repeat; gaps and non-adjacent rounds are not."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "check_near_miss_drift",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "check_near_miss_drift.py"),
+@pytest.fixture
+def rig(tmp_path, monkeypatch):
+    """bench's artifact directory moved to tmp_path, holding one
+    accepted (SF, 32-core) baseline."""
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    (tmp_path / "BENCH_BASELINE_c32.json").write_text(
+        json.dumps({"sf": SF, "cpus": 32, "value": 0.5, "queries": BASE})
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    # adjacent rounds, same name -> repeat spanning both
-    reps = mod.consecutive_repeats([(5, {"qa"}), (6, {"qa", "qb"}), (7, {"qa"})])
-    assert reps == {"qa": [5, 6, 7]}
-    # non-adjacent (round gap) -> no repeat
-    assert mod.consecutive_repeats([(5, {"qa"}), (7, {"qa"})]) == {}
-    # a no-data round (None) breaks the streak conservatively
-    assert mod.consecutive_repeats([(5, {"qa"}), (6, None), (7, {"qa"})]) == {}
-    # different names never repeat
-    assert mod.consecutive_repeats([(5, {"qa"}), (6, {"qb"})]) == {}
-    # two DISJOINT streaks both report in full (round-7 review finding:
-    # the second streak's starting round was dropped)
-    assert mod.consecutive_repeats(
-        [(5, {"qa"}), (6, {"qa"}), (7, set()), (8, {"qa"}), (9, {"qa"})]
-    ) == {"qa": [5, 6, 8, 9]}
-    # a 1-round reappearance after a gap is not a repeat
-    assert mod.consecutive_repeats(
-        [(5, {"qa"}), (6, {"qa"}), (7, set()), (8, {"qa"})]
-    ) == {"qa": [5, 6]}
+    return tmp_path
 
 
-def test_near_miss_repeats_are_escalated_in_baseline_md():
-    """Run the tracker over the repo's real BENCH_r*.json files: any
-    repeated near-miss must have an isolated re-time entry in
-    BASELINE.md (the round-6 verdict's escalation discipline) — slow
-    creep on sub-second queries must not accumulate silently."""
-    import importlib.util
-    import os
+def test_baseline_from_other_cpus_flags_nothing(rig):
+    timings = {"slow_x": 1.0, "same_y": 1.0}
+    assert bench._load_baseline_queries(SF, 4) == {}
+    out = bench._vs_baseline(timings, SF, 4)
+    assert set(out["baseline"]) == {"skipped"}
+    assert "BENCH_BASELINE_c4.json" in out["baseline"]["skipped"]
+    # the same sf dir is not enough, and neither is the right cpus at
+    # another sf dir
+    assert bench._load_baseline_queries("/data/sf1", 32) == {}
 
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    spec = importlib.util.spec_from_file_location(
-        "check_near_miss_drift",
-        os.path.join(repo, "scripts", "check_near_miss_drift.py"),
+
+def test_baseline_with_matching_cpus_flags_as_before(rig):
+    timings = {"slow_x": 1.0, "same_y": 0.5, "new_z": 3.0}
+    assert bench._load_baseline_queries(SF, 32) == BASE
+    base = bench._vs_baseline(timings, SF, 32)["baseline"]
+    assert base["regressions"] == {
+        "slow_x": {"sec": 1.0, "baseline_sec": 0.1, "ratio": 10.0}
+    }
+    assert base["new_queries"] == ["new_z"]
+    assert base["ratio"] == 1.5
+    # the absolute floor is on the delta, and 8 s for streaming entries
+    assert not bench._regressed("slow_x", 0.39, BASE, frozenset())
+    assert bench._regressed("slow_x", 0.41, BASE, frozenset())
+    assert not bench._regressed("slow_x", 8.0, BASE, {"slow_x"})
+
+
+def _run_main(monkeypatch, cpus: int) -> tuple[dict, dict]:
+    """bench.main over two fake 1.0 s queries on a fake clock; returns
+    (executions per query, the written snapshot)."""
+    import xorbits_sql_spark.queries as queries
+    import xorbits_sql_spark.session as session
+
+    clock = [0.0]
+    runs = {name: 0 for name in BASE}
+
+    def spec(name):
+        def fn(_spark, _sf):
+            def count():
+                runs[name] += 1
+                clock[0] += 1.0
+
+            return types.SimpleNamespace(count=count)
+
+        return types.SimpleNamespace(fn=fn, tags=())
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(queries, "load_all", lambda: {n: spec(n) for n in BASE})
+    monkeypatch.setattr(
+        bench, "time", types.SimpleNamespace(perf_counter=lambda: clock[0], time=lambda: 0.0)
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    bench.main()
+    with open(bench._snapshot_path(cpus)) as f:
+        return runs, json.load(f)
 
-    rounds = [(rnd, mod.near_misses(path)) for rnd, path in mod.round_files()]
-    repeats = mod.consecutive_repeats(rounds)
-    if not repeats:
-        return
-    baseline_md = open(os.path.join(repo, "BASELINE.md")).read()
-    unescalated = [name for name in repeats if name not in baseline_md]
-    assert not unescalated, (
-        f"near-miss repeats {unescalated} lack a BASELINE.md re-time entry "
-        f"(full repeat map: {repeats})"
+
+def test_main_keys_suspect_gate_by_cpus(rig, monkeypatch, capsys):
+    # 4 cores against the 32-core baseline: one cold and one warm pass
+    # per query, nothing re-measured, nothing flagged
+    runs, snap = _run_main(monkeypatch, 4)
+    assert runs == {"slow_x": 2, "same_y": 2}
+    assert snap["cpus"] == 4 and set(snap["baseline"]) == {"skipped"}
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["full_results"] == (
+        "BENCH_LOCAL_c4.json"
     )
+    # 32 cores: the suspect is re-measured twice more and flagged
+    runs, snap = _run_main(monkeypatch, 32)
+    assert runs == {"slow_x": 4, "same_y": 2}
+    assert snap["cpus"] == 32
+    assert list(snap["baseline"]["regressions"]) == ["slow_x"]
 
 
 def test_git_provenance_excludes_bench_artifacts(tmp_path):
-    """Round-9 protocol fix: BENCH_HISTORY/BENCH_LOCAL became tracked
-    in round 8, after which every bench run dirtied the tree for the
-    NEXT run and the 3-clean-run median anchor could never be
-    satisfied. bench's own output artifacts must not count as
-    dirtiness; any other tracked modification must."""
+    """bench's own output artifacts (BENCH_HISTORY.jsonl and every
+    BENCH_LOCAL_c*.json) are tracked; a run that rewrites them must not
+    mark the NEXT run dirty, or the 3-clean-run median anchor could
+    never be satisfied. Any other tracked modification must."""
     import subprocess
-
-    import bench
 
     def git(*args):
         subprocess.run(["git", *args], cwd=tmp_path, check=True,
@@ -139,15 +134,16 @@ def test_git_provenance_excludes_bench_artifacts(tmp_path):
     git("init", "-q")
     git("config", "user.email", "t@t")
     git("config", "user.name", "t")
-    for name in ("BENCH_HISTORY.jsonl", "BENCH_LOCAL.json", "code.py"):
+    artifacts = ("BENCH_HISTORY.jsonl", "BENCH_LOCAL_c8.json", "BENCH_LOCAL_c4.json")
+    for name in (*artifacts, "code.py"):
         (tmp_path / name).write_text("x\n")
     git("add", "-A")
     git("commit", "-q", "-m", "init")
     sha, dirty = bench._git_provenance(str(tmp_path))
     assert len(sha) == 40 and not dirty
     # bench artifacts modified -> still clean
-    (tmp_path / "BENCH_HISTORY.jsonl").write_text("y\n")
-    (tmp_path / "BENCH_LOCAL.json").write_text("y\n")
+    for name in artifacts:
+        (tmp_path / name).write_text("y\n")
     assert bench._git_provenance(str(tmp_path)) == (sha, False)
     # untracked file -> still clean (can't change timings)
     (tmp_path / "scratch.txt").write_text("z\n")

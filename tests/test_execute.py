@@ -127,3 +127,66 @@ def test_ctas_insert_roundtrip(spark, tmp_path):
         assert [(r["k"], r["s"]) for r in got] == [("a", 1.0), ("b", 2.0), ("c", 3.0)]
     finally:
         spark.sql("DROP TABLE IF EXISTS ctas_t")
+
+
+def test_concurrent_calls_see_only_their_own_tables(spark):
+    """Two threads run the same query over a table both call ``t``,
+    each with its own data: every result must come from the caller's
+    own rows, never from the other thread's view of the same name."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def worker(k: int) -> int:
+        rows = [{"v": k * 1000 + i} for i in range(5)]
+        wrong = 0
+        for _ in range(100):
+            got = execute("SELECT MAX(v) AS m FROM t", tables={"t": rows}, spark=spark)
+            wrong += got.collect()[0]["m"] != k * 1000 + 4
+        return wrong
+
+    with ThreadPoolExecutor(2) as pool:
+        assert list(pool.map(worker, (1, 2))) == [0, 0]
+    assert not spark.catalog.tableExists("t")
+
+
+def test_execute_leaves_no_temp_view(spark, tmp_path):
+    """Plain names, flattened ``db.t`` names and READ_CSV scans are all
+    gone from the catalog when execute() returns, and the lazy result
+    still collects; a persisted DataFrame passed as a table stays
+    cached; a script's own view stays but cannot read the call's tables
+    any more."""
+    from xorbits_sql_spark.errors import TableNotFoundError
+
+    csv = tmp_path / "pts.csv"
+    csv.write_text("k,w\na,10\nb,20\n")
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    cached = spark.createDataFrame([("a",)], "k string").persist()
+    before = temp_views()
+    try:
+        got = execute(
+            "SELECT p.k, p.v, c.w FROM plain_t AS p JOIN db.nested_t AS n ON p.k = n.k "
+            f"JOIN READ_CSV('{csv}') AS c ON p.k = c.k ORDER BY p.k",
+            tables={"plain_t": [{"k": "a", "v": 1}, {"k": "b", "v": 2}], "db": {"nested_t": cached}},
+            spark=spark,
+        )
+        assert temp_views() == before
+        assert [tuple(r) for r in got.collect()] == [("a", 1, 10)]
+        assert cached.storageLevel.useMemory
+    finally:
+        cached.unpersist()
+
+    got = execute(
+        "CREATE OR REPLACE TEMP VIEW script_v AS SELECT v * 10 AS y FROM plain_t; "
+        "SELECT SUM(y) AS s FROM script_v",
+        tables={"plain_t": [{"v": 1}, {"v": 2}]},
+        spark=spark,
+    )
+    try:
+        assert temp_views() == before | {"script_v"}
+        assert got.collect()[0]["s"] == 30
+        with pytest.raises(TableNotFoundError):
+            execute("SELECT * FROM script_v", spark=spark).collect()
+    finally:
+        spark.catalog.dropTempView("script_v")

@@ -129,10 +129,10 @@ _CC_PINS = {
 }
 
 
-def _cc_run(pairs, **bounds) -> tuple[dict, str]:
+def _cc_run(pairs, **bounds) -> tuple[dict, str, int]:
     """connected_components' labels with ``bounds`` patched into
-    ``dedup``, and the tier that ran, read from spies on the three tier
-    functions."""
+    ``dedup``, the tier that ran and the rounds it executed (0 on the
+    driver), read from spies on the three tier functions."""
     from contextlib import ExitStack
 
     from xorbits_sql_spark.operators import dedup
@@ -148,12 +148,12 @@ def _cc_run(pairs, **bounds) -> tuple[dict, str]:
     labels = {r["id"]: r["component"] for r in rows}
     assert len(labels) == len(rows)  # one row per node
     (tier,) = [t for t, seen in ran.items() if seen]
-    assert dedup.last_cc_algorithm == tier
-    return labels, tier
+    rounds = 0 if tier == "driver" else ran[tier][0][1]
+    return labels, tier, rounds
 
 
 def _cc_labels(pairs, tier: str) -> dict:
-    labels, ran = _cc_run(pairs, **_CC_PINS[tier])
+    labels, ran, _rounds = _cc_run(pairs, **_CC_PINS[tier])
     assert ran == tier
     return labels
 
@@ -512,7 +512,6 @@ def test_connected_components_stars_equals_propagation(spark):
     like the reference propagation loop on adversarial shapes: a long
     chain, overlapping cliques, a binary-tree star-cap topology, a
     deterministic pseudo-random graph, and self-loop-only nodes."""
-    from xorbits_sql_spark.operators import dedup
     from xorbits_sql_spark.operators.dedup import release_caches
 
     edges = (
@@ -533,8 +532,8 @@ def test_connected_components_stars_equals_propagation(spark):
         ]
     )
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    stars = _cc_labels(pairs, "stars")
-    stars_rounds = dedup.last_cc_rounds
+    stars, ran, stars_rounds = _cc_run(pairs, **_CC_PINS["stars"])
+    assert ran == "stars"
     prop = _cc_labels(pairs, "propagation")
     release_caches()
     assert stars == prop
@@ -548,7 +547,6 @@ def test_connected_components_auto_pick(spark):
     it: driver union-find at/below ``_DRIVER_ROWS``, propagation below
     ``_CC_STARS_EDGES``, stars at/above it — identical labels at every
     crossing."""
-    from xorbits_sql_spark.operators import dedup
     from xorbits_sql_spark.operators.dedup import release_caches
 
     pairs = spark.createDataFrame(
@@ -556,15 +554,14 @@ def test_connected_components_auto_pick(spark):
         "id_a bigint, id_b bigint",
     )
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-    assert _cc_run(pairs) == (expected, "driver")
-    assert dedup.last_cc_rounds == 0
+    assert _cc_run(pairs) == (expected, "driver", 0)
     # five edges: at the bounds and one below them
     for bounds, tier in [
         ({"_DRIVER_ROWS": 5}, "driver"),
         ({"_DRIVER_ROWS": 4, "_CC_STARS_EDGES": 6}, "propagation"),
         ({"_DRIVER_ROWS": 4, "_CC_STARS_EDGES": 5}, "stars"),
     ]:
-        assert _cc_run(pairs, **bounds) == (expected, tier), bounds
+        assert _cc_run(pairs, **bounds)[:2] == (expected, tier), bounds
     release_caches()
 
 
@@ -1204,7 +1201,6 @@ def test_connected_components_long_chain_log_rounds(spark):
     O(log diameter) rounds via the pointer-jumping shortcut — plain
     min-label propagation would need ~999 rounds and previously hit
     the max_iter ceiling on the 100x rehearsal's chained LSH graphs."""
-    from xorbits_sql_spark.operators import dedup
     from xorbits_sql_spark.operators.dedup import release_caches
 
     n = 1000
@@ -1217,11 +1213,12 @@ def test_connected_components_long_chain_log_rounds(spark):
         # propagation with two pointer jumps: depth shrinks ~4x/round
         ("propagation", 9),
     ]:
-        labels = _cc_labels(pairs, tier)
+        labels, ran, rounds = _cc_run(pairs, **_CC_PINS[tier])
         release_caches()
+        assert ran == tier
         assert len(labels) == n, tier
         assert set(labels.values()) == {0}, tier
-        assert dedup.last_cc_rounds <= bound, (tier, dedup.last_cc_rounds)
+        assert rounds <= bound, (tier, rounds)
 
 
 def test_midrank_helpers_match_scipy_style_ranks(spark):
@@ -1285,13 +1282,13 @@ def test_cc_auto_uses_generator_edge_hint(spark):
     hint = getattr(pairs, "_xss_edge_estimate", None)
     assert isinstance(hint, float) and hint >= 0
     with spy(dedup, "_observed_checkpoint") as checkpoints:
-        got, tier = _cc_run(pairs)
+        got, tier, _rounds = _cc_run(pairs)
     assert tier == "driver" and checkpoints == []  # tiny graph: hint <= bound
     # a transformed DataFrame drops the hint -> counted fallback, same labels
     dropped = pairs.filter(F.lit(True))
     assert getattr(dropped, "_xss_edge_estimate", None) is None
     with spy(dedup, "_observed_checkpoint") as checkpoints:
-        counted, tier = _cc_run(dropped)
+        counted, tier, _rounds = _cc_run(dropped)
     release_caches()
     assert tier == "driver" and len(checkpoints) == 1
     assert got == counted

@@ -10,14 +10,16 @@ contract matches the reference's lazy Xorbits result (``.fetch()`` there
 ≈ ``.toPandas()``/``.collect()`` here).
 
 Query lifecycle (maps the reference's 8-step trace, SURVEY.md §3, onto
-Spark): register temp views → rewrite READ_CSV table functions → dialect
-transpile → ``spark.sql`` (Catalyst: parse/analyze/optimize/plan) →
-return. Distributed execution happens when the caller runs an action —
-the same boundary as the reference's ``xorbits.run``.
+Spark): convert tables and READ_CSV scans to DataFrames → dialect
+transpile → register temp views, ``spark.sql`` (Catalyst: parse/analyze)
+and drop the views → return. Distributed execution happens when the
+caller runs an action — the same boundary as the reference's
+``xorbits.run``.
 """
 
 from __future__ import annotations
 
+import threading
 from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +32,12 @@ from .table import register_tables
 
 # words that may legally follow a table primary without being an alias
 _NON_ALIAS_WORDS = _dialect.NON_ALIAS_WORDS
+
+# Temp views live in the session-global catalog under the caller's own
+# table names. One lock spans a call's view registration, the analysis
+# of its statements and the views' removal, so concurrent calls never
+# resolve each other's tables and no view outlives its call.
+_VIEW_LOCK = threading.Lock()
 
 
 def _ident_lower(tok: tuple[str, str]) -> str:
@@ -296,6 +304,13 @@ def execute(
       nested up to catalog.db.table.
     * ``spark`` — optional explicit session (defaults to the tuned
       process-wide session).
+
+    The tables are visible to this call only: their temp views are
+    registered, every statement is analyzed, and the views are dropped
+    before ``execute`` returns, so the returned DataFrame keeps its
+    resolved plan but no view is left in the catalog. Views a script
+    creates itself (``CREATE TEMP VIEW v AS ...``) stay after the call,
+    but can no longer read the tables this call registered.
     """
     if not isinstance(sql, str):
         render = getattr(sql, "sql", None)
@@ -310,8 +325,13 @@ def execute(
 
     spark = spark or get_spark()
     registered: dict[tuple[str, ...], str] = {}
+    views: dict[str, DataFrame] = {}
     if tables:
-        registered = register_tables(spark, tables, schema, dialect=dialect)
+        for qualified, (name, df) in register_tables(
+            spark, tables, schema, dialect=dialect
+        ).items():
+            registered[qualified] = name
+            views[name] = df
 
     # Transpile first: qualified-name rewriting then sees Spark quoting
     # (backticks) regardless of the input dialect's identifier style.
@@ -319,7 +339,8 @@ def execute(
     # literal-span guard must lex the way the source dialect does
     # (backslash escapes for the mysql/clickhouse/bigquery/snowflake/
     # redshift families, '#' comments for mysql).
-    text = register_csv_reads(spark, sql, schema, dialect=dialect)
+    text, csv_views = register_csv_reads(spark, sql, schema, dialect=dialect)
+    views.update(csv_views)
     text = _dialect.transpile(text, dialect)
     text = _rewrite_qualified_names(text, registered)
 
@@ -350,9 +371,19 @@ def execute(
     # the TRANSPILED text (Spark lexing), so literals/comments
     # containing ';' are safe.
     try:
-        result = None
-        for stmt in _split_statements(text):
-            result = spark.sql(stmt)
+        with _VIEW_LOCK:
+            try:
+                for name, df in views.items():
+                    df.createOrReplaceTempView(name)
+                result = None
+                for stmt in _split_statements(text):
+                    result = spark.sql(stmt)
+            finally:
+                # the session catalog's own dropTempView: Catalog.dropTempView
+                # would also uncache a persisted DataFrame passed as a table
+                catalog = spark._jsparkSession.sessionState().catalog()
+                for name in views:
+                    catalog.dropTempView(name)
         if result is None:
             raise ExecuteError("empty SQL (no statements)")
         return result

@@ -42,16 +42,6 @@ from ..functions.text import fingerprint, norm_ws
 # session should call release_caches() between passes.
 _LIVE_CACHES: list[DataFrame] = []
 
-# Rounds executed by the most recent connected_components() call —
-# observability for scale rehearsals (CC cost = rounds x (join+agg);
-# the star-pair caps are what keep rounds ~2-3 on dense dup graphs).
-last_cc_rounds: int = 0
-
-# Tier the edge count picked in the most recent connected_components()
-# call ("driver", "propagation" or "stars") — observability for scale
-# rehearsals.
-last_cc_algorithm: str = ""
-
 
 # simpleString() names of the integral id types the graph operators
 # accept: ByteType -> 'tinyint', ShortType -> 'smallint' (never
@@ -1114,11 +1104,9 @@ def connected_components(
     checkpoints the pair set the picked tier then reuses, so the
     upstream pipeline runs once either way.
 
-    ``max_iter`` is a pathological backstop; rounds actually executed
-    are exposed via ``last_cc_rounds`` (0 for the driver tier), the
-    tier picked via ``last_cc_algorithm``.
+    ``max_iter`` is a pathological backstop; each distributed loop
+    returns the rounds it executed alongside its labels.
     """
-    global last_cc_algorithm
     _require_integral(pairs, "connected_components", id_a, id_b)
     norm = pairs.select(
         F.col(id_a).cast("bigint").alias("u"),
@@ -1132,7 +1120,6 @@ def connected_components(
     # collected straight from the pair pipeline, with no checkpoint.
     hint = getattr(pairs, "_xss_edge_estimate", None)
     if hint is not None and hint <= _DRIVER_ROWS:
-        last_cc_algorithm = "driver"
         return _cc_driver(norm)
     # Otherwise materialize the normalized pair set ONCE before
     # dispatch, and take the exact edge count from that same job (a
@@ -1146,10 +1133,8 @@ def connected_components(
     raw, seen = _observed_checkpoint(norm)
     n_edges = seen["rows"]
     if n_edges <= _DRIVER_ROWS:
-        last_cc_algorithm = "driver"
         return _cc_driver(raw)
     stars = n_edges >= _CC_STARS_EDGES
-    last_cc_algorithm = "stars" if stars else "propagation"
     # Size the loop's shuffles from the measured edge count (guide §2;
     # see loop_shuffle_partitions): a 4k-edge graph (sf0.1 co-purchase:
     # 3,853 edges) previously ran every one of 7 rounds as dozens of
@@ -1159,7 +1144,7 @@ def connected_components(
     # already materialized when the scope exits.
     with loop_shuffle_partitions(pairs.sparkSession, n_edges):
         loop = _cc_alternating_stars if stars else _cc_propagation
-        return loop(raw, "u", "v", max_iter)
+        return loop(raw, "u", "v", max_iter)[0]
 
 
 def _cc_driver(raw: DataFrame) -> DataFrame:
@@ -1173,8 +1158,6 @@ def _cc_driver(raw: DataFrame) -> DataFrame:
     The collect is Arrow-batched (two bigint columns) and the result
     re-enters Spark as one Arrow-backed DataFrame.
     """
-    global last_cc_rounds
-    last_cc_rounds = 0
     import pandas as pd
 
     pdf = raw.toPandas()
@@ -1214,7 +1197,7 @@ def _cc_driver(raw: DataFrame) -> DataFrame:
 
 def _cc_alternating_stars(
     pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star connected components.
 
     Per round, with Γ(u) the current neighborhood and m(u) =
@@ -1233,9 +1216,8 @@ def _cc_alternating_stars(
     scan returning a scalar; a collision would need ~2⁶⁴ coincidence,
     and ``max_iter`` still bounds the loop). Edges are localCheckpoint'ed
     every round to truncate the doubling lineage, same as the
-    propagation loop.
+    propagation loop. Returns ``(labels, rounds executed)``.
     """
-    global last_cc_rounds
     raw = pairs.select(
         F.col(id_a).cast("bigint").alias("u"), F.col(id_b).cast("bigint").alias("v")
     )
@@ -1252,7 +1234,7 @@ def _cc_alternating_stars(
         .distinct()
         .localCheckpoint()
     )
-    last_cc_rounds = 0
+    rounds = 0
     prev_sig: tuple | None = None
     for _ in range(max_iter):
         # large-star over the bidirectional neighborhood view
@@ -1289,7 +1271,7 @@ def _cc_alternating_stars(
             .distinct()
             .localCheckpoint()
         )
-        last_cc_rounds += 1
+        rounds += 1
         sig_row = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
@@ -1299,20 +1281,21 @@ def _cc_alternating_stars(
             break
         prev_sig = sig
     star = edges.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("__root"))
-    return nodes.join(star, "id", "left").select(
+    labels = nodes.join(star, "id", "left").select(
         "id", F.coalesce("__root", F.col("id")).alias("component")
     )
+    return labels, rounds
 
 
 def _cc_propagation(
     pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Min-label propagation + double pointer jump (see
     ``connected_components``); one edges⋈labels join, a min-aggregate,
     and two label-table jumps per round, all hash-shuffled on node id.
     Each round's labels are localCheckpoint'ed so lineage stays one
-    round deep; the stop check is a driver-side scalar count."""
-    global last_cc_rounds
+    round deep; the stop check is a driver-side scalar count. Returns
+    ``(labels, rounds executed)``."""
     edges = pairs.select(
         F.col(id_a).cast("bigint").alias("src"), F.col(id_b).cast("bigint").alias("dst")
     )
@@ -1348,7 +1331,7 @@ def _cc_propagation(
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    last_cc_rounds = 0
+    rounds = 0
     # Seed the convergence signature with the identity labeling's sum
     # (one cheap scan) so an already-converged input still stops after
     # its first (no-op) round, matching the old join-based probe.
@@ -1408,11 +1391,11 @@ def _cc_propagation(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
         labels = new_labels
-        last_cc_rounds += 1
+        rounds += 1
         if sig == prev_sig:
             break
         prev_sig = sig
-    return labels
+    return labels, rounds
 
 
 def dedup_keepers(

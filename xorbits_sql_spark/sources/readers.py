@@ -72,8 +72,12 @@ def register_csv_reads(
     sql: str,
     schema: Mapping[str, Any] | None = None,
     dialect: str | None = None,
-) -> str:
-    """Replace READ_CSV(...) table functions with temp views; return new SQL.
+) -> tuple[str, dict[str, DataFrame]]:
+    """Replace READ_CSV(...) table functions with temp view names.
+
+    Returns the new SQL and {view_name: df} for the views it names;
+    nothing is registered here: ``execute`` registers the views for the
+    span of one call.
 
     When the READ_CSV call is aliased (``FROM READ_CSV(...) AS t`` or
     the bare ``FROM READ_CSV(...) t``) and the schema dict has an entry
@@ -86,9 +90,9 @@ def register_csv_reads(
     for the mysql/clickhouse/bigquery/snowflake/redshift families; the
     same pre/post-lexing discipline as core's qualified-name rewrite).
     """
+    frames: dict[str, DataFrame] = {}
     if not _READ_CSV.search(sql):
-        return sql  # hot path: no READ_CSV — skip the lexing entirely
-    counter = 0
+        return sql, frames  # hot path: no READ_CSV — skip the lexing entirely
 
     # Literal/comment spans: the regex must never fire inside a string
     # literal or comment ("SELECT 'docs: READ_CSV(''a.csv'')'" is a
@@ -106,7 +110,6 @@ def register_csv_reads(
         pos = end
 
     def replace(m: re.Match[str]) -> str:
-        nonlocal counter
         if any(a <= m.start() < b for a, b in literal_spans):
             return m.group(0)
         path, opts = _parse_args(m.group("args"))
@@ -132,14 +135,14 @@ def register_csv_reads(
             if key and schema and isinstance(schema.get(key), Mapping):
                 table_schema = schema[key]
                 break
-        name = _view_name_for(path, counter)
-        counter += 1
-        df = read_csv(spark, path, delimiter=delimiter, schema_dict=table_schema, **opts)
-        df.createOrReplaceTempView(name)
+        name = _view_name_for(path, len(frames))
+        frames[name] = read_csv(
+            spark, path, delimiter=delimiter, schema_dict=table_schema, **opts
+        )
         # re-emit the alias the regex consumed so `t.col` refs resolve
         return name + (m.group("alias") or "")
 
-    return _READ_CSV.sub(replace, sql)
+    return _READ_CSV.sub(replace, sql), frames
 
 
 def read_jsonl(

@@ -299,8 +299,10 @@ def register_tables(
     tables: Mapping[str, Any],
     schema: Mapping[str, Any] | None = None,
     dialect: str | None = None,
-) -> dict[tuple[str, ...], str]:
-    """Register all tables as temp views; returns {qualified: view_name}.
+) -> dict[tuple[str, ...], tuple[str, DataFrame]]:
+    """Convert all tables to Spark DataFrames under their temp view
+    names; returns {qualified: (view_name, df)}. Nothing is registered
+    here: ``execute`` registers the views for the span of one call.
 
     ``schema`` follows the reference's nested dict form and, when given for
     a table, types list/pandas inputs explicitly instead of sampling.
@@ -319,7 +321,7 @@ def register_tables(
         for qualified, tbl_schema in flatten_schema(schema).items():
             flat_schema[norm(qualified)] = schema_to_struct(tbl_schema)
 
-    registered: dict[tuple[str, ...], str] = {}
+    registered: dict[tuple[str, ...], tuple[str, DataFrame]] = {}
     # view_name escaping makes multi-part flattening injective among
     # multi-part names, but a SINGLE-part table literally named
     # ``a__b`` passes through unescaped and can still collide with a
@@ -336,9 +338,7 @@ def register_tables(
                 f"both flatten to temp view {name!r}; rename one"
             )
         seen[name.lower()] = qualified
-        df = to_spark_df(spark, leaf, flat_schema.get(qualified))
-        df.createOrReplaceTempView(name)
-        registered[qualified] = name
+        registered[qualified] = (name, to_spark_df(spark, leaf, flat_schema.get(qualified)))
     return registered
 
 
