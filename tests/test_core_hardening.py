@@ -1,15 +1,18 @@
 """Regression tests for the round-6 core/table/plans review fixes:
 plan-gate regexes that matched nothing, non-injective view flattening,
-alias shadowing in the qualified-name rewrite, empty-table schemas, and
-the output_rows metric pick."""
+aliases named like a registered db in the qualified-name rewrite,
+empty-table schemas, and the output_rows metric pick."""
 
 from __future__ import annotations
+
+import datetime
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from xorbits_sql_spark import execute
+from xorbits_sql_spark.dialect import KNOWN_DIALECTS
 from xorbits_sql_spark.errors import UnsupportedError
 
 
@@ -133,10 +136,10 @@ def test_derived_table_alias_does_not_shadow_its_own_body(spark):
 
 
 def test_read_csv_guard_lexes_mysql_escapes(spark, tmp_path):
-    """READ_CSV rewriting runs pre-transpile on raw dialect text: for
-    mysql input the literal-span guard must lex backslash escapes, or
-    the phantom string opened at \\' swallows a REAL READ_CSV call
-    (round-7 review finding)."""
+    """The READ_CSV scan lexes the transpiled Spark text, where
+    backslash escapes a quote: mysql input's ``'it\\'s'`` stays one
+    literal, or the phantom string opened at \\' would swallow a REAL
+    READ_CSV call (round-7 review finding)."""
     p = tmp_path / "m.csv"
     p.write_text("a\n1\n")
     got = execute(
@@ -146,6 +149,89 @@ def test_read_csv_guard_lexes_mysql_escapes(spark, tmp_path):
     ).collect()
     assert [r["a"] for r in got] == [1]
     assert got[0]["x"] == "it's"
+
+
+_T1 = pd.DataFrame({"a": [1, 2, 3], "k": [1, 1, 2]})
+_T2 = pd.DataFrame({"k": [1, 2], "v": [10, 20]})
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("SELECT a FROM db.t1 AS db", [1, 2, 3]),
+        ("SELECT db.a FROM db.t1 db", [1, 2, 3]),
+        (
+            "SELECT x.a FROM (SELECT * FROM db.t1) AS db, "
+            "LATERAL (SELECT * FROM db.t1 WHERE a = db.a) x",
+            [1, 2, 3],
+        ),
+        ("SELECT (SELECT MAX(v) FROM db.t2) AS m FROM db.t1 AS db", [20]),
+    ],
+)
+def test_alias_named_like_db_keeps_table_references(spark, sql, want):
+    """A registered db.t in a table position is a table reference even
+    where an alias ``db`` is in scope: the alias names a relation, so
+    ``FROM db.t1 AS db`` and a LATERAL or scalar subquery's ``FROM
+    db.t1`` still rewrite. Each query yields one row per t1 row."""
+    rows = execute(
+        sql, tables={"db": {"t1": _T1, "t2": _T2}}, spark=spark
+    ).collect()
+    assert len(rows) == 3
+    assert sorted(set(r[0] for r in rows)) == want
+
+
+def test_qualified_chain_rewrites_and_expression_from_does_not(spark):
+    """``db.t1.a`` and ``db.t1.*`` head a dotted chain and rewrite with
+    the table, as do a statement-level FROM-first query and DESCRIBE;
+    a ``db.t`` after an expression FROM (EXTRACT, IS DISTINCT FROM), or
+    heading a chain when ``db.t`` is no table reference in the text, is
+    alias ``db``'s column and stays as written."""
+    tables = {"db": {"t1": _T1}}
+    got = execute("SELECT db.t1.a FROM db.t1", tables=tables, spark=spark)
+    assert sorted(r["a"] for r in got.collect()) == [1, 2, 3]
+    got = execute("SELECT db.t1.* FROM db.t1", tables=tables, spark=spark)
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 1), (2, 1), (3, 2)]
+    got = execute("FROM db.t1 SELECT a", tables=tables, spark=spark)
+    assert sorted(r["a"] for r in got.collect()) == [1, 2, 3]
+    got = execute("DESCRIBE db.t1", tables=tables, spark=spark)
+    assert [r["col_name"] for r in got.collect()] == ["a", "k"]
+
+    got = execute(
+        "SELECT db.t.f AS f FROM orders AS db",
+        tables={"db": {"t": _T1}, "orders": spark.sql("SELECT named_struct('f', 5) AS t")},
+        spark=spark,
+    )
+    assert [r["f"] for r in got.collect()] == [5]
+
+    orders = [{"a": 1, "t": datetime.date(2024, 5, 1)}]
+    got = execute(
+        "SELECT EXTRACT(YEAR FROM db.t) AS y FROM orders AS db",
+        tables={"db": {"t": [{"v": 1}]}, "orders": orders},
+        spark=spark,
+    )
+    assert [r["y"] for r in got.collect()] == [2024]
+    got = execute(
+        "SELECT a FROM orders AS db WHERE db.a IS DISTINCT FROM db.t",
+        tables={"db": {"t": [{"v": 1}]}, "orders": [{"a": 1, "t": 1}, {"a": 2, "t": 3}]},
+        spark=spark,
+    )
+    assert [r["a"] for r in got.collect()] == [2]
+
+
+@pytest.mark.parametrize("dialect", sorted(KNOWN_DIALECTS, key=str), ids=repr)
+def test_read_csv_alias_schema_in_every_dialect(spark, tmp_path, dialect):
+    """READ_CSV is found in the transpiled text of every dialect, and
+    its alias still keys the schema lookup."""
+    p = tmp_path / "odd_stem.csv"
+    p.write_text("a|b\n3|4.25\n1|2.50\n")
+    df = execute(
+        f"SELECT part.a, part.b FROM READ_CSV('{p}', 'delimiter', '|') AS part",
+        schema={"part": {"a": "bigint", "b": "decimal(10,2)"}},
+        dialect=dialect,
+        spark=spark,
+    )
+    assert dict(df.dtypes) == {"a": "bigint", "b": "decimal(10,2)"}
+    assert sorted(r["a"] for r in df.collect()) == [1, 3]
 
 
 def test_qualified_rewrite_lexes_backslash_escapes_like_spark(spark):

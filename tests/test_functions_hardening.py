@@ -205,9 +205,9 @@ def test_read_csv_bare_alias_schema_lookup(spark, tmp_path):
 
 
 def test_read_csv_guard_lexes_snowflake_escapes(spark, tmp_path):
-    """The READ_CSV literal guard must lex with the SOURCE dialect's
-    escaping for every backslash-escape dialect, not just mysql
-    (round-7 review)."""
+    """The READ_CSV scan lexes the transpiled Spark text, so a
+    backslash-escaped quote from any backslash-escape dialect, not just
+    mysql, stays inside its literal (round-7 review)."""
     from xorbits_sql_spark import execute
 
     p = tmp_path / "sn.csv"

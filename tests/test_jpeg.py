@@ -189,15 +189,20 @@ def test_transform_media_stamps_jpeg_mime(spark):
 
 
 def test_staged_jpeg_query_matches_oracle(spark, duck):
-    """u04–u07 (see queries/staged.py — registered since round 9): full
-    parity check with the same type-strict compare + exact-match
-    harness as test_oracle_parity."""
-    from xorbits_sql_spark.queries.staged import STAGED
+    """u04–u07 (queries/staged.py): full parity check with the same
+    type-strict compare + exact-match harness as test_oracle_parity."""
+    from xorbits_sql_spark.queries import load_all
 
     from .oracle import compare, exact_match
 
-    assert "u04_jpeg_decode_stats" in STAGED
-    for name, spec in STAGED.items():
+    reg = load_all()
+    for name in (
+        "u04_jpeg_decode_stats",
+        "u05_jpeg_resize_roundtrip",
+        "u06_pg_dialect_weekday_rollup",
+        "u07_bq_dialect_boundary_datediff",
+    ):
+        spec = reg[name]
         sdf = spec.fn(spark, "/root/testdata/sf0.01").toPandas()
         assert len(sdf) > 0, name
         ddf = duck.execute(spec.oracle).fetchdf()

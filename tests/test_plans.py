@@ -560,8 +560,10 @@ def test_t15_blocking_audit_no_allpairs(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "_DRIVER_ROWS", 0)
 
+    from xorbits_sql_spark.errors import AdvisoryWarning
+
     with warnings.catch_warnings():
-        warnings.simplefilter("error", ResourceWarning)
+        warnings.simplefilter("error", AdvisoryWarning)
         df = SPECS["t15_blocking_quality_audit"].fn(spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -576,12 +578,13 @@ def test_t15_advisory_fires_at_rehearsal_density():
     not."""
     import pytest
 
+    from xorbits_sql_spark.errors import AdvisoryWarning
     from xorbits_sql_spark.queries.text import _advise_sampled_audit
 
-    with pytest.warns(ResourceWarning, match="u14_blocking_audit_sampled"):
+    with pytest.warns(AdvisoryWarning, match="u14_blocking_audit_sampled"):
         assert _advise_sampled_audit(916.5e6) is True
     import warnings
 
     with warnings.catch_warnings():
-        warnings.simplefilter("error", ResourceWarning)
+        warnings.simplefilter("error", AdvisoryWarning)
         assert _advise_sampled_audit(37.7e6) is False

@@ -169,8 +169,9 @@ _TOKEN_SPARK = _lexer(
     r'"(?:[^"\\]|""|\\.)*"',
 )
 
-# Words that may legally follow a table primary without being an alias
-# (shared by core's alias collector and readers' READ_CSV alias match).
+# Words that may legally follow a table primary without being an alias:
+# the one test behind :func:`alias_at` (READ_CSV's schema lookup, the
+# FLATTEN and UNNEST rewrites).
 NON_ALIAS_WORDS = frozenset(
     {
         "ON", "USING", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
@@ -180,8 +181,6 @@ NON_ALIAS_WORDS = frozenset(
         "FOR", "SET", "AS",
     }
 )
-
-_LITERAL_KINDS = frozenset({"string", "dquoted", "backtick", "bracket", "comment"})
 
 
 def tokenize(sql: str, mysql: bool = False) -> list[tuple[str, str]]:
@@ -201,6 +200,99 @@ def tokenize_spark(sql: str) -> list[tuple[str, str]]:
     escapes, no ``#`` comments). Use for text that is already Spark SQL
     — i.e. any rewrite that runs after :func:`transpile`."""
     return [(m.lastgroup or "op", m.group()) for m in _TOKEN_SPARK.finditer(sql)]
+
+
+# Words right before a relation besides FROM (``DESCRIBE [EXTENDED]
+# db.t`` names a table too; ``ORDER BY a DESC`` is never followed by one).
+_TABLE_WORDS = frozenset(
+    {"JOIN", "TABLE", "INTO", "DESCRIBE", "DESC", "EXTENDED", "FORMATTED"}
+)
+
+# Clause words that close a FROM clause at its own paren depth, so a
+# later depth-0 comma (``GROUP BY a, db.t``) is not a table position.
+_FROM_CLAUSE_ENDS = frozenset(
+    {
+        "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "WINDOW",
+        "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "MINUS", "SORT",
+        "CLUSTER", "DISTRIBUTE",
+    }
+)
+
+
+def table_positions(tokens: list[tuple[str, str]]) -> set[int]:
+    """Indices of the code tokens where SQL puts a relation: right after
+    ``FROM`` or one of ``_TABLE_WORDS`` (``JOIN``, ``TABLE``, ``INTO``,
+    ``DESCRIBE`` ...), and right after a depth-0 comma inside a FROM
+    clause (which stays open across ``ON`` conditions). A ``(`` in a
+    table position passes it on to its first token, so ``FROM
+    ((db.t))`` counts too.
+
+    ``FROM`` opens a table clause at statement level (``FROM t SELECT
+    a`` included) and, inside parens, only in a scope that has seen
+    ``SELECT`` or ``DELETE`` at its own depth: ``EXTRACT(YEAR FROM x)``,
+    ``SUBSTRING(s FROM 2)`` and ``TRIM(BOTH 'x' FROM s)`` hold
+    expressions. ``IS [NOT] DISTINCT FROM`` never opens one.
+    """
+    found: set[int] = set()
+    # per paren depth: [FROM may open a table clause, inside one]
+    scopes = [[True, False]]
+    at = False  # the next code token is a table position
+    prev = ""
+    for i in _iter_code(tokens):
+        tok = tokens[i]
+        word = tok[1].upper() if tok[0] == "word" else ""
+        if at:
+            found.add(i)
+        at = at and tok == ("op", "(")
+        scope = scopes[-1]
+        if tok == ("op", "("):
+            scopes.append([False, False])
+        elif tok == ("op", ")"):
+            if len(scopes) > 1:
+                scopes.pop()
+        elif tok == ("op", ";"):
+            scopes = [[True, False]]
+        elif tok == ("op", ","):
+            at = scope[1]
+        elif word in ("SELECT", "DELETE"):
+            scope[:] = [True, False]
+        elif word == "FROM":
+            if scope[0] and prev != "DISTINCT":
+                scope[1] = at = True
+        elif word in _TABLE_WORDS:
+            at = True
+        elif word in _FROM_CLAUSE_ENDS:
+            scope[1] = False
+        prev = word
+    return found
+
+
+def splice(tokens: list[tuple[str, str]], spans: dict[int, tuple[int, str]]) -> str:
+    """Join the token texts, replacing each ``{start: (end, text)}``
+    span of tokens (inclusive) by ``text``."""
+    out: list[str] = []
+    i = 0
+    while i < len(tokens):
+        if i in spans:
+            i, text = spans[i]
+            out.append(text)
+        else:
+            out.append(tokens[i][1])
+        i += 1
+    return "".join(out)
+
+
+def alias_at(tokens: list[tuple[str, str]], end: int) -> int | None:
+    """Index of the alias (``[AS] name``) after the relation whose last
+    token is ``end``, or None when a clause word follows instead."""
+    a = _next_code(tokens, end)
+    if a is not None and tokens[a][0] == "word" and tokens[a][1].upper() == "AS":
+        a = _next_code(tokens, a)
+    if a is None or tokens[a][0] not in ("word", "backtick") or (
+        tokens[a][0] == "word" and tokens[a][1].upper() in NON_ALIAS_WORDS
+    ):
+        return None
+    return a
 
 
 # Dialects whose string literals treat backslash as an ESCAPE by
@@ -2301,12 +2393,8 @@ def _rewrite_snowflake_flatten(
                 "LATERAL FLATTEN is supported after ',' or CROSS JOIN only"
             )
         # required table alias after the close paren: [AS] name
-        a = _next_code(out, close)
-        if a is not None and out[a][0] == "word" and out[a][1].upper() == "AS":
-            a = _next_code(out, a)
-        if a is None or out[a][0] not in ("word", "backtick") or (
-            out[a][0] == "word" and out[a][1].upper() in NON_ALIAS_WORDS
-        ):
+        a = alias_at(out, close)
+        if a is None:
             raise UnsupportedError(
                 "LATERAL FLATTEN requires a table alias (needed to name "
                 "the LATERAL VIEW)"
@@ -2386,11 +2474,8 @@ def _rewrite_unnest(
                     "UNNEST WITH ORDINALITY (1-based) has no faithful "
                     "LATERAL VIEW form"
                 )
-        if a is not None and out[a][0] == "word" and out[a][1].upper() == "AS":
-            a = _next_code(out, a)
-        if a is None or out[a][0] not in ("word", "backtick") or (
-            out[a][0] == "word" and out[a][1].upper() in NON_ALIAS_WORDS
-        ):
+        a = alias_at(out, close)
+        if a is None:
             raise UnsupportedError(
                 "UNNEST requires a column (bigquery) or table(column) "
                 "(trino) alias"

@@ -47,3 +47,9 @@ class PairBudgetExceededError(XorbitsSQLSparkError):
     ``partition_col`` sharding, a tighter ``max_df``); pass
     ``pair_budget=None`` to run anyway.
     """
+
+
+class AdvisoryWarning(UserWarning):
+    """A query runs as asked, but a cheaper path to the same answer
+    exists (e.g. the t15 -> u14 sampled blocking audit on dense
+    corpora). A ``UserWarning``, so Python's default filters show it."""

@@ -1,13 +1,4 @@
-"""JPEG-codec and round-8 dialect-rewrite queries (u04–u07).
-
-Written and parity-tested in round 8 but held unregistered until
-round 9: the round-8 verification window was frozen at exactly the 50
-remaining never-driver-verified names, and a new oracle-bearing entry
-would have sorted ahead of the four rows-only names and pushed one out
-of the window (``__spark_entry__._exposed``). UNFROZEN in round 9 per
-the playbook written at round-8 close: these four entries now
-``register`` into the live registry (this module is imported by
-``load_all``) and lead the round-9 window behind the t66 re-entry.
+"""JPEG-codec and dialect-rewrite queries (u04–u07).
 
 The JPEG oracle trick: DuckDB cannot decode JPEG, but a CONSTANT-color
 image round-trips the DCT exactly when the quantized DC step divides
@@ -28,20 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._util import t
-from . import REGISTRY, QuerySpec, register
-
-# Kept as an alias view of the registered specs so round-8 parity
-# tests (tests/test_jpeg.py) keep their import surface.
-STAGED: dict[str, QuerySpec] = {}
-
-
-def _stage(name: str, oracle: str | None, tags: tuple[str, ...] = ()):
-    def wrap(fn):
-        fn = register(name, oracle, tags=tags)(fn)
-        STAGED[name] = REGISTRY[name]
-        return fn
-
-    return wrap
+from . import register
 
 
 _JPEG_STATS_ORACLE = """
@@ -57,7 +35,7 @@ ORDER BY doc_id
 """
 
 
-@_stage(
+@register(
     "u04_jpeg_decode_stats",
     _JPEG_STATS_ORACLE,
     tags=("multimodal", "jpeg", "codec"),
@@ -137,7 +115,7 @@ ORDER BY doc_id
 """
 
 
-@_stage(
+@register(
     "u05_jpeg_resize_roundtrip",
     _JPEG_RESIZE_ORACLE,
     tags=("multimodal", "jpeg", "resize"),
@@ -197,7 +175,7 @@ ORDER BY ym, dow
 """
 
 
-@_stage(
+@register(
     "u06_pg_dialect_weekday_rollup",
     _PG_DIALECT_ORACLE,
     tags=("dialect", "postgres"),
@@ -246,7 +224,7 @@ ORDER BY ym
 """
 
 
-@_stage(
+@register(
     "u07_bq_dialect_boundary_datediff",
     _BQ_DIALECT_ORACLE,
     tags=("dialect", "bigquery"),

@@ -49,6 +49,8 @@ def _advise_sampled_audit(est_pairs: float) -> bool:
         return False
     import warnings
 
+    from ..errors import AdvisoryWarning
+
     warnings.warn(
         f"blocking-quality audit: estimated pair volume ≈ {est_pairs:.3g} "
         f"exceeds {_AUDIT_ADVISORY_PAIR_BOUND:.0g}. The exact audit still "
@@ -57,7 +59,7 @@ def _advise_sampled_audit(est_pairs: float) -> bool:
         "~30% sample measuring the SAME pair_completeness estimand with a "
         "binomial ci95 — 24x fewer shuffle records at the 100x rehearsal "
         "(37.7M vs 916.5M).",
-        ResourceWarning,
+        AdvisoryWarning,
         stacklevel=3,
     )
     return True

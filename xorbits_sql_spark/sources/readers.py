@@ -4,11 +4,13 @@ Reference parity: ``READ_CSV('path', 'delimiter', '|')`` appears in FROM
 clauses (reference executor.py:290-308; usage tests/test_tpc_h.py:47-52).
 The reference parses the vararg list as k/v pairs and honors only
 ``delimiter``; dtypes come from the declared schema. Here the same call
-is rewritten out of the SQL text: each distinct READ_CSV(...) is
-registered as a temp view backed by ``spark.read.csv`` (header=True to
-match the reference's bundled CSVs, schema from the schema dict when one
-covers it), and the FROM clause is pointed at the view. Spark's CSV
-source then gives partitioned, pushdown-aware scanning for free.
+is rewritten out of the transpiled Spark text: each READ_CSV(...) that
+stands in a table position (``dialect.table_positions``: after FROM,
+JOIN or a FROM-clause comma) becomes a temp view backed by
+``spark.read.csv`` (header=True to match the reference's bundled CSVs,
+schema from the schema dict when one covers it), and the call is
+replaced by the view's name. Spark's CSV source then gives partitioned,
+pushdown-aware scanning for free.
 """
 
 from __future__ import annotations
@@ -18,13 +20,8 @@ from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import dialect as _dialect
 from ..errors import UnsupportedError
-
-_READ_CSV = re.compile(
-    r"READ_CSV\s*\(\s*(?P<args>'[^']*'(?:\s*,\s*'[^']*')*)\s*\)"
-    r"(?P<alias>\s+(?:AS\s+)?(?P<alias_name>[A-Za-z_]\w*))?",
-    re.IGNORECASE,
-)
 
 
 def _parse_args(arg_text: str) -> tuple[str, dict[str, str]]:
@@ -71,65 +68,45 @@ def register_csv_reads(
     spark: SparkSession,
     sql: str,
     schema: Mapping[str, Any] | None = None,
-    dialect: str | None = None,
 ) -> tuple[str, dict[str, DataFrame]]:
     """Replace READ_CSV(...) table functions with temp view names.
 
+    ``sql`` is Spark text (``execute`` calls this after transpile). A
+    call is rewritten where it stands in a table position
+    (dialect.table_positions) and its arguments are all string
+    literals; one inside a literal or comment is never a token match.
     Returns the new SQL and {view_name: df} for the views it names;
     nothing is registered here: ``execute`` registers the views for the
     span of one call.
 
     When the READ_CSV call is aliased (``FROM READ_CSV(...) AS t`` or
     the bare ``FROM READ_CSV(...) t``) and the schema dict has an entry
-    for the alias or the file stem, that schema types the scan
-    (reference executor.py:303-306 behavior).
-
-    ``dialect`` selects the lexing mode for the literal-span guard
-    below — this rewrite runs PRE-transpile on raw dialect text, so it
-    must lex strings the way the SOURCE dialect does (backslash escapes
-    for the mysql/clickhouse/bigquery/snowflake/redshift families; the
-    same pre/post-lexing discipline as core's qualified-name rewrite).
+    for the alias or the file stem, that schema types the scan, alias
+    first (reference executor.py:303-306 behavior).
     """
     frames: dict[str, DataFrame] = {}
-    if not _READ_CSV.search(sql):
-        return sql, frames  # hot path: no READ_CSV — skip the lexing entirely
-
-    # Literal/comment spans: the regex must never fire inside a string
-    # literal or comment ("SELECT 'docs: READ_CSV(''a.csv'')'" is a
-    # legal query whose literal must survive — and the eager
-    # spark.read.csv a match triggers would fail it loudly on the
-    # nonexistent path). Spans come from the same lexer transpile uses.
-    from .. import dialect as _dialect
-
-    literal_spans: list[tuple[int, int]] = []
-    pos = 0
-    for kind, text in _dialect.tokenize_dialect(sql, dialect):
-        end = pos + len(text)
-        if kind in _dialect._LITERAL_KINDS:
-            literal_spans.append((pos, end))
-        pos = end
-
-    def replace(m: re.Match[str]) -> str:
-        if any(a <= m.start() < b for a, b in literal_spans):
-            return m.group(0)
-        path, opts = _parse_args(m.group("args"))
+    if "READ_CSV" not in sql.upper():
+        return sql, frames  # hot path: no READ_CSV, skip the lexing
+    tokens = _dialect.tokenize_spark(sql)
+    calls: dict[int, tuple[int, str]] = {}  # READ_CSV index -> (close, view)
+    for i in sorted(_dialect.table_positions(tokens)):
+        if tokens[i][0] != "word" or tokens[i][1].upper() != "READ_CSV":
+            continue
+        open_at = _dialect._next_code(tokens, i)
+        if open_at is None or tokens[open_at] != ("op", "("):
+            continue
+        parsed = _dialect._call_args(tokens, open_at)
+        if parsed is None:
+            continue
+        args = ["".join(t for k, t in a if k not in ("ws", "comment")) for a in parsed[0]]
+        if not all(re.fullmatch(r"'[^']*'", a) for a in args):
+            continue  # not a literal argument list: left for Spark to report
+        close = parsed[1]
+        path, opts = _parse_args(",".join(args))
         delimiter = opts.pop("delimiter", opts.pop("sep", ","))
         stem = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-        alias = m.group("alias_name")
-        alias_text = m.group("alias") or ""
-        if (
-            alias
-            and "AS" not in alias_text.upper().split()
-            and alias.upper() in _dialect.NON_ALIAS_WORDS
-        ):
-            # a bare word after the call that is a clause keyword
-            # (WHERE/JOIN/...) is NOT an alias — don't key the schema
-            # lookup on it (the text is re-emitted verbatim either way)
-            alias = None
-        # alias takes precedence over the file stem — the documented
-        # (and reference executor.py:303-306) lookup order; previously
-        # only the stem was consulted, so an aliased scan fell back to
-        # inferSchema and silently dropped the declared types
+        a = _dialect.alias_at(tokens, close)
+        alias = tokens[a][1] if a is not None and tokens[a][0] == "word" else None
         table_schema = None
         for key in (alias, stem):
             if key and schema and isinstance(schema.get(key), Mapping):
@@ -139,10 +116,8 @@ def register_csv_reads(
         frames[name] = read_csv(
             spark, path, delimiter=delimiter, schema_dict=table_schema, **opts
         )
-        # re-emit the alias the regex consumed so `t.col` refs resolve
-        return name + (m.group("alias") or "")
-
-    return _READ_CSV.sub(replace, sql), frames
+        calls[i] = (close, name)
+    return _dialect.splice(tokens, calls), frames
 
 
 def read_jsonl(

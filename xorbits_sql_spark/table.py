@@ -183,7 +183,9 @@ def view_name(qualified: tuple[str, ...]) -> str:
 
     Spark temp views live in a single namespace, so ``catalog.db.table``
     becomes ``catalog__db__table``; ``core._rewrite_qualified_names``
-    rewrites the dotted references in the SQL text to match.
+    rewrites the dotted references that stand in a table position
+    (``dialect.table_positions``), or head a longer dotted chain, in
+    the SQL text to match.
 
     Injective for multi-part names: a bare ``__``.join would collide
     ``('a', 'b__c')`` with ``('a__b', 'c')`` (both → ``a__b__c``) and
