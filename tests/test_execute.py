@@ -190,3 +190,24 @@ def test_execute_leaves_no_temp_view(spark, tmp_path):
             execute("SELECT * FROM script_v", spark=spark).collect()
     finally:
         spark.catalog.dropTempView("script_v")
+
+
+def test_generated_classes_compile_once_per_session(spark):
+    """A second pass of freshly built queries whose generated code
+    differs compiles nothing. Each query makes two classes, so one pass
+    needs ~160 cache entries: more than Spark's default 100, whose LRU
+    would evict every class before its reuse and recompile them all."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_pass() -> tuple[list[int], int]:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        sums = [
+            spark.range(10).selectExpr(f"id * {i} + {i} AS x").collect()[-1]["x"]
+            for i in range(80)
+        ]
+        return sums, metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    first, _ = one_pass()
+    again, compiled = one_pass()
+    assert again == first == [10 * i for i in range(80)]
+    assert compiled == 0

@@ -290,6 +290,37 @@ def test_simhash_pairs(spark):
     assert out[(1, 3)] <= 12  # near dup → small hamming distance
 
 
+def test_simhash_relational_matches_python_reference(spark):
+    """Each signature bit is set when at least half of the document's
+    tokens vote 1 for it (ties set the bit). Tokens hash to the first 15
+    hex chars of their md5; repeated tokens vote once per occurrence."""
+    import hashlib
+
+    from xorbits_sql_spark.operators.dedup import simhash_relational
+
+    docs = {
+        1: "solo",  # one token: the signature is its hash
+        2: "tie breaker",  # two tokens: every bit they disagree on ties
+        3: "  echo echo   echo delta ",  # repeats, ragged whitespace
+        4: "alpha beta gamma delta epsilon zeta eta theta",
+    }
+
+    def reference(text: str) -> int:
+        hashes = [int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in text.split()]
+        return sum(
+            1 << i
+            for i in range(60)
+            if 2 * sum((h >> i) & 1 for h in hashes) >= len(hashes)
+        )
+
+    a, b = (int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in ("tie", "breaker"))
+    assert a ^ b  # document 2 really holds a tie
+    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+    got = {r["doc"]: r["sh"] for r in simhash_relational(df, "text", "doc_id").collect()}
+    assert got == {d: reference(text) for d, text in docs.items()}
+    assert got[2] == a | b
+
+
 def test_simhash_pair_budget_guard(spark):
     """Round-8 graph-tier rehearsal: within-bucket volume is
     N²/2^prefix_bits at fixed prefix_bits, so simhash_pairs gets the

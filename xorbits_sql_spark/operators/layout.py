@@ -17,30 +17,18 @@ map-reduced row, not a sort.
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def interleave_bits(cols: list[Column], bits: int = 16) -> Column:
-    """Morton-interleave ``bits`` low bits of each (bigint) column.
-
-    Bit i of column j lands at position ``len(cols)*i + j``. With the
-    default 16 bits and 2 columns the result fits comfortably in a
-    BIGINT (32 significant bits).
-    """
-    n = len(cols)
-    terms = [
-        F.shiftleft(F.shiftright(c.cast("bigint"), i).bitwiseAND(F.lit(1)), n * i + j)
-        for j, c in enumerate(cols)
-        for i in range(bits)
-    ]
-    return reduce(lambda a, b: a.bitwiseOR(b), terms)
-
-
 def sql_interleave_bits(exprs: list[str], bits: int = 16) -> str:
-    """The exact same interleave as ANSI/DuckDB SQL text (for oracles)."""
+    """Morton-interleave ``bits`` low bits of each (bigint) expression.
+
+    Bit i of expression j lands at position ``len(exprs)*i + j``. With
+    the default 16 bits and 2 expressions the result fits comfortably in
+    a BIGINT (32 significant bits). The text parses the same in Spark
+    SQL and DuckDB, so :func:`zorder_key` and its oracle share it.
+    """
     n = len(exprs)
     terms = [
         f"((({e} >> {i}) & 1) << {n * i + j})"
@@ -78,13 +66,11 @@ def zorder_key(
     # `div` (not `/`): exact integer division — float division then cast
     # would silently lose exactness once products pass 2**53.
     scaled = [
-        F.expr(
-            f"(CAST(`{c}` AS BIGINT) - `__min_{c}`) * {2**bits}"
-            f" div (`__max_{c}` - `__min_{c}` + 1)"
-        )
+        f"((CAST(`{c}` AS BIGINT) - `__min_{c}`) * {2**bits}"
+        f" div (`__max_{c}` - `__min_{c}` + 1))"
         for c in dim_cols
     ]
-    return out.withColumn(out_col, interleave_bits(scaled, bits)).drop(
+    return out.withColumn(out_col, F.expr(sql_interleave_bits(scaled, bits))).drop(
         *[f"__{m}_{c}" for c in dim_cols for m in ("min", "max")]
     )
 

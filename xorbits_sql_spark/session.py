@@ -7,6 +7,10 @@ timezone (stable cross-engine timestamp semantics vs the DuckDB oracle).
 
 ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
 real cluster set it (or rely on AQE coalescing) to ~2-3x total cores.
+
+``spark.sql.codegen.cache.maxEntries`` is 1000, not Spark's 100, so a
+pipeline's whole-stage-codegen classes compile once per session instead
+of on every warm pass (measured working sets at the default below).
 """
 
 from __future__ import annotations
@@ -35,6 +39,14 @@ _DEFAULTS: dict[str, str] = {
     # Read parquet TIMESTAMP(NANOS) columns (events.ts in the testdata)
     # as BIGINT nanos instead of erroring; loaders convert to micros.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache (a static conf, read once when the session
+    # is built). Measured working sets: 204 classes per pass over the
+    # perfbench operator pipelines, 72 for its api_small ops. Spark's
+    # default of 100 evicted the pipelines' classes before their reuse,
+    # so every warm pass recompiled ~206; 1000 leaves ~5x headroom over
+    # the larger set. One pass over the whole query registry makes
+    # ~4,000 and does not fit.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
